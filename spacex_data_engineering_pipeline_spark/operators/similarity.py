@@ -250,7 +250,7 @@ def _partial_topk_side(
 ):
     """The shared two-tier EXACT partial-top-k kernel of every kNN-graph
     arm (exact block grid ``knn_graph``, IVF-pruned ``knn_graph_ivf``,
-    incremental ``knn_graph_incremental``): one BLAS matmul PRUNES the
+    incremental ``knn_graph_apply_cdc``): one BLAS matmul PRUNES the
     candidate rows, then the ≤ k+band survivors per query row are
     RECOMPUTED with ``np.cumsum`` — the strict left-to-right summation
     bit-identical to DuckDB's ``list_dot_product`` — so every EMITTED
@@ -425,7 +425,7 @@ def save_knn_graph(
     sidecar recording the bucket fanout — the layout that makes both
     access patterns cheap: point lookups ("who are doc X's
     neighbors?") partition-prune to one bucket directory, and the
-    incremental-update path (``knn_graph_incremental`` with
+    incremental-update path (``knn_graph_upsert`` with
     ``base_graph=load_knn_graph(...)``) streams the whole graph back
     WITHOUT recomputing the N² build it cost. At 100 TB the graph is
     corpus-sized (N·k rows) — exactly the artifact you persist once
@@ -565,26 +565,24 @@ def _bounded_collect(df: DataFrame, n: int):
 
 
 def _empty_graph_delta(spark, id_col: str) -> DataFrame:
-    """Zero-row frame in the graph-edge shape — the ``delta_only``
-    return for a no-op maintenance batch."""
+    """Zero-row frame in the graph-delta shape — the delta of a batch
+    that changes nothing."""
     return spark.createDataFrame(
         [], f"{id_col} long, rnk int, neighbor long, cos_sim double"
     )
 
 
 def _delta_finish(keep: DataFrame, new_streams, id_col: str, k: int) -> DataFrame:
-    """CHANGED-ROWS-ONLY finish for the graph maintenance verbs
-    (optimization r15, delta generations): rank keep ∪ new-candidate
-    streams exactly as the full finish does, then emit ONLY the ids
-    whose final top-k admits a new-stream candidate. Ids with no keep
-    rows (the recomputed set — anti-joined out of keep by every
-    caller) have all rows tagged new, so they always survive; an
-    unaffected id whose stored list beat every new candidate drops out
-    — its stored rows are bit-identical to what the full finish would
-    re-emit, so a reader folding base + deltas reproduces the full
-    graph row for row. Both window functions share one id-hash
-    exchange (the max needs no ordering), so this costs no extra
-    shuffle over the full finish."""
+    """CHANGED-ROWS-ONLY finish for the graph maintenance verbs: rank
+    keep ∪ new-candidate streams with the (cos DESC, id ASC) window,
+    then emit ONLY the ids whose final top-k admits a new-stream
+    candidate. Ids with no keep rows (the recomputed set — anti-joined
+    out of keep by every caller) have all rows tagged new, so they
+    always survive; an unaffected id whose stored list beat every new
+    candidate drops out — its stored rows are bit-identical to what a
+    full re-rank would emit, so ``apply_graph_delta`` over the base
+    reproduces the full graph row for row. Both window functions share
+    one id-hash exchange (the max needs no ordering)."""
     from pyspark.sql.window import Window
 
     cands = keep.withColumn("__new", F.lit(0))
@@ -603,145 +601,22 @@ def _delta_finish(keep: DataFrame, new_streams, id_col: str, k: int) -> DataFram
     )
 
 
-def knn_graph_incremental(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_blocks: int = 8,
-    decimals: int = 6,
-    slack: float = 1e-6,
-    base_graph: DataFrame | None = None,
-) -> DataFrame:
-    """MAINTAIN a kNN graph under an arriving vector batch instead of
-    recomputing it: the corpus grows daily, and an N² rebuild per batch
-    is the scale-killer this avoids. Work is |new|·N (one scan of the
-    old corpus scoring against the new batch, + the new batch's own
-    neighbors), not (N+|new|)² — the update cost a production vector
-    index pays.
-
-    EXACTNESS THEOREM (what the oracle grades): the true top-k of a row
-    over old ∪ new is the top-k of (its top-k among old) ∪ (its top-k
-    among new) — so merging the EXISTING graph rows for old vectors
-    with a per-row partial top-k against only the new batch, then
-    re-ranking, is bit-identical to a full rebuild. New vectors get
-    their lists from one ``batch_knn_topk`` pass over everything (self
-    excluded). All three candidate streams carry the same strict-sum
-    6dp cosines and (cos DESC, id ASC) tiebreak, so the final window
-    reproduces the rebuild's exact ranking.
-
-    Plan: base graph = ``knn_graph(old)``, or — the production shape —
-    a PERSISTED prior graph passed as ``base_graph`` (see
-    ``save_knn_graph``/``load_knn_graph``: any DataFrame with
-    (id, rnk, neighbor, cos_sim) rows), in which case the N² build
-    cost is paid exactly once per corpus, not per batch; old→new
-    scores = one ``mapInPandas`` over the old table with the new
-    batch's matrix shipped in the closure (batch-sized, the
-    _query_vector precedent); new→all = ``batch_knn_topk`` with the
-    new rows as queries (k+1 then self dropped). One id-keyed window
-    merges everything; nothing corpus-sized shuffles except the
-    original base-graph build.
-
-    ``new`` must be modest (an update batch — it ships in closures /
-    broadcasts); NULL vectors are filtered on both sides.
-
-    APPEND-ONLY CONTRACT: ``new`` ids must be disjoint from ``old``
-    ids. An id on both sides is an UPSERT, which this merge cannot
-    honor — the base graph's trimmed lists can't be repaired when a
-    stale edge pointing at the re-vectored id must be evicted (the
-    rank-k+1 candidate that would replace it was never kept). Route
-    upserts through :func:`knn_graph_upsert` (recomputes exactly the
-    citing rows — still graded ≡ rebuild) or a full rebuild. An EMPTY
-    (or all-NULL) new batch is a no-op: the base graph is returned
-    re-ranked to k, no jobs beyond the collect.
-    """
-    from pyspark.sql.window import Window
-
-    if base_graph is None:
-        base_graph = knn_graph(
-            old, id_col, vec_col, k,
-            n_blocks=n_blocks, decimals=decimals, slack=slack,
+def apply_graph_delta(base: DataFrame, delta: DataFrame, id_col: str) -> DataFrame:
+    """The full graph a graph delta describes: ``base`` rows whose id
+    the delta does not mention, plus the delta rows whose ``rnk`` is
+    not NULL. A delta mentions an id with its complete new list, with a
+    rnk-NULL marker (its stored list is invalid: recomputed or
+    deleted), or both — so a marker with no list retires the id. This
+    is the read side of every ``knn_graph_apply_cdc`` /
+    ``knn_graph_ivf_fold`` result and of the on-disk ``graph_delta``
+    epochs (streaming/index_sync.py)."""
+    # no distinct on the anti-join side: left_anti tolerates duplicate
+    # keys, and the dedup would cost its own exchange (AQE job) per
+    # execution of this plan
+    return base.join(delta.select(id_col), id_col, "left_anti").unionByName(
+        delta.filter(F.col("rnk").isNotNull()).select(
+            id_col, "rnk", "neighbor", "cos_sim"
         )
-    new_rows = (
-        new.select(id_col, vec_col).filter(F.col(vec_col).isNotNull()).collect()
-    )
-    new_list = sorted(
-        (int(r[id_col]), [float(x) for x in r[vec_col]]) for r in new_rows
-    )
-    if not new_list:
-        w0 = Window.partitionBy(id_col).orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor").asc()
-        )
-        return (
-            base_graph.select(id_col, "neighbor", "cos_sim")
-            .withColumn("rnk", F.row_number().over(w0))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "rnk", "neighbor", "cos_sim")
-        )
-    all_vecs = old.select(id_col, vec_col).unionByName(
-        new.select(id_col, vec_col)
-    )
-    # old rows vs the new batch: batch_knn with roles flipped would
-    # broadcast N_old queries; instead ship the new matrix and keep a
-    # per-OLD-row partial top-k — same kernel contract, one old scan.
-    qids = np.asarray([q for q, _ in new_list], dtype=np.int64)
-    qmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in new_list])
-    qnorm = np.sqrt(np.cumsum(qmat * qmat, axis=1)[:, -1])
-
-    def old_vs_new(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-            out_i, out_n, out_c = [], [], []
-            _partial_topk_side(
-                ids, mat, norms, qids, qmat, qnorm,
-                k, slack, out_i, out_n, out_c,
-            )
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        id_col: np.concatenate(out_i),
-                        "neighbor": np.concatenate(out_n),
-                        "cos_raw": np.concatenate(out_c),
-                    }
-                )
-
-    old_new = (
-        old.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull())
-        .mapInPandas(old_vs_new, f"{id_col} long, neighbor long, cos_raw double")
-        .withColumn("cos_sim", F.round("cos_raw", decimals))
-        .select(id_col, "neighbor", "cos_sim")
-    )
-    # new rows vs everything: k+1 covers the self hit dropped below
-    new_all = (
-        batch_knn_topk(
-            all_vecs, id_col, vec_col, new_list, k + 1,
-            decimals=decimals, slack=slack,
-        )
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            F.col("query_id").alias(id_col),
-            F.col(id_col).alias("neighbor"),
-            "cos_sim",
-        )
-    )
-    cands = (
-        base_graph.select(id_col, "neighbor", "cos_sim")
-        .unionByName(old_new)
-        .unionByName(new_all)
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor").asc()
-    )
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "rnk", "neighbor", "cos_sim")
     )
 
 
@@ -756,220 +631,29 @@ def knn_graph_upsert(
     slack: float = 1e-6,
     base_graph: DataFrame | None = None,
     max_affected: int = 65536,
-    delta_only: bool = False,
-):
-    """MAINTAIN a kNN graph under an UPSERT batch — ids may be new OR
-    re-vectored — closing ``knn_graph_incremental``'s documented
-    append-only limitation.
-
-    ``delta_only=True`` (optimization r15, delta generations) returns
-    ``(changed_rows, recompute_ids)`` instead of the full graph:
-    the final lists of exactly the ids whose top-k differs from the
-    stored base (the recomputed set plus unaffected ids that admitted
-    an upserted neighbor — ``_delta_finish``), and the driver-side
-    sorted id list whose stored lists were invalidated (affected ∪
-    updated — the caller's tombstone markers). Same candidate streams,
-    same window, same exactness; only the UNCHANGED keep rows are not
-    re-emitted, so a persisted-ledger caller writes churn-sized deltas
-    instead of the corpus-sized graph per batch. The reason upserts are harder than
-    appends: a trimmed rank-k list cannot be repaired when a stale
-    edge pointing AT a re-vectored id must be evicted (the rank-k+1
-    candidate that would replace it was never kept). The fix is to
-    recompute exactly the rows that could hold such an edge and merge
-    everything else.
-
-    EXACTNESS THEOREM (what the oracle grades): partition the new
-    corpus (old − updated ids ∪ updates) three ways —
-    1. UPDATED rows: lists recomputed from scratch (one
-       ``batch_knn_topk`` pass, they ride as queries).
-    2. AFFECTED rows: any row whose STORED list cites an updated
-       neighbor. Removing/changing that neighbor can promote an
-       unseen candidate, so their lists are also fully recomputed in
-       the same batched pass.
-    3. UNAFFECTED rows: none of their stored top-k cite an updated
-       id, so their top-k over (old − updated) EQUALS the stored
-       list (deleting non-cited vectors cannot promote anything), and
-       the true top-k over the new corpus is the re-ranked union of
-       that list with their partial top-k against the UPDATE matrix —
-       the incremental arm's scan, verbatim.
-    All three streams carry the same strict-sum 6dp cosines and
-    (cos DESC, id ASC) tiebreak, so the merge is bit-identical to a
-    full rebuild.
-
-    Cost: |updates|·N for the unaffected scan + |affected∪updates|·N
-    for the batched recompute — never (N+|u|)². ``affected`` is
-    k·|updates|-ish in expectation; if a hub update makes it exceed
-    ``max_affected`` (queries ship driver-side), this raises and the
-    caller should rebuild — the honest crossover, stated rather than
-    silently broadcast.
-    """
-    from pyspark.sql.window import Window
-
+) -> DataFrame:
+    """MAINTAIN a kNN graph under an UPSERT batch — ids may be new (an
+    append) or re-vectored — instead of recomputing it: the full graph
+    over (old − updated ids) ∪ updates, row-identical to a rebuild.
+    ``knn_graph_apply_cdc`` with no deletes does the work (|updates|·N
+    + |affected|·N, never (N+|u|)²); this verb applies its delta to the
+    base. ``base_graph`` is the stored graph over ``old`` (e.g.
+    ``load_knn_graph``); without it the N² base is built here once.
+    An empty or all-NULL batch returns the base unchanged; a hub-scale
+    batch (> ``max_affected``) raises — rebuild instead."""
     if base_graph is None:
-        # the graph is referenced by the affected-ids probe AND the
-        # final merged plan — checkpoint or the N² build re-executes
-        # per reference (the integer_pagerank lineage lesson)
+        # referenced by the affected probe, the keep stream and the
+        # delta apply — checkpoint or the N² build re-executes per
+        # reference
         base_graph = knn_graph(
             old, id_col, vec_col, k,
             n_blocks=n_blocks, decimals=decimals, slack=slack,
         ).localCheckpoint(eager=True)
-    # refusal enforced PRE-collect: the LIMIT bounds the driver fetch to
-    # the budget + 1, so a hub-scale update frame is never materialized
-    # before the raise (optimization r15; same discipline as the
-    # affected probe below)
-    upd_rows = _bounded_collect(
-        updates.select(id_col, vec_col).filter(F.col(vec_col).isNotNull()),
-        max_affected + 1,
+    delta = knn_graph_apply_cdc(
+        old, None, updates, id_col, vec_col, k, base_graph,
+        max_affected=max_affected, decimals=decimals, slack=slack,
     )
-    if len(upd_rows) > max_affected:
-        raise ValueError(
-            f"≥{len(upd_rows)} updates exceed max_affected={max_affected}: "
-            "a hub-scale upsert — rebuild the graph instead"
-        )
-    upd_list = sorted(
-        (int(r[id_col]), [float(x) for x in r[vec_col]]) for r in upd_rows
-    )
-    if not upd_list:
-        if delta_only:
-            return _empty_graph_delta(old.sparkSession, id_col), []
-        w0 = Window.partitionBy(id_col).orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor").asc()
-        )
-        return (
-            base_graph.select(id_col, "neighbor", "cos_sim")
-            .withColumn("rnk", F.row_number().over(w0))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "rnk", "neighbor", "cos_sim")
-        )
-    spark = old.sparkSession
-    upd_ids_df = spark.createDataFrame(
-        [(i,) for i, _ in upd_list], f"{id_col} long"
-    )
-    old_rows = old.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
-    survivors = old_rows.join(upd_ids_df, id_col, "left_anti")
-    corpus = survivors.unionByName(
-        updates.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
-    )
-
-    upd_id_set = {i for i, _ in upd_list}
-    # ONE bounded driver round trip for the affected probe AND the
-    # affected-vector fetch (optimization r14: previously two sequential
-    # collects = two full AQE query executions per call, measured as the
-    # dominant per-micro-batch scheduler cost in the sync arms): the
-    # probe ids left-join the survivor vectors, and the LIMIT keeps the
-    # collect bounded to the refusal budget — the same
-    # never-collect-unbounded-vectors discipline as the old two-step,
-    # in half the round trips. Updated ids are excluded probe-side
-    # (anti-join) exactly as the old set subtraction did.
-    budget = max_affected - len(upd_list)
-    aff_probe = (
-        base_graph.join(
-            upd_ids_df.withColumnRenamed(id_col, "neighbor"), "neighbor"
-        )
-        .select(id_col)
-        .distinct()
-        .join(upd_ids_df, id_col, "left_anti")
-    )
-    aff_rows = _bounded_collect(
-        aff_probe.join(
-            survivors.withColumnRenamed(vec_col, "__vec"), id_col, "left"
-        ),
-        budget + 1,
-    )
-    if len(aff_rows) > budget:
-        raise ValueError(
-            f"≥{len(aff_rows)} affected rows + {len(upd_list)} updates "
-            f"exceed max_affected={max_affected}: a hub-scale upsert — "
-            "rebuild the graph instead"
-        )
-    affected_ids = sorted(int(r[id_col]) for r in aff_rows)
-    affected_vecs = sorted(
-        (int(r[id_col]), [float(x) for x in r["__vec"]])
-        for r in aff_rows
-        if r["__vec"] is not None
-    )
-    queries = sorted(affected_vecs + upd_list)
-    # recompute via the shared kernel with the query matrix in the
-    # closure — batch_knn_topk's per-query accumulator bookkeeping is
-    # built for mini-batch Q (≈8-40); at Q ≈ k·|updates| its Python
-    # concat-per-query-per-batch dominates (measured 26.7 s → the
-    # matmul path below). One BLAS matmul per corpus partition, loop
-    # over queries with numpy ops, partial top-k into the same window.
-    aq_ids = np.asarray([q for q, _ in queries], dtype=np.int64)
-    aq_mat = np.stack([np.asarray(v, dtype=np.float64) for _, v in queries])
-    aq_nrm = np.sqrt(np.cumsum(aq_mat * aq_mat, axis=1)[:, -1])
-
-    recompute_set = set(affected_ids) | upd_id_set
-    rec_df = spark.createDataFrame(
-        [(i,) for i in sorted(recompute_set)], f"{id_col} long"
-    )
-    keep_base = base_graph.join(rec_df, id_col, "left_anti").select(
-        id_col, "neighbor", "cos_sim"
-    )
-    # the update matrix for the unaffected scan (the incremental arm)
-    qids = np.asarray([q for q, _ in upd_list], dtype=np.int64)
-    qmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in upd_list])
-    qnorm = np.sqrt(np.cumsum(qmat * qmat, axis=1)[:, -1])
-    # ONE fused corpus pass (optimization r14: previously TWO full
-    # passes — ``recompute_lists`` over corpus + ``unaffected_vs_
-    # updates`` over survivors − rec_df — each re-executing the whole
-    # corpus lineage; guide §1.2 "remove unnecessary passes"). Per
-    # Arrow batch the closure emits (a) the recompute queries' partials
-    # vs the batch rows and (b) the batch's UNAFFECTED rows' partials
-    # vs the update matrix. (b)'s old input set was survivors − rec_df
-    # = corpus − (upd ids ∪ affected ids) — exactly the mask below, so
-    # the emitted multiset is identical and the downstream window
-    # returns bit-identical rows.
-    rec_ids_arr = np.asarray(sorted(recompute_set), dtype=np.int64)
-
-    def fused_scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-            out_i, out_n, out_c = [], [], []
-            _partial_topk_side(
-                aq_ids, aq_mat, aq_nrm, ids, mat, norms,
-                k, slack, out_i, out_n, out_c,
-            )
-            un = ~np.isin(ids, rec_ids_arr)
-            if un.any():
-                _partial_topk_side(
-                    ids[un], mat[un], norms[un], qids, qmat, qnorm,
-                    k, slack, out_i, out_n, out_c,
-                )
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        id_col: np.concatenate(out_i),
-                        "neighbor": np.concatenate(out_n),
-                        "cos_raw": np.concatenate(out_c),
-                    }
-                )
-
-    scanned = (
-        corpus.mapInPandas(
-            fused_scan, f"{id_col} long, neighbor long, cos_raw double"
-        )
-        .withColumn("cos_sim", F.round("cos_raw", decimals))
-        .select(id_col, "neighbor", "cos_sim")
-    )
-    if delta_only:
-        return (
-            _delta_finish(keep_base, [scanned], id_col, k),
-            sorted(recompute_set),
-        )
-    cands = keep_base.unionByName(scanned)
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor").asc()
-    )
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "rnk", "neighbor", "cos_sim")
-    )
+    return apply_graph_delta(base_graph, delta, id_col)
 
 
 def knn_graph_delete(
@@ -983,165 +667,29 @@ def knn_graph_delete(
     slack: float = 1e-6,
     base_graph: DataFrame | None = None,
     max_affected: int = 65536,
-    delta_only: bool = False,
-):
-    """RETIRE vectors from a kNN graph — the lifecycle arm upsert and
-    append leave open, and the one a GDPR/takedown request actually
-    exercises: rows must leave the index AND every edge citing them
-    must be evicted, which a trimmed rank-k list cannot do locally
-    (the rank-k+1 candidate that would backfill was never kept).
-
-    EXACTNESS THEOREM (what the oracle grades): partition the
-    remaining corpus (old − deleted) two ways —
-    1. AFFECTED rows: their STORED list cites a deleted id. The
-       eviction can promote an unseen candidate, so their lists are
-       recomputed from scratch against the remaining corpus (one
-       batched closure-shipped pass, the upsert machinery).
-    2. UNAFFECTED rows: none of their stored top-k are deleted, so
-       their stored list is still exactly the top-k over the remaining
-       corpus (every stored edge survives, and removing non-cited
-       vectors cannot promote anything below them) — kept VERBATIM,
-       zero recompute.
-    Deleted rows simply vanish. Both streams carry the same strict-sum
-    6dp cosines and (cos DESC, id ASC) tiebreak, so the merge is
-    bit-identical to a full rebuild over the remaining corpus.
-
-    Cost: |affected|·N with affected ≈ in-degree of the deleted set
-    (k·|deletes| in expectation) — never (N−|d|)². A hub-scale delete
-    (affected > ``max_affected``) REFUSES with the rebuild
-    recommendation instead of silently collecting unbounded vectors,
-    same contract as :func:`knn_graph_upsert`.
-
-    ``delta_only=True`` returns ``(changed_rows, affected_ids)``: the
-    recomputed lists of exactly the affected ids (deletes cannot
-    improve an unaffected list, so nothing else changes) plus the
-    driver-side affected-id list for the caller's tombstone markers —
-    deleted ids themselves carry no rows either way.
-    """
-    from pyspark.sql.window import Window
-
+) -> DataFrame:
+    """RETIRE vectors from a kNN graph — rows must leave the index AND
+    every edge citing them must be evicted, which a trimmed rank-k list
+    cannot do locally (the rank-k+1 candidate that would backfill was
+    never kept). Returns the full graph over old − deleted ids,
+    row-identical to a rebuild: ``knn_graph_apply_cdc`` with no upserts
+    recomputes only the rows citing a deleted id (|affected|·N) and
+    this verb applies its delta to the base (built here when
+    ``base_graph`` is None). An empty delete returns the base
+    unchanged; a hub-scale delete (> ``max_affected``) raises."""
     if base_graph is None:
-        # referenced by the affected-ids probe AND the keep stream —
-        # checkpoint or the N² build re-executes per reference
+        # referenced by the affected probe, the keep stream and the
+        # delta apply — checkpoint or the N² build re-executes per
+        # reference
         base_graph = knn_graph(
             old, id_col, vec_col, k,
             n_blocks=n_blocks, decimals=decimals, slack=slack,
         ).localCheckpoint(eager=True)
-    spark = old.sparkSession
-    del_ids_df = deletes.select(id_col).distinct()
-    del_ids = {int(r[id_col]) for r in del_ids_df.collect()}
-    if not del_ids and delta_only:
-        return _empty_graph_delta(spark, id_col), []
-    if not del_ids:
-        w0 = Window.partitionBy(id_col).orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor").asc()
-        )
-        return (
-            base_graph.select(id_col, "neighbor", "cos_sim")
-            .withColumn("rnk", F.row_number().over(w0))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "rnk", "neighbor", "cos_sim")
-        )
-    survivors = (
-        old.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull())
-        .join(del_ids_df, id_col, "left_anti")
+    delta = knn_graph_apply_cdc(
+        old, deletes, None, id_col, vec_col, k, base_graph,
+        max_affected=max_affected, decimals=decimals, slack=slack,
     )
-    # ONE bounded driver round trip for the affected probe AND the
-    # affected-vector fetch (optimization r14, mirroring
-    # knn_graph_upsert): probe ids left-join the survivor vectors; the
-    # LIMIT keeps the collect bounded to the refusal budget, preserving
-    # the never-collect-unbounded-vectors discipline in half the round
-    # trips. Deleted ids are excluded probe-side exactly as the old set
-    # subtraction did.
-    aff_probe = (
-        base_graph.join(
-            del_ids_df.withColumnRenamed(id_col, "neighbor"), "neighbor"
-        )
-        .select(id_col)
-        .distinct()
-        .join(del_ids_df, id_col, "left_anti")
-    )
-    aff_rows = _bounded_collect(
-        aff_probe.join(
-            survivors.withColumnRenamed(vec_col, "__vec"), id_col, "left"
-        ),
-        max_affected + 1,
-    )
-    if len(aff_rows) > max_affected:
-        raise ValueError(
-            f"≥{len(aff_rows)} rows cite the deleted set "
-            f"(max_affected={max_affected}): a hub-scale delete — "
-            "rebuild the graph instead"
-        )
-    affected_ids = sorted(int(r[id_col]) for r in aff_rows)
-    rec_df = spark.createDataFrame(
-        [(i,) for i in affected_ids], f"{id_col} long"
-    )
-    keep = (
-        base_graph.join(rec_df, id_col, "left_anti")
-        .join(del_ids_df, id_col, "left_anti")
-        .select(id_col, "neighbor", "cos_sim")
-    )
-    if not affected_ids:
-        if delta_only:  # no stored edge cites the deleted set
-            return _empty_graph_delta(spark, id_col), []
-        w0 = Window.partitionBy(id_col).orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor").asc()
-        )
-        return (
-            keep.withColumn("rnk", F.row_number().over(w0))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "rnk", "neighbor", "cos_sim")
-        )
-    affected_vecs = sorted(
-        (int(r[id_col]), [float(x) for x in r["__vec"]])
-        for r in aff_rows
-        if r["__vec"] is not None
-    )
-    aq_ids = np.asarray([q for q, _ in affected_vecs], dtype=np.int64)
-    aq_mat = np.stack([np.asarray(v, dtype=np.float64) for _, v in affected_vecs])
-    aq_nrm = np.sqrt(np.cumsum(aq_mat * aq_mat, axis=1)[:, -1])
-
-    def recompute_lists(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-            out_i, out_n, out_c = [], [], []
-            _partial_topk_side(
-                aq_ids, aq_mat, aq_nrm, ids, mat, norms,
-                k, slack, out_i, out_n, out_c,
-            )
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        id_col: np.concatenate(out_i),
-                        "neighbor": np.concatenate(out_n),
-                        "cos_raw": np.concatenate(out_c),
-                    }
-                )
-
-    recomputed = (
-        survivors.mapInPandas(
-            recompute_lists, f"{id_col} long, neighbor long, cos_raw double"
-        )
-        .withColumn("cos_sim", F.round("cos_raw", decimals))
-        .select(id_col, "neighbor", "cos_sim")
-    )
-    if delta_only:
-        return _delta_finish(keep, [recomputed], id_col, k), affected_ids
-    cands = keep.unionByName(recomputed)
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor").asc()
-    )
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "rnk", "neighbor", "cos_sim")
-    )
+    return apply_graph_delta(base_graph, delta, id_col)
 
 
 def knn_graph_apply_cdc(
@@ -1151,28 +699,30 @@ def knn_graph_apply_cdc(
     id_col: str,
     vec_col: str,
     k: int,
-    n_blocks: int = 8,
+    base_graph: DataFrame,
+    max_affected: int = 65536,
     decimals: int = 6,
     slack: float = 1e-6,
-    base_graph: DataFrame | None = None,
-    max_affected: int = 65536,
-    delta_only: bool = False,
-):
-    """Apply one CDC batch (disjoint delete-id set + upsert rows) to a
-    kNN graph in ONE affected-set pass — the fused form of
-    ``knn_graph_delete`` followed by ``knn_graph_upsert`` that the
-    streaming CDC arm previously ran sequentially (optimization r14:
-    two full corpus passes, two affected probes, two merge windows and
-    an eager localCheckpoint of the intermediate repaired graph per
-    micro-batch → one of each; guide §1.2 "remove unnecessary passes").
+) -> DataFrame:
+    """The exact kNN-graph maintenance core: apply one CDC batch
+    (delete ids + upsert rows, ids may be new or re-vectored) to
+    ``base_graph`` — the stored graph over ``old`` — in ONE
+    affected-set pass, and return the batch's GRAPH DELTA: the changed
+    ids' complete new top-k lists plus one rnk-NULL marker row per
+    invalidated id (recomputed or deleted), in the on-disk
+    ``graph_delta`` shape (id, rnk, neighbor, cos_sim).
+    ``apply_graph_delta(base_graph, delta)`` is the full graph over the
+    new corpus ((old − changed ids) ∪ upserts), row-identical to a
+    rebuild.
 
-    EXACTNESS (same theorem as the two verbs, with the changed set
-    C = deleted ids ∪ upserted ids): partition the new corpus
-    ((old − C) ∪ upserts) three ways —
+    EXACTNESS (the top-k of a union is the re-ranked union of the
+    per-part top-k lists), with the changed set C = deleted ids ∪
+    upserted ids, partitioning the new corpus three ways —
     1. UPSERTED rows: recomputed from scratch (ride as queries).
     2. AFFECTED rows: stored list cites ANY id in C (a deleted
        neighbor must be evicted, a re-vectored one re-scored; either
-       can promote an unseen candidate) — recomputed in the same pass.
+       can promote an unseen candidate — the rank-k+1 row was never
+       kept) — recomputed in the same pass.
     3. UNAFFECTED rows: no stored edge cites C, so every stored edge
        survives with unchanged vectors and removing non-cited vectors
        cannot promote anything — their new top-k is the re-ranked
@@ -1180,35 +730,19 @@ def knn_graph_apply_cdc(
        matrix (empty when the batch is delete-only).
     Deleted rows vanish (they are in C, never in the new corpus). All
     streams carry the strict-sum 6dp cosines and (cos DESC, id ASC)
-    tiebreak, so the merge is bit-identical to delete-then-upsert AND
-    to a full rebuild — the sequential form recomputes C-citing rows
-    twice (vs corpus−deleted, then re-ranked vs updates); both end at
-    the exact top-k over the new corpus.
+    tiebreak, so the merge is bit-identical to a full rebuild.
 
     ``deletes`` (ids) and ``upserts`` (id, vector) must not share ids
-    (the CDC contract's at-most-one-row-per-id, enforced upstream).
-    Cost: |C∪affected|·N, one corpus pass, one bounded driver fetch —
-    the refusal discipline of both verbs, unchanged.
-
-    ``delta_only=True`` returns ``(changed_rows, recompute_ids)``: the
-    final lists of exactly the ids whose top-k changed (recomputed set
-    plus unaffected ids admitting an upserted neighbor), and the
-    driver-side sorted recompute-id list (affected ∪ upserted) for the
-    caller's tombstone markers — deleted ids carry no rows either way
-    and the caller markers them from its own delete set.
+    (the CDC contract's at-most-one-row-per-id, enforced upstream);
+    either may be None. NULL upsert vectors are skipped. Cost:
+    |C∪affected|·N in one corpus pass plus one bounded driver fetch;
+    a batch whose upserts + affected rows exceed ``max_affected``
+    raises (the queries ship driver-side) — rebuild the graph instead.
     """
-    from pyspark.sql.window import Window
-
-    if base_graph is None:
-        base_graph = knn_graph(
-            old, id_col, vec_col, k,
-            n_blocks=n_blocks, decimals=decimals, slack=slack,
-        ).localCheckpoint(eager=True)
     spark = old.sparkSession
     # refusal enforced PRE-collect: the LIMIT bounds the driver fetch to
     # the budget + 1, so a hub-scale upsert frame is never materialized
-    # before the raise (optimization r15; same discipline as the
-    # affected probe below)
+    # before the raise (same discipline as the affected probe below)
     upd_rows = (
         _bounded_collect(
             upserts.select(id_col, vec_col).filter(
@@ -1237,17 +771,7 @@ def knn_graph_apply_cdc(
     )
     changed = [d for d in (del_ids_df, upd_ids_df) if d is not None]
     if not changed:
-        if delta_only:
-            return _empty_graph_delta(spark, id_col), []
-        w0 = Window.partitionBy(id_col).orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor").asc()
-        )
-        return (
-            base_graph.select(id_col, "neighbor", "cos_sim")
-            .withColumn("rnk", F.row_number().over(w0))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "rnk", "neighbor", "cos_sim")
-        )
+        return _empty_graph_delta(spark, id_col)
     changed_df = changed[0]
     for c in changed[1:]:
         changed_df = changed_df.unionByName(c)
@@ -1260,8 +784,10 @@ def knn_graph_apply_cdc(
         if upd_list
         else survivors
     )
-    # ONE bounded driver round trip: affected probe + vector fetch
-    # (the knn_graph_upsert/delete fused-fetch shape)
+    # ONE bounded driver round trip for the affected probe AND the
+    # affected-vector fetch: the probe ids left-join the survivor
+    # vectors, and the LIMIT keeps the collect bounded to the refusal
+    # budget. Changed ids are excluded probe-side (anti-join).
     budget = max_affected - len(upd_list)
     aff_probe = (
         base_graph.join(
@@ -1298,87 +824,78 @@ def knn_graph_apply_cdc(
         if recompute_set
         else None
     )
-    keep = base_graph
-    if rec_df is not None:
-        keep = keep.join(rec_df, id_col, "left_anti")
-    if del_ids_df is not None:
-        keep = keep.join(del_ids_df, id_col, "left_anti")
-    keep = keep.select(id_col, "neighbor", "cos_sim")
-    if not queries:  # delete-only batch touching no stored edges
-        if delta_only:
-            return _empty_graph_delta(spark, id_col), sorted(recompute_set)
-        w0 = Window.partitionBy(id_col).orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor").asc()
-        )
-        return (
-            keep.withColumn("rnk", F.row_number().over(w0))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "rnk", "neighbor", "cos_sim")
-        )
-    aq_ids = np.asarray([q for q, _ in queries], dtype=np.int64)
-    aq_mat = np.stack([np.asarray(v, dtype=np.float64) for _, v in queries])
-    aq_nrm = np.sqrt(np.cumsum(aq_mat * aq_mat, axis=1)[:, -1])
-    rec_ids_arr = np.asarray(sorted(recompute_set), dtype=np.int64)
-    if upd_list:
+    # rnk-NULL markers: every id whose stored list this batch
+    # invalidates — the recomputed set and the deleted ids
+    nulls = (
+        F.lit(None).cast("int").alias("rnk"),
+        F.lit(None).cast("long").alias("neighbor"),
+        F.lit(None).cast("double").alias("cos_sim"),
+    )
+    markers = [m.select(id_col, *nulls) for m in (rec_df, deletes) if m is not None]
+    parts = markers
+    if queries:  # else a delete-only batch touching no stored edge
+        keep = base_graph
+        if rec_df is not None:
+            keep = keep.join(rec_df, id_col, "left_anti")
+        if del_ids_df is not None:
+            keep = keep.join(del_ids_df, id_col, "left_anti")
+        keep = keep.select(id_col, "neighbor", "cos_sim")
+        aq_ids = np.asarray([q for q, _ in queries], dtype=np.int64)
+        aq_mat = np.stack([np.asarray(v, dtype=np.float64) for _, v in queries])
+        aq_nrm = np.sqrt(np.cumsum(aq_mat * aq_mat, axis=1)[:, -1])
+        rec_ids_arr = np.asarray(sorted(recompute_set), dtype=np.int64)
+        # the upsert matrix for the unaffected rows' partials
         qids = np.asarray([q for q, _ in upd_list], dtype=np.int64)
-        qmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in upd_list])
+        qmat = np.asarray(
+            [v for _, v in upd_list], dtype=np.float64
+        ).reshape(len(upd_list), aq_mat.shape[1])
         qnorm = np.sqrt(np.cumsum(qmat * qmat, axis=1)[:, -1])
-    else:
-        qids = np.empty(0, np.int64)
-        qmat = np.empty((0, aq_mat.shape[1]), np.float64)
-        qnorm = np.empty(0, np.float64)
 
-    def fused_scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-            out_i, out_n, out_c = [], [], []
-            _partial_topk_side(
-                aq_ids, aq_mat, aq_nrm, ids, mat, norms,
-                k, slack, out_i, out_n, out_c,
-            )
-            if len(qids):
-                un = ~np.isin(ids, rec_ids_arr)
-                if un.any():
-                    _partial_topk_side(
-                        ids[un], mat[un], norms[un], qids, qmat, qnorm,
-                        k, slack, out_i, out_n, out_c,
-                    )
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        id_col: np.concatenate(out_i),
-                        "neighbor": np.concatenate(out_n),
-                        "cos_raw": np.concatenate(out_c),
-                    }
+        # ONE fused corpus pass: per Arrow batch the closure emits (a)
+        # the recompute queries' partials vs the batch rows and (b) the
+        # batch's UNAFFECTED rows' partials vs the upsert matrix
+        def fused_scan(batches):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                ids = pdf[id_col].to_numpy(dtype=np.int64)
+                mat = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
                 )
+                norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+                out_i, out_n, out_c = [], [], []
+                _partial_topk_side(
+                    aq_ids, aq_mat, aq_nrm, ids, mat, norms,
+                    k, slack, out_i, out_n, out_c,
+                )
+                if len(qids):
+                    un = ~np.isin(ids, rec_ids_arr)
+                    if un.any():
+                        _partial_topk_side(
+                            ids[un], mat[un], norms[un], qids, qmat, qnorm,
+                            k, slack, out_i, out_n, out_c,
+                        )
+                if out_i:
+                    yield pd.DataFrame(
+                        {
+                            id_col: np.concatenate(out_i),
+                            "neighbor": np.concatenate(out_n),
+                            "cos_raw": np.concatenate(out_c),
+                        }
+                    )
 
-    scanned = (
-        corpus.mapInPandas(
-            fused_scan, f"{id_col} long, neighbor long, cos_raw double"
+        scanned = (
+            corpus.mapInPandas(
+                fused_scan, f"{id_col} long, neighbor long, cos_raw double"
+            )
+            .withColumn("cos_sim", F.round("cos_raw", decimals))
+            .select(id_col, "neighbor", "cos_sim")
         )
-        .withColumn("cos_sim", F.round("cos_raw", decimals))
-        .select(id_col, "neighbor", "cos_sim")
-    )
-    if delta_only:
-        return (
-            _delta_finish(keep, [scanned], id_col, k),
-            sorted(recompute_set),
-        )
-    cands = keep.unionByName(scanned)
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor").asc()
-    )
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "rnk", "neighbor", "cos_sim")
-    )
+        parts = [_delta_finish(keep, [scanned], id_col, k)] + markers
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def knn_graph_ivf(
@@ -1619,12 +1136,11 @@ def knn_graph_ivf_fold(
     cluster_col: str = "cluster",
     decimals: int = 6,
     slack: float = 1e-6,
-    delta_only: bool = False,
-):
+) -> DataFrame:
     """Fold an APPEND-ONLY batch into a kNN graph through IVF ROUTING —
     the maintenance arm for the regime ``knn_graph_auto_plan`` refuses
     (> ivf_max_rows), where even the |batch|·N exact fold of
-    ``knn_graph_incremental`` is too much corpus to touch per batch.
+    ``knn_graph_upsert`` is too much corpus to touch per batch.
     The corpus arrives as an IVF POSTING table ((id, vec, cluster) —
     ``build_ivf_index``/``load_synced_ivf``'s layout) plus its FIXED
     centroids; per batch the only corpus rows read are the postings in
@@ -1644,26 +1160,25 @@ def knn_graph_ivf_fold(
     n_clusters every cluster is probed, so forward sees the whole
     corpus, reverse gives every corpus row its full partial top-k
     against the batch, and the batch block is unmasked — the merge is
-    then exactly ``knn_graph_incremental``'s candidate set, whose
-    re-ranked union equals a full rebuild (its theorem), with the same
+    then exactly the exact fold's candidate set for an append (stored
+    lists ∪ partials vs the batch ∪ the batch's own lists), whose
+    re-ranked union equals a full rebuild, with the same
     strict-sum 6dp cosines from the shared ``_partial_topk_side``
     kernel. At partial width the SAME merge is the recall dial: a
     missed edge is always a cross-cluster one the probe mass chose not
     to pay for (pytest-pinned recall floor on clustered batches).
 
-    APPEND-ONLY CONTRACT (as ``knn_graph_incremental``): ``new`` ids
-    must be disjoint from the postings' — an upsert needs corpus-wide
-    stale-edge eviction, which is ``knn_graph_upsert``'s exact job.
-    ``new`` is an update batch: it ships in the scan closure.
+    APPEND-ONLY CONTRACT: ``new`` ids must be disjoint from the
+    postings' — an upsert needs corpus-wide stale-edge eviction, which
+    is ``knn_graph_apply_cdc``'s exact job. ``new`` is an update batch:
+    it ships in the scan closure.
 
-    ``delta_only=True`` returns ``(changed_rows, [])``: the final
-    lists of exactly the ids whose top-k changed — the batch's new ids
-    plus corpus rows that admitted a batch neighbor. Appends
-    invalidate nobody's stored list outright (no evictions), so the
-    marker list is always empty.
+    Returns the batch's graph delta (``apply_graph_delta`` gives the
+    full graph): the final lists of exactly the ids whose top-k changed
+    — the batch's new ids plus corpus rows that admitted a batch
+    neighbor. Appends invalidate nobody's stored list outright (no
+    evictions), so the delta carries no markers.
     """
-    from pyspark.sql.window import Window
-
     centers = np.asarray(centroids, dtype="float64")
     n_clusters = len(centers)
     new_rows = (
@@ -1672,18 +1187,8 @@ def knn_graph_ivf_fold(
     new_list = sorted(
         (int(r[id_col]), [float(x) for x in r[vec_col]]) for r in new_rows
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor").asc()
-    )
-    if not new_list:
-        if delta_only:
-            return _empty_graph_delta(new.sparkSession, id_col), []
-        return (
-            base_graph.select(id_col, "neighbor", "cos_sim")
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "rnk", "neighbor", "cos_sim")
-        )
+    if not new_list:  # the closure matrices below need ≥ 1 row
+        return _empty_graph_delta(new.sparkSession, id_col)
     qids = np.asarray([q for q, _ in new_list], dtype=np.int64)
     qmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in new_list])
     qnorm = np.sqrt(np.cumsum(qmat * qmat, axis=1)[:, -1])
@@ -1796,25 +1301,11 @@ def knn_graph_ivf_fold(
         .select(id_col, "neighbor", "cos_sim")
     )
 
-    if delta_only:
-        return (
-            _delta_finish(
-                base_graph.select(id_col, "neighbor", "cos_sim"),
-                [emitted, nn_df],
-                id_col,
-                k,
-            ),
-            [],
-        )
-    cands = (
-        base_graph.select(id_col, "neighbor", "cos_sim")
-        .unionByName(emitted)
-        .unionByName(nn_df)
-    )
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "rnk", "neighbor", "cos_sim")
+    return _delta_finish(
+        base_graph.select(id_col, "neighbor", "cos_sim"),
+        [emitted, nn_df],
+        id_col,
+        k,
     )
 
 

@@ -2368,13 +2368,14 @@ def embedding_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_knn_graph_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN-graph maintenance under an UPSERT batch — the last 1% of
     ids arrive RE-VECTORED (embeddings reversed: same norms, new
-    directions), which the append-only incremental arm cannot honor: a
-    trimmed list can't evict a stale edge at an updated neighbor
-    (the replacement candidate was never kept). The upsert arm
-    (operators/similarity.py:knn_graph_upsert) recomputes exactly the
-    rows whose stored lists CITE an updated id (plus the updates
-    themselves, one batched pass) and merges every other row's stored
-    list with its partial top-k against the update matrix —
+    directions): a trimmed list can't evict a stale edge at an updated
+    neighbor (the replacement candidate was never kept), so
+    ``knn_graph_upsert`` (operators/similarity.py — the delta of the
+    maintenance core ``knn_graph_apply_cdc`` applied to the base)
+    recomputes exactly the rows whose stored lists CITE an updated id
+    (plus the updates themselves, one batched pass) and merges every
+    other row's stored list with its partial top-k against the update
+    matrix —
     |updates|·N + |affected|·N work, never (N+|u|)². The oracle is the
     FULL-REBUILD ranking over the upserted corpus, so the grade IS
     upsert-equals-rebuild, row for row at 6dp.
@@ -2442,7 +2443,7 @@ def embedding_knn_graph_upsert_loaded(spark: SparkSession, sf_dir: str) -> DataF
     grade is load-then-upsert ≡ rebuild, row for row at 6dp. The save
     cost is N·k skinny rows — corpus-shaped but narrow; the upsert cost
     is |updates|·N + |affected|·N, the crossover documented at
-    operators/similarity.py:knn_graph_upsert.
+    operators/similarity.py:knn_graph_apply_cdc.
     """
     import shutil as _shutil
     import tempfile as _tempfile
@@ -2512,7 +2513,7 @@ def streaming_knn_graph_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``init_knn_graph_root``); the last 3% of ids then arrive
     RE-VECTORED (reversed embeddings) as a 3-micro-batch parquet file
     stream, and each micro-batch folds into the SAVED graph inside
-    foreachBatch via ``knn_graph_upsert(base_graph=loaded)`` —
+    foreachBatch via ``knn_graph_apply_cdc`` (upserts only) —
     |batch|·N + |affected|·N per epoch, the N² build paid exactly once
     (streaming/index_sync.py). Ids in [97%, 99%) are true UPSERTS
     (stale edges at them must be evicted corpus-wide); ids ≥ 99% are
@@ -2611,10 +2612,10 @@ def streaming_knn_graph_ivf_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py:knn_graph_ivf_fold).
 
     Graded at FULL probe width, where the routed fold is provably
-    exact (every cluster probed ⇒ the candidate set equals
-    ``knn_graph_incremental``'s, whose merge ≡ rebuild): base graph
+    exact (every cluster probed ⇒ the candidate set equals the exact
+    fold's for an append, whose merge ≡ rebuild): base graph
     over ids below the 94% mark, the last 6% arrive as a 3-micro-batch
-    INSERT stream (append-only — the ``knn_graph_incremental``
+    INSERT stream (append-only — the ``knn_graph_ivf_fold``
     contract; upserts route through the exact sync), and the oracle is
     the full-rebuild ranking over the final corpus — three chained
     IVF-routed folds ≡ one rebuild, row for row at 6dp. The partial-
@@ -2809,7 +2810,8 @@ def streaming_ivf_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_knn_graph_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN-graph maintenance under a DELETE batch — the lifecycle arm a
     GDPR/takedown request exercises, closing the build→append→upsert
-    trio (operators/similarity.py:knn_graph_delete): the last 1% of
+    trio (operators/similarity.py:knn_graph_delete, the delete path of
+    the maintenance core ``knn_graph_apply_cdc``): the last 1% of
     ids leave the index, every edge CITING them must be evicted, and a
     trimmed rank-k list can't backfill locally (the rank-k+1 candidate
     was never kept). Only rows citing a deleted id recompute
@@ -2900,11 +2902,12 @@ def embedding_knn_graph_point_lookup(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def embedding_knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN-graph MAINTENANCE: the last 10% of the id range arrives as
-    an update batch, and the graph is updated — base graph over the
-    old 90%, one old-corpus scan against the new batch, one batched
-    pass for the new rows' own lists — instead of rebuilt. Work is
-    |new|·N, not (N+|new|)²; the merge is exact by the top-k union
-    theorem (operators/similarity.py:knn_graph_incremental). The
+    an append batch, and the graph is updated — base graph over the
+    old 90%, then ``knn_graph_upsert`` of the new ids (an append is an
+    upsert of new ids: one corpus pass scoring the old rows against
+    the batch and the new rows' own lists) — instead of rebuilt. Work
+    is |new|·N, not (N+|new|)²; the merge is exact by the top-k union
+    theorem (operators/similarity.py:knn_graph_apply_cdc). The
     oracle is the FULL-REBUILD ranking over the whole table, so the
     grade IS the incremental-equals-rebuild proof, row for row at 6dp.
     """
@@ -2913,7 +2916,7 @@ def embedding_knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     )
     mx = int(emb.agg(F.max("vec_id").alias("m")).first()["m"])
     split = mx * 9 // 10
-    out = S.knn_graph_incremental(
+    out = S.knn_graph_upsert(
         emb.filter(F.col("vec_id") < split),
         emb.filter(F.col("vec_id") >= split),
         "vec_id",
@@ -14820,7 +14823,7 @@ def streaming_knn_graph_delete_sync(spark: SparkSession, sf_dir: str) -> DataFra
     tombstone leaves edges citing the deleted vectors):
     ``delete_graph_ids`` (streaming/index_sync.py) writes the
     tombstone epoch AND publishes the EDGE-REPAIRED graph
-    (``knn_graph_delete`` — affected rows recomputed against the
+    (``knn_graph_apply_cdc`` — affected rows recomputed against the
     remaining corpus, unaffected lists kept verbatim) as a
     same-numbered new generation in ONE pointer flip, and the later
     stream folds build on the repaired graph with the tombstones
@@ -15093,11 +15096,10 @@ def streaming_knn_graph_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed interleaves inserts, re-vectors, and retirements in one
     stream, where previously inserts/upserts had a streaming arm and
     deletes only the manual ``delete_graph_ids`` verb: each
-    micro-batch folds DELETE-THEN-UPSERT against the saved graph
-    (``knn_graph_delete`` repairs citing edges, ``knn_graph_upsert``
-    folds the new/re-vectored rows on the repaired base — both
-    |batch|·N + |affected|·N, never a rebuild) and publishes ONE new
-    generation per batch.
+    micro-batch folds its deletes and upserts in ONE
+    ``knn_graph_apply_cdc`` pass against the saved graph (citing edges
+    repaired, new/re-vectored rows folded — |batch|·N + |affected|·N,
+    never a rebuild) and publishes ONE new generation per batch.
 
     The scenario: base graph over ids below the 95% mark; batch 0
     INSERTS the rest; batch 1 RE-VECTORS vec_id % 8 = 1 (reversed
@@ -15212,7 +15214,7 @@ def streaming_knn_graph_ivf_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFr
     micro-batch ONE epoch carries the U/D tombstones, the repaired-
     then-grown graph generation, and the upserts' cluster-partitioned
     postings. An update costs one exact edge eviction
-    (``knn_graph_delete``, |affected|·N) plus one IVF-ROUTED insert of
+    (``knn_graph_apply_cdc``, |affected|·N) plus one IVF-ROUTED insert of
     the new version (|batch| × |probed postings| — the committed
     corpus never rescanned), which is what makes updates affordable in
     the > 2M-row regime ``knn_graph_auto`` refuses the exact arm for.

@@ -5,7 +5,7 @@ replay-safe drains, compact/vacuum; every arm here is a thin fold
 over one instance), eight sync arms over six artifact kinds:
 
 - kNN graph (``sync_knn_graph_stream``): micro-batches fold into a
-  SAVED graph via ``knn_graph_upsert`` — |batch|·N + |affected|·N per
+  SAVED graph via ``knn_graph_apply_cdc`` — |batch|·N + |affected|·N per
   epoch, upsert semantics (stale edges evicted corpus-wide);
 - kNN graph through IVF ROUTING (``sync_knn_graph_ivf_stream``): the
   arm for the regime ``knn_graph_auto`` refuses — append batches fold
@@ -59,44 +59,38 @@ readability explicitly); the matching ``vacuum_*_epochs`` sweeps drop
 only compacted-away dirs, superseded compacts, and staged orphans.
 Graph generations keep their own ``vacuum_generations``.
 
-The original kNN-graph story, kept for the design rationale:
-embedding micro-batches fold into a SAVED kNN graph via
-``knn_graph_upsert``, exactly-once, never a rebuild.
-
-This closes the lifecycle × streaming cell: ``save_knn_graph`` /
-``load_knn_graph`` give the persisted artifact, ``knn_graph_upsert``
-gives batch maintenance (operators/similarity.py:684), and the
-streaming modules prove exactly-once folds for TABLES
-(streaming/txn_sync.py, matview_sync.py) — but until now an embedding
-STREAM still had no path into a saved index short of rebuilding. The
-reference keeps exactly one durable artifact current per ingest batch
-(raw rows + state committed together, reference src/database.py:
-133-223); at 100 TB the analogous artifact is the corpus-sized kNN
-graph, which you build once and maintain per micro-batch (|batch|·N +
-|affected|·N per epoch), never re-pay the N² build for.
+kNN graph root layout: ``graph/gen=<floor>`` is one full
+bucket-partitioned snapshot (``save_knn_graph``; generation 0 at init,
+or the floor a ``vacuum_generations`` rebase materialized), and each
+committed generation above it is one ``graph_delta/epoch=<g>/`` dir in
+the maintenance core's delta format (operators/similarity.py:
+``knn_graph_apply_cdc`` — the changed ids' new lists plus rnk-NULL
+markers for every invalidated id). Readers fold base + deltas
+(``_graph_at``, latest mention wins, then ``apply_graph_delta``). A
+root in the pre-delta layout (a full snapshot per generation) is
+refused with a rebuild instruction. The corpus lives as
+``corpus_base`` plus the epoch-keyed ``applied``/``removed`` logs.
 
 Commit protocol per micro-batch (foreachBatch is at-least-once):
 1. epoch ≤ pointer.last_batch_id ⇒ replayed epoch, no-op (the ledger
    makes a checkpoint-wiped re-drain a fixed point);
-2. stage the new graph generation dir (``graph/gen=<epoch+1>``,
-   overwrite-idempotent) and append the batch to the applied-updates
-   log as a staged epoch-keyed dir — both invisible to readers;
+2. stage the generation's delta dir (``graph_delta/epoch=<g>``) and
+   the batch's applied/removed log dirs, all epoch-keyed and
+   overwrite-idempotent — invisible to readers;
 3. flip the ONE pointer file last (fsync'd ``os.replace``, the
    txn.py commit point): readers at any instant see a graph
    generation and an applied-log high-water mark that AGREE.
-A crash between 2 and 3 leaves a staged applied/removed epoch dir
-above the pointer — invisible, overwritten by the replay, swept by
-the next commit's orphan sweep (the ledger discipline; round 14
-converted these logs from flat appends exactly so a crashed verb's
-rows can never activate under a later commit's pointer advance).
+A crash between 2 and 3 leaves staged dirs above the pointer —
+invisible, overwritten by the replay, swept by the next commit's
+orphan sweep, so a crashed verb's rows can never activate under a
+later commit's pointer advance.
 
-Scale: per epoch the graph write is N·k skinny rows (the artifact
-itself — at 100 TB give each generation a bucketed layout exactly as
-``save_knn_graph`` does, and ``vacuum_generations`` drops pre-pointer
-ones); the applied log grows O(stream), base corpus is written once.
-The corpus snapshot a batch folds against is DERIVED (base ⊖ applied
-ids ⊕ latest applied rows) — O(batch) bytes move per epoch, the
-corpus parquet is never rewritten.
+Scale: per epoch the graph write is churn-sized (the changed lists +
+markers, never the N·k graph); ``vacuum_generations`` pays one
+corpus-sized snapshot write per rebase. The corpus snapshot a batch
+folds against is DERIVED (base ⊖ applied ids ⊕ latest applied rows)
+— O(batch) bytes move per epoch, the corpus parquet is never
+rewritten.
 """
 
 from __future__ import annotations
@@ -144,13 +138,6 @@ from spacex_data_engineering_pipeline_spark.streaming.bm25_sync import (  # noqa
 # sync families besides the fold body. Partition columns are the
 # query-time pruning keys: doc-id bucket for the dedup verify fetch,
 # cluster for IVF probes, term bucket for BM25 queries.
-# Back-compat private aliases (tests and older callers address the
-# ledger internals through this module): the generic machinery now
-# lives in streaming/ledger.py.
-def _minhash_epoch_path(root: str, table: str, epoch: int) -> str:
-    return _epoch_path(root, table, epoch)
-
-
 def _minhash_ledger(root: str) -> EpochLedger:
     return EpochLedger(
         root,
@@ -295,99 +282,64 @@ def _corpus_at(spark: SparkSession, root: str, ptr: dict) -> DataFrame:
 
 def _graph_committed_gens(root: str, floor: int, head: int) -> set[int]:
     """The still-readable committed generations: the full base snapshot
-    at ``floor`` plus every live delta epoch in (floor, head]."""
-    return {floor} | {
+    at ``floor`` plus every live delta epoch in (floor, head]. Every
+    commit above the floor stages its own delta epoch, so a head above
+    the floor without one is a root in the pre-delta layout (a full
+    ``graph/gen=<g>`` snapshot per generation) — refused, never read
+    as its floor snapshot."""
+    gens = {floor} | {
         e for e in _live_epochs(root, "graph_delta") if floor < e <= head
     }
+    if head not in gens:
+        raise ValueError(
+            f"graph root {root} predates delta generations (generation "
+            f"{head} has no graph_delta epoch) — rebuild it with "
+            "init_knn_graph_root"
+        )
+    return gens
 
 
 def _graph_at(
     spark: SparkSession, root: str, ptr: dict, gen: int | None = None
 ) -> DataFrame:
     """Reconstruct the graph AS OF ``gen`` (default: the committed
-    head) from the DELTA-GENERATION layout (optimization r15): one full
-    bucket-partitioned snapshot at the pointer's ``graph_base_gen``
-    floor (``save_knn_graph`` — generation 0 at init, or the floor a
-    ``vacuum_generations`` rebase materialized) plus one churn-sized
-    ``graph_delta/epoch=<g>/`` dir per committed generation. A delta
-    epoch carries (a) the CHANGED ids' full new lists and (b) rnk-NULL
-    MARKER rows for ids whose stored list that epoch invalidated
-    (deleted or recomputed). Latest-mention-wins per id: rows of the
-    max mention epoch, markers filtered out — a marker beaten by a
-    same-epoch or later list loses (replace/re-insert), a marker as the
-    last word kills the id (delete), untouched ids read from the base.
-    Row-identical to the full snapshot the pre-r15 layout persisted per
-    generation, at churn-sized instead of corpus-sized write volume per
-    micro-batch. Staged crash orphans (epoch > head) are invisible by
-    the epoch filter, exactly as every ledger table."""
+    head): the full snapshot at the pointer's ``graph_base_gen`` floor
+    plus the delta epochs in (floor, gen]. Latest mention wins per id:
+    rows of an id's older mention epochs turn into markers, and
+    ``apply_graph_delta`` then keeps base rows of unmentioned ids plus
+    the surviving lists — a marker beaten by a same-epoch or later list
+    loses (replace/re-insert), a marker as the last word kills the id
+    (delete). Staged crash orphans (epoch > head) are invisible by the
+    epoch filter, exactly as every ledger table."""
     id_col = ptr["id_col"]
     head = int(ptr["generation"])
     if gen is None:
         gen = head
     floor = int(ptr.get("graph_base_gen", 0) or 0)
+    eps = [g for g in _graph_committed_gens(root, floor, head) if floor < g <= gen]
     base = S.load_knn_graph(spark, _graph_gen_path(root, floor))
-    eps = [e for e in _live_epochs(root, "graph_delta") if floor < e <= gen]
     if not eps:
         return base
     d = spark.read.parquet(os.path.join(root, "graph_delta")).filter(
         (F.col("epoch") > floor) & (F.col("epoch") <= gen)
     )
     if len(eps) > 1:
-        # latest mention wins — one churn-sized window shuffle
+        # one churn-sized window shuffle; the delta apply's anti-join
+        # side prunes the window away (it reads only the id)
         w = Window.partitionBy(id_col)
-        alive = (
-            d.withColumn("__me", F.max("epoch").over(w))
-            .filter(
-                (F.col("epoch") == F.col("__me")) & F.col("rnk").isNotNull()
-            )
-            .select(id_col, "rnk", "neighbor", "cos_sim")
+        d = d.withColumn(
+            "rnk",
+            F.when(F.col("epoch") == F.max("epoch").over(w), F.col("rnk")),
         )
-    else:  # one live epoch: its rows ARE the latest mentions, no window
-        alive = d.filter(F.col("rnk").isNotNull()).select(
-            id_col, "rnk", "neighbor", "cos_sim"
-        )
-    # no distinct on the anti-join side: left_anti tolerates duplicate
-    # keys, and the dedup would cost its own exchange (AQE job) per
-    # execution of this plan
-    return base.join(
-        d.select(id_col), id_col, "left_anti"
-    ).unionByName(alive)
+    return S.apply_graph_delta(base, d, id_col)
 
 
-def _write_graph_delta(
-    spark,
-    root: str,
-    epoch: int,
-    delta: DataFrame,
-    marker_ids,
-    id_col: str,
-    marker_df: DataFrame | None = None,
-) -> None:
+def _write_graph_delta(root: str, epoch: int, delta: DataFrame) -> None:
     """Stage one graph delta epoch (overwrite-idempotent, invisible
-    until the pointer flip): the changed rows' new lists unioned with
-    rnk-NULL marker rows for every id whose stored list this epoch
-    invalidates — ``marker_ids`` is the verbs' driver-side recompute
-    list, ``marker_df`` the CDC arms' batch-sized delete-id frame. One
-    write executes the fold's merged plan once; at 100 TB the bytes
-    written per micro-batch are churn-sized, never corpus-sized."""
-    parts = [delta]
-    nulls = (
-        F.lit(None).cast("int").alias("rnk"),
-        F.lit(None).cast("long").alias("neighbor"),
-        F.lit(None).cast("double").alias("cos_sim"),
-    )
-    if marker_ids:
-        parts.append(
-            spark.createDataFrame(
-                [(int(i),) for i in sorted(marker_ids)], f"{id_col} long"
-            ).select(id_col, *nulls)
-        )
-    if marker_df is not None:
-        parts.append(marker_df.select(id_col, *nulls))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(_epoch_path(root, "graph_delta", epoch))
+    until the pointer flip). One write executes the fold's merged plan
+    once; the bytes written per micro-batch are churn-sized, never
+    corpus-sized."""
+    delta.write.mode("overwrite").parquet(_epoch_path(root, "graph_delta", epoch))
 
 
 def load_synced_graph(
@@ -422,7 +374,7 @@ def sync_knn_graph_stream(
 ) -> None:
     """Drain ``source_path`` (parquet file stream of (id, vector)
     upserts) with AvailableNow: per micro-batch, fold the batch into
-    the SAVED graph with ``knn_graph_upsert(base_graph=loaded)`` —
+    the SAVED graph with ``knn_graph_apply_cdc`` (upserts only) —
     |batch|·N + |affected|·N work, never the N² rebuild — and publish
     graph + applied-log high-water mark in one pointer flip. Blocks
     until the drain completes. ``on_batch_start`` is a test hook
@@ -433,28 +385,17 @@ def sync_knn_graph_stream(
         updates = batch_df.select(id_col, vec_col)
         corpus_before = _corpus_at(spark, root, ptr)
         # persist the reconstructed graph for THIS fold's lifetime: the
-        # verb references it from the affected probe AND the keep
+        # core references it from the affected probe AND the keep
         # stream (two actions), and re-executing the delta fold's
-        # window + anti-join per action is pure AQE job inflation —
-        # the fenced-batch persist precedent (optimization r14/r15)
+        # window + anti-join per action is pure AQE job inflation
         prev = _graph_at(spark, root, ptr).persist()
         try:
-            # DELTA GENERATION (optimization r15): the verb emits only
-            # the changed ids' new lists + the recompute-id markers;
-            # the write per epoch is churn-sized, never the
-            # corpus-sized N·k table the pre-r15 layout re-saved per
-            # micro-batch
-            delta, rec_ids = S.knn_graph_upsert(
-                corpus_before,
-                updates,
-                id_col,
-                vec_col,
-                k,
-                n_blocks=ptr["n_blocks"],
-                base_graph=prev,
-                delta_only=True,
+            _write_graph_delta(
+                root, gen,
+                S.knn_graph_apply_cdc(
+                    corpus_before, None, updates, id_col, vec_col, k, prev
+                ),
             )
-            _write_graph_delta(spark, root, gen, delta, rec_ids, id_col)
             # the applied log is an epoch-keyed ledger table: staged
             # overwrite-idempotently at the COMMITTING generation, so a
             # replay overwrites its own orphan and the pre-commit sweep
@@ -490,11 +431,11 @@ def sync_knn_graph_cdc_stream(
     UPSERT against the saved graph and published as ONE generation +
     one pointer flip —
 
-    1. op-D ids retire via ``knn_graph_delete`` (citing edges
-       repaired against the remaining corpus, |affected|·N);
-    2. op-I/U rows fold via ``knn_graph_upsert`` on the repaired
-       graph (|batch|·N + |affected|·N — the N² build never re-paid);
-    3. the applied log gains the upserts, the removal log the
+    1. op-D ids retire and op-I/U rows fold in ONE
+       ``knn_graph_apply_cdc`` pass (citing edges repaired against the
+       new corpus, |batch|·N + |affected|·N — the N² build never
+       re-paid), staged as the generation's delta;
+    2. the applied log gains the upserts, the removal log the
        deletes, both stamped with the committing generation, so the
        derived corpus replays the exact same order (a removal kills
        every strictly-older version; a later re-upsert outranks it).
@@ -521,25 +462,16 @@ def sync_knn_graph_cdc_stream(
         # fold-lifetime persist: probe + keep are separate actions
         graph = _graph_at(spark, root, ptr).persist()
         try:
-            # ONE fused affected-set pass for both sides of the batch
-            # (optimization r14 — previously delete-then-upsert: two
-            # full corpus passes, two probes, two merge windows and an
-            # eager localCheckpoint of the intermediate repaired graph;
-            # the fused form is bit-identical, see knn_graph_apply_cdc's
-            # theorem). DELTA GENERATION (optimization r15): only the
-            # changed rows + tombstone markers (deletes ∪ recompute
-            # set) land on disk
-            delta, rec_ids = S.knn_graph_apply_cdc(
-                corpus,
-                dels if n_del else None,
-                upserts if n_up else None,
-                id_col, vec_col, k,
-                n_blocks=ptr["n_blocks"], base_graph=graph,
-                delta_only=True,
-            )
+            # ONE fused affected-set pass for both sides of the batch;
+            # only the changed lists + markers land on disk
             _write_graph_delta(
-                spark, root, gen, delta, rec_ids, id_col,
-                marker_df=dels if n_del else None,
+                root, gen,
+                S.knn_graph_apply_cdc(
+                    corpus,
+                    dels if n_del else None,
+                    upserts if n_up else None,
+                    id_col, vec_col, k, graph,
+                ),
             )
             if n_up:
                 upserts.write.mode("overwrite").parquet(
@@ -730,7 +662,7 @@ def delete_index_ids(
     set, which is a no-op rather than a burned epoch (an empty
     list-built frame would also guess the id type). Refused on roots
     whose readers don't honor tombstones: BM25 (route deletes through
-    the CDC arm), graph-bearing roots (use ``knn_graph_delete``), and
+    the CDC arm), graph-bearing roots (use ``delete_graph_ids``), and
     pre-``tomb_col`` dedup roots."""
     led_ptr = read_index_pointer(root)
     # refuse roots whose READERS don't honor the deletes ledger — a
@@ -1176,7 +1108,7 @@ def init_knn_graph_ivf_root(
     centroid sidecar, and one pointer carrying both high-water marks
     (graph ``generation``, postings ``max_epoch``) plus the pinned
     probe width. ``load_synced_graph``, ``vacuum_generations``, and
-    ``vacuum_ivf_orphans`` all work on this root unchanged — it is the
+    ``vacuum_ivf_epochs`` all work on this root unchanged — it is the
     graph ledger and the IVF ledger sharing one commit point."""
     from spacex_data_engineering_pipeline_spark.operators import (
         similarity as S_,
@@ -1221,7 +1153,7 @@ def sync_knn_graph_ivf_stream(
     fence_sources: bool = False,
 ) -> None:
     """Drain ``source_path`` (parquet file stream of NEW (id, vector)
-    rows — INSERT-only, the ``knn_graph_incremental`` append contract;
+    rows — INSERT-only, ``knn_graph_ivf_fold``'s append contract;
     re-vectored ids need ``sync_knn_graph_stream``'s exact upsert fold)
     with AvailableNow: per micro-batch, fold the batch into the SAVED
     graph through IVF ROUTING (``knn_graph_ivf_fold`` — only the
@@ -1257,14 +1189,15 @@ def sync_knn_graph_ivf_stream(
         ).drop("epoch")
         prev = _graph_at(spark, root, ptr)
         updates = batch_df.select(id_col, vec_col)
-        # DELTA GENERATION (optimization r15): appends change only the
-        # new ids' lists + corpus rows that admitted a batch neighbor —
-        # exactly what lands on disk (no markers: nothing is evicted)
-        delta, _ = S_.knn_graph_ivf_fold(
-            postings, centers, updates, id_col, vec_col, k,
-            n_probes=ptr["n_probes"], base_graph=prev, delta_only=True,
+        # appends change only the new ids' lists + corpus rows that
+        # admitted a batch neighbor — exactly what lands on disk
+        _write_graph_delta(
+            root, epoch,
+            S_.knn_graph_ivf_fold(
+                postings, centers, updates, id_col, vec_col, k,
+                n_probes=ptr["n_probes"], base_graph=prev,
+            ),
         )
-        _write_graph_delta(spark, root, epoch, delta, [], id_col)
         led.write_epoch(
             updates.select(
                 F.col(id_col),
@@ -1291,8 +1224,8 @@ def delete_graph_ids(
     ``delete_index_ids`` refuses (a bare tombstone would leave the
     saved graph's edges citing the deleted vectors): write the
     tombstone AND publish the EDGE-REPAIRED graph as a new generation
-    in ONE pointer flip, folding ``knn_graph_delete``
-    (operators/similarity.py — affected rows recomputed against the
+    in ONE pointer flip, folding ``knn_graph_apply_cdc``'s delete
+    path (operators/similarity.py — affected rows recomputed against the
     remaining corpus, unaffected lists kept verbatim, merge ≡ rebuild
     over corpus − deleted) into the sync family's commit discipline.
 
@@ -1319,7 +1252,7 @@ def delete_graph_ids(
     (``_corpus_at`` and the posting readers filter by the committed
     pointer), overwritten by a retry, and swept by the next commit's
     orphan sweep. ``max_affected`` bounds both the tombstone set and
-    ``knn_graph_delete``'s affected-row recompute (hub-scale deletes
+    the core's affected-row recompute (hub-scale deletes
     refuse with the rebuild recommendation). Returns the committed
     generation — unchanged head for an empty id set (no burned
     epoch)."""
@@ -1366,17 +1299,14 @@ def delete_graph_ids(
     # fold-lifetime persist: probe + keep are separate actions
     prev = _graph_at(spark, root, ptr).persist()
     try:
-        # DELTA GENERATION (optimization r15): stage only the affected
-        # rows' repaired lists + markers for the deleted/affected ids
-        delta, aff_ids = S.knn_graph_delete(
-            corpus, dels, id_col, vec_col, k,
-            n_blocks=int(ptr.get("n_blocks", 8)),
-            base_graph=prev,
-            max_affected=max_affected,
-            delta_only=True,
-        )
+        # stage only the affected rows' repaired lists + markers for
+        # the deleted/affected ids
         _write_graph_delta(
-            spark, root, new_gen, delta, aff_ids, id_col, marker_df=dels
+            root, new_gen,
+            S.knn_graph_apply_cdc(
+                corpus, dels, None, id_col, vec_col, k, prev,
+                max_affected=max_affected,
+            ),
         )
     finally:
         prev.unpersist()
@@ -1416,7 +1346,7 @@ def sync_knn_graph_ivf_cdc_stream(
     epoch — every posting read from here on hides their older
     versions (``_apply_tombstones``' strictly-later rule; the same
     epoch's replacement posting survives); (2) the graph retires them
-    via ``knn_graph_delete`` against the committed corpus
+    via ``knn_graph_apply_cdc`` against the committed corpus
     (|affected|·N, affected ≈ in-degree of the tombstoned set);
     (3) the non-delete rows fold into the repaired graph through IVF
     ROUTING (``knn_graph_ivf_fold`` — |batch| × |probed postings|,
@@ -1447,9 +1377,7 @@ def sync_knn_graph_ivf_cdc_stream(
         )
         upserts = ops.filter(F.col("__op") != "D").select(id_col, vec_col)
         # one-row-per-id is enforced, so "any U/D rows" ⟺ "any tombstone
-        # ids" and the agg's non-D count IS |upserts| — the two extra
-        # per-batch count() actions this fold used to pay are free in
-        # the guard agg (optimization r14)
+        # ids" and the agg's non-D count IS |upserts| — no extra count()
         n_tomb = has_ud
         if not n_tomb and not n_up:
             ops.unpersist()
@@ -1460,12 +1388,10 @@ def sync_knn_graph_ivf_cdc_stream(
         # is pure AQE job inflation
         graph = _graph_at(spark, root, ptr).persist()
         base_handle = graph
-        # DELTA GENERATION (optimization r15): each stage emits only
-        # its changed rows; the eager localCheckpoint between the
-        # repair and the routed insert materializes a CHURN-sized
-        # delta now, not the full repaired graph
-        delta1 = None
-        aff1: list = []
+        # each stage emits only its graph delta; the eager
+        # localCheckpoints materialize CHURN-sized deltas, never the
+        # full repaired graph
+        delta = None
         try:
             if n_tomb:
                 # committed corpus BEFORE this epoch's tombstones — the
@@ -1476,23 +1402,11 @@ def sync_knn_graph_ivf_cdc_stream(
                     spark, led, ptr, ptr["max_epoch"], id_col
                 ).select(id_col, vec_col)
                 led.write_epoch(tomb, "deletes", epoch)
-                delta1, aff1 = S_.knn_graph_delete(
-                    corpus, tomb, id_col, vec_col, k,
-                    n_blocks=int(ptr.get("n_blocks", 8)), base_graph=graph,
-                    delta_only=True,
-                )
-                delta1 = delta1.localCheckpoint(eager=True)
-                # the repaired graph the insert stage folds into: stored
-                # lists minus the invalidated ids, plus repaired lists
-                invalid = tomb.unionByName(
-                    spark.createDataFrame(
-                        [(int(i),) for i in aff1], f"{id_col} long"
-                    )
-                )
-                graph = graph.join(
-                    invalid, id_col, "left_anti"
-                ).unionByName(delta1)
-            delta2 = None
+                delta = S_.knn_graph_apply_cdc(
+                    corpus, tomb, None, id_col, vec_col, k, graph
+                ).localCheckpoint(eager=True)
+                # the repaired graph the insert stage folds into
+                graph = S_.apply_graph_delta(graph, delta, id_col)
             if n_up:
                 # candidate fetch: committed postings MINUS this epoch's
                 # tombstones (frames at the staged epoch see them), so a
@@ -1502,28 +1416,18 @@ def sync_knn_graph_ivf_cdc_stream(
                     led.frames(spark, "postings", ptr, ptr["max_epoch"]),
                     id_col,
                 ).drop("epoch")
-                delta2, _ = S_.knn_graph_ivf_fold(
+                grown = S_.knn_graph_ivf_fold(
                     postings_now, centers, upserts, id_col, vec_col, k,
                     n_probes=ptr["n_probes"], base_graph=graph,
-                    delta_only=True,
+                ).localCheckpoint(eager=True)
+                # one delta epoch for the whole batch: insert-stage lists
+                # win over repair-stage rows for the same id (computed ON
+                # TOP of the repair); no distinct on the anti side —
+                # left_anti tolerates dup keys
+                delta = grown if delta is None else grown.unionByName(
+                    delta.join(grown.select(id_col), id_col, "left_anti")
                 )
-                delta2 = delta2.localCheckpoint(eager=True)
-            # one delta epoch for the whole batch: insert-stage rows win
-            # over repair-stage rows for the same id (computed ON TOP of
-            # the repair), markers cover tombstoned ∪ affected; no
-            # distinct on the anti side — left_anti tolerates dup keys
-            if delta1 is not None and delta2 is not None:
-                delta = delta2.unionByName(
-                    delta1.join(
-                        delta2.select(id_col), id_col, "left_anti"
-                    )
-                )
-            else:
-                delta = delta2 if delta2 is not None else delta1
-            _write_graph_delta(
-                spark, root, epoch, delta, aff1, id_col,
-                marker_df=tomb if n_tomb else None,
-            )
+            _write_graph_delta(root, epoch, delta)
             led.write_epoch(
                 upserts.select(
                     F.col(id_col),
@@ -1544,26 +1448,6 @@ def sync_knn_graph_ivf_cdc_stream(
         spark, source_path, schema, checkpoint_dir, fold,
         max_files_per_trigger, on_batch_start,
     )
-
-
-def vacuum_ivf_orphans(root: str) -> int:
-    """Drop staged posting epochs ABOVE the pointer — the crash-window
-    orphans a final crash can leave. Unlike graph generations, committed
-    IVF epochs all hold live (disjoint) postings, so nothing at or below
-    the pointer is ever touched."""
-    import shutil
-
-    ptr = read_index_pointer(root)
-    post_dir = os.path.join(root, "postings")
-    doomed = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(post_dir)
-        if d.startswith("epoch=")
-        and int(d.split("=", 1)[1]) > ptr["max_epoch"]
-    ]
-    for e in doomed:
-        shutil.rmtree(_ivf_epoch_path(root, e))
-    return len(doomed)
 
 
 def compact_ivf_epochs(
@@ -1658,8 +1542,7 @@ def vacuum_ivf_epochs(root: str) -> int:
     """Retention sweep for the posting ledger: see
     ``_vacuum_ledger_dirs`` (compacted-away epoch dirs, superseded
     compacts, staged crash orphans — never the committed tail or the
-    pointer-named compact). Supersedes ``vacuum_ivf_orphans`` on
-    compacted roots (orphans are swept by both)."""
+    pointer-named compact)."""
     return _ivf_ledger(root).vacuum()
 
 
@@ -2110,9 +1993,6 @@ def vacuum_minhash_epochs(root: str) -> int:
     return _minhash_ledger(root).vacuum()
 
 
-_grams_bucket = _id_bucket  # the grams ledger's historical name
-
-
 def _write_grams_epoch(
     grams: DataFrame, root: str, epoch: int, n_buckets: int | None
 ) -> None:
@@ -2123,13 +2003,13 @@ def _write_grams_epoch(
     structures'), so a legacy root keeps its flat layout forever."""
     if not n_buckets:
         grams.write.mode("overwrite").parquet(
-            _minhash_epoch_path(root, "grams", epoch)
+            _epoch_path(root, "grams", epoch)
         )
         return
     grams.withColumn(
-        "__bucket", _grams_bucket(F.col("doc"), n_buckets)
+        "__bucket", _id_bucket(F.col("doc"), n_buckets)
     ).write.mode("overwrite").partitionBy("__bucket").parquet(
-        _minhash_epoch_path(root, "grams", epoch)
+        _epoch_path(root, "grams", epoch)
     )
 
 
@@ -2170,7 +2050,7 @@ def init_minhash_root(
     )
     _write_grams_epoch(grams, root, 0, grams_buckets)
     banded.write.mode("overwrite").parquet(
-        _minhash_epoch_path(root, "bands", 0)
+        _epoch_path(root, "bands", 0)
     )
     banded.unpersist()
     grams.unpersist()
@@ -2270,7 +2150,7 @@ def _probe_pruned(
         buckets = sorted(
             r["b"]
             for r in candidates.select(
-                _grams_bucket(F.col("corpus_doc"), n_buckets).alias("b")
+                _id_bucket(F.col("corpus_doc"), n_buckets).alias("b")
             )
             .distinct()
             .collect()

@@ -59,20 +59,17 @@ SLOW_TESTS = {
     "test_streaming.py::test_streaming_bm25_index_sync_crash_restart_prune_retention",
     "test_storage.py::test_txn_crash_sweep_every_step_boundary",
     "test_streaming.py::test_synced_artifact_time_travel",
-    "test_operators.py::test_knn_graph_apply_cdc_equals_rebuild",
     "test_streaming.py::test_streaming_semantic_dedup_sync_crash_restart",
     "test_streaming.py::test_minhash_ledger_compaction_and_vacuum",
     "test_streaming.py::test_sessionized_user_stats_ttl_evicts_state",
     "test_streaming.py::test_streaming_knn_graph_sync_crash_restart",
     "test_streaming.py::test_streaming_txn_sync_fact_and_summary_agree",
     "test_streaming.py::test_streaming_minhash_index_sync_crash_restart",
-    "test_streaming.py::test_delete_graph_ids_plain_root_reupsert_and_crash",
     "test_streaming.py::test_minhash_delete_ids_reingest_and_purge",
     "test_storage.py::test_delete_where_escaped_partition_values",
     "test_matview.py::test_streaming_matview_sync_and_full_redrain_fixed_point",
     "test_streaming.py::test_graph_corpus_rebase_retention",
     "test_streaming.py::test_streaming_txn_sync_redrain_is_fixed_point",
-    "test_streaming.py::test_knn_graph_cdc_sync_crash_restart",
     "test_streaming.py::test_state_store_provider_dial_rocksdb_parity",
     "test_streaming.py::test_streaming_knn_graph_ivf_sync_crash_restart",
     "test_streaming.py::test_late_data_quarantine_routes_and_replays_identically",
@@ -80,7 +77,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_streaming_scd2_sync_versions_and_replay_fixed_point",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_sync]",
     "test_streaming.py::test_streaming_ivf_index_sync_crash_restart",
-    "test_streaming.py::test_knn_graph_ivf_cdc_sync_crash_restart",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_bm25_cdc_sync]",
     "test_stats.py::test_edit_join_null_strings_never_pair",
     "test_queries_oracle.py::test_query_matches_oracle[hybrid_cdc_paired_sync]",
@@ -103,7 +99,6 @@ SLOW_TESTS = {
     "test_graph.py::test_approx_graph_chain_ordering_overlap",
     "test_streaming.py::test_bm25_cdc_null_text_and_empty_index_edges",
     "test_streaming.py::test_drain_source_fence_minhash_and_bm25_empty_fold",
-    "test_operators.py::test_knn_graph_upsert_equals_rebuild",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_ivf_cdc_sync]",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_cdc_sync]",
     "test_streaming.py::test_drain_source_fence_blocks_double_apply",
@@ -117,7 +112,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_ivf_delete_ids_tombstones_reinsert_purge",
     "test_queries_oracle.py::test_query_matches_oracle[dedup_index_time_travel]",
     "test_storage.py::test_upsert_schema_evolution",
-    "test_operators.py::test_knn_graph_delete_equals_rebuild",
     "test_streaming.py::test_streaming_pca_moment_sync_crash_restart",
     "test_storage.py::test_delete_where_flat_and_partitioned",
     "test_queries_oracle.py::test_query_matches_oracle[hybrid_rrf_synced]",
@@ -130,7 +124,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_bm25_cdc_refuses_duplicate_doc_rows_in_batch",
     "test_operators.py::test_ann_lsh_consistent_with_bruteforce",
     "test_storage.py::test_repair_drops_partition_missing_from_source",
-    "test_streaming.py::test_graph_delta_write_volume_tracks_churn",
 }
 
 

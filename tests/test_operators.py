@@ -216,10 +216,11 @@ def test_knn_graph_blockcount_invariance_and_nulls(spark, sf_dir):
 
 
 def test_knn_graph_incremental_equals_rebuild(spark, sf_dir):
-    """Incremental maintenance pin: updating the old-corpus graph with
-    a new batch must be row-identical to a full rebuild over the union
-    — including when the batch contains NULL and zero-norm vectors and
-    under an uneven split (last 25% of ids arrive as the batch)."""
+    """Incremental maintenance pin: upserting a batch of NEW ids (an
+    append) into the old-corpus graph must be row-identical to a full
+    rebuild over the union — including when the batch contains NULL and
+    zero-norm vectors and under an uneven split (last 25% of ids arrive
+    as the batch)."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 96)
     dim = len(emb.first()["embedding"])
     extra = spark.createDataFrame(
@@ -231,7 +232,7 @@ def test_knn_graph_incremental_equals_rebuild(spark, sf_dir):
     new = noisy.filter(F.col("vec_id") >= 72)
     inc = [
         (r.vec_id, r.rnk, r.neighbor, r.cos_sim)
-        for r in S.knn_graph_incremental(old, new, "vec_id", "embedding", k=4)
+        for r in S.knn_graph_upsert(old, new, "vec_id", "embedding", k=4)
         .orderBy("vec_id", "rnk")
         .collect()
     ]
@@ -248,8 +249,8 @@ def test_knn_graph_ivf_fold_full_width_equals_rebuild(spark, sf_dir):
     """IVF-ROUTED graph maintenance, both ends of the recall dial: at
     FULL probe width (n_probes = n_clusters) folding an append batch
     through the posting table must be row-identical to a full rebuild
-    over the union (every cluster probed ⇒ the candidate set is
-    knn_graph_incremental's, whose merge is exact by theorem); at
+    over the union (every cluster probed ⇒ the candidate set is the
+    exact fold's for an append, whose merge is exact by theorem); at
     partial width the result must (a) leave every row of an un-probed
     cluster bit-unchanged from the base graph and (b) keep a recall
     floor on the probed ones — a missed edge is a cross-cluster one
@@ -270,9 +271,13 @@ def test_knn_graph_ivf_fold_full_width_equals_rebuild(spark, sf_dir):
 
     folded = [
         tuple(r)
-        for r in S.knn_graph_ivf_fold(
-            idx.assigned, idx.centroids, new, "vec_id", "embedding", 4,
-            n_probes=8, base_graph=base_graph,
+        for r in S.apply_graph_delta(
+            base_graph,
+            S.knn_graph_ivf_fold(
+                idx.assigned, idx.centroids, new, "vec_id", "embedding", 4,
+                n_probes=8, base_graph=base_graph,
+            ),
+            "vec_id",
         ).orderBy("vec_id", "rnk").collect()
     ]
     rebuilt = [
@@ -285,9 +290,13 @@ def test_knn_graph_ivf_fold_full_width_equals_rebuild(spark, sf_dir):
 
     # partial width: probed-cluster rows keep a recall floor, rows in
     # never-probed clusters are bit-identical to the base graph
-    part = S.knn_graph_ivf_fold(
-        idx.assigned, idx.centroids, new, "vec_id", "embedding", 4,
-        n_probes=2, base_graph=base_graph,
+    part = S.apply_graph_delta(
+        base_graph,
+        S.knn_graph_ivf_fold(
+            idx.assigned, idx.centroids, new, "vec_id", "embedding", 4,
+            n_probes=2, base_graph=base_graph,
+        ),
+        "vec_id",
     )
     part_rows = {tuple(r) for r in part.collect()}
     true_rows = set(rebuilt)
@@ -375,7 +384,7 @@ def test_knn_graph_save_load_incremental(spark, sf_dir, tmp_path):
     assert set(loaded.columns) == {"vec_id", "rnk", "neighbor", "cos_sim"}
     inc = [
         tuple(r)
-        for r in S.knn_graph_incremental(
+        for r in S.knn_graph_upsert(
             old, new, "vec_id", "embedding", k=4, base_graph=loaded
         )
         .orderBy("vec_id", "rnk")
@@ -658,7 +667,7 @@ def test_knn_graph_incremental_empty_batch(spark, sf_dir, tmp_path):
     base = S.knn_graph(old, "vec_id", "embedding", k=4)
     base_rows = [tuple(r) for r in base.orderBy("vec_id", "rnk").collect()]
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    out = S.knn_graph_incremental(
+    out = S.knn_graph_upsert(
         old, empty, "vec_id", "embedding", k=4, base_graph=base
     )
     assert [tuple(r) for r in out.orderBy("vec_id", "rnk").collect()] == base_rows
@@ -666,7 +675,7 @@ def test_knn_graph_incremental_empty_batch(spark, sf_dir, tmp_path):
     nulls = spark.createDataFrame(
         [(999, None)], "vec_id long, embedding array<double>"
     )
-    out2 = S.knn_graph_incremental(
+    out2 = S.knn_graph_upsert(
         old, nulls, "vec_id", "embedding", k=4, base_graph=base
     )
     assert [tuple(r) for r in out2.orderBy("vec_id", "rnk").collect()] == base_rows
@@ -769,13 +778,22 @@ def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
     def rows(df):
         return [tuple(r) for r in df.orderBy("vec_id", "rnk").collect()]
 
-    # mixed U/D batch vs full rebuild over the new corpus
-    got = rows(
-        S.knn_graph_apply_cdc(
-            emb, deletes, upserts, "vec_id", "embedding", k=4,
-            base_graph=base,
+    def applied(deletes, upserts):
+        # the core returns the batch's graph delta; the full graph is
+        # the delta applied to the base
+        return rows(
+            S.apply_graph_delta(
+                base,
+                S.knn_graph_apply_cdc(
+                    emb, deletes, upserts, "vec_id", "embedding", k=4,
+                    base_graph=base,
+                ),
+                "vec_id",
+            )
         )
-    )
+
+    # mixed U/D batch vs full rebuild over the new corpus
+    got = applied(deletes, upserts)
     new_corpus = (
         emb.filter((F.col("vec_id") % 9 != 0) & (F.col("vec_id") % 9 != 4))
         .unionByName(upserts)
@@ -794,11 +812,7 @@ def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
     )
     assert got == seq
     # delete-only batch
-    got_d = rows(
-        S.knn_graph_apply_cdc(
-            emb, deletes, None, "vec_id", "embedding", k=4, base_graph=base
-        )
-    )
+    got_d = applied(deletes, None)
     want_d = rows(
         S.knn_graph(
             emb.filter(F.col("vec_id") % 9 != 0), "vec_id", "embedding", k=4
@@ -806,11 +820,7 @@ def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
     )
     assert got_d == want_d
     # upsert-only batch
-    got_u = rows(
-        S.knn_graph_apply_cdc(
-            emb, None, upserts, "vec_id", "embedding", k=4, base_graph=base
-        )
-    )
+    got_u = applied(None, upserts)
     want_u = rows(
         S.knn_graph(
             emb.filter(F.col("vec_id") % 9 != 4).unionByName(upserts),
@@ -819,11 +829,7 @@ def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
     )
     assert got_u == want_u
     # empty batch: passthrough of the base graph
-    got_e = rows(
-        S.knn_graph_apply_cdc(
-            emb, None, None, "vec_id", "embedding", k=4, base_graph=base
-        )
-    )
+    got_e = applied(None, None)
     assert got_e == rows(base)
     # over-budget upsert frame refuses (bounded pre-collect: the LIMIT
     # means only max_affected+1 rows ever reach the driver)

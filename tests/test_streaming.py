@@ -1312,6 +1312,36 @@ def test_graph_delta_write_volume_tracks_churn(spark, sf_dir, tmp_path):
     assert got == truth
 
 
+def test_pre_delta_graph_root_is_refused(spark, sf_dir, tmp_path):
+    """A graph root in the pre-delta layout (one full ``graph/gen=<g>``
+    snapshot per generation, no ``graph_delta`` epochs) is refused with
+    a rebuild instruction — never read silently as its gen-0 snapshot.
+    The root is built by hand: gen=0 copied to gen=1 and the pointer's
+    generation flipped to 1."""
+    import os
+
+    import pytest
+
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull() & (F.col("vec_id") < 64))
+        .select("vec_id", "embedding")
+    )
+    root = str(tmp_path / "legacy")
+    index_sync.init_knn_graph_root(
+        emb, root, "vec_id", "embedding", k=4, n_blocks=2, n_buckets=4
+    )
+    shutil.copytree(
+        os.path.join(root, "graph", "gen=0"), os.path.join(root, "graph", "gen=1")
+    )
+    ptr = index_sync.read_index_pointer(root)
+    index_sync._flip_pointer(root, {**ptr, "generation": 1})
+    with pytest.raises(ValueError, match="predates delta generations.*rebuild"):
+        index_sync.load_synced_graph(spark, root)
+
+
 def test_streaming_ivf_index_sync_crash_restart(spark, sf_dir, tmp_path):
     """Streaming maintenance of a persisted IVF index survives a crash
     MID-COMMIT-WINDOW and a checkpoint-wiped re-drain: epochs 0-1
@@ -1438,7 +1468,7 @@ def test_streaming_ivf_index_sync_crash_restart(spark, sf_dir, tmp_path):
     ).write.partitionBy("cluster").parquet(
         index_sync._ivf_epoch_path(root, 9)
     )
-    assert index_sync.vacuum_ivf_orphans(root) == 1
+    assert index_sync.vacuum_ivf_epochs(root) == 1
     assert sorted(os.listdir(os.path.join(root, "postings"))) == [
         "epoch=0", "epoch=1", "epoch=2", "epoch=3",
     ]
@@ -1595,10 +1625,10 @@ def test_streaming_minhash_index_sync_crash_restart(spark, sf_dir, tmp_path):
     # worst crash window: epoch-3 partitions staged with garbage
     spark.createDataFrame(
         [(999, 888, 1_000_000)], "new_doc long, corpus_doc long, jaccard_micro long"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "pairs", 3))
+    ).write.parquet(index_sync._epoch_path(root, "pairs", 3))
     spark.createDataFrame(
         [(999, 0, "deadbeef")], "doc long, band_idx int, band_hash string"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "bands", 3))
+    ).write.parquet(index_sync._epoch_path(root, "bands", 3))
 
     index_sync.sync_minhash_index_stream(
         spark, str(src), b0.schema, root,
@@ -1887,7 +1917,7 @@ def test_minhash_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
     # staged orphan above the head is vacuumed along with folded dirs
     spark.createDataFrame(
         [(1, 2, 3)], "new_doc long, corpus_doc long, jaccard_micro long"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "pairs", 9))
+    ).write.parquet(index_sync._epoch_path(root, "pairs", 9))
     removed = index_sync.vacuum_minhash_epochs(root)
     # grams epochs 0-2, bands 0-2, pairs 1-2 + the planted orphan
     assert removed == 3 + 3 + 2 + 1
@@ -2010,7 +2040,7 @@ def test_streaming_semantic_dedup_sync_crash_restart(spark, sf_dir, tmp_path):
     # worst crash window: garbage staged above the pointer, both ledgers
     spark.createDataFrame(
         [(999, 888, 1.0)], "new_vec long, corpus_vec long, cos_sim double"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "pairs", 3))
+    ).write.parquet(index_sync._epoch_path(root, "pairs", 3))
     spark.createDataFrame(
         [(999, [0.0] * 4, 0)],
         "vec_id long, embedding array<double>, cluster int",
@@ -2124,11 +2154,11 @@ def test_streaming_bm25_index_sync_crash_restart_prune_retention(
         [("zzz", 999, 99, 99, 0)],
         "term string, doc long, tf long, dl long, __tbucket int",
     ).write.partitionBy("__tbucket").parquet(
-        index_sync._minhash_epoch_path(root, "postings", 3)
+        index_sync._epoch_path(root, "postings", 3)
     )
     spark.createDataFrame(
         [(1_000_000, 50_000_000)], "n_docs long, sum_dl long"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "stats", 3))
+    ).write.parquet(index_sync._epoch_path(root, "stats", 3))
 
     index_sync.sync_bm25_index_stream(
         spark, str(src), docs.schema, root,
@@ -2628,7 +2658,7 @@ def test_vacuum_on_uncompacted_root_spares_committed_epochs(
     # a staged crash orphan above the pointer IS sweepable
     spark.createDataFrame(
         [(1, 2, 3)], "new_doc long, corpus_doc long, jaccard_micro long"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "pairs", 9))
+    ).write.parquet(index_sync._epoch_path(root, "pairs", 9))
 
     assert index_sync.vacuum_minhash_epochs(root) == 1  # orphan only
     assert index_sync.vacuum_minhash_epochs(root) == 0  # idempotent
@@ -2671,13 +2701,13 @@ def test_minhash_sync_continues_pre_bucketing_root(spark, sf_dir, tmp_path):
     # retro-fit the pre-bucketing layout: flat grams epoch 0, pointer
     # without the grams_buckets key
     g0 = spark.read.parquet(
-        index_sync._minhash_epoch_path(root, "grams", 0)
+        index_sync._epoch_path(root, "grams", 0)
     ).drop("__bucket")
     flat = str(tmp_path / "flat_grams")
     g0.write.parquet(flat)
     shutil.rmtree(os.path.join(root, "grams"))
     os.makedirs(os.path.join(root, "grams"))
-    os.replace(flat, index_sync._minhash_epoch_path(root, "grams", 0))
+    os.replace(flat, index_sync._epoch_path(root, "grams", 0))
     ptr = index_sync.read_index_pointer(root)
     del ptr["grams_buckets"]
     index_sync._flip_pointer(root, ptr)
@@ -2851,12 +2881,12 @@ def test_bm25_cdc_sync_updates_deletes_crash_restart(spark, sf_dir, tmp_path):
     # stats (sharpest: one row shifts every score) and doclog tables
     spark.createDataFrame(
         [(1_000_000, 50_000_000)], "n_docs long, sum_dl long"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "stats", 3))
+    ).write.parquet(index_sync._epoch_path(root, "stats", 3))
     spark.createDataFrame(
         [(999_999, ["zzz"], 1, 0)],
         "doc long, w array<string>, dl int, __dbucket int",
     ).write.partitionBy("__dbucket").parquet(
-        index_sync._minhash_epoch_path(root, "doclog", 3)
+        index_sync._epoch_path(root, "doclog", 3)
     )
 
     index_sync.sync_bm25_cdc_stream(
@@ -2961,7 +2991,7 @@ def test_ivf_delete_ids_tombstones_reinsert_purge(spark, sf_dir, tmp_path):
     # delete that died before its flip) is invisible to every reader
     spark.createDataFrame(
         [(v,) for v in sorted(base_ids)[:3]], "vec_id long"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "deletes", 5))
+    ).write.parquet(index_sync._epoch_path(root, "deletes", 5))
     assert visible() == base_ids - set(doomed)
 
     # a streamed batch lands ABOVE the manual epoch (max-rule: epoch 2)
@@ -3322,7 +3352,7 @@ def test_crashed_verb_orphan_never_activates(spark, sf_dir, tmp_path):
     some = sorted(base_ids)[:5]
     spark.createDataFrame(
         [(v,) for v in some], "vec_id long"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "deletes", 1))
+    ).write.parquet(index_sync._epoch_path(root, "deletes", 1))
     assert index_sync.read_index_pointer(root)["max_epoch"] == 0
 
     # a stream batch now lands AT epoch 1 — the dead delete must not
@@ -4047,9 +4077,9 @@ def test_semantic_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
     assert ptr["last_batch_id"] == 0 and ptr["max_epoch"] == 1
     spark.createDataFrame(
         [(111, 222, 1.0)], "new_vec long, corpus_vec long, cos_sim double"
-    ).write.parquet(index_sync._minhash_epoch_path(root, "pairs", 2))
+    ).write.parquet(index_sync._epoch_path(root, "pairs", 2))
     spark.createDataFrame([(3,)], "vec_id long").write.parquet(
-        index_sync._minhash_epoch_path(root, "deletes", 2)
+        index_sync._epoch_path(root, "deletes", 2)
     )
     index_sync.sync_semantic_cdc_stream(
         spark, str(src), b0.schema, root,
@@ -4137,7 +4167,7 @@ def test_minhash_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
     spark.createDataFrame(
         [(999, ["zzz zzz zzz"], 1)], "doc long, grams array<string>, __bucket int"
     ).write.partitionBy("__bucket").parquet(
-        index_sync._minhash_epoch_path(root, "grams", 2)
+        index_sync._epoch_path(root, "grams", 2)
     )
     index_sync.sync_minhash_cdc_stream(
         spark, str(src), b0.schema, root,
