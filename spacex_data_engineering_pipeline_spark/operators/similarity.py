@@ -550,7 +550,15 @@ def _bounded_collect(df: DataFrame, n: int):
     budget, so the escalation reliably walks ALL partitions in up to 4
     sequential jobs. Scanning every partition in the first round keeps
     the bound (never collects more than n rows) at one job per probe
-    (optimization r15, guide §1.4 action discipline)."""
+    (optimization r15, guide §1.4 action discipline).
+
+    Limitation: the override is SESSION-GLOBAL for the duration of the
+    collect — another query on the same SparkSession that hits a
+    CollectLimit meanwhile also scans every partition in its first
+    round. Fine for the serial foreachBatch folds; concurrent readers
+    of a shared session inherit it. And in the one-round regime each
+    task may ship up to n rows, so a transient driver fetch can reach
+    n × partitions rows before the caller's refusal fires."""
     spark = df.sparkSession
     key = "spark.sql.limit.initialNumPartitions"
     old = spark.conf.get(key, None)

@@ -13973,7 +13973,7 @@ def embedding_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``delete_index_ids`` writes a TOMBSTONE EPOCH that probes anti-join
     against (delete epoch > posting epoch), so history before the
     delete stays readable and a later re-insert is visible again;
-    ``compact_*_epochs(purge_deleted=True)`` is the physical removal
+    ``compact_root(purge_deleted=True)`` is the physical removal
     with an explicit as-of refusal floor (both pytest-pinned,
     test_ivf_delete_ids_tombstones_reinsert_purge).
 
@@ -14133,7 +14133,7 @@ def dedup_index_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate side (bands) and exact-verify side (grams) both
     anti-join it with delete-epoch > row-epoch semantics, so history
     before the delete stays readable and a later re-ingest of the
-    same doc re-enters the index. ``compact_minhash_epochs(...,
+    same doc re-enters the index. ``compact_root(...,
     purge_deleted=True)`` is the physical content removal
     (pytest-pinned alongside re-ingest and the purge floor).
 
@@ -14336,14 +14336,15 @@ def streaming_pca_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_netting_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NETTING/PURGING compaction for the BM25 ledger — the
     churn-retention dial the signed-epoch design otherwise lacks
-    (streaming/bm25_sync.py:compact_bm25_epochs, ``net=True``): on an
+    (``compact_root(purge_deleted=True)`` on a BM25 root, the
+    transform in streaming/bm25_sync.py:_bm25_net): on an
     update-heavy corpus the verbatim compact keeps 2k−1 signed posting
     rows per doc updated k times, so the index grows with write
     HISTORY; netting materializes the fold every reader already
-    computes (per-(doc,term) tf/dl and per-term df summed across all
-    epochs equal the live corpus's values by the signed-epoch
-    invariant), physically drops non-positive rows and spent delete
-    markers, keeps only the latest doc-log version per doc, and
+    computes (per-(doc,term) tf/dl summed across all epochs equal the
+    live corpus's values by the signed-epoch invariant), physically
+    drops non-positive rows and spent delete markers, keeps only the
+    latest doc-log version per doc, and
     records the as-of refusal floor — after it, compacted index size
     tracks LIVE corpus size (pinned row-exactly by
     test_bm25_netting_compact_tracks_live_size, which also proves the
@@ -14352,8 +14353,8 @@ def bm25_netting_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scenario is deliberate churn: base corpus (doc_id % 5 ≠ 0)
     indexed once; batch 0 UPDATES doc_id % 7 = 1 (+' spark') and
     DELETES doc_id % 11 = 3 of the base; batch 1 updates the SAME
-    docs AGAIN (+' spark spark'); then ``compact_bm25_epochs(net=
-    True)`` + vacuum, and the graded result is the synced 3-term
+    docs AGAIN (+' spark spark'); then ``compact_root(purge_deleted=
+    True)`` + ``vacuum_root``, and the graded result is the synced 3-term
     top-10 SERVED FROM THE NETTED COMPACT ALONE (every epoch dir is
     vacuumed away). The oracle is a from-scratch batch BM25 over the
     live corpus — a mis-netted tf, a df summed across the wrong key, a
@@ -14402,8 +14403,8 @@ def bm25_netting_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
-        index_sync.compact_bm25_epochs(spark, root, net=True)
-        index_sync.vacuum_bm25_epochs(root)  # serve from the compact alone
+        index_sync.compact_root(spark, root, purge_deleted=True)
+        index_sync.vacuum_root(root)  # serve from the compact alone
         out = (
             index_sync.bm25_topk_synced(spark, root, _BM25_TERMS, k=10)
             # materialize before the temp dir vanishes (lazy scan)
@@ -15474,10 +15475,11 @@ def streaming_maintained_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE RETENTION POLICY VERB under the oracle —
     ``maintain_root`` (streaming/index_sync.py): one call that sniffs
     any ledger root's family from its pointer (``ledger_root_kind``),
-    measures the live tail, and when it exceeds the dial runs that
-    family's own compaction + vacuum (graph roots also prune saved
-    generations). Operators schedule ONE verb after drains instead of
-    memorizing six compact/vacuum pairs.
+    measures the live tail, and when it exceeds the dial runs
+    ``compact_root`` + ``vacuum_root``, which apply that family's own
+    compaction rule (graph roots also prune saved generations).
+    Operators schedule ONE verb after drains; no caller picks a
+    per-family compaction.
 
     The grade: the standard three-batch growing-dedup drain, then
     ``maintain_root(max_tail_epochs=1)`` — the tail (3) exceeds the
@@ -15515,7 +15517,7 @@ def streaming_maintained_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_graph_rebase_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORPUS REBASE mid-stream, under the oracle
-    (``rebase_graph_corpus`` + ``vacuum_graph_logs``,
+    (``compact_root`` + ``vacuum_root`` on a plain graph root,
     streaming/index_sync.py): the plain graph root's applied/removed
     logs grow one epoch dir per batch FOREVER, and every fold's
     corpus replay unions all of them — the one directory growth
@@ -15588,10 +15590,10 @@ def streaming_graph_rebase_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src0, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt0"),
         )
-        folded = index_sync.rebase_graph_corpus(spark, root)
+        folded = index_sync.compact_root(spark, root)
         if folded == 0:
             raise RuntimeError("rebase unexpectedly no-oped")
-        index_sync.vacuum_graph_logs(root)
+        index_sync.vacuum_root(root)
         _stage_stream_batches(work, src1, (b1,), start=1)
         index_sync.sync_knn_graph_cdc_stream(
             spark, src1, b0.schema, root,

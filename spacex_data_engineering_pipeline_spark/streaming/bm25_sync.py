@@ -1,9 +1,10 @@
 """Streaming-maintained BM25 inverted index — the retrieval-artifact
 arm of the epoch-ledger family (streaming/ledger.py), in its own
-module since round 13: term-bucketed postings + per-term document
-frequencies + a model-sized additive stats table, maintained by an
-INSERT-only arm (``sync_bm25_index_stream``) and a CDC arm
-(``sync_bm25_cdc_stream``, op ∈ I/U/D) whose updates and deletes are
+module since round 13: term-bucketed postings (per-term document
+frequency is derived from them at query time) + a model-sized
+additive stats table, maintained by an INSERT-only arm
+(``sync_bm25_index_stream``) and a CDC arm (``sync_bm25_cdc_stream``,
+op ∈ I/U/D) whose updates and deletes are
 SIGNED tombstone epochs derived from a doc-id-bucketed doc log —
 readers fold sums and drop non-positive rows, so the synced ranking
 is always exactly the batch scorer over the current corpus
@@ -56,7 +57,7 @@ def _bm25_ledger(root: str) -> EpochLedger:
 
 def _term_bucket(term_expr, n_buckets: int):
     """Term hash bucket for the BM25 ledger layout — queries name a
-    handful of terms, so bucketing postings and df by term hash turns
+    handful of terms, so bucketing postings by term hash turns
     a query-time read into a partition-pruned fetch of ≤ |query terms|
     bucket dirs (the grams-ledger pattern, keyed on term not doc)."""
     return F.pmod(F.xxhash64(term_expr), F.lit(n_buckets)).cast("int")
@@ -126,12 +127,12 @@ def init_bm25_root(
     doc_buckets: int = 16,
 ) -> None:
     """One-time base for a STREAMING-MAINTAINED BM25 inverted index —
-    the retrieval-artifact arm of the ledger family: postings and
-    per-term document frequencies saved term-bucket-partitioned as
-    epoch 0 (query-time reads partition-prune to the query terms'
-    buckets), plus a one-row per-epoch stats table (n_docs, sum_dl —
-    exact integer sums, additive across epochs exactly as the PCA
-    moments are, so global N and avgdl fold from model-sized state and
+    the retrieval-artifact arm of the ledger family: postings saved
+    term-bucket-partitioned as epoch 0 (query-time reads
+    partition-prune to the query terms' buckets), plus a one-row
+    per-epoch stats table (n_docs, sum_dl — exact integer sums,
+    additive across epochs exactly as the PCA moments are, so global N
+    and avgdl fold from model-sized state and
     the synced ranking is bit-identical to a from-scratch batch
     scorer), plus the doc-id-bucketed DOC LOG (doc, tokens, dl — the
     per-doc state ``sync_bm25_cdc_stream`` reads back, pruned to a
@@ -273,18 +274,18 @@ def sync_bm25_cdc_stream(
        (partition-pruned to the batch's doc buckets — the committed
        100 TB of postings is never read);
     2. derive exact NEGATIVE rows from those old token lists: postings
-       (-tf, -dl) per (doc, term), df −1 per (term, old doc), stats
-       (−n, −Σdl);
+       (-tf, -dl) per (doc, term), stats (−n, −Σdl);
     3. tokenize the batch's non-delete rows once into the usual
        POSITIVE tables (``_bm25_epoch_tables``);
     4. write one epoch per table carrying positive ∪ negative rows,
        plus the doc log's new state (new token lists; null-token
        DELETE markers), published by the one pointer flip.
 
-    Readers fold per-(doc,term) tf/dl and per-term df as SUMS and drop
-    non-positive rows (``bm25_topk_synced``), so an updated doc
-    re-ranks with its new text, a deleted doc vanishes, N/avgdl stay
-    exact integers, and a re-insert after a delete is a plain insert.
+    Readers fold per-(doc,term) tf/dl as SUMS, drop non-positive rows
+    and count the survivors per term as df (``bm25_topk_synced``), so
+    an updated doc re-ranks with its new text, a deleted doc vanishes,
+    N/avgdl stay exact integers, and a re-insert after a delete is a
+    plain insert.
     As-of time travel keeps working — the signed rows at epochs ≤ k
     reconstruct exactly the state after batch k.
 
@@ -409,14 +410,15 @@ def bm25_topk_synced(
 ) -> DataFrame:
     """Query the synced BM25 index: fold the model-sized stats ledger
     into exact global (N, avgdl), read ONLY the query terms' bucket
-    partitions of the postings and df ledgers (partition-pruned at
-    file listing — at 100 TB a 3-term query fetches ≤ 3 of
-    ``term_buckets`` dirs per epoch), fold per-term df across epochs,
+    partitions of the postings ledger (partition-pruned at file
+    listing — at 100 TB a 3-term query fetches ≤ 3 of
+    ``term_buckets`` dirs per epoch), fold signed tf/dl across epochs,
+    derive per-term df as the count of surviving (doc, term) rows,
     and score with Lucene's nonnegative-idf BM25 — the identical
     expression text as the batch scorer, with N and avgdl inlined as
     the same exact doubles, so the synced ranking replays the batch
     oracle bit-for-bit. ``as_of_epoch`` time-travels the whole
-    ranking (stats, df, and postings all epoch-filtered together)."""
+    ranking (stats and postings epoch-filtered together)."""
     ptr = read_index_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
     nb = ptr["term_buckets"]
@@ -503,84 +505,39 @@ def bm25_topk_synced(
     )
 
 
-def compact_bm25_epochs(
-    spark: SparkSession, root: str, net: bool = False
-) -> int:
-    """Retention for the BM25 ledger: rewrite the three tables'
-    committed epochs into one compact dataset each — postings and df
-    keep the term-bucket partitioning (query pruning survives) and
-    epoch as an int data column (as-of rankings stay exact); stats is
-    already model-sized but compacts too so all three move under the
-    one shared ``compact_upto`` (the paired-ledger rule: compacting a
-    subset would let the vacuum drop the rest's uncompacted rows).
-    Returns epochs newly folded.
-
-    ``net=True`` is the NETTING/PURGING mode — the churn-retention
-    dial the signed-ledger design otherwise lacks: the default path
-    rewrites signed rows VERBATIM, so on a high-churn corpus a doc
-    updated k times keeps 2k−1 posting rows and k doc-log versions
-    forever (index size tracks write HISTORY, not live size). Netting
-    materializes exactly the fold every reader already computes —
-    per-(doc, term) tf/dl and per-term df summed across all epochs
-    equal the LIVE corpus's values by the signed-epoch invariant
-    (each negative row subtracts a value an earlier epoch added) —
-    then physically drops non-positive results, keeps only the LATEST
-    doc-log version per doc (delete markers vanish entirely), and
-    records ``purge_floor = head``: as-of rankings below the netting
-    point are refused afterwards, the same explicit end-of-readability
-    contract as PCA moment compaction and the IVF family's
-    ``purge_deleted``. After netting, the compacted postings hold one
-    row per live (doc, term) — index size tracks the live corpus
-    again — the term-bucket partitioning survives (queries keep
-    pruning), and the CDC arm keeps working against the netted doc
-    log (one live version per doc is exactly the state
-    ``_bm25_old_versions`` needs). Refused when nothing is uncompacted
-    (a silent no-op would leave "netted-away" history readable), the
-    ``purge_deleted`` precedent."""
-    led = _bm25_ledger(root)
-    if not net:
-        return led.compact(spark)
-    ptr = led.pointer()
-    head = ptr["max_epoch"]
-    cu = int(ptr.get("compact_upto", 0) or 0)
-    if head <= cu:
-        raise ValueError(
-            f"netting needs uncompacted epochs (head={head}, "
-            f"compact_upto={cu}): the staged-compact commit can't "
-            "rewrite a live compact in place — drain or write an "
-            "epoch first"
+def _bm25_net(table: str, df: DataFrame, head: int) -> DataFrame:
+    """The BM25 ``compact_root(..., purge_deleted=True)`` transform —
+    NETTING, the churn-retention dial the signed-ledger design
+    otherwise lacks: a verbatim compact keeps 2k−1 posting rows and k
+    doc-log versions for a doc updated k times (index size tracks
+    write HISTORY). Netting materializes the fold every reader already
+    computes — per-(doc, term) tf/dl summed across all epochs equal the
+    LIVE corpus's values by the signed-epoch invariant (each negative
+    row subtracts a value an earlier epoch added) — drops non-positive
+    results, sums stats to one row, and keeps only the LATEST doc-log
+    version per doc (delete markers vanish). The compacted postings
+    then hold one row per live (doc, term) in the term-bucket layout,
+    and the CDC arm keeps working against the netted doc log (one live
+    version per doc is exactly what ``_bm25_old_versions`` needs)."""
+    if table == "postings":
+        return (
+            df.groupBy("doc", "term", "__tbucket")
+            .agg(F.sum("tf").alias("tf"), F.sum("dl").alias("dl"))
+            .filter(F.col("tf") > 0)
+            .withColumn("epoch", F.lit(head).cast("int"))
         )
-
-    def transform(table: str, df: DataFrame, head_: int):
-        if table == "postings":
-            return (
-                df.groupBy("doc", "term", "__tbucket")
-                .agg(F.sum("tf").alias("tf"), F.sum("dl").alias("dl"))
-                .filter(F.col("tf") > 0)
-                .withColumn("epoch", F.lit(head_).cast("int"))
-            )
-        if table == "stats":
-            return df.agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("sum_dl").cast("long").alias("sum_dl"),
-            ).withColumn("epoch", F.lit(head_).cast("int"))
-        if table == "doclog":
-            w = Window.partitionBy("doc").orderBy(F.col("epoch").desc())
-            return (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .filter(F.col("w").isNotNull())  # spent delete markers
-                .select("doc", "w", "dl", "__dbucket")
-                .withColumn("epoch", F.lit(head_).cast("int"))
-            )
-        return df
-
-    return led.compact(spark, transform=transform, extra={"purge_floor": head})
-
-
-def vacuum_bm25_epochs(root: str) -> int:
-    """Retention sweep for the BM25 ledger's tables: see
-    ``_vacuum_ledger_dirs``."""
-    return _bm25_ledger(root).vacuum()
-
-
+    if table == "stats":
+        return df.agg(
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.sum("sum_dl").cast("long").alias("sum_dl"),
+        ).withColumn("epoch", F.lit(head).cast("int"))
+    if table == "doclog":
+        w = Window.partitionBy("doc").orderBy(F.col("epoch").desc())
+        return (
+            df.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .filter(F.col("w").isNotNull())  # spent delete markers
+            .select("doc", "w", "dl", "__dbucket")
+            .withColumn("epoch", F.lit(head).cast("int"))
+        )
+    return df

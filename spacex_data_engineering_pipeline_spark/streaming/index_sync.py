@@ -39,9 +39,9 @@ over one instance), eight sync arms over six artifact kinds:
 Id-level lifecycle verbs for the IVF-family posting ledgers:
 ``delete_index_ids`` writes tombstone epochs that probes anti-join
 (delete epoch > posting epoch — re-inserts stay visible, history
-before the delete stays readable), and ``compact_ivf_epochs`` /
-``compact_semantic_epochs`` with ``purge_deleted=True`` are the
-physical right-to-be-forgotten removal (as-of refusal floor).
+before the delete stays readable), and ``compact_root(...,
+purge_deleted=True)`` is the physical right-to-be-forgotten removal
+(as-of refusal floor).
 
 All arms share the commit protocol below: epoch-keyed staged writes
 (overwrite-idempotent, invisible to readers) published by ONE fsync'd
@@ -49,15 +49,17 @@ pointer flip; replayed epochs no-op; crash-window orphans are never
 scanned and the replay overwrites them. Crash-restart is pytest-pinned
 per artifact kind (tests/test_streaming.py).
 
-RETENTION, per ledger: ``compact_minhash_epochs`` / ``compact_ivf_
-epochs`` / ``compact_semantic_epochs`` / ``compact_bm25_epochs``
-rewrite committed epochs into one compact dataset per table
-(epoch kept as an int data column — as-of reads stay row-exact, the
-bucket/cluster partitioning survives so pruned reads keep pruning);
-``compact_pca_epochs`` SUMS moments (ending pre-compaction as-of
-readability explicitly); the matching ``vacuum_*_epochs`` sweeps drop
-only compacted-away dirs, superseded compacts, and staged orphans.
-Graph generations keep their own ``vacuum_generations``.
+RETENTION, one path for every root kind: ``compact_root`` reads the
+kind from the pointer (``ledger_root_kind``) and folds every
+committed epoch at or below the head under ONE ``compact_upto`` —
+rows rewritten with epoch kept as an int data column (as-of reads
+stay row-exact, bucket/cluster partitioning survives so pruned reads
+keep pruning), except PCA (moments SUMMED, ending pre-compaction
+as-of readability) and the plain graph (applied/removed logs rebased
+into one corpus snapshot). ``vacuum_root`` sweeps only what a
+compaction superseded plus staged orphans; ``maintain_root`` is the
+tail-length policy over the two. Graph generations keep their own
+``vacuum_generations``.
 
 kNN graph root layout: ``graph/gen=<floor>`` is one full
 bucket-partitioned snapshot (``save_knn_graph``; generation 0 at init,
@@ -116,7 +118,6 @@ from spacex_data_engineering_pipeline_spark.streaming.ledger import (
     read_index_pointer,
     record_epoch_pair,
     resolve_as_of as _resolve_as_of,
-    vacuum_ledger_dirs as _vacuum_ledger_dirs,
 )
 
 # The BM25 arm lives in its own module since round 13; re-exported here
@@ -125,12 +126,11 @@ from spacex_data_engineering_pipeline_spark.streaming.bm25_sync import (  # noqa
     _bm25_epoch_tables,
     _bm25_ledger,
     _term_bucket,
+    _bm25_net,
     bm25_topk_synced,
-    compact_bm25_epochs,
     init_bm25_root,
     sync_bm25_cdc_stream,
     sync_bm25_index_stream,
-    vacuum_bm25_epochs,
 )
 
 
@@ -211,7 +211,7 @@ def _corpus_at(spark: SparkSession, root: str, ptr: dict) -> DataFrame:
     generation r then re-upserted at s > r is alive again (its latest
     applied stamp outranks the removal).
 
-    REBASE-AWARE (``rebase_graph_corpus``): when the pointer records a
+    REBASE-AWARE (``compact_root`` on a graph root): when the pointer records a
     ``corpus_rebase_gen`` floor, the base snapshot comes from
     ``corpus_rebase/upto=<floor>`` (logs ≤ floor already folded in —
     its rows carry the floor as their stamp, so a later removal still
@@ -548,7 +548,7 @@ def load_synced_ivf(
     time-travels: epoch partitions are immutable once committed, so
     the index as of any past epoch is the exact filter ≤ k.
 
-    Compaction-aware: after ``compact_ivf_epochs`` the committed
+    Compaction-aware: after ``compact_root`` the committed
     history comes from the cluster-partitioned compact dataset (epoch
     a data column — as-of reads stay row-exact, cluster pruning keeps
     working) plus any live epoch dirs above it."""
@@ -629,19 +629,20 @@ def delete_index_ids(
 ) -> int:
     """ID-LEVEL DELETE for the id-keyed index ledgers (plain IVF
     roots, semantic-dedup roots, and MinHash dedup roots) — the
-    lifecycle verb the family lacked: ``compact_*`` could only drop whole epochs, but a
-    right-to-be-forgotten request names specific vector ids. Writes a
-    TOMBSTONE EPOCH (just the ids), published by the usual pointer
-    flip; every reader (``load_synced_ivf``, the semantic probe/fold)
+    lifecycle verb the family lacked: compaction only folds whole
+    epochs, but a right-to-be-forgotten request names specific ids.
+    Writes a TOMBSTONE EPOCH (just the ids), published by the usual
+    pointer flip; every reader (``load_synced_ivf``, the semantic probe/fold)
     anti-joins postings against tombstones with delete-epoch >
     posting-epoch, so:
 
     - a later re-insert of the same id IS visible (the tombstone only
       covers postings committed before it);
     - ``as_of_epoch`` reads before the delete still see the row —
-      tombstones are history too, until ``compact_*_epochs(...,
-      purge_deleted=True)`` physically removes both and sets the
-      as-of refusal floor;
+      tombstones are history too, until ``compact_root(...,
+      purge_deleted=True)`` physically removes both (``purge_pairs``
+      also sweeps the dedup roots' audit pairs) and sets the as-of
+      refusal floor;
     - streaming syncs interleave safely: the stream's next epoch is
       ``max(epoch_id + 1, head + 1)`` (``EpochLedger.next_epoch``), so
       a manual tombstone epoch never collides with a replayed batch.
@@ -1107,9 +1108,10 @@ def init_knn_graph_ivf_root(
     per-batch probed-cluster fetch partition-prunes on) with the FIXED
     centroid sidecar, and one pointer carrying both high-water marks
     (graph ``generation``, postings ``max_epoch``) plus the pinned
-    probe width. ``load_synced_graph``, ``vacuum_generations``, and
-    ``vacuum_ivf_epochs`` all work on this root unchanged — it is the
-    graph ledger and the IVF ledger sharing one commit point."""
+    probe width. ``load_synced_graph``, ``vacuum_generations``,
+    ``compact_root`` and ``vacuum_root`` all work on this root
+    unchanged — it is the graph ledger and the IVF ledger sharing one
+    commit point."""
     from spacex_data_engineering_pipeline_spark.operators import (
         similarity as S_,
     )
@@ -1450,102 +1452,6 @@ def sync_knn_graph_ivf_cdc_stream(
     )
 
 
-def compact_ivf_epochs(
-    spark: SparkSession, root: str, purge_deleted: bool = False
-) -> int:
-    """Retention for the IVF posting ledger — the worst directory
-    growth of the family (``n_clusters`` dirs per committed epoch):
-    rewrite every posting epoch at or below the pointer into ONE
-    cluster-partitioned compact dataset with epoch kept as an int data
-    column, so probes keep partition-pruning on ``cluster``, as-of
-    reads stay row-exact, and the live tail keeps its epoch dirs. Same
-    staged-then-pointer-flip commit as ``compact_minhash_epochs``;
-    superseded dirs removed by ``vacuum_ivf_epochs``. Returns epochs
-    newly folded. Works on both plain IVF roots (``init_ivf_root``)
-    and combined graph+IVF roots (``init_knn_graph_ivf_root``); the
-    ``deletes`` tombstone table (``delete_index_ids``) compacts along
-    under the same shared ``compact_upto``.
-
-    ``purge_deleted=True`` is the RIGHT-TO-BE-FORGOTTEN hard removal:
-    the postings compact is written with tombstoned rows physically
-    DROPPED and the tombstones themselves discarded, and the pointer
-    records ``purge_floor = head`` — as-of reads below the floor are
-    refused afterwards (the rows needed to reconstruct them are gone;
-    the same explicit end-of-readability contract as PCA moment
-    compaction). The default keeps every row, so compaction alone
-    never changes what time travel can see."""
-    return _compact_with_tombstones(
-        spark, _ivf_ledger(root), purge_deleted,
-        ("postings",), lambda ptr: ptr["id_col"],
-    )
-
-
-def _compact_with_tombstones(
-    spark: SparkSession,
-    led: EpochLedger,
-    purge_deleted: bool,
-    data_tables: tuple[str, ...],
-    tomb_col_of,
-    pair_cols: dict[str, tuple[str, str]] | None = None,
-) -> int:
-    """Shared compact for roots carrying id-keyed data tables plus a
-    ``deletes`` tombstone ledger (IVF/semantic postings; the minhash
-    grams+bands pair): the plain path rewrites rows; the purge path
-    drops tombstoned rows from every table in ``data_tables`` and the
-    spent tombstones, recording the as-of refusal floor.
-    ``tomb_col_of(ptr)`` names the id column tombstones join on.
-    ``pair_cols`` extends the purge to AUDIT pair tables (the
-    ``purge_pairs`` dial): {table: (side_col, side_col)} — a pair row
-    is dropped when EITHER cited id was tombstoned after the pair was
-    recorded (the same epoch rule as the data tables, applied per
-    side, so a re-ingested id's post-re-insert verdicts survive its
-    earlier identity's sweep)."""
-    if not purge_deleted:
-        return led.compact(spark)
-    ptr = led.pointer()
-    head = ptr["max_epoch"]
-    cu = int(ptr.get("compact_upto", 0) or 0)
-    if head <= cu:
-        # a silent no-op would leave "purged" rows readable — refuse.
-        # (delete_index_ids always bumps the head, so purging right
-        # after a delete never hits this; only purging deletes that an
-        # earlier PLAIN compaction already folded does. Recovery: write
-        # a fresh tombstone epoch for the same ids, then purge.)
-        raise ValueError(
-            f"purge needs uncompacted epochs (head={head}, "
-            f"compact_upto={cu}): the staged-compact commit can't "
-            "rewrite a live compact in place"
-        )
-    col = tomb_col_of(ptr)
-
-    def transform(table: str, df: DataFrame, head_: int):
-        if table in data_tables:
-            return _apply_tombstones(spark, led, ptr, head_, df, col)
-        if pair_cols and table in pair_cols:
-            out = df
-            for side in pair_cols[table]:
-                out = _apply_tombstones(
-                    spark, led, ptr, head_,
-                    out.withColumnRenamed(side, col), col,
-                ).withColumnRenamed(col, side)
-            return out
-        if table == "deletes":
-            return None  # spent: their targets are physically gone
-        return df
-
-    return led.compact(
-        spark, transform=transform, extra={"purge_floor": head}
-    )
-
-
-def vacuum_ivf_epochs(root: str) -> int:
-    """Retention sweep for the posting ledger: see
-    ``_vacuum_ledger_dirs`` (compacted-away epoch dirs, superseded
-    compacts, staged crash orphans — never the committed tail or the
-    pointer-named compact)."""
-    return _ivf_ledger(root).vacuum()
-
-
 def init_semantic_dedup_root(
     corpus: DataFrame,
     root: str,
@@ -1695,44 +1601,6 @@ def load_synced_semantic_pairs(
     return pairs.drop("epoch")
 
 
-def compact_semantic_epochs(
-    spark: SparkSession,
-    root: str,
-    purge_deleted: bool = False,
-    purge_pairs: bool = False,
-) -> int:
-    """Retention for the semantic-dedup root: fold BOTH its ledgers —
-    postings (cluster-partitioned compact) and pairs — at or below the
-    pointer into compact datasets in one staged pass, then one pointer
-    flip. Both must move together: the shared ``compact_upto`` governs
-    which live epoch dirs ``vacuum_semantic_epochs`` may drop, so
-    compacting only one table would let the sweep delete the other's
-    uncompacted rows. (For the same reason, do not run
-    ``compact_ivf_epochs`` on a semantic root.) Returns epochs newly
-    folded. The ``deletes`` tombstone table compacts along; see
-    ``compact_ivf_epochs`` for the ``purge_deleted`` contract and
-    ``compact_minhash_epochs`` for the ``purge_pairs`` audit-sweep
-    dial (here on the (new_vec, corpus_vec) sides)."""
-    if purge_pairs and not purge_deleted:
-        raise ValueError(
-            "purge_pairs extends purge_deleted (the pairs sweep keys "
-            "on the same spent tombstones) — pass purge_deleted=True"
-        )
-    return _compact_with_tombstones(
-        spark, _semantic_ledger(root), purge_deleted,
-        ("postings",), lambda ptr: ptr["id_col"],
-        pair_cols=(
-            {"pairs": ("new_vec", "corpus_vec")} if purge_pairs else None
-        ),
-    )
-
-
-def vacuum_semantic_epochs(root: str) -> int:
-    """Retention sweep for the semantic-dedup root's ledgers: see
-    ``_vacuum_ledger_dirs``."""
-    return _semantic_ledger(root).vacuum()
-
-
 def _moments_epoch_path(root: str, epoch: int) -> str:
     return os.path.join(root, "moments", f"epoch={epoch}")
 
@@ -1824,7 +1692,7 @@ def sync_pca_cdc_stream(
     subtracting the identical old vector is bit-exact — the refit over
     the folded ledger EQUALS a from-scratch fit over
     (corpus − old versions + new versions), and every existing reader
-    (``load_synced_pca_model`` sums, ``compact_pca_epochs`` sums)
+    (``load_synced_pca_model`` sums, ``compact_root`` sums)
     handles signed rows unchanged.
 
     Why before-images instead of a vector log: the PCA arm's whole
@@ -1885,7 +1753,7 @@ def load_synced_pca_model(
     the fold over epochs ≤ k — full model provenance at dim² bytes per
     epoch.
 
-    Retention interplay: ``compact_pca_epochs`` SUMS epochs away
+    Retention interplay: ``compact_root`` SUMS epochs away
     (unlike the MinHash compaction, which rewrites rows — a summed
     moment table cannot be re-sliced), so as-of points strictly below
     the pointer's ``compact_upto`` are refused the way vacuumed graph
@@ -1911,86 +1779,6 @@ def load_synced_pca_model(
         .collect()
     )
     return fit_pca_from_moments(merged, n_components, n_iter=n_iter)
-
-
-def compact_pca_epochs(spark: SparkSession, root: str) -> int:
-    """Retention for the PCA moment ledger: SUM every committed epoch
-    at or below the pointer into one model-sized moment table (exact
-    int64 — ``merge_moments`` additivity makes the fold bit-identical
-    to reading the epochs separately), staged at
-    ``moments_compact/upto=<head>`` and published by one pointer flip.
-    The summed table carries ``epoch = compact point`` so the generic
-    ledger reader unions it with the live tail transparently; as-of
-    reads below the compaction point are refused (the detail is gone —
-    see ``load_synced_pca_model``). Superseded dirs stay until
-    ``vacuum_pca_epochs``. Returns the number of epochs newly folded."""
-    return _pca_ledger(root).compact(
-        spark,
-        transform=lambda table, df, head: (
-            df.groupBy("i", "j")
-            .agg(F.sum("m").alias("m"))
-            .withColumn("epoch", F.lit(head).cast("int"))
-        ),
-    )
-
-
-def vacuum_pca_epochs(root: str) -> int:
-    """Retention sweep for the moment ledger: see
-    ``_vacuum_ledger_dirs`` (summed-away epoch dirs, superseded
-    compacts, staged crash orphans — never the committed tail or the
-    pointer-named compact)."""
-    return _pca_ledger(root).vacuum()
-
-
-def compact_minhash_epochs(
-    spark: SparkSession,
-    root: str,
-    purge_deleted: bool = False,
-    purge_pairs: bool = False,
-) -> int:
-    """Fold every committed MinHash ledger epoch (grams / bands /
-    pairs) at or below the pointer into one compact dataset per table
-    — the retention step that stops the root from accumulating one
-    epoch directory per micro-batch forever. Rows are REWRITTEN, never
-    summarized: epoch survives as an int data column, so as-of reads
-    stay row-exact after compaction (unlike graph generations, where
-    vacuuming ends a generation's readability). The grams compact
-    keeps the ``__bucket`` partitioning, so the probe's verify fetch
-    still partition-prunes. Same commit discipline as the syncs: the
-    compact dataset is STAGED (readers only consult the upto the
-    pointer names), published by one pointer flip; superseded dirs
-    stay on disk, harmless, until ``vacuum_minhash_epochs``. Returns
-    the number of epochs newly folded.
-
-    ``purge_deleted=True`` physically drops tombstoned docs' grams and
-    band keys (the content-bearing tables) plus the spent tombstones,
-    and sets the as-of refusal floor — see ``compact_ivf_epochs``. The
-    PAIRS table is audit history and keeps its rows BY DEFAULT:
-    verdicts carry only ids and scores, never document content.
-    ``purge_pairs=True`` (requires ``purge_deleted``) extends the
-    sweep to them — every pair citing a tombstoned id on EITHER side
-    is physically dropped too (epoch-aware: verdicts a re-ingested id
-    earned after its re-insert survive the earlier identity's sweep),
-    so a right-to-be-forgotten removal can be TOTAL when even the id
-    itself must go; below-floor as-of reads refuse as usual."""
-    if purge_pairs and not purge_deleted:
-        raise ValueError(
-            "purge_pairs extends purge_deleted (the pairs sweep keys "
-            "on the same spent tombstones) — pass purge_deleted=True"
-        )
-    return _compact_with_tombstones(
-        spark, _minhash_ledger(root), purge_deleted,
-        ("grams", "bands"), lambda ptr: ptr.get("tomb_col", "doc"),
-        pair_cols={"pairs": ("new_doc", "corpus_doc")} if purge_pairs else None,
-    )
-
-
-def vacuum_minhash_epochs(root: str) -> int:
-    """Retention for the MinHash dedup ledger: see
-    ``_vacuum_ledger_dirs`` (compacted-away epoch dirs, superseded
-    compacts, staged crash orphans — never the committed tail or the
-    pointer-named compact)."""
-    return _minhash_ledger(root).vacuum()
 
 
 def _write_grams_epoch(
@@ -2087,7 +1875,7 @@ def read_synced_grams(
     dirs). ``buckets=[]`` means "no corpus docs can match" and returns
     the empty frame without touching files.
 
-    Compaction-aware: after ``compact_minhash_epochs`` the committed
+    Compaction-aware: after ``compact_root`` the committed
     history comes from the bucket-partitioned compact dataset (epoch a
     data column — as-of filters stay row-exact) plus any live epoch
     dirs above it; the bucket restriction partition-prunes both."""
@@ -2436,8 +2224,8 @@ def ledger_root_kind(ptr: dict) -> str:
     postings also live under the epoch ledger); ``num_hashes`` →
     minhash dedup; ``min_cosine`` → semantic dedup; otherwise an
     ``id_col`` means plain IVF and its absence the PCA moment ledger
-    (which keys on nothing but ``vec_col``). The same discrimination
-    ``delete_index_ids`` applies piecemeal, factored for callers."""
+    (which keys on nothing but ``vec_col``). ``compact_root``,
+    ``vacuum_root`` and ``maintain_root`` dispatch on it."""
     if "term_buckets" in ptr:
         return "bm25"
     if "generation" in ptr:
@@ -2449,6 +2237,151 @@ def ledger_root_kind(ptr: dict) -> str:
     return "ivf" if "id_col" in ptr else "pca"
 
 
+# Ledger layout per root kind, for every kind whose retention is an
+# EpochLedger compaction (all but the plain graph, which rebases its
+# applied/removed logs instead).
+_KIND_LEDGERS = {
+    "ivf": _ivf_ledger,
+    "graph_ivf": _ivf_ledger,  # the graph+IVF root's posting side
+    "semantic": _semantic_ledger,
+    "minhash": _minhash_ledger,
+    "pca": _pca_ledger,
+    "bm25": _bm25_ledger,
+}
+
+# Audit pair tables a ``purge_pairs`` sweep reaches: kind → the two id
+# columns a pair row cites.
+_PAIR_SIDES = {
+    "semantic": ("new_vec", "corpus_vec"),
+    "minhash": ("new_doc", "corpus_doc"),
+}
+
+
+def compact_root(
+    spark: SparkSession,
+    root: str,
+    purge_deleted: bool = False,
+    purge_pairs: bool = False,
+) -> int:
+    """Retention for ANY ledger root (kind read from the pointer):
+    fold every committed epoch at or below the head into one compact
+    dataset per table, staged, then published by one pointer flip.
+    All of a root's tables move under the one shared ``compact_upto``
+    — compacting a subset would let ``vacuum_root`` drop the rest's
+    uncompacted rows. Returns epochs newly folded (0 = no-op).
+
+    Rows are REWRITTEN with epoch as an int data column (as-of reads
+    stay row-exact; cluster / grams-bucket / term-bucket partitioning
+    survives, so pruned reads keep pruning), except on pca — moments
+    are SUMMED, so as-of reads below the compaction point are refused
+    — and on a plain graph root, whose applied/removed logs are
+    REBASED into one corpus snapshot (``_rebase_graph_corpus``).
+
+    ``purge_deleted=True`` is the hard removal, recording ``purge_floor
+    = head`` (as-of reads below it are refused): tombstoned rows and
+    the spent tombstones leave ivf / graph_ivf / semantic / minhash
+    roots (``_tombstone_purge``), a BM25 root is NETTED down to its
+    live corpus (``_bm25_net``); pca and plain-graph roots ignore it.
+    It is refused when nothing is uncompacted — a silent no-op would
+    leave "purged" rows readable. ``purge_pairs=True`` (minhash and
+    semantic only; requires ``purge_deleted``) extends the purge to
+    the audit PAIRS table, which otherwise keeps its rows: a pair is
+    dropped when EITHER cited id was tombstoned after the pair was
+    recorded, so verdicts a re-ingested id earned later survive."""
+    ptr = read_index_pointer(root)
+    kind = ledger_root_kind(ptr)
+    if purge_pairs and kind not in _PAIR_SIDES:
+        raise ValueError(f"purge_pairs: a {kind} root has no pairs table")
+    if purge_pairs and not purge_deleted:
+        raise ValueError(
+            "purge_pairs extends purge_deleted (the pairs sweep keys "
+            "on the same spent tombstones) — pass purge_deleted=True"
+        )
+    if kind == "graph":
+        return _rebase_graph_corpus(spark, root, ptr)
+    led = _KIND_LEDGERS[kind](root)
+    if kind == "pca":
+        return led.compact(
+            spark,
+            transform=lambda table, df, head: (
+                df.groupBy("i", "j")
+                .agg(F.sum("m").alias("m"))
+                .withColumn("epoch", F.lit(head).cast("int"))
+            ),
+        )
+    if not purge_deleted:
+        return led.compact(spark)
+    head = ptr["max_epoch"]
+    cu = int(ptr.get("compact_upto", 0) or 0)
+    if head <= cu:
+        # the deletes an earlier PLAIN compaction folded can't be
+        # purged in place (delete_index_ids always bumps the head, so
+        # purging right after a delete never hits this). Recovery:
+        # write a fresh epoch (e.g. re-tombstone the same ids), purge.
+        raise ValueError(
+            f"purge needs uncompacted epochs (head={head}, "
+            f"compact_upto={cu}): the staged-compact commit can't "
+            "rewrite a live compact in place"
+        )
+    transform = (
+        _bm25_net
+        if kind == "bm25"
+        else _tombstone_purge(spark, led, ptr, kind, purge_pairs)
+    )
+    return led.compact(
+        spark, transform=transform, extra={"purge_floor": head}
+    )
+
+
+def _tombstone_purge(
+    spark: SparkSession,
+    led: EpochLedger,
+    ptr: dict,
+    kind: str,
+    purge_pairs: bool,
+):
+    """The purge transform for roots carrying id-keyed content tables
+    plus a ``deletes`` tombstone ledger: tombstoned rows leave the
+    content tables (grams + bands on minhash, postings elsewhere), the
+    spent tombstones are dropped, and with ``purge_pairs`` each side of
+    a pair row goes through the same epoch rule."""
+    if kind == "minhash":
+        content, col = ("grams", "bands"), ptr.get("tomb_col", "doc")
+    else:
+        content, col = ("postings",), ptr["id_col"]
+    sides = _PAIR_SIDES[kind] if purge_pairs else ()
+
+    def transform(table: str, df: DataFrame, head: int):
+        if table in content:
+            return _apply_tombstones(spark, led, ptr, head, df, col)
+        if table == "pairs":
+            for side in sides:
+                df = _apply_tombstones(
+                    spark, led, ptr, head,
+                    df.withColumnRenamed(side, col), col,
+                ).withColumnRenamed(col, side)
+            return df
+        if table == "deletes":
+            return None  # spent: their targets are physically gone
+        return df
+
+    return transform
+
+
+def vacuum_root(root: str) -> int:
+    """Retention sweep for ANY ledger root, kind read from the pointer:
+    drops epoch dirs a ``compact_root`` folded away, superseded
+    compacts (or rebase snapshots, and a rebased graph root's original
+    ``corpus_base``), and staged crash orphans above the head — never
+    the committed tail or the pointer-named compact. Returns dirs
+    removed."""
+    ptr = read_index_pointer(root)
+    kind = ledger_root_kind(ptr)
+    if kind == "graph":
+        return _vacuum_graph_logs(root, ptr)
+    return _KIND_LEDGERS[kind](root).vacuum()
+
+
 def maintain_root(
     spark: SparkSession,
     root: str,
@@ -2456,132 +2389,74 @@ def maintain_root(
     purge_deleted: bool = False,
     keep_generations: int = 2,
 ) -> dict:
-    """ONE operational retention verb for any ledger root — the policy
-    layer the per-arm ``compact_* / vacuum_*`` verbs leave to the
-    operator: sniff the root's family from its pointer
-    (``ledger_root_kind``), measure the LIVE TAIL (committed epochs
-    above ``compact_upto`` — the directory growth that degrades
-    file-listing and epoch-union reads as a stream keeps folding), and
-    when it exceeds ``max_tail_epochs`` run that family's own
-    compaction followed by its vacuum. Graph-bearing roots
-    additionally prune saved generations down to the newest
-    ``keep_generations`` (each generation is a corpus-sized graph —
-    the worst storage growth in the family). ``purge_deleted`` routes
-    to each family's hard-removal mode (tombstone purge; BM25's
-    netting compact), inheriting their ``purge_floor`` as-of refusal
-    semantics.
+    """ONE operational retention policy for any ledger root: measure
+    the LIVE TAIL (committed epochs above ``compact_upto``, or a plain
+    graph root's log epochs above its rebase floor — the directory
+    growth that degrades file-listing and epoch-union reads as a
+    stream keeps folding), and when it exceeds ``max_tail_epochs`` run
+    ``compact_root`` (with ``purge_deleted``) then ``vacuum_root``.
+    Graph-bearing roots additionally prune saved generations down to
+    the newest ``keep_generations`` (``vacuum_generations``).
 
     Schedule it after every drain (it no-ops cheaply while the tail is
     short — one pointer read and one directory listing) or from a
-    periodic job; every step is the arm's own crash-safe staged
-    compact + pointer flip, so a crash mid-maintenance leaves the root
-    exactly as committed. Returns
-    ``{kind, tail_epochs, compacted_epochs, vacuumed_dirs,
-    generations_dropped}``."""
+    periodic job; every step is a crash-safe staged compact + pointer
+    flip, so a crash mid-maintenance leaves the root exactly as
+    committed. Returns ``{kind, tail_epochs, compacted_epochs,
+    vacuumed_dirs, generations_dropped}``."""
     ptr = read_index_pointer(root)
     kind = ledger_root_kind(ptr)
+    if kind == "graph":
+        tail = len(_graph_log_tail(root, ptr))
+    else:
+        tail = int(ptr["max_epoch"]) - int(ptr.get("compact_upto", 0) or 0)
     out = {
         "kind": kind,
-        "tail_epochs": 0,
+        "tail_epochs": tail,
         "compacted_epochs": 0,
         "vacuumed_dirs": 0,
         "generations_dropped": 0,
     }
-    if kind == "graph":
-        # plain graph roots: the log tail (applied/removed epochs above
-        # the rebase floor) is the compaction surface; generations are
-        # pruned separately to the keep dial
-        gen = int(ptr["generation"])
-        floor = int(ptr.get("corpus_rebase_gen", 0) or 0)
-        out["tail_epochs"] = len(
-            {
-                e
-                for t in ("applied", "removed")
-                for e in _live_epochs(root, t)
-                if floor < e <= gen
-            }
+    if tail > max_tail_epochs:
+        out["compacted_epochs"] = compact_root(
+            spark, root, purge_deleted=purge_deleted
         )
-        if out["tail_epochs"] > max_tail_epochs:
-            out["compacted_epochs"] = rebase_graph_corpus(spark, root)
-            out["vacuumed_dirs"] = vacuum_graph_logs(root)
-        out["generations_dropped"] = vacuum_generations(
-            spark, root, keep_last=keep_generations
-        )
-        return out
-    head = int(ptr["max_epoch"])
-    cu = int(ptr.get("compact_upto", 0) or 0)
-    out["tail_epochs"] = head - cu
-    if head - cu > max_tail_epochs:
-        if kind == "bm25":
-            out["compacted_epochs"] = compact_bm25_epochs(
-                spark, root, net=purge_deleted
-            )
-            out["vacuumed_dirs"] = vacuum_bm25_epochs(root)
-        elif kind == "minhash":
-            out["compacted_epochs"] = compact_minhash_epochs(
-                spark, root, purge_deleted=purge_deleted
-            )
-            out["vacuumed_dirs"] = vacuum_minhash_epochs(root)
-        elif kind == "semantic":
-            out["compacted_epochs"] = compact_semantic_epochs(
-                spark, root, purge_deleted=purge_deleted
-            )
-            out["vacuumed_dirs"] = vacuum_semantic_epochs(root)
-        elif kind == "pca":
-            out["compacted_epochs"] = compact_pca_epochs(spark, root)
-            out["vacuumed_dirs"] = vacuum_pca_epochs(root)
-        else:  # ivf and graph_ivf share the posting-ledger compaction
-            out["compacted_epochs"] = compact_ivf_epochs(
-                spark, root, purge_deleted=purge_deleted
-            )
-            out["vacuumed_dirs"] = vacuum_ivf_epochs(root)
-    if kind == "graph_ivf":
+        out["vacuumed_dirs"] = vacuum_root(root)
+    if kind in ("graph", "graph_ivf"):
         out["generations_dropped"] = vacuum_generations(
             spark, root, keep_last=keep_generations
         )
     return out
 
 
-def rebase_graph_corpus(spark: SparkSession, root: str) -> int:
-    """RETENTION for the plain graph root's ledger side — the one
-    directory growth ``vacuum_generations`` doesn't touch: the
-    applied/removed logs gain one epoch dir per batch FOREVER, and
-    every fold's corpus replay (``_corpus_at``) unions all of them.
-    This verb folds the committed logs into one corpus snapshot
-    (``corpus_rebase/upto=<generation>`` — staged invisible, then
-    published by recording ``corpus_rebase_gen`` in the one pointer
-    flip), after which replays read the snapshot plus only the log
-    epochs ABOVE the floor: replay cost tracks churn since the last
-    rebase, not write history — the graph-root analog of the posting
-    ledgers' ``compact_*_epochs``.
-
-    Contract notes: log epochs at or below the floor become
-    physically droppable (``vacuum_graph_logs``) — like every purge
-    floor, corpus reconstruction BELOW it ends explicitly; saved
-    generation dirs are untouched (graph time travel is
-    ``vacuum_generations``'s dial, not this one's). A crash between
-    the staged snapshot and the flip leaves an invisible orphan the
-    next rebase overwrites. Returns distinct log epochs folded (0 =
-    no committed log state above the current floor — a no-op, no
-    burned snapshot)."""
-    ptr = read_index_pointer(root)
-    if "generation" not in ptr or "n_probes" in ptr:
-        raise ValueError(
-            "rebase_graph_corpus is the PLAIN graph root's retention "
-            "verb (corpus_base + applied/removed logs); IVF-backed "
-            "graph roots derive their corpus from the posting ledger — "
-            "compact_ivf_epochs is their compaction"
-        )
+def _graph_log_tail(root: str, ptr: dict) -> set[int]:
+    """A plain graph root's committed applied/removed log epochs above
+    its rebase floor — the surface a corpus replay unions."""
     gen = int(ptr["generation"])
     floor = int(ptr.get("corpus_rebase_gen", 0) or 0)
-    log_epochs = {
+    return {
         e
         for t in ("applied", "removed")
         for e in _live_epochs(root, t)
         if floor < e <= gen
     }
+
+
+def _rebase_graph_corpus(spark: SparkSession, root: str, ptr: dict) -> int:
+    """``compact_root`` for the plain graph root: fold the committed
+    applied/removed logs into one corpus snapshot
+    (``corpus_rebase/upto=<generation>`` — staged invisible, then
+    published by recording ``corpus_rebase_gen`` in the one pointer
+    flip), so replay cost (``_corpus_at``) tracks churn since the last
+    rebase, not write history. Log epochs at or below the floor become
+    droppable by ``vacuum_root``; saved generations are untouched. A
+    crash between the staged snapshot and the flip leaves an invisible
+    orphan the next rebase overwrites. Returns distinct log epochs
+    folded (0 = nothing above the floor — no burned snapshot)."""
+    log_epochs = _graph_log_tail(root, ptr)
     if not log_epochs:
         return 0
+    gen = int(ptr["generation"])
     corpus = _corpus_at(spark, root, ptr)
     corpus.write.mode("overwrite").parquet(
         os.path.join(root, "corpus_rebase", f"upto={gen}")
@@ -2590,17 +2465,15 @@ def rebase_graph_corpus(spark: SparkSession, root: str) -> int:
     return len(log_epochs)
 
 
-def vacuum_graph_logs(root: str) -> int:
-    """Sweep plain-graph log/base state a rebase superseded: applied/
-    removed epoch dirs at or below the pointer's ``corpus_rebase_gen``
-    (their rows live on in the snapshot), staged log orphans above the
-    committed generation, rebase snapshots the pointer doesn't name,
-    and — once a rebase floor exists — the original ``corpus_base``
-    (never read again; the snapshot IS the base). The committed tail
-    and the pointer-named snapshot are never touched."""
+def _vacuum_graph_logs(root: str, ptr: dict) -> int:
+    """``vacuum_root`` for the plain graph root: applied/removed epoch
+    dirs at or below the pointer's ``corpus_rebase_gen`` (their rows
+    live on in the snapshot), staged log orphans above the committed
+    generation, rebase snapshots the pointer doesn't name, and — once
+    a rebase floor exists — the original ``corpus_base`` (never read
+    again; the snapshot IS the base)."""
     import shutil
 
-    ptr = read_index_pointer(root)
     gen = int(ptr["generation"])
     floor = int(ptr.get("corpus_rebase_gen", 0) or 0)
     removed = 0

@@ -233,7 +233,7 @@ LEDGER_TABLES = frozenset(
     {
         "grams", "bands", "pairs", "deletes",  # minhash dedup
         "postings",                             # IVF / semantic / graph-IVF
-        "df", "stats", "doclog",                # BM25
+        "stats", "doclog",                      # BM25
         "moments",                              # PCA
         "applied", "removed",                   # plain graph roots' logs
         "graph_delta",                          # graph delta generations

@@ -55,20 +55,16 @@ SLOW_TESTS = {
     "test_plans.py::test_no_cartesian_or_nested_loop_anywhere",
     "test_stats.py::test_edit_join_matches_bruteforce_with_indels",
     "test_streaming.py::test_bm25_cdc_sync_updates_deletes_crash_restart",
-    "test_streaming.py::test_bm25_netting_compact_tracks_live_size",
     "test_streaming.py::test_streaming_bm25_index_sync_crash_restart_prune_retention",
     "test_storage.py::test_txn_crash_sweep_every_step_boundary",
     "test_streaming.py::test_synced_artifact_time_travel",
     "test_streaming.py::test_streaming_semantic_dedup_sync_crash_restart",
-    "test_streaming.py::test_minhash_ledger_compaction_and_vacuum",
     "test_streaming.py::test_sessionized_user_stats_ttl_evicts_state",
     "test_streaming.py::test_streaming_knn_graph_sync_crash_restart",
     "test_streaming.py::test_streaming_txn_sync_fact_and_summary_agree",
     "test_streaming.py::test_streaming_minhash_index_sync_crash_restart",
-    "test_streaming.py::test_minhash_delete_ids_reingest_and_purge",
     "test_storage.py::test_delete_where_escaped_partition_values",
     "test_matview.py::test_streaming_matview_sync_and_full_redrain_fixed_point",
-    "test_streaming.py::test_graph_corpus_rebase_retention",
     "test_streaming.py::test_streaming_txn_sync_redrain_is_fixed_point",
     "test_streaming.py::test_state_store_provider_dial_rocksdb_parity",
     "test_streaming.py::test_streaming_knn_graph_ivf_sync_crash_restart",
@@ -80,7 +76,6 @@ SLOW_TESTS = {
     "test_queries_oracle.py::test_query_matches_oracle[streaming_bm25_cdc_sync]",
     "test_stats.py::test_edit_join_null_strings_never_pair",
     "test_queries_oracle.py::test_query_matches_oracle[hybrid_cdc_paired_sync]",
-    "test_streaming.py::test_maintain_root_policy_per_kind",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_bm25_index_sync]",
     "test_streaming.py::test_bm25_synced_lazy_queries_are_independent",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_ivf_sync]",
@@ -88,7 +83,6 @@ SLOW_TESTS = {
     "test_queries_oracle.py::test_query_matches_oracle[streaming_maintained_index]",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_click_outcomes_outer]",
     "test_streaming.py::test_semantic_cdc_sync_crash_restart",
-    "test_streaming.py::test_minhash_purge_pairs_total_sweep",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_delete_sync]",
     "test_streaming.py::test_streaming_checkpoint_restart_exactly_once",
     "test_streaming.py::test_minhash_cdc_sync_crash_restart",
@@ -109,7 +103,6 @@ SLOW_TESTS = {
     "test_queries_oracle.py::test_query_matches_oracle[streaming_sessionized_user_stats]",
     "test_streaming.py::test_hybrid_cdc_stream_crash_between_drains",
     "test_storage.py::test_partitioned_upsert_key_moves_partition",
-    "test_streaming.py::test_ivf_delete_ids_tombstones_reinsert_purge",
     "test_queries_oracle.py::test_query_matches_oracle[dedup_index_time_travel]",
     "test_storage.py::test_upsert_schema_evolution",
     "test_streaming.py::test_streaming_pca_moment_sync_crash_restart",

@@ -1468,7 +1468,7 @@ def test_streaming_ivf_index_sync_crash_restart(spark, sf_dir, tmp_path):
     ).write.partitionBy("cluster").parquet(
         index_sync._ivf_epoch_path(root, 9)
     )
-    assert index_sync.vacuum_ivf_epochs(root) == 1
+    assert index_sync.vacuum_root(root) == 1
     assert sorted(os.listdir(os.path.join(root, "postings"))) == [
         "epoch=0", "epoch=1", "epoch=2", "epoch=3",
     ]
@@ -1912,16 +1912,16 @@ def test_minhash_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
     assert before_head > before_as1  # the batch-1 plants grew the verdicts
     grams_n = index_sync.read_synced_grams(spark, root).count()
 
-    assert index_sync.compact_minhash_epochs(spark, root) == 2
-    assert index_sync.compact_minhash_epochs(spark, root) == 0  # no-op
+    assert index_sync.compact_root(spark, root) == 2
+    assert index_sync.compact_root(spark, root) == 0  # no-op
     # staged orphan above the head is vacuumed along with folded dirs
     spark.createDataFrame(
         [(1, 2, 3)], "new_doc long, corpus_doc long, jaccard_micro long"
     ).write.parquet(index_sync._epoch_path(root, "pairs", 9))
-    removed = index_sync.vacuum_minhash_epochs(root)
+    removed = index_sync.vacuum_root(root)
     # grams epochs 0-2, bands 0-2, pairs 1-2 + the planted orphan
     assert removed == 3 + 3 + 2 + 1
-    assert index_sync.vacuum_minhash_epochs(root) == 0  # idempotent
+    assert index_sync.vacuum_root(root) == 0  # idempotent
 
     # every read row-exact after compaction+vacuum
     assert {tuple(r) for r in pairs_fn(spark, root).collect()} == before_head
@@ -1972,8 +1972,8 @@ def test_streaming_semantic_dedup_sync_crash_restart(spark, sf_dir, tmp_path):
     overwrite the orphans and converge: committed pairs == an
     imperative replay that probes each batch against corpus + all
     earlier batches at full probe width. Retention composes: after
-    compact_semantic_epochs + vacuum_semantic_epochs, the verdicts and
-    the as-of slices are row-identical."""
+    compact_root + vacuum_root, the verdicts and the as-of slices are
+    row-identical."""
     import os
 
     import pytest
@@ -2085,8 +2085,8 @@ def test_streaming_semantic_dedup_sync_crash_restart(spark, sf_dir, tmp_path):
             spark, root, as_of_epoch=2
         ).collect()
     }
-    assert index_sync.compact_semantic_epochs(spark, root) == 3
-    assert index_sync.vacuum_semantic_epochs(root) > 0
+    assert index_sync.compact_root(spark, root) == 3
+    assert index_sync.vacuum_root(root) > 0
     assert {
         (r.new_vec, r.corpus_vec, r.cos_sim)
         for r in index_sync.load_synced_semantic_pairs(spark, root).collect()
@@ -2251,8 +2251,8 @@ def test_streaming_bm25_index_sync_crash_restart_prune_retention(
     assert as_of == sub_truth
 
     # retention: compact + vacuum leave the ranking row-exact
-    assert index_sync.compact_bm25_epochs(spark, root) == 3
-    assert index_sync.vacuum_bm25_epochs(root) > 0
+    assert index_sync.compact_root(spark, root) == 3
+    assert index_sync.vacuum_root(root) > 0
     assert [
         tuple(r)
         for r in index_sync.bm25_topk_synced(spark, root, terms, k=10).collect()
@@ -2312,11 +2312,11 @@ def test_ivf_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
     before_as1 = rows(index_sync.load_synced_ivf(spark, root, as_of_epoch=1))
     assert before > before_as1
 
-    assert index_sync.compact_ivf_epochs(spark, root) == 2
-    assert index_sync.compact_ivf_epochs(spark, root) == 0  # no-op
-    removed = index_sync.vacuum_ivf_epochs(root)
+    assert index_sync.compact_root(spark, root) == 2
+    assert index_sync.compact_root(spark, root) == 0  # no-op
+    removed = index_sync.vacuum_root(root)
     assert removed == 3  # posting epochs 0-2 folded away
-    assert index_sync.vacuum_ivf_epochs(root) == 0  # idempotent
+    assert index_sync.vacuum_root(root) == 0  # idempotent
 
     loaded = index_sync.load_synced_ivf(spark, root)
     assert rows(loaded) == before
@@ -2397,11 +2397,11 @@ def test_pca_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
     assert index_sync.read_index_pointer(root)["max_epoch"] == 2
 
     before = index_sync.load_synced_pca_model(spark, root, n_components=2)
-    assert index_sync.compact_pca_epochs(spark, root) == 2
-    assert index_sync.compact_pca_epochs(spark, root) == 0  # no-op
-    removed = index_sync.vacuum_pca_epochs(root)
+    assert index_sync.compact_root(spark, root) == 2
+    assert index_sync.compact_root(spark, root) == 0  # no-op
+    removed = index_sync.vacuum_root(root)
     assert removed == 3  # moment epochs 0-2 summed away
-    assert index_sync.vacuum_pca_epochs(root) == 0  # idempotent
+    assert index_sync.vacuum_root(root) == 0  # idempotent
 
     after = index_sync.load_synced_pca_model(spark, root, n_components=2)
     assert after.n_rows == before.n_rows
@@ -2660,8 +2660,8 @@ def test_vacuum_on_uncompacted_root_spares_committed_epochs(
         [(1, 2, 3)], "new_doc long, corpus_doc long, jaccard_micro long"
     ).write.parquet(index_sync._epoch_path(root, "pairs", 9))
 
-    assert index_sync.vacuum_minhash_epochs(root) == 1  # orphan only
-    assert index_sync.vacuum_minhash_epochs(root) == 0  # idempotent
+    assert index_sync.vacuum_root(root) == 1  # orphan only
+    assert index_sync.vacuum_root(root) == 0  # idempotent
     # the base epoch survived and reads are intact
     assert index_sync.read_synced_grams(spark, root).count() == base_grams
 
@@ -2934,8 +2934,8 @@ def test_bm25_cdc_sync_updates_deletes_crash_restart(spark, sf_dir, tmp_path):
     assert got != as_of1
 
     # retention: compact + vacuum leave the signed fold row-exact
-    assert index_sync.compact_bm25_epochs(spark, root) == 3
-    assert index_sync.vacuum_bm25_epochs(root) > 0
+    assert index_sync.compact_root(spark, root) == 3
+    assert index_sync.vacuum_root(root) > 0
     assert topk(root) == got
     assert topk(root, as_of_epoch=1) == as_of1
 
@@ -3020,8 +3020,8 @@ def test_ivf_delete_ids_tombstones_reinsert_purge(spark, sf_dir, tmp_path):
         index_sync.delete_index_ids(spark, root, doomed, max_affected=1)
 
     # purge: physical removal + refusal floor; head reads identical
-    assert index_sync.compact_ivf_epochs(spark, root, purge_deleted=True) == 2
-    assert index_sync.vacuum_ivf_epochs(root) > 0
+    assert index_sync.compact_root(spark, root, purge_deleted=True) == 2
+    assert index_sync.vacuum_root(root) > 0
     assert visible() == want_head
     ptr = index_sync.read_index_pointer(root)
     assert ptr.get("purge_floor") == 2
@@ -3037,7 +3037,7 @@ def test_ivf_delete_ids_tombstones_reinsert_purge(spark, sf_dir, tmp_path):
     } & gone
     # purging again without new epochs is refused, not silently no-op'd
     with pytest.raises(ValueError, match="purge needs uncompacted"):
-        index_sync.compact_ivf_epochs(spark, root, purge_deleted=True)
+        index_sync.compact_root(spark, root, purge_deleted=True)
 
 
 def test_semantic_dedup_sync_respects_id_deletes(spark, sf_dir, tmp_path):
@@ -3095,6 +3095,84 @@ def test_semantic_dedup_sync_respects_id_deletes(spark, sf_dir, tmp_path):
     assert not any(cv == c1 for _, cv in pairs), (
         "a deleted corpus vector was still offered as a near-dup source"
     )
+
+
+def test_compact_root_moves_semantic_pairs_with_postings(
+    spark, sf_dir, tmp_path
+):
+    """``compact_root`` reads the kind from the pointer, so a semantic
+    root's postings AND pairs fold under one ``compact_upto`` — the
+    wrong pairing (compacting postings only) would let ``vacuum_root``
+    delete pair epochs no compact holds. After a later batch, the
+    vacuum keeps the uncompacted pair epoch and every verdict stays
+    readable. ``purge_pairs`` on a root without a pairs table (IVF)
+    is refused."""
+    import os
+
+    import pytest
+
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+    from spacex_data_engineering_pipeline_spark.streaming.ledger import (
+        compact_path,
+    )
+
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull() & (F.col("vec_id") < 200))
+        .select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+        )
+    )
+    corpus = emb.filter(F.col("vec_id") % 5 != 0)
+    root = str(tmp_path / "semantic")
+    index_sync.init_semantic_dedup_root(
+        corpus, root, "vec_id", "embedding",
+        n_clusters=4, n_probes=4, min_cosine=0.95, seed=7,
+    )
+
+    def drain(name, ids):
+        plants = corpus.filter(F.col("vec_id").isin(ids)).select(
+            (F.col("vec_id") + F.lit(300_000_000)).alias("vec_id"),
+            "embedding",
+        )
+        src = tmp_path / name
+        _stage_cdc_batches(tmp_path, src, (plants,))
+        index_sync.sync_semantic_dedup_stream(
+            spark, str(src), plants.schema, root,
+            checkpoint_dir=str(tmp_path / f"ck_{name}"),
+        )
+
+    def pairs():
+        return {
+            (r["new_vec"], r["corpus_vec"])
+            for r in index_sync.load_synced_semantic_pairs(
+                spark, root
+            ).collect()
+        }
+
+    drain("src0", [1, 2])
+    first = pairs()
+    assert {(1 + 300_000_000, 1), (2 + 300_000_000, 2)} <= first
+
+    assert index_sync.compact_root(spark, root) == 1
+    ptr = index_sync.read_index_pointer(root)
+    assert ptr["compact_upto"] == ptr["max_epoch"] == 1
+    for table in ("postings", "pairs"):
+        assert os.path.isdir(compact_path(root, table, 1)), table
+
+    drain("src1", [3])
+    both = pairs()
+    assert (3 + 300_000_000, 3) in both and first <= both
+    assert index_sync.vacuum_root(root) > 0
+    assert sorted(os.listdir(os.path.join(root, "pairs"))) == ["epoch=2"]
+    assert pairs() == both
+
+    ivf = str(tmp_path / "ivf")
+    index_sync.init_ivf_root(corpus, ivf, "vec_id", "embedding", n_clusters=4)
+    with pytest.raises(ValueError, match="no pairs table"):
+        index_sync.compact_root(
+            spark, ivf, purge_deleted=True, purge_pairs=True
+        )
 
 
 def test_minhash_delete_ids_reingest_and_purge(spark, sf_dir, tmp_path):
@@ -3181,8 +3259,8 @@ def test_minhash_delete_ids_reingest_and_purge(spark, sf_dir, tmp_path):
     # re-ingested one, whose re-ingest epoch outlives its tombstone),
     # pairs audit history intact, purge floor refuses earlier as-of
     before = pairs
-    assert index_sync.compact_minhash_epochs(spark, root, purge_deleted=True) == 4
-    assert index_sync.vacuum_minhash_epochs(root) > 0
+    assert index_sync.compact_root(spark, root, purge_deleted=True) == 4
+    assert index_sync.vacuum_root(root) > 0
     raw = spark.read.parquet(
         index_sync._compact_path(root, "grams", 4)
     )
@@ -3499,7 +3577,7 @@ def test_bm25_netting_compact_tracks_live_size(spark, sf_dir, tmp_path):
     """Netting/purging compaction for the BM25 ledger — the
     churn-retention dial: update-heavy CDC leaves 2k−1 signed posting
     rows per doc updated k times and k doc-log versions; a
-    ``compact_bm25_epochs(net=True)`` must (a) leave the synced
+    ``compact_root(purge_deleted=True)`` must (a) leave the synced
     ranking equal to a from-scratch index over the live corpus, (b)
     shrink the compacted postings/doclog to EXACTLY the live corpus's
     size, (c) set the as-of refusal floor, and (d) keep the CDC arm
@@ -3594,7 +3672,7 @@ def test_bm25_netting_compact_tracks_live_size(spark, sf_dir, tmp_path):
     assert pre_rows > live_postings
 
     # NET: compacted postings/doclog shrink to exactly live size
-    assert index_sync.compact_bm25_epochs(spark, root, net=True) == 2
+    assert index_sync.compact_root(spark, root, purge_deleted=True) == 2
     ptr = index_sync.read_index_pointer(root)
     assert ptr["compact_upto"] == 2 and ptr["purge_floor"] == 2
     from spacex_data_engineering_pipeline_spark.streaming.ledger import (
@@ -3614,13 +3692,13 @@ def test_bm25_netting_compact_tracks_live_size(spark, sf_dir, tmp_path):
         topk(root, as_of_epoch=1)
 
     # vacuum drops the netted-away epoch dirs; the ranking survives
-    assert index_sync.vacuum_bm25_epochs(root) > 0
+    assert index_sync.vacuum_root(root) > 0
     assert not os.path.isdir(os.path.join(root, "postings", "epoch=1"))
     assert topk(root) == got
 
     # netting with nothing uncompacted refuses (silent no-op hazard)
     with pytest.raises(ValueError, match="uncompacted"):
-        index_sync.compact_bm25_epochs(spark, root, net=True)
+        index_sync.compact_root(spark, root, purge_deleted=True)
 
     # the CDC arm keeps working on the netted root: a post-netting
     # update must find the netted doc log's live version to tombstone
@@ -3969,7 +4047,7 @@ def test_ivf_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
     assert pre.assigned.count() == base.count() + b0.count()
 
     # purge: tombstoned rows physically gone from the compact
-    assert index_sync.compact_ivf_epochs(spark, root, purge_deleted=True) == 3
+    assert index_sync.compact_root(spark, root, purge_deleted=True) == 3
     netted = spark.read.parquet(compact_path(root, "postings", 3))
     # deleted-not-reinserted ids are gone; updated ids keep ONLY rows
     # at their update epoch or later (the superseded version is purged)
@@ -4355,7 +4433,7 @@ def test_delete_graph_ids_refusals(spark, sf_dir, tmp_path):
 
 
 def test_minhash_purge_pairs_total_sweep(spark, sf_dir, tmp_path):
-    """The pairs-audit retention dial: ``compact_minhash_epochs(
+    """The pairs-audit retention dial: ``compact_root(
     purge_deleted=True, purge_pairs=True)`` physically drops every
     pair citing a tombstoned id on either side (epoch-aware: verdicts
     a re-ingested id earned AFTER its re-insert survive), below-floor
@@ -4416,10 +4494,10 @@ def test_minhash_purge_pairs_total_sweep(spark, sf_dir, tmp_path):
 
     # the dial composes only with purge_deleted
     with pytest.raises(ValueError, match="purge_pairs extends"):
-        index_sync.compact_minhash_epochs(spark, root, purge_pairs=True)
+        index_sync.compact_root(spark, root, purge_pairs=True)
 
     assert (
-        index_sync.compact_minhash_epochs(
+        index_sync.compact_root(
             spark, root, purge_deleted=True, purge_pairs=True
         )
         > 0
@@ -4752,8 +4830,8 @@ def test_drain_source_fence_blocks_double_apply(spark, sf_dir, tmp_path):
     assert index_sync.load_synced_ivf(spark, root).assigned.count() == n_expected
 
     # fence survives retention: compact + vacuum, then re-point again
-    assert index_sync.compact_ivf_epochs(spark, root) > 0
-    index_sync.vacuum_ivf_epochs(root)
+    assert index_sync.compact_root(spark, root) > 0
+    index_sync.vacuum_root(root)
     index_sync.sync_ivf_index_stream(
         spark, src, b1.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt3"), fence_sources=True,
@@ -5102,7 +5180,7 @@ def test_maintain_root_policy_per_kind(spark, sf_dir, tmp_path):
 
 
 def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
-    """``rebase_graph_corpus`` + ``vacuum_graph_logs``: the plain graph
+    """``compact_root`` + ``vacuum_root`` on a plain graph root: the
     root's applied/removed logs fold into one corpus snapshot behind a
     pointer-recorded floor; replays after the rebase read snapshot +
     post-floor logs only. Pins: (1) the derived corpus is IDENTICAL
@@ -5111,11 +5189,10 @@ def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
     (upserts, removals, re-vectors crossing the floor) still derives
     the exact corpus — final graph ≡ brute-force rebuild; (4) a staged
     rebase orphan the pointer never named is invisible and vacuumed;
-    (5) the IVF-backed graph root is refused; (6) maintain_root routes
-    the plain-graph kind through rebase + log vacuum by the tail dial."""
+    (5) maintain_root routes the plain-graph kind through rebase +
+    log vacuum by the tail dial."""
     import os
 
-    import pytest
     from pyspark.sql import functions as F
 
     from spacex_data_engineering_pipeline_spark.operators import similarity as S
@@ -5170,7 +5247,7 @@ def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
     ).write.parquet(os.path.join(root, "corpus_rebase", "upto=99"))
 
     # (1) rebase folds both log tables; derived corpus unchanged
-    assert index_sync.rebase_graph_corpus(spark, root) == 2
+    assert index_sync.compact_root(spark, root) == 2
     ptr = index_sync.read_index_pointer(root)
     assert ptr["corpus_rebase_gen"] == ptr["generation"] == 2
     after = {
@@ -5179,10 +5256,10 @@ def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
     }
     assert after == before
     # idempotent: nothing above the floor → no-op, no burned snapshot
-    assert index_sync.rebase_graph_corpus(spark, root) == 0
+    assert index_sync.compact_root(spark, root) == 0
 
     # (2) vacuum drops folded logs, the orphan, and the dead base
-    assert index_sync.vacuum_graph_logs(root) >= 4
+    assert index_sync.vacuum_root(root) >= 4
     assert not os.path.isdir(os.path.join(root, "corpus_base"))
     assert not os.path.isdir(os.path.join(root, "corpus_rebase", "upto=99"))
     assert os.listdir(os.path.join(root, "corpus_rebase")) == ["upto=2"]
@@ -5236,17 +5313,7 @@ def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
     }
     assert got == truth
 
-    # (5) IVF-backed graph roots are refused (their corpus lives in the
-    # posting ledger; compact_ivf_epochs is their compaction)
-    ivf_like = str(tmp_path / "fake_ivf_graph")
-    os.makedirs(ivf_like)
-    index_sync._flip_pointer(
-        ivf_like, {"generation": 0, "n_probes": 4, "last_batch_id": None}
-    )
-    with pytest.raises(ValueError, match="posting ledger"):
-        index_sync.rebase_graph_corpus(spark, ivf_like)
-
-    # (6) the policy verb: tail (1 post-floor epoch) under dial → no-op;
+    # (5) the policy verb: tail (1 post-floor epoch) under dial → no-op;
     # dial 0 → rebase + vacuum
     rep = index_sync.maintain_root(spark, root, max_tail_epochs=8)
     assert rep["kind"] == "graph" and rep["tail_epochs"] == 1
