@@ -1083,8 +1083,8 @@ def knn_graph_auto_plan(
             "whole-corpus graph at this size pays probe_mass*N^2 anyway — "
             "build a persisted IVF index (build_ivf_index + save) and run "
             "batched probes, or maintain the graph incrementally through "
-            "IVF routing (init_knn_graph_ivf_root + "
-            "sync_knn_graph_ivf_stream, streaming/index_sync.py — "
+            "IVF routing (init_knn_graph_ivf_root + sync_root, "
+            "streaming/index_sync.py — "
             "per-batch cost |batch| x |probed postings|, never N^2), or "
             "raise ivf_max_rows deliberately"
         )
@@ -1607,8 +1607,8 @@ def banded_signatures(
     dim: int,
 ) -> DataFrame:
     """The sign-LSH candidate stage of :func:`embedding_near_dup_pairs`,
-    exposed so independent verify formulations (tools/formulation_diff)
-    can diff against the SAME candidate set: (id, vec, band, bucket)
+    exposed so independent verify formulations can diff against the
+    SAME candidate set: (id, vec, band, bucket)
     rows, one per seed table per vector.
     """
     # portable integer planes + fixed-point quantization: the bucket
@@ -1740,7 +1740,7 @@ def centroid_assign_udf(centers):
     """Arrow-batched nearest-centroid assignment against a FIXED
     (k, dim) centroid matrix — THE map every IVF lifecycle stage shares
     (offline build, batch ``append_to_ivf_index``, streaming
-    ``sync_ivf_index_stream``): one numpy matmul per batch, no
+    ``sync_root`` on IVF-family roots): one numpy matmul per batch, no
     distributed fit, broadcast cost = the KiB-scale centroid matrix
     riding the closure. One definition means build-time and
     maintenance-time routing can never diverge."""

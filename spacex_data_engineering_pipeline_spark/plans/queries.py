@@ -1428,7 +1428,7 @@ def _minhash_sync_oracle_sql(
     doc_id, text, batch) for scenario variants;
     ``index_excluded_pred`` (referencing c.doc / c.batch) removes
     index-side docs from candidate generation — the closed form of an
-    id-level tombstone (``delete_index_ids``): a deleted doc stops
+    id-level tombstone (``delete_ids``): a deleted doc stops
     being offered as a near-dup source."""
     from spacex_data_engineering_pipeline_spark.operators.dedup import minhash_coeffs
 
@@ -1562,7 +1562,7 @@ def _drain_minhash_sync(
     micro-batches (doc_id % 15 = 0/5/10, plus the verbatim plants
     doc_id % 45 = 0 re-ingested in batch 2 under id + 10,000,000) as a
     file stream with pinned mtimes, and drain it through
-    ``sync_minhash_index_stream``. Returns the ledger root under
+    ``sync_root`` (insert-only). Returns the ledger root under
     ``work`` (caller owns the rmtree)."""
     import os as _os
 
@@ -1587,7 +1587,7 @@ def _drain_minhash_sync(
         corpus, root, "doc_id", "text", min_jaccard_micro=300_000
     )
     _stage_stream_batches(work, src, (b0, b1, b2))
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, src, b0.schema, root,
         checkpoint_dir=_os.path.join(work, "ckpt"),
         fence_sources=fence_sources,
@@ -1603,7 +1603,7 @@ def streaming_minhash_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     here each micro-batch is probed against the index AS OF the
     pointer and then FOLDED INTO it (shingles + band keys written as
     the batch's epoch partitions, pairs + growth published in one
-    pointer flip — streaming/index_sync.py:sync_minhash_index_stream,
+    pointer flip — streaming/index_sync.py:sync_root on a MinHash root,
     same exactly-once ledger as the kNN/IVF/PCA syncs; crash-restart
     pytest-pinned).
 
@@ -1692,7 +1692,7 @@ def streaming_fenced_redrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         src = _os.path.join(work, "src")
         _stage_stream_batches(work, src, (b3,), start=3)
-        index_sync.sync_minhash_index_stream(
+        index_sync.sync_root(
             spark, src, b3.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt_repointed"),
             fence_sources=True,
@@ -1793,7 +1793,7 @@ def streaming_semantic_dedup_sync(spark: SparkSession, sf_dir: str) -> DataFrame
     clusters are fetched; rounded strict-sum cosine ≥ 0.95 flags a
     pair) and then FOLDED INTO it as its own epoch, pairs + growth
     published in one pointer flip
-    (streaming/index_sync.py:sync_semantic_dedup_stream, the shared
+    (streaming/index_sync.py:sync_root on a semantic root, the shared
     exactly-once ledger — crash-restart pytest-pinned). Graded at full
     probe width, where verdicts are exhaustive.
 
@@ -1854,7 +1854,7 @@ def streaming_semantic_dedup_sync(spark: SparkSession, sf_dir: str) -> DataFrame
             dst = _os.path.join(src, f"batch{i:04d}.parquet")
             _os.replace(_os.path.join(staged, part), dst)
             _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        index_sync.sync_semantic_dedup_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -2564,7 +2564,7 @@ def streaming_knn_graph_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst = _os.path.join(src, f"batch{i:04d}.parquet")
             _os.replace(_os.path.join(split, fname), dst)
             _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        index_sync.sync_knn_graph_stream(
+        index_sync.sync_root(
             spark, src, updates.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -2608,7 +2608,7 @@ def streaming_knn_graph_ivf_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     each micro-batch folds in by probing its ``n_probes`` nearest
     clusters only — per-epoch work is |batch| × |probed postings|,
     partition-pruned at the file listing
-    (streaming/index_sync.py:sync_knn_graph_ivf_stream,
+    (streaming/index_sync.py:sync_root on a graph+IVF root,
     operators/similarity.py:knn_graph_ivf_fold).
 
     Graded at FULL probe width, where the routed fold is provably
@@ -2655,7 +2655,7 @@ def streaming_knn_graph_ivf_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst = _os.path.join(src, f"batch{i:04d}.parquet")
             _os.replace(_os.path.join(split, fname), dst)
             _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        index_sync.sync_knn_graph_ivf_stream(
+        index_sync.sync_root(
             spark, src, inserts.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -2760,7 +2760,7 @@ def streaming_ivf_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst = _os.path.join(src, f"batch{i:04d}.parquet")
             _os.replace(_os.path.join(split, fname), dst)
             _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        index_sync.sync_ivf_index_stream(
+        index_sync.sync_root(
             spark, src, inserts.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -3792,7 +3792,7 @@ def streaming_pca_moment_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-micro-batch parquet file stream, and each batch reduces to its
     OWN exact int64 moment table in one Arrow pass, published to an
     epoch partition by one pointer flip
-    (streaming/index_sync.py:sync_pca_moments_stream — same replay
+    (streaming/index_sync.py:sync_root on a PCA root — same replay
     no-op / invisible-orphan protocol as the kNN-graph and IVF syncs;
     crash-restart pytest-pinned). Refit reads epochs ≤ pointer, folds
     them with one model-sized groupBy-sum, and re-runs the O(dim³)
@@ -3840,7 +3840,7 @@ def streaming_pca_moment_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst = _os.path.join(src, f"batch{i:04d}.parquet")
             _os.replace(_os.path.join(split, fname), dst)
             _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        index_sync.sync_pca_moments_stream(
+        index_sync.sync_root(
             spark, src, inserts.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -8959,8 +8959,8 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_bm25_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING-MAINTAINED BM25 inverted index — the retrieval arm of
-    the epoch-ledger family (streaming/index_sync.py:
-    sync_bm25_index_stream): ``bm25_keyword_search`` re-tokenizes the
+    the epoch-ledger family (streaming/index_sync.py:sync_root on a
+    BM25 root): ``bm25_keyword_search`` re-tokenizes the
     corpus per query, but a production retrieval index is a PERSISTED
     artifact documents fold into as they arrive. Here the base corpus
     (doc_id % 5 ≠ 0) is indexed once — postings and per-term document
@@ -8998,7 +8998,7 @@ def streaming_bm25_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         index_sync.init_bm25_root(corpus, root, "doc_id", "text")
         _stage_stream_batches(work, src, (b0, b1, b2))
-        index_sync.sync_bm25_index_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -13639,9 +13639,9 @@ def _semantic_dedup_oracle_sql(min_cosine: float = 0.95, k: int = 64) -> str:
 def _semantic_dedup_blocked(spark: SparkSession, sf_dir: str, k: int = 64) -> DataFrame:
     """The SemDeDup pipeline up to (and including) cluster blocking:
     augmented embeddings with their k-means cluster assignment —
-    (vec_id, cluster, embedding). Shared by the catalog query and by
-    tools/formulation_diff.py so two independent verify formulations
-    are diffed against the IDENTICAL candidate set."""
+    (vec_id, cluster, embedding). Kept separate from the verify stage
+    so independent verify formulations can be diffed against the
+    IDENTICAL candidate set."""
     from spacex_data_engineering_pipeline_spark.operators.cluster import (
         kmeans_assign,
     )
@@ -13870,7 +13870,7 @@ def streaming_bm25_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     INSERT-only arm named ("a re-ingested doc id would double-count df
     and tf"): a CDC stream of (id, text, op ∈ I/U/D) folds into the
     synced inverted index via SIGNED tombstone epochs
-    (streaming/index_sync.py:sync_bm25_cdc_stream). Per batch, the old
+    (streaming/index_sync.py:sync_root, op_col="op"). Per batch, the old
     version of each touched doc is fetched from the doc-id-bucketed
     DOC LOG (partition-pruned to the batch's buckets — the committed
     postings are never read) and its exact postings/df/stats rows are
@@ -13924,9 +13924,10 @@ def streaming_bm25_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         index_sync.init_bm25_root(corpus, root, "doc_id", "text")
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_bm25_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         out = (
             index_sync.bm25_topk_synced(spark, root, _BM25_TERMS, k=10)
@@ -13970,7 +13971,7 @@ def embedding_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed growth — the lifecycle verb the vector-index family
     lacked (whole-epoch compaction was the only removal path, but a
     right-to-be-forgotten request names specific ids):
-    ``delete_index_ids`` writes a TOMBSTONE EPOCH that probes anti-join
+    ``delete_ids`` writes a TOMBSTONE EPOCH that probes anti-join
     against (delete epoch > posting epoch), so history before the
     delete stays readable and a later re-insert is visible again;
     ``compact_root(purge_deleted=True)`` is the physical removal
@@ -14024,9 +14025,9 @@ def embedding_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         index_sync.init_ivf_root(
             base, root, "vec_id", "embedding", n_clusters=16, seed=42
         )
-        index_sync.delete_index_ids(spark, root, doomed)
+        index_sync.delete_ids(spark, root, doomed)
         _stage_stream_batches(work, src, (inserts,))
-        index_sync.sync_ivf_index_stream(
+        index_sync.sync_root(
             spark, src, inserts.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -14095,11 +14096,11 @@ def hybrid_rrf_synced(spark: SparkSession, sf_dir: str) -> DataFrame:
             src = _os.path.join(work, f"src_{name}")
             _os.makedirs(src)
             _stage_stream_batches(_os.path.join(work, name), src, (bdf,))
-        index_sync.sync_bm25_index_stream(
+        index_sync.sync_root(
             spark, _os.path.join(work, "src_bm25"), d_rest.schema, broot,
             checkpoint_dir=_os.path.join(work, "ckpt_bm25"),
         )
-        index_sync.sync_ivf_index_stream(
+        index_sync.sync_root(
             spark, _os.path.join(work, "src_ivf"), e_rest.schema, droot,
             checkpoint_dir=_os.path.join(work, "ckpt_ivf"),
         )
@@ -14129,7 +14130,7 @@ def dedup_index_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone verb across the ledger family: a retracted document must
     stop being offered as a near-dup source the moment its tombstone
     commits, without rewriting the committed grams/bands ledgers.
-    ``delete_index_ids`` writes the tombstone epoch; the probe's
+    ``delete_ids`` writes the tombstone epoch; the probe's
     candidate side (bands) and exact-verify side (grams) both
     anti-join it with delete-epoch > row-epoch semantics, so history
     before the delete stays readable and a later re-ingest of the
@@ -14172,9 +14173,9 @@ def dedup_index_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         index_sync.init_minhash_root(
             corpus, root, "doc_id", "text", min_jaccard_micro=300_000
         )
-        index_sync.delete_index_ids(spark, root, doomed)
+        index_sync.delete_ids(spark, root, doomed)
         _stage_stream_batches(work, src, (plants,))
-        index_sync.sync_minhash_index_stream(
+        index_sync.sync_root(
             spark, src, plants.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -14208,7 +14209,7 @@ def streaming_pca_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SUBTRACT-THEN-ADD epochs for the PCA moment ledger — the seam
     the INSERT-only arm named ("re-vectoring an id would need a
     subtract-then-add epoch"): a CDC stream of (vector, before-image,
-    op ∈ I/U/D) folds through ``sync_pca_cdc_stream``, each batch
+    op ∈ I/U/D) folds through ``sync_root(..., op_col="op")``, each batch
     reducing to ONE signed moment epoch (new vectors positive, before
     images negated — exact int64 cells of the same quantization, so
     the subtraction is bit-exact) and every existing reader summing
@@ -14278,9 +14279,10 @@ def streaming_pca_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         index_sync.init_pca_moments_root(base, root, "embedding")
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_pca_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         model = index_sync.load_synced_pca_model(
             spark, root, n_components=2, n_iter=12
@@ -14399,9 +14401,10 @@ def bm25_netting_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         index_sync.init_bm25_root(corpus, root, "doc_id", "text")
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_bm25_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         index_sync.compact_root(spark, root, purge_deleted=True)
         index_sync.vacuum_root(root)  # serve from the compact alone
@@ -14450,9 +14453,9 @@ def bm25_netting_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_ivf_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-VERB CDC for the IVF posting ledger
-    (streaming/index_sync.py:sync_ivf_cdc_stream) — closing the
-    two-step re-vector seam the insert arm documents
-    (``delete_index_ids`` then re-stream = two pointer flips with a
+    (streaming/index_sync.py:sync_root, op_col="op") — closing the
+    two-step re-vector seam an insert-only stream leaves
+    (``delete_ids`` then re-stream = two pointer flips with a
     crash window where the id is deleted but not yet re-inserted):
     here an op ∈ I/U/D stream folds each micro-batch as ONE epoch
     carrying both the U/D tombstones and the non-delete rows' new
@@ -14519,9 +14522,10 @@ def streaming_ivf_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             base, root, "vec_id", "embedding", n_clusters=16, seed=42
         )
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_ivf_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         idx = index_sync.load_synced_ivf(spark, root)
         out = (
@@ -14577,7 +14581,7 @@ def streaming_ivf_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_semantic_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-VERB CDC for the growing SEMANTIC dedup index
-    (streaming/index_sync.py:sync_semantic_cdc_stream): per
+    (streaming/index_sync.py:sync_root, op_col="op"): per
     micro-batch, ONE epoch carries the U/D tombstones, the new
     postings, AND the batch's near-dup verdicts — probed against the
     committed index with pairs citing a this-batch-tombstoned corpus
@@ -14664,9 +14668,10 @@ def streaming_semantic_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_clusters=8, n_probes=8, min_cosine=0.95, seed=7,
         )
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_semantic_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         out = (
             index_sync.load_synced_semantic_pairs(spark, root)
@@ -14707,7 +14712,7 @@ def streaming_semantic_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_minhash_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-VERB CDC for the growing MINHASH dedup index
-    (streaming/index_sync.py:sync_minhash_cdc_stream) — the text
+    (streaming/index_sync.py:sync_root, op_col="op") — the text
     analog of ``streaming_semantic_cdc_sync``: one epoch per
     micro-batch carries the U/D tombstones (on the ledger's canonical
     ``doc`` column), the upserted docs' shingles + band keys, and
@@ -14770,9 +14775,10 @@ def streaming_minhash_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus, root, "doc_id", "text", min_jaccard_micro=300_000
         )
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_minhash_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         out = (
             index_sync.load_synced_dedup_pairs(spark, root)
@@ -14819,10 +14825,9 @@ def streaming_minhash_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_knn_graph_delete_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ID-LEVEL DELETE for a GRAPH-BEARING root, interleaved with the
-    stream — the lifecycle verb the sync family refused until now
-    (``delete_index_ids`` raises on graph roots because a bare
-    tombstone leaves edges citing the deleted vectors):
-    ``delete_graph_ids`` (streaming/index_sync.py) writes the
+    stream — a bare tombstone would leave edges citing the deleted
+    vectors, so on a graph-bearing root
+    ``delete_ids`` (streaming/index_sync.py) writes the
     tombstone epoch AND publishes the EDGE-REPAIRED graph
     (``knn_graph_apply_cdc`` — affected rows recomputed against the
     remaining corpus, unaffected lists kept verbatim) as a
@@ -14879,18 +14884,18 @@ def streaming_knn_graph_delete_sync(spark: SparkSession, sf_dir: str) -> DataFra
             n_clusters=8, n_probes=8, seed=7, n_blocks=8, n_buckets=16,
         )
         _stage_stream_batches(work, src, (b0,))
-        index_sync.sync_knn_graph_ivf_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
-        index_sync.delete_graph_ids(spark, root, doomed)
+        index_sync.delete_ids(spark, root, doomed)
         # batch 1 lands AFTER the delete, same source + checkpoint
         b1s = _os.path.join(work, "b1stage")
         part = _write_one_part(b1, b1s)
         dst = _os.path.join(src, "batch0001.parquet")
         _os.replace(_os.path.join(b1s, part), dst)
         _os.utime(dst, (1_700_000_001, 1_700_000_001))
-        index_sync.sync_knn_graph_ivf_stream(
+        index_sync.sync_root(
             spark, src, b1.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
         )
@@ -15036,11 +15041,11 @@ def hybrid_rrf_synced_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dst = _os.path.join(src, f"batch{i:04d}.parquet")
                 _os.replace(_os.path.join(staged, part), dst)
                 _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            index_sync.sync_bm25_index_stream(
+            index_sync.sync_root(
                 spark, _os.path.join(work, "src_bm25"), d1.schema, broot,
                 checkpoint_dir=_os.path.join(work, "ckpt_bm25"),
             )
-            index_sync.sync_ivf_index_stream(
+            index_sync.sync_root(
                 spark, _os.path.join(work, "src_ivf"), e1.schema, droot,
                 checkpoint_dir=_os.path.join(work, "ckpt_ivf"),
             )
@@ -15093,10 +15098,10 @@ def hybrid_rrf_synced_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_knn_graph_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-VERB CDC for the PLAIN graph root
-    (streaming/index_sync.py:sync_knn_graph_cdc_stream) — a real CDC
+    (streaming/index_sync.py:sync_root, op_col="op") — a real CDC
     feed interleaves inserts, re-vectors, and retirements in one
-    stream, where previously inserts/upserts had a streaming arm and
-    deletes only the manual ``delete_graph_ids`` verb: each
+    stream, where an insert-only stream carries upserts and deletes
+    go through the manual ``delete_ids`` verb: each
     micro-batch folds its deletes and upserts in ONE
     ``knn_graph_apply_cdc`` pass against the saved graph (citing edges
     repaired, new/re-vectored rows folded — |batch|·N + |affected|·N,
@@ -15158,9 +15163,10 @@ def streaming_knn_graph_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             base, root, "vec_id", "embedding", k=5, n_blocks=8, n_buckets=16
         )
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_knn_graph_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         out = (
             index_sync.load_synced_graph(spark, root)
@@ -15210,7 +15216,7 @@ def streaming_knn_graph_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_knn_graph_ivf_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-VERB CDC for the GRAPH+IVF root
-    (streaming/index_sync.py:sync_knn_graph_ivf_cdc_stream) — the
+    (streaming/index_sync.py:sync_root, op_col="op") — the
     scale-arm counterpart of ``streaming_knn_graph_cdc_sync``: per
     micro-batch ONE epoch carries the U/D tombstones, the repaired-
     then-grown graph generation, and the upserts' cluster-partitioned
@@ -15275,9 +15281,10 @@ def streaming_knn_graph_ivf_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFr
             n_clusters=8, n_probes=8, seed=7, n_blocks=8, n_buckets=16,
         )
         _stage_stream_batches(work, src, (b0, b1))
-        index_sync.sync_knn_graph_ivf_cdc_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt"),
+            op_col="op",
         )
         out = (
             index_sync.load_synced_graph(spark, root)
@@ -15586,18 +15593,20 @@ def streaming_graph_rebase_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             base, root, "vec_id", "embedding", k=5, n_blocks=8, n_buckets=16
         )
         _stage_stream_batches(work, src0, (b0,))
-        index_sync.sync_knn_graph_cdc_stream(
+        index_sync.sync_root(
             spark, src0, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt0"),
+            op_col="op",
         )
         folded = index_sync.compact_root(spark, root)
         if folded == 0:
             raise RuntimeError("rebase unexpectedly no-oped")
         index_sync.vacuum_root(root)
         _stage_stream_batches(work, src1, (b1,), start=1)
-        index_sync.sync_knn_graph_cdc_stream(
+        index_sync.sync_root(
             spark, src1, b0.schema, root,
             checkpoint_dir=_os.path.join(work, "ckpt1"),
+            op_col="op",
         )
         out = (
             index_sync.load_synced_graph(spark, root)

@@ -1,13 +1,13 @@
 """Streaming-maintained BM25 inverted index — the retrieval-artifact
-arm of the epoch-ledger family (streaming/ledger.py), in its own
+root kind of the epoch-ledger family (streaming/ledger.py), in its own
 module since round 13: term-bucketed postings (per-term document
 frequency is derived from them at query time) + a model-sized
-additive stats table, maintained by an INSERT-only arm
-(``sync_bm25_index_stream``) and a CDC arm (``sync_bm25_cdc_stream``,
-op ∈ I/U/D) whose updates and deletes are
-SIGNED tombstone epochs derived from a doc-id-bucketed doc log —
-readers fold sums and drop non-positive rows, so the synced ranking
-is always exactly the batch scorer over the current corpus
+additive stats table + a doc-id-bucketed doc log. Its ONE fold
+(``_bm25_fold``, run by ``index_sync.sync_root`` and
+``index_sync.delete_ids``) appends inserts additively and turns
+updates and deletes into SIGNED tombstone rows derived from the doc
+log — readers fold sums and drop non-positive rows, so the synced
+ranking is always exactly the batch scorer over the current corpus
 (``bm25_topk_synced``, partition-pruned to the query terms' buckets).
 
 Why an index and not a rescore: ``bm25_keyword_search`` (the batch
@@ -100,7 +100,7 @@ def _bm25_epoch_tables(
 
 def _bm25_doclog_rows(docs: DataFrame, n_buckets: int) -> DataFrame:
     """Doc-log rows for one epoch's LIVE versions: (doc, w, dl),
-    doc-id-bucketed — the state the CDC arm reads back (pruned to the
+    doc-id-bucketed — the state a CDC fold reads back (pruned to the
     batch's buckets) to derive exact tombstones for updated/deleted
     docs. Storage is ~1× the tokenized corpus: the price of an
     updatable inverted index, same tradeoff as the MinHash grams
@@ -127,7 +127,7 @@ def init_bm25_root(
     doc_buckets: int = 16,
 ) -> None:
     """One-time base for a STREAMING-MAINTAINED BM25 inverted index —
-    the retrieval-artifact arm of the ledger family: postings saved
+    the retrieval-artifact kind of the ledger family: postings saved
     term-bucket-partitioned as epoch 0 (query-time reads
     partition-prune to the query terms' buckets), plus a one-row
     per-epoch stats table (n_docs, sum_dl — exact integer sums,
@@ -135,7 +135,7 @@ def init_bm25_root(
     and avgdl fold from model-sized state and
     the synced ranking is bit-identical to a from-scratch batch
     scorer), plus the doc-id-bucketed DOC LOG (doc, tokens, dl — the
-    per-doc state ``sync_bm25_cdc_stream`` reads back, pruned to a
+    per-doc state a CDC fold (``_bm25_fold``) reads back, pruned to a
     batch's buckets, to derive exact subtractive tombstones for
     updated/deleted docs)."""
     os.makedirs(root, exist_ok=True)
@@ -157,50 +157,6 @@ def init_bm25_root(
             "term_buckets": term_buckets,
             "doc_buckets": doc_buckets,
         },
-    )
-
-
-def sync_bm25_index_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-    fence_sources: bool = False,
-) -> None:
-    """Drain ``source_path`` (parquet file stream of (id, text) docs)
-    with AvailableNow: per micro-batch, ONE tokenize pass reduces the
-    batch to its postings / dfreq / stats epoch tables (document sets
-    are disjoint across epochs, so df and the stats sums are additive
-    — no read-modify-write of existing index state, the committed
-    100 TB of postings is never touched), staged overwrite-idempotently
-    and published by one pointer flip. INSERT-only (a re-ingested doc
-    id would double-count df and tf — updates and deletes are
-    ``sync_bm25_cdc_stream``'s signed-tombstone job). Maintains the
-    doc log alongside, so a root fed by this arm can switch to the CDC
-    arm later. Same exactly-once ledger and checkpoint-wipe hazard as
-    the other syncs."""
-
-    led = _bm25_ledger(root)
-
-    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        postings, stats, docs = _bm25_epoch_tables(
-            batch_df, ptr["id_col"], ptr["text_col"], ptr["term_buckets"]
-        )
-        led.write_epoch(postings, "postings", epoch)
-        led.write_epoch(stats, "stats", epoch)
-        if "doc_buckets" in ptr:  # legacy roots have no doc log
-            led.write_epoch(
-                _bm25_doclog_rows(docs, ptr["doc_buckets"]), "doclog", epoch
-            )
-        docs.unpersist()
-        return {"max_epoch": epoch}
-
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start, fence_sources=fence_sources,
     )
 
 
@@ -250,152 +206,156 @@ def _bm25_old_versions(
     )
 
 
+def _bm25_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
+    """The BM25 root's fold (``index_sync.sync_root`` / ``delete_ids``
+    dispatch here). One tokenize pass reduces the batch's live rows to
+    the POSITIVE postings / stats epoch tables, plus the doc log's new
+    versions. An insert-only stream (``op_col=None``) stops there:
+    document sets are disjoint across epochs, so the stats sums and the
+    derived df are additive and no committed state is read (a
+    pre-doclog root keeps its layout — it just gets no doc log).
+
+    A CDC stream (op ∈ I/U/D, the ``apply_cdc_log`` shape — I and U
+    are both upserts) is SIGNED, the additive-moments discipline with a
+    sign bit:
+
+    1. fetch the live old version of each batch id from the doc log
+       (``_bm25_old_versions`` — partition-pruned to the batch's doc
+       buckets; the committed postings are never read);
+    2. derive exact NEGATIVE rows from those old token lists: postings
+       (-tf, -dl) per (doc, term), stats (−n, −Σdl);
+    3. write one epoch per table carrying positive ∪ negative rows,
+       plus the doc log's new state (new token lists; null-token
+       DELETE markers).
+
+    Readers fold per-(doc,term) tf/dl as SUMS, drop non-positive rows
+    and count the survivors per term as df (``bm25_topk_synced``), so
+    an updated doc re-ranks with its new text, a deleted doc vanishes,
+    N/avgdl stay exact integers, a re-insert after a delete is a plain
+    insert, and as-of reads at epoch k reconstruct exactly the state
+    after batch k. At most ONE row per doc id per batch, ENFORCED (two
+    versions would negate the old version once but write positive rows
+    for both, inflating N/df/tf forever); deleting an absent id is a
+    no-op, updating one an insert. A CDC stream needs the doc log
+    (``init_bm25_root`` writes it); pre-doclog roots are refused."""
+
+    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
+        id_col, text_col = ptr["id_col"], ptr["text_col"]
+        tb = ptr["term_buckets"]
+        ops = old = None
+        if op_col is None:
+            postings, stats, docs = _bm25_epoch_tables(
+                batch_df, id_col, text_col, tb
+            )
+        else:
+            if "doc_buckets" not in ptr:
+                raise ValueError(
+                    "this BM25 root predates the doc log — a CDC stream "
+                    "needs per-doc state to derive tombstones; rebuild "
+                    "the root with init_bm25_root (which writes doclog "
+                    "epoch 0)"
+                )
+            ops = batch_df.select(
+                F.col(id_col).alias("doc"),
+                F.col(text_col).alias("__text"),
+                F.upper(F.col(op_col).cast("string")).substr(1, 1).alias("__op"),
+            ).persist()
+            # the guard: one batch-sized agg job
+            card = ops.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("doc").alias("d"),
+                # the batch ids' doc buckets ride in the SAME agg (≤
+                # doc_buckets ints) so the old-version fetch below skips
+                # its own distinct+collect job (optimization r14)
+                F.collect_set(
+                    _id_bucket(F.col("doc"), ptr["doc_buckets"])
+                ).alias("bks"),
+            ).first()
+            if int(card["n"]) != int(card["d"]):
+                ops.unpersist()
+                raise ValueError(
+                    f"CDC batch carries {int(card['n'])} rows over "
+                    f"{int(card['d'])} distinct doc ids — at most ONE row "
+                    "per doc per micro-batch (two versions have no defined "
+                    "order and would double-count df/tf); collapse "
+                    "upstream with latest_update_per_key"
+                )
+            old = _bm25_old_versions(
+                spark, led, ptr, ops.select("doc").distinct(),
+                buckets=list(card["bks"] or []),
+            )
+            # positive tables from the batch's upserted (non-delete) rows
+            postings, stats, docs = _bm25_epoch_tables(
+                ops.filter(F.col("__op") != "D").select(
+                    F.col("doc").alias(id_col), F.col("__text").alias(text_col)
+                ),
+                id_col,
+                text_col,
+                tb,
+            )
+            if old is not None:
+                old = old.persist()
+                oldx = old.select("doc", "dl", F.explode("w").alias("term"))
+                postings = postings.unionByName(
+                    oldx.groupBy("doc", "term")
+                    .agg(
+                        (-F.count(F.lit(1))).alias("tf"),
+                        (-F.max("dl")).alias("dl"),
+                    )
+                    .withColumn("__tbucket", _term_bucket(F.col("term"), tb))
+                )
+                stats = stats.unionByName(
+                    old.agg(
+                        (-F.count(F.lit(1))).alias("n_docs"),
+                        (-F.coalesce(F.sum("dl"), F.lit(0)))
+                        .cast("long")
+                        .alias("sum_dl"),
+                    )
+                )
+        led.write_epoch(postings, "postings", epoch)
+        led.write_epoch(stats, "stats", epoch)
+        if "doc_buckets" in ptr:
+            doclog = _bm25_doclog_rows(docs, ptr["doc_buckets"])
+            if ops is not None:
+                # null-token delete markers
+                doclog = doclog.unionByName(
+                    ops.filter(F.col("__op") == "D").select(
+                        "doc",
+                        F.lit(None).cast("array<string>").alias("w"),
+                        F.lit(None).cast("int").alias("dl"),
+                        _id_bucket(F.col("doc"), ptr["doc_buckets"]).alias(
+                            "__dbucket"
+                        ),
+                    )
+                )
+            led.write_epoch(doclog, "doclog", epoch)
+        docs.unpersist()
+        if old is not None:
+            old.unpersist()
+        if ops is not None:
+            ops.unpersist()
+        return {"max_epoch": epoch}
+
+    return fold
+
+
 def sync_bm25_cdc_stream(
     spark: SparkSession,
     source_path: str,
     schema,
     root: str,
     checkpoint_dir: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
     on_batch_start=None,
 ) -> None:
-    """Drain a CDC stream of (id, text, op) rows — op ∈ {I, U, D}, the
-    ``apply_cdc_log`` shape (operators/scd.py; I and U are both
-    upserts) — into the BM25 index: the DELETE/UPDATE arm the
-    INSERT-only ``sync_bm25_index_stream`` names as its own seam ("a
-    re-ingested doc id would double-count df and tf; document updates
-    need a delete epoch").
+    """``index_sync.sync_root(..., op_col="op")`` on a BM25 root, kept
+    under this name for the benchmark harness that calls and traces
+    it."""
+    # imported here: index_sync imports this module at load time
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
 
-    Per micro-batch, the fold is SIGNED — the additive-moments
-    discipline with a sign bit:
-
-    1. fetch the live old version of each batch id from the doc log
-       (partition-pruned to the batch's doc buckets — the committed
-       100 TB of postings is never read);
-    2. derive exact NEGATIVE rows from those old token lists: postings
-       (-tf, -dl) per (doc, term), stats (−n, −Σdl);
-    3. tokenize the batch's non-delete rows once into the usual
-       POSITIVE tables (``_bm25_epoch_tables``);
-    4. write one epoch per table carrying positive ∪ negative rows,
-       plus the doc log's new state (new token lists; null-token
-       DELETE markers), published by the one pointer flip.
-
-    Readers fold per-(doc,term) tf/dl as SUMS, drop non-positive rows
-    and count the survivors per term as df (``bm25_topk_synced``), so
-    an updated doc re-ranks with its new text, a deleted doc vanishes,
-    N/avgdl stay exact integers, and a re-insert after a delete is a
-    plain insert.
-    As-of time travel keeps working — the signed rows at epochs ≤ k
-    reconstruct exactly the state after batch k.
-
-    Contracts: at most ONE row per doc id per micro-batch, ENFORCED —
-    the fold refuses a batch whose row count exceeds its distinct doc
-    count (two versions of a doc in one batch have no defined order
-    and would negate the old version once while writing both new
-    versions' positive rows; collapse upstream with
-    ``latest_update_per_key``); deleting an absent id is
-    a no-op; updating an absent id is an insert. The root must carry a
-    doc log (``init_bm25_root`` writes it; pre-doclog roots are
-    refused). Same exactly-once ledger + checkpoint-wipe hazard as the
-    other arms; crash-restart is pytest-pinned."""
-    led = _bm25_ledger(root)
-
-    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        if "doc_buckets" not in ptr:
-            raise ValueError(
-                "this BM25 root predates the doc log — the CDC arm "
-                "needs per-doc state to derive tombstones; rebuild the "
-                "root with init_bm25_root (which writes doclog epoch 0)"
-            )
-        id_col, text_col = ptr["id_col"], ptr["text_col"]
-        tb = ptr["term_buckets"]
-        ops = batch_df.select(
-            F.col(id_col).alias("doc"),
-            F.col(text_col).alias("__text"),
-            F.upper(F.col(op_col).cast("string")).substr(1, 1).alias("__op"),
-        ).persist()
-        # ENFORCE the at-most-one-row-per-doc-per-batch contract (the
-        # max_affected refusal discipline): two versions of a doc in
-        # one batch would negate the old version once but write
-        # positive rows for both, silently inflating N/df/tf forever.
-        # One batch-sized agg job — cheap next to the fold itself.
-        card = ops.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("doc").alias("d"),
-            # the batch ids' doc buckets ride in the SAME agg (≤
-            # doc_buckets ints) so the old-version fetch below skips
-            # its own distinct+collect job (optimization r14)
-            F.collect_set(
-                _id_bucket(F.col("doc"), ptr["doc_buckets"])
-            ).alias("bks"),
-        ).first()
-        if int(card["n"]) != int(card["d"]):
-            raise ValueError(
-                f"CDC batch carries {int(card['n'])} rows over "
-                f"{int(card['d'])} distinct doc ids — at most ONE row "
-                "per doc per micro-batch (two versions have no defined "
-                "order and would double-count df/tf); collapse "
-                "upstream with latest_update_per_key"
-            )
-        old = _bm25_old_versions(
-            spark, led, ptr, ops.select("doc").distinct(),
-            buckets=list(card["bks"] or []),
-        )
-        # positive tables from the batch's upserted (non-delete) rows
-        postings, stats, docs = _bm25_epoch_tables(
-            ops.filter(F.col("__op") != "D").select(
-                F.col("doc").alias(id_col), F.col("__text").alias(text_col)
-            ),
-            id_col,
-            text_col,
-            tb,
-        )
-        if old is not None:
-            old = old.persist()
-            oldx = old.select("doc", "dl", F.explode("w").alias("term"))
-            postings = postings.unionByName(
-                oldx.groupBy("doc", "term")
-                .agg(
-                    (-F.count(F.lit(1))).alias("tf"),
-                    (-F.max("dl")).alias("dl"),
-                )
-                .withColumn("__tbucket", _term_bucket(F.col("term"), tb))
-            )
-            stats = stats.unionByName(
-                old.agg(
-                    (-F.count(F.lit(1))).alias("n_docs"),
-                    (-F.coalesce(F.sum("dl"), F.lit(0)))
-                    .cast("long")
-                    .alias("sum_dl"),
-                )
-            )
-        led.write_epoch(postings, "postings", epoch)
-        led.write_epoch(stats, "stats", epoch)
-        # doc log: new live versions + null-token delete markers
-        led.write_epoch(
-            _bm25_doclog_rows(docs, ptr["doc_buckets"]).unionByName(
-                ops.filter(F.col("__op") == "D").select(
-                    "doc",
-                    F.lit(None).cast("array<string>").alias("w"),
-                    F.lit(None).cast("int").alias("dl"),
-                    _id_bucket(F.col("doc"), ptr["doc_buckets"]).alias(
-                        "__dbucket"
-                    ),
-                )
-            ),
-            "doclog",
-            epoch,
-        )
-        docs.unpersist()
-        if old is not None:
-            old.unpersist()
-        ops.unpersist()
-        return {"max_epoch": epoch}
-
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start,
+    index_sync.sync_root(
+        spark, source_path, schema, root, checkpoint_dir,
+        op_col="op", on_batch_start=on_batch_start,
     )
 
 
@@ -461,7 +421,7 @@ def bm25_topk_synced(
             .collect()
         }
     )
-    # SIGNED fold (the CDC arm writes subtractive tombstone rows): per
+    # SIGNED fold (CDC batches write subtractive tombstone rows): per
     # (doc, term) tf/dl are sums over the as-of epochs, non-positive
     # results dropped — an updated doc nets to its newest version, a
     # deleted one to nothing. Insert-only ledgers hit the same path
@@ -517,7 +477,7 @@ def _bm25_net(table: str, df: DataFrame, head: int) -> DataFrame:
     results, sums stats to one row, and keeps only the LATEST doc-log
     version per doc (delete markers vanish). The compacted postings
     then hold one row per live (doc, term) in the term-bucket layout,
-    and the CDC arm keeps working against the netted doc log (one live
+    and CDC batches keep working against the netted doc log (one live
     version per doc is exactly what ``_bm25_old_versions`` needs)."""
     if table == "postings":
         return (

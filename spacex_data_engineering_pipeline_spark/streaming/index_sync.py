@@ -1,53 +1,54 @@
 """Streaming maintenance of PERSISTED derived artifacts — one
 epoch-ledger protocol (the generic ``EpochLedger``:
 streaming/ledger.py — staged epoch writes, one fsync'd pointer flip,
-replay-safe drains, compact/vacuum; every arm here is a thin fold
-over one instance), eight sync arms over six artifact kinds:
+replay-safe drains, compact/vacuum) and ONE write path for seven root
+kinds. ``sync_root`` reads the kind from the pointer
+(``ledger_root_kind``) and drains a parquet file stream through that
+kind's one fold; ``op_col=None`` declares an insert-only stream,
+``op_col="op"`` a CDC stream (op ∈ I/U/D, at most one row per id per
+batch). ``delete_ids`` commits a list of ids as one all-D batch
+through the same fold. Per kind, the fold:
 
-- kNN graph (``sync_knn_graph_stream``): micro-batches fold into a
-  SAVED graph via ``knn_graph_apply_cdc`` — |batch|·N + |affected|·N per
-  epoch, upsert semantics (stale edges evicted corpus-wide);
-- kNN graph through IVF ROUTING (``sync_knn_graph_ivf_stream``): the
-  arm for the regime ``knn_graph_auto`` refuses — append batches fold
-  by probing only their ``n_probes`` nearest clusters of a cluster-
-  partitioned posting ledger, |batch| × |probed postings| per epoch,
-  exact at full probe width;
-- IVF posting table (``sync_ivf_index_stream``): batches route against
-  the FIXED saved centroids into epoch partitions — FAISS ``add``
-  semantics, the exactly-once wrapper ``append_to_ivf_index`` defers
-  to;
-- PCA moment table (``sync_pca_moments_stream``): each batch reduces
-  to its own exact int64 moment table (dim²-sized state), refit =
+- graph (``init_knn_graph_root``): folds deletes + upserts into the
+  SAVED graph via ``knn_graph_apply_cdc`` — |batch|·N + |affected|·N
+  per epoch, stale edges evicted corpus-wide;
+- graph_ivf (``init_knn_graph_ivf_root``): the regime
+  ``knn_graph_auto`` refuses — deletes repair the graph exactly, new
+  rows fold by probing only their ``n_probes`` nearest clusters of a
+  cluster-partitioned posting ledger, |batch| × |probed postings| per
+  epoch, exact at full probe width;
+- ivf (``init_ivf_root``): routes rows against the FIXED saved
+  centroids into epoch partitions — FAISS ``add`` semantics, the
+  exactly-once wrapper ``append_to_ivf_index`` defers to;
+- pca (``init_pca_moments_root``): reduces each batch to its own exact
+  int64 moment table (dim²-sized; signed on CDC streams), refit =
   model-sized fold + O(dim³) driver eigensolve, bit-identical to a
-  from-scratch fit (moment additivity);
-- MinHash dedup index (``sync_minhash_index_stream``): probe the batch
-  against the index AS OF the pointer (exact-verify side PARTITION-
-  PRUNED to the candidate docs' grams buckets), then fold the batch's
-  shingles + band keys in — the GROWING index (first-seen-wins) that
-  a static probe can't express;
-- semantic dedup index (``sync_semantic_dedup_stream``): the embedding
-  analog — probe the batch for cosine-threshold near-dup pairs against
-  the IVF posting ledger, then fold it in, pairs + growth in one flip;
-- BM25 inverted index (streaming/bm25_sync.py, re-exported here):
-  INSERT-only arm (``sync_bm25_index_stream`` — one tokenize pass per
-  batch, df/stats additive over disjoint doc sets) plus the CDC arm
-  (``sync_bm25_cdc_stream`` — op ∈ I/U/D folded as SIGNED tombstone
-  epochs derived from the doc log); queries read only their terms'
-  buckets and rank bit-identically to a batch rescore
-  (``bm25_topk_synced``).
+  from-scratch fit;
+- minhash (``init_minhash_root``): probes the batch against the index
+  AS OF the pointer (exact-verify side PARTITION-PRUNED to the
+  candidate docs' grams buckets), then folds its shingles + band keys
+  in — the GROWING index (first-seen-wins) a static probe can't
+  express;
+- semantic (``init_semantic_dedup_root``): the embedding analog —
+  cosine-threshold near-dup pairs probed against the IVF posting
+  ledger, pairs + growth in one flip;
+- bm25 (streaming/bm25_sync.py, readers re-exported here): one
+  tokenize pass per batch, updates and deletes as SIGNED rows derived
+  from the doc log; queries read only their terms' buckets and rank
+  bit-identically to a batch rescore (``bm25_topk_synced``).
 
-Id-level lifecycle verbs for the IVF-family posting ledgers:
-``delete_index_ids`` writes tombstone epochs that probes anti-join
-(delete epoch > posting epoch — re-inserts stay visible, history
-before the delete stays readable), and ``compact_root(...,
-purge_deleted=True)`` is the physical right-to-be-forgotten removal
-(as-of refusal floor).
+Id lifecycle on the tombstone kinds (ivf, graph_ivf, semantic,
+minhash): a delete or update writes a tombstone that readers anti-join
+(delete epoch > posting epoch — the same epoch's replacement and later
+re-inserts stay visible, history before the delete stays readable),
+and ``compact_root(..., purge_deleted=True)`` is the physical
+right-to-be-forgotten removal (as-of refusal floor).
 
-All arms share the commit protocol below: epoch-keyed staged writes
-(overwrite-idempotent, invisible to readers) published by ONE fsync'd
-pointer flip; replayed epochs no-op; crash-window orphans are never
-scanned and the replay overwrites them. Crash-restart is pytest-pinned
-per artifact kind (tests/test_streaming.py).
+Every commit shares one sequence (``EpochLedger.commit``):
+epoch-keyed staged writes (overwrite-idempotent, invisible to readers)
+published by ONE fsync'd pointer flip; replayed epochs no-op;
+crash-window orphans are never scanned and the replay overwrites them.
+Crash-restart is pytest-pinned per root kind (tests/test_streaming.py).
 
 RETENTION, one path for every root kind: ``compact_root`` reads the
 kind from the pointer (``ledger_root_kind``) and folds every
@@ -109,7 +110,6 @@ from spacex_data_engineering_pipeline_spark.streaming.ledger import (
     EpochLedger,
     compact_path as _compact_path,
     epoch_path as _epoch_path,
-    clear_staged_epoch as _clear_staged_epoch,
     flip_pointer as _flip_pointer,
     id_bucket as _id_bucket,
     ledger_frames as _ledger_frames,
@@ -120,18 +120,22 @@ from spacex_data_engineering_pipeline_spark.streaming.ledger import (
     resolve_as_of as _resolve_as_of,
 )
 
-# The BM25 arm lives in its own module since round 13; re-exported here
-# so the catalog/tests keep one address for the sync family.
+# The BM25 fold and readers live in their own module since round 13;
+# re-exported here so the catalog/tests keep one address for the family.
 from spacex_data_engineering_pipeline_spark.streaming.bm25_sync import (  # noqa: F401
-    _bm25_epoch_tables,
+    _bm25_fold,
     _bm25_ledger,
     _term_bucket,
     _bm25_net,
     bm25_topk_synced,
     init_bm25_root,
-    sync_bm25_cdc_stream,
-    sync_bm25_index_stream,
 )
+
+# The before-image column a PCA CDC stream carries for U/D rows.
+_OLD_VEC = "old_vec"
+# The op column of a ``delete_ids`` batch: it holds the DISTINCT ids to
+# delete, every row op D, so ``_fold_sides`` knows the guard's answer.
+_DELETE_OP = "__delete_op"
 
 
 # Per-arm ledger layouts — the ONLY thing that differs between the
@@ -362,138 +366,86 @@ def load_synced_graph(
     return _graph_at(spark, root, ptr, gen)
 
 
-def sync_knn_graph_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-    fence_sources: bool = False,
-) -> None:
-    """Drain ``source_path`` (parquet file stream of (id, vector)
-    upserts) with AvailableNow: per micro-batch, fold the batch into
-    the SAVED graph with ``knn_graph_apply_cdc`` (upserts only) —
-    |batch|·N + |affected|·N work, never the N² rebuild — and publish
-    graph + applied-log high-water mark in one pointer flip. Blocks
-    until the drain completes. ``on_batch_start`` is a test hook
-    (crash injection): called with the epoch id before any work."""
+def _graph_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
+    """The PLAIN graph root's fold: each batch's op-D ids retire and its
+    upserts (every row of an insert-only stream; op I/U rows of a CDC
+    stream) fold in ONE ``knn_graph_apply_cdc`` pass against the saved
+    graph — citing edges repaired against the new corpus, stale edges of
+    a re-vectored id evicted corpus-wide, |batch|·N + |affected|·N
+    work, never the N² rebuild — staged as the generation's delta. The
+    applied log gains the upserts and the removal log the deletes, both
+    stamped with the committing generation, so the derived corpus
+    (``_corpus_at``) replays the exact same order (a removal kills
+    every strictly-older version; a later re-upsert outranks it). An
+    empty CDC batch advances only the bookkeeping."""
+    root = led.root
 
     def fold(ptr: dict, gen: int, batch_df: DataFrame) -> dict:
         id_col, vec_col, k = ptr["id_col"], ptr["vec_col"], ptr["k"]
-        updates = batch_df.select(id_col, vec_col)
-        corpus_before = _corpus_at(spark, root, ptr)
-        # persist the reconstructed graph for THIS fold's lifetime: the
-        # core references it from the affected probe AND the keep
-        # stream (two actions), and re-executing the delta fold's
-        # window + anti-join per action is pure AQE job inflation
-        prev = _graph_at(spark, root, ptr).persist()
-        try:
-            _write_graph_delta(
-                root, gen,
-                S.knn_graph_apply_cdc(
-                    corpus_before, None, updates, id_col, vec_col, k, prev
-                ),
-            )
-            # the applied log is an epoch-keyed ledger table: staged
-            # overwrite-idempotently at the COMMITTING generation, so a
-            # replay overwrites its own orphan and the pre-commit sweep
-            # can clear a crashed verb's dir at this number
-            updates.write.mode("overwrite").parquet(
-                _epoch_path(root, "applied", gen)
-            )
-        finally:
-            prev.unpersist()
-        return {"generation": gen}
-
-    EpochLedger(root, {}).drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start, fence_sources=fence_sources,
-    )
-
-
-def sync_knn_graph_cdc_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-) -> None:
-    """ONE-VERB CDC for a PLAIN graph root — the stream-shaped
-    completion of the family's graph lifecycle (``sync_knn_graph_
-    stream`` folds upserts, ``delete_graph_ids`` is the manual delete
-    verb; a real CDC feed interleaves all three ops): drain (id,
-    vector, op ∈ I/U/D) micro-batches, each folded as DELETE-THEN-
-    UPSERT against the saved graph and published as ONE generation +
-    one pointer flip —
-
-    1. op-D ids retire and op-I/U rows fold in ONE
-       ``knn_graph_apply_cdc`` pass (citing edges repaired against the
-       new corpus, |batch|·N + |affected|·N — the N² build never
-       re-paid), staged as the generation's delta;
-    2. the applied log gains the upserts, the removal log the
-       deletes, both stamped with the committing generation, so the
-       derived corpus replays the exact same order (a removal kills
-       every strictly-older version; a later re-upsert outranks it).
-
-    At most one row per id per batch, ENFORCED — an id can't be both
-    deleted and upserted in one batch, which is what makes
-    delete-then-upsert order-free. An empty batch advances only the
-    bookkeeping (no corpus-sized graph copy for a no-op epoch). Same
-    exactly-once ledger + checkpoint-lineage contract as every arm;
-    crash-restart pytest-pinned
-    (test_knn_graph_cdc_sync_crash_restart)."""
-
-    def fold(ptr: dict, gen: int, batch_df: DataFrame) -> dict:
-        id_col, vec_col, k = ptr["id_col"], ptr["vec_col"], ptr["k"]
-        ops, has_ud, n_del, n_up = _cdc_batch_ops(
+        ops, upserts, _, dels, has_up = _fold_sides(
             batch_df, id_col, (vec_col,), op_col
         )
-        dels = ops.filter(F.col("__op") == "D").select(id_col).distinct()
-        upserts = ops.filter(F.col("__op") != "D").select(id_col, vec_col)
-        if not n_del and not n_up:
-            ops.unpersist()
-            return {}  # empty batch: bookkeeping only, generation holds
-        corpus = _corpus_at(spark, root, ptr)
-        # fold-lifetime persist: probe + keep are separate actions
-        graph = _graph_at(spark, root, ptr).persist()
         try:
-            # ONE fused affected-set pass for both sides of the batch;
-            # only the changed lists + markers land on disk
-            _write_graph_delta(
-                root, gen,
-                S.knn_graph_apply_cdc(
-                    corpus,
-                    dels if n_del else None,
-                    upserts if n_up else None,
-                    id_col, vec_col, k, graph,
-                ),
-            )
-            if n_up:
-                upserts.write.mode("overwrite").parquet(
-                    _epoch_path(root, "applied", gen)
+            if dels is None and not has_up:
+                return {}  # empty batch: bookkeeping only, generation holds
+            corpus = _corpus_at(spark, root, ptr)
+            # fold-lifetime persist: the core references the graph from
+            # the affected probe AND the keep stream (two actions), and
+            # re-executing the delta fold's window + anti-join per
+            # action is pure AQE job inflation
+            graph = _graph_at(spark, root, ptr).persist()
+            try:
+                # ONE fused affected-set pass for both sides of the
+                # batch; only the changed lists + markers land on disk
+                _write_graph_delta(
+                    root, gen,
+                    S.knn_graph_apply_cdc(
+                        corpus, dels, upserts if has_up else None,
+                        id_col, vec_col, k, graph,
+                    ),
                 )
-            if n_del:
-                dels.write.mode("overwrite").parquet(
-                    _epoch_path(root, "removed", gen)
-                )
+                # the logs are epoch-keyed ledger tables: staged
+                # overwrite-idempotently at the COMMITTING generation, so
+                # a replay overwrites its own orphan and the pre-commit
+                # sweep can clear a crashed verb's dir at this number
+                if has_up:
+                    upserts.write.mode("overwrite").parquet(
+                        _epoch_path(root, "applied", gen)
+                    )
+                if dels is not None:
+                    dels.write.mode("overwrite").parquet(
+                        _epoch_path(root, "removed", gen)
+                    )
+            finally:
+                graph.unpersist()
+            return {"generation": gen}
         finally:
-            graph.unpersist()
-        ops.unpersist()
-        return {"generation": gen}
+            if ops is not None:
+                ops.unpersist()
 
-    EpochLedger(root, {}).drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start,
-    )
+    return fold
 
 
 def _ivf_epoch_path(root: str, epoch: int) -> str:
     return os.path.join(root, "postings", f"epoch={epoch}")
+
+
+def _centroids(root: str) -> list:
+    """The FIXED coarse-quantizer centroids an IVF-family root was
+    initialized with (the ``centroids.json`` sidecar)."""
+    with open(os.path.join(root, "centroids.json")) as f:
+        return json.load(f)
+
+
+def _routed(frame: DataFrame, centers, id_col: str, vec_col: str) -> DataFrame:
+    """(id, vector, cluster) posting rows: ``frame`` routed against the
+    saved centroids — FAISS ``add`` semantics, the quantizer never
+    retrains."""
+    return frame.select(
+        F.col(id_col),
+        F.col(vec_col),
+        S.centroid_assign_udf(centers)(F.col(vec_col)).alias("cluster"),
+    )
 
 
 def init_ivf_root(
@@ -511,12 +463,8 @@ def init_ivf_root(
     centroid sidecar and the initial pointer. The quantizer is FIXED
     for the index's lifetime (FAISS ``add`` semantics) — every later
     epoch routes against these centroids; retrain = a new root."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
     os.makedirs(root, exist_ok=True)
-    idx = S_.build_ivf_index(
+    idx = S.build_ivf_index(
         corpus, id_col, vec_col,
         n_clusters=n_clusters, seed=seed, sample_cap=sample_cap,
         persist=False,
@@ -552,14 +500,9 @@ def load_synced_ivf(
     history comes from the cluster-partitioned compact dataset (epoch
     a data column — as-of reads stay row-exact, cluster pruning keeps
     working) plus any live epoch dirs above it."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
     ptr = read_index_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
-    with open(os.path.join(root, "centroids.json")) as f:
-        centroids = json.load(f)
+    centroids = _centroids(root)
     assigned = _synced_postings(
         spark, _ivf_ledger(root), ptr, epoch, ptr["id_col"]
     )
@@ -568,7 +511,7 @@ def load_synced_ivf(
             f"no committed postings at epoch {epoch} — the root is not "
             "initialized (init_ivf_root writes epoch 0)"
         )
-    return S_.IvfIndex(
+    return S.IvfIndex(
         assigned.drop("epoch"), centroids, ptr["id_col"], ptr["vec_col"]
     )
 
@@ -588,9 +531,9 @@ def _apply_tombstones(
     of a point before the delete still see the row (row-exact history
     until an explicit ``purge_deleted`` compaction), and a posting
     written IN THE SAME EPOCH as its id's tombstone survives it: that
-    is the CDC arms' atomic-update shape (``sync_ivf_cdc_stream`` & co.
-    stage tombstone + replacement posting in one epoch, one flip —
-    the tombstone covers every OLDER version only).
+    is a CDC update's atomic shape (the tombstone kinds' folds stage
+    tombstone + replacement posting in one epoch, one flip — the
+    tombstone covers every OLDER version only).
 
     Shape: tombstones reduce to one (id, max delete epoch) row per
     deleted id, then ONE equi-join against the (already
@@ -624,135 +567,6 @@ def _synced_postings(
     )
 
 
-def delete_index_ids(
-    spark: SparkSession, root: str, ids, max_affected: int = 1_000_000
-) -> int:
-    """ID-LEVEL DELETE for the id-keyed index ledgers (plain IVF
-    roots, semantic-dedup roots, and MinHash dedup roots) — the
-    lifecycle verb the family lacked: compaction only folds whole
-    epochs, but a right-to-be-forgotten request names specific ids.
-    Writes a TOMBSTONE EPOCH (just the ids), published by the usual
-    pointer flip; every reader (``load_synced_ivf``, the semantic probe/fold)
-    anti-joins postings against tombstones with delete-epoch >
-    posting-epoch, so:
-
-    - a later re-insert of the same id IS visible (the tombstone only
-      covers postings committed before it);
-    - ``as_of_epoch`` reads before the delete still see the row —
-      tombstones are history too, until ``compact_root(...,
-      purge_deleted=True)`` physically removes both (``purge_pairs``
-      also sweeps the dedup roots' audit pairs) and sets the as-of
-      refusal floor;
-    - streaming syncs interleave safely: the stream's next epoch is
-      ``max(epoch_id + 1, head + 1)`` (``EpochLedger.next_epoch``), so
-      a manual tombstone epoch never collides with a replayed batch.
-
-    ``ids`` is a list of id values or a DataFrame holding either the
-    root's tombstone column (``'doc'`` on MinHash dedup roots — the
-    ledger tables' canonical id name, recorded as ``tomb_col`` in the
-    pointer) or the caller-facing id column the root was initialized
-    with; the latter is aliased to the tombstone column automatically.
-    ``max_affected`` is the refusal guard the repo's
-    destructive verbs carry (reference pattern: operators/delete.py's
-    affected-partitions discipline): a tombstone set larger than this
-    is almost certainly a bug upstream, and it also bounds this verb's
-    one count() job. Crash window: a staged tombstone epoch above the
-    pointer is invisible, overwritten by the next delete, and swept by
-    vacuum (and by any commit's pre-write orphan sweep). Returns the
-    committed tombstone epoch — or the unchanged head for an EMPTY id
-    set, which is a no-op rather than a burned epoch (an empty
-    list-built frame would also guess the id type). Refused on roots
-    whose readers don't honor tombstones: BM25 (route deletes through
-    the CDC arm), graph-bearing roots (use ``delete_graph_ids``), and
-    pre-``tomb_col`` dedup roots."""
-    led_ptr = read_index_pointer(root)
-    # refuse roots whose READERS don't honor the deletes ledger — a
-    # committed tombstone nobody anti-joins is the worst outcome (the
-    # caller believes the right-to-be-forgotten delete took effect):
-    if "tomb_col" not in led_ptr and os.path.isdir(
-        os.path.join(root, "grams")
-    ):
-        raise ValueError(
-            "this dedup root predates id-level deletes (no tomb_col in "
-            "its pointer) — its readers would silently ignore the "
-            "tombstones; rebuild with init_minhash_root to enable them"
-        )
-    if "term_buckets" in led_ptr:
-        raise ValueError(
-            "BM25 roots don't take id tombstones — the inverted index "
-            "folds deletes SUBTRACTIVELY; route a 'D' row through "
-            "sync_bm25_cdc_stream instead"
-        )
-    if "generation" in led_ptr:
-        raise ValueError(
-            "graph-bearing roots don't take id tombstones alone — the "
-            "saved graph's edges would keep citing the deleted "
-            "vectors; use delete_graph_ids, which writes the tombstone "
-            "AND publishes the edge-repaired graph as a new generation "
-            "in one flip"
-        )
-    if "tomb_col" not in led_ptr and "id_col" not in led_ptr:
-        # e.g. a PCA moments root: its ledger holds exact integer SUMS,
-        # not id-keyed rows — there is nothing a tombstone could name.
-        # An explicit refusal beats the bare KeyError a caller would
-        # otherwise have to decode.
-        raise ValueError(
-            "this root's ledger has no id-keyed rows to tombstone (its "
-            "pointer records neither tomb_col nor id_col — a moment "
-            "ledger stores sums, not per-id state); removals there are "
-            "the CDC arm's subtract-then-add job (sync_pca_cdc_stream)"
-        )
-    id_col = led_ptr.get("tomb_col", led_ptr.get("id_col"))
-    if isinstance(ids, DataFrame):
-        if id_col in ids.columns:
-            tomb = ids.select(id_col).distinct()
-        elif led_ptr.get("id_col") in ids.columns:
-            # caller passed the root's caller-facing id column (the
-            # docstring's original wording) — alias it to the ledger
-            # tables' canonical tombstone column
-            tomb = ids.select(
-                F.col(led_ptr["id_col"]).alias(id_col)
-            ).distinct()
-        else:
-            raise ValueError(
-                f"ids frame has columns {ids.columns} — expected the "
-                f"root's tombstone column {id_col!r}"
-                + (
-                    f" or its id column {led_ptr['id_col']!r}"
-                    if led_ptr.get("id_col") not in (None, id_col)
-                    else ""
-                )
-            )
-        n = tomb.count()
-    else:
-        # a driver-side id list needs no Spark job to count or dedup
-        uniq = sorted(set(ids))
-        n = len(uniq)
-        id_type = "long" if uniq and isinstance(uniq[0], int) else "string"
-        tomb = spark.createDataFrame([(i,) for i in uniq], f"{id_col} {id_type}")
-    if n > max_affected:
-        raise ValueError(
-            f"delete_index_ids would tombstone {n} ids > max_affected="
-            f"{max_affected} — pass a higher bound explicitly if this "
-            "is intended"
-        )
-    if n == 0:
-        # no-op, and crucially NO epoch: an empty list-built frame has
-        # a GUESSED id type (string) that would poison the deletes
-        # dataset's parquet schema for long-keyed roots
-        return int(led_ptr["max_epoch"])
-    led = EpochLedger(root, {"deletes": None})
-    epoch = int(led_ptr["max_epoch"]) + 1
-    # sweep ANY verb's crash orphan at this number before staging (a
-    # crashed stream batch's posting epoch must not activate when this
-    # delete's flip advances the pointer past it) — ledger.py:
-    # clear_staged_epoch documents the invariant
-    _clear_staged_epoch(root, epoch)
-    led.write_epoch(tomb, "deletes", epoch)
-    _flip_pointer(root, {**led_ptr, "max_epoch": epoch})
-    return epoch
-
-
 def _cdc_batch_ops(
     batch_df: DataFrame, id_col: str, payload_cols, op_col: str
 ) -> tuple[DataFrame, bool, int, int]:
@@ -760,14 +574,14 @@ def _cdc_batch_ops(
     (id, payload, op first letter uppercased), persisted across the
     fold's writes — whether the batch carries any U/D row, the op-D
     row count, and the non-D row count), and ENFORCE the
-    at-most-one-row-per-id-per-batch contract every CDC arm shares
+    at-most-one-row-per-id-per-batch contract every CDC stream shares
     (two versions of an id in one batch have no defined order — one
     tombstone would cover both new rows and the surviving state would
     depend on shuffle order; collapse upstream with
     ``latest_update_per_key``). One batch-sized agg job — the BM25
-    arm's refusal discipline, factored for the vector arms; the D /
-    non-D counts ride in the SAME agg so folds that branch on them
-    (the graph CDC arm) don't pay two extra count() actions per
+    fold's refusal discipline, factored for the id-keyed vector and
+    text folds; the D / non-D counts ride in the SAME agg so folds
+    that branch on them don't pay two extra count() actions per
     micro-batch (optimization r14)."""
     ops = batch_df.select(
         F.col(id_col),
@@ -796,296 +610,193 @@ def _cdc_batch_ops(
     return ops, bool(int(card["ud"] or 0)), n_del, int(card["n"]) - n_del
 
 
-def sync_ivf_cdc_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-) -> None:
-    """Drain a CDC stream of (id, vector, op ∈ I/U/D) rows into an IVF
-    posting ledger — the ONE-VERB update path the insert-only arm and
-    ``delete_index_ids`` previously left as a documented two-step
-    (tombstone, then re-stream: two pointer flips with a crash window
-    where the id is deleted but not yet re-inserted). Per micro-batch
-    the fold writes ONE epoch carrying both sides of the mutation:
-
-    1. a tombstone row for every U/D id (the ``deletes`` table —
-       delete-request-sized, skipped entirely on insert-only batches);
-    2. the non-delete rows routed against the FIXED saved centroids
-       into the epoch's posting partition (the committed corpus is
-       never read — same cost shape as the insert arm);
-
-    published by the one pointer flip. Visibility falls out of the
-    tombstone rule every reader already applies (delete epoch >
-    posting epoch): the SAME epoch's new posting survives its own
-    tombstone, everything older is hidden — so an update is atomic, a
-    delete is a plain tombstone, an op-U on an absent id is an insert
-    (its tombstone hides nothing), and a later re-insert stays
-    visible. Op-I must be a genuinely NEW id (an insert of an existing
-    id would surface both versions — use U; tombstoning inserts too
-    would grow the deletes ledger with the whole insert history and
-    break its delete-request-sized broadcast join). At most one row
-    per id per batch, ENFORCED (``_cdc_batch_ops``). Same exactly-once
-    ledger + checkpoint-lineage contract as every arm."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
+def _fold_sides(
+    batch_df: DataFrame,
+    id_col: str,
+    payload_cols,
+    op_col: str | None,
+    tomb_col: str | None = None,
+):
+    """Split one micro-batch into the sides every id-keyed fold writes:
+    ``(ops, upserts, tomb, dels, has_up)``. ``op_col=None`` declares an
+    insert-only stream — every row is an upsert, nothing is counted,
+    no tombstone is derived, so the fold runs exactly the jobs an
+    insert costs. Otherwise ``_cdc_batch_ops`` guards and counts the
+    batch in one agg job; ``ops`` is its persisted frame (the caller
+    unpersists it), ``tomb`` the distinct U/D ids (named ``tomb_col``
+    when given), ``dels`` the distinct D ids — each ``None`` when the
+    batch has none — and ``has_up`` whether any non-D row exists. A
+    ``delete_ids`` batch (``_DELETE_OP``) is known distinct and all D:
+    it costs no guard job."""
+    if op_col is None:
+        return None, batch_df.select(id_col, *payload_cols), None, None, True
+    if op_col == _DELETE_OP:
+        ids = batch_df.select(id_col)
+        tomb = ids.select(F.col(id_col).alias(tomb_col or id_col))
+        return None, None, tomb, ids, False
+    ops, has_ud, n_del, n_up = _cdc_batch_ops(
+        batch_df, id_col, payload_cols, op_col
     )
+    tomb = dels = None
+    if has_ud:
+        tomb = (
+            ops.filter(F.col("__op").isin("U", "D"))
+            .select(F.col(id_col).alias(tomb_col or id_col))
+            .distinct()
+        )
+    if n_del:
+        dels = ops.filter(F.col("__op") == "D").select(id_col).distinct()
+    upserts = ops.filter(F.col("__op") != "D").select(id_col, *payload_cols)
+    return ops, upserts, tomb, dels, n_up > 0
 
-    led = _ivf_ledger(root)
+
+def _ivf_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
+    """The IVF posting ledger's fold: per batch ONE epoch carrying both
+    sides of the mutation — a tombstone row for every U/D id (the
+    ``deletes`` table, delete-request-sized) and the upserts routed
+    against the FIXED saved centroids into the epoch's posting
+    partition (one Arrow map over the batch; the committed postings
+    are never read). Visibility falls out of the tombstone rule every
+    reader applies (delete epoch > posting epoch): the SAME epoch's new
+    posting survives its own tombstone, everything older is hidden —
+    so an update is atomic, a delete is a plain tombstone, an op-U on
+    an absent id is an insert, and a later re-insert stays visible.
+    Op-I must be a genuinely NEW id (an insert of an existing id would
+    surface both versions — use U; tombstoning inserts too would grow
+    the deletes ledger with the whole insert history)."""
+    root = led.root
 
     def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        if "generation" in ptr:
-            raise ValueError(
-                "graph-bearing roots don't take the posting-only CDC "
-                "arm — a tombstone here would leave the saved graph's "
-                "edges citing the deleted vectors; stream inserts via "
-                "sync_knn_graph_ivf_stream and route updates/deletes "
-                "through delete_graph_ids (edge repair + tombstone in "
-                "one flip)"
-            )
-        with open(os.path.join(root, "centroids.json")) as f:
-            centers = json.load(f)
         id_col, vec_col = ptr["id_col"], ptr["vec_col"]
-        ops, has_ud, n_del, n_up = _cdc_batch_ops(
+        ops, upserts, tomb, _, has_up = _fold_sides(
             batch_df, id_col, (vec_col,), op_col
         )
-        if has_ud:
+        if tomb is not None:
+            led.write_epoch(tomb, "deletes", epoch)
+        if has_up:
             led.write_epoch(
-                ops.filter(F.col("__op").isin("U", "D"))
-                .select(id_col)
-                .distinct(),
-                "deletes",
+                _routed(upserts, _centroids(root), id_col, vec_col),
+                "postings",
                 epoch,
             )
-        led.write_epoch(
-            ops.filter(F.col("__op") != "D").select(
-                F.col(id_col),
-                F.col(vec_col),
-                S_.centroid_assign_udf(centers)(F.col(vec_col)).alias(
-                    "cluster"
-                ),
-            ),
-            "postings",
-            epoch,
-        )
-        ops.unpersist()
+        if ops is not None:
+            ops.unpersist()
         return {"max_epoch": epoch}
 
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start,
-    )
+    return fold
 
 
-def sync_semantic_cdc_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-) -> None:
-    """CDC arm for the GROWING semantic-dedup index — closes the
-    delete-then-restream crash window ``sync_semantic_dedup_stream``
-    documents for re-vectored ids: per micro-batch, ONE epoch carries
-    the U/D tombstones AND the new postings (the
-    ``sync_ivf_cdc_stream`` commit shape), plus the batch's near-dup
-    VERDICTS: the non-delete rows are probed against the committed
-    postings as of the pointer (cluster-pruned, tombstones applied),
-    and pairs whose corpus side is tombstoned IN THIS BATCH are
-    dropped — an updated doc is never flagged against its own
-    superseded version, and a doc can't be a duplicate of one deleted
-    in the same batch (the anti-join is batch-sized, broadcast). At
-    most one row per id per batch, ENFORCED. First-seen-wins and
-    flag-and-audit semantics otherwise unchanged; the whole mutation
-    is one pointer flip."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
-    led = _semantic_ledger(root)
+def _semantic_fold(
+    spark: SparkSession, led: EpochLedger, op_col: str | None
+):
+    """The GROWING semantic-dedup index's fold: per batch ONE epoch
+    carries the U/D tombstones, the upserts' postings (the IVF fold's
+    commit shape), and their near-dup VERDICTS — the upserts probed
+    against the committed postings as of the pointer
+    (``embedding_near_dup_probe``: only the probed clusters are
+    fetched, partition-pruned, tombstones applied), with pairs whose
+    corpus side is tombstoned IN THIS BATCH dropped, so an updated doc
+    is never flagged against its own superseded version (the anti-join
+    is batch-sized, broadcast). First-seen-wins: a batch is checked
+    against corpus + earlier batches, never against itself; every
+    vector enters the index regardless of its own verdict
+    (flag-and-audit)."""
+    root = led.root
 
     def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        with open(os.path.join(root, "centroids.json")) as f:
-            centers = json.load(f)
         id_col, vec_col = ptr["id_col"], ptr["vec_col"]
-        ops, has_ud, n_del, n_up = _cdc_batch_ops(
+        ops, upserts, tomb, _, has_up = _fold_sides(
             batch_df, id_col, (vec_col,), op_col
         )
-        tomb = (
-            ops.filter(F.col("__op").isin("U", "D")).select(id_col).distinct()
-        )
-        upserts = ops.filter(F.col("__op") != "D").select(id_col, vec_col)
-        postings = _synced_postings(
-            spark, led, ptr, ptr["max_epoch"], id_col
-        ).drop("epoch")
-        pairs = S_.embedding_near_dup_probe(
-            postings, centers, upserts, id_col, vec_col,
-            n_probes=ptr["n_probes"], min_cosine=ptr["min_cosine"],
-        )
-        if has_ud:
-            pairs = pairs.join(
-                F.broadcast(tomb.withColumnRenamed(id_col, "corpus_vec")),
-                "corpus_vec",
-                "anti",
-            )
+        if tomb is not None:
             led.write_epoch(tomb, "deletes", epoch)
-        led.write_epoch(pairs, "pairs", epoch)
-        led.write_epoch(
-            upserts.select(
-                F.col(id_col),
-                F.col(vec_col),
-                S_.centroid_assign_udf(centers)(F.col(vec_col)).alias(
-                    "cluster"
-                ),
-            ),
-            "postings",
-            epoch,
-        )
-        ops.unpersist()
+        if has_up:
+            centers = _centroids(root)
+            postings = _synced_postings(
+                spark, led, ptr, ptr["max_epoch"], id_col
+            ).drop("epoch")
+            pairs = S.embedding_near_dup_probe(
+                postings, centers, upserts, id_col, vec_col,
+                n_probes=ptr["n_probes"], min_cosine=ptr["min_cosine"],
+            )
+            if tomb is not None:
+                pairs = pairs.join(
+                    F.broadcast(tomb.withColumnRenamed(id_col, "corpus_vec")),
+                    "corpus_vec",
+                    "anti",
+                )
+            led.write_epoch(pairs, "pairs", epoch)
+            led.write_epoch(
+                _routed(upserts, centers, id_col, vec_col), "postings", epoch
+            )
+        if ops is not None:
+            ops.unpersist()
         return {"max_epoch": epoch}
 
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start,
-    )
+    return fold
 
 
-def sync_minhash_cdc_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-) -> None:
-    """CDC arm for the GROWING MinHash dedup index — the text analog
-    of ``sync_semantic_cdc_stream``: per micro-batch, ONE epoch
-    carries the U/D tombstones (on the ledger's canonical ``doc``
-    column), the non-delete rows' shingles + band keys, and their
-    near-dup verdicts probed against the committed index as of the
-    pointer (band-candidates → bucket-pruned exact verify, tombstones
-    applied) with pairs citing a THIS-BATCH-tombstoned corpus doc
-    dropped — an updated doc is never flagged against its own old
-    text. Visibility is the shared tombstone rule (delete epoch >
-    posting epoch), so the same epoch's new grams survive while every
-    older version is hidden from all later probes, and as-of reads
-    before the update still see the old text's grams until a purging
-    compaction. At most one row per id per batch, ENFORCED. Refused on
-    pre-``tomb_col`` roots (their readers ignore the deletes ledger —
-    same guard as ``delete_index_ids``)."""
+def _minhash_fold(
+    spark: SparkSession, led: EpochLedger, op_col: str | None
+):
+    """The GROWING MinHash dedup index's fold — the text analog of the
+    semantic fold: per batch ONE epoch carries the U/D tombstones (on
+    the ledger's canonical ``doc`` column), the upserts' shingles +
+    band keys, and their near-dup verdicts probed against the
+    committed index as of the pointer (``_probe_pruned``: band
+    candidates, then an exact verify against only the grams buckets
+    the candidate docs hash into), with pairs citing a
+    THIS-BATCH-tombstoned corpus doc dropped. One shingle+band pass per
+    batch: the fold's index build doubles as the probe's query side.
+    A CDC stream is refused on pre-``tomb_col`` roots (their readers
+    ignore the deletes ledger); an insert-only stream continues one,
+    keeping a pre-bucketing root's flat grams layout
+    (``_write_grams_epoch``)."""
     from spacex_data_engineering_pipeline_spark.operators.dedup import (
         build_minhash_index,
     )
 
-    led = _minhash_ledger(root)
+    root = led.root
 
     def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        if "tomb_col" not in ptr:
+        if op_col is not None and "tomb_col" not in ptr:
             raise ValueError(
                 "this dedup root predates id-level deletes (no tomb_col "
                 "in its pointer) — its readers would silently ignore "
                 "the CDC tombstones; rebuild with init_minhash_root"
             )
         id_col, text_col = ptr["id_col"], ptr["text_col"]
-        ops, has_ud, n_del, n_up = _cdc_batch_ops(
-            batch_df, id_col, (text_col,), op_col
+        ops, upserts, tomb, _, has_up = _fold_sides(
+            batch_df, id_col, (text_col,), op_col, ptr.get("tomb_col")
         )
-        tomb = (
-            ops.filter(F.col("__op").isin("U", "D"))
-            .select(F.col(id_col).alias(ptr["tomb_col"]))
-            .distinct()
-        )
-        upserts = ops.filter(F.col("__op") != "D").select(id_col, text_col)
-        bg, bb = build_minhash_index(
-            upserts, id_col, text_col,
-            ptr["num_hashes"], ptr["bands"], ptr["shingle_n"],
-        )
-        pairs = _probe_pruned(spark, root, ptr, bg, bb)
-        if has_ud:
-            pairs = pairs.join(
-                F.broadcast(
-                    tomb.withColumnRenamed(ptr["tomb_col"], "corpus_doc")
-                ),
-                "corpus_doc",
-                "anti",
-            )
+        if tomb is not None:
             led.write_epoch(tomb, "deletes", epoch)
-        led.write_epoch(pairs, "pairs", epoch)
-        _write_grams_epoch(bg, root, epoch, ptr.get("grams_buckets"))
-        led.write_epoch(bb, "bands", epoch)
-        bb.unpersist()
-        bg.unpersist()
-        ops.unpersist()
+        if has_up:
+            bg, bb = build_minhash_index(
+                upserts, id_col, text_col,
+                ptr["num_hashes"], ptr["bands"], ptr["shingle_n"],
+            )
+            pairs = _probe_pruned(spark, root, ptr, bg, bb)
+            if tomb is not None:
+                pairs = pairs.join(
+                    F.broadcast(
+                        tomb.withColumnRenamed(ptr["tomb_col"], "corpus_doc")
+                    ),
+                    "corpus_doc",
+                    "anti",
+                )
+            led.write_epoch(pairs, "pairs", epoch)
+            # ptr.get, no default: a pre-bucketing root (no
+            # grams_buckets) keeps writing UNBUCKETED epochs
+            _write_grams_epoch(bg, root, epoch, ptr.get("grams_buckets"))
+            led.write_epoch(bb, "bands", epoch)
+            bb.unpersist()
+            bg.unpersist()
+        if ops is not None:
+            ops.unpersist()
         return {"max_epoch": epoch}
 
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start,
-    )
-
-
-def sync_ivf_index_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-    fence_sources: bool = False,
-) -> None:
-    """Drain ``source_path`` (parquet file stream of NEW (id, vector)
-    rows) with AvailableNow: per micro-batch, assign the batch against
-    the SAVED centroids (one Arrow map over the batch — the existing
-    100 TB of postings is never rescanned) into its own epoch
-    partition, then publish with one pointer flip.
-
-    This is the exactly-once wrapper ``append_to_ivf_index`` documents
-    itself as needing: plain parquet append replayed = duplicated
-    postings, so instead each epoch writes overwrite-idempotently to
-    ``postings/epoch=<epoch_id+1>`` (invisible to readers until the
-    flip — readers filter epochs ≤ pointer), and a replayed epoch id
-    (≤ ``last_batch_id``) is a no-op. A crash after the epoch write
-    but before the flip leaves an orphan partition that the next
-    replay overwrites and readers never scan.
-
-    Contract: INSERT-only, FAISS ``add`` semantics — re-vectoring an
-    existing id is the kNN-graph sync's job (``sync_knn_graph_stream``
-    evicts stale edges corpus-wide); an IVF posting table has no
-    per-id latest-wins read path, so feeding updates here would
-    surface both versions. ``on_batch_start`` is the crash-injection
-    test hook."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
-    led = _ivf_ledger(root)
-
-    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        with open(os.path.join(root, "centroids.json")) as f:
-            centers = json.load(f)
-        id_col, vec_col = ptr["id_col"], ptr["vec_col"]
-        assigned = batch_df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            S_.centroid_assign_udf(centers)(F.col(vec_col)).alias("cluster"),
-        )
-        led.write_epoch(assigned, "postings", epoch)
-        return {"max_epoch": epoch}
-
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start, fence_sources=fence_sources,
-    )
+    return fold
 
 
 def init_knn_graph_ivf_root(
@@ -1112,12 +823,8 @@ def init_knn_graph_ivf_root(
     ``compact_root`` and ``vacuum_root`` all work on this root
     unchanged — it is the graph ledger and the IVF ledger sharing one
     commit point."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
     os.makedirs(root, exist_ok=True)
-    idx = S_.build_ivf_index(
+    idx = S.build_ivf_index(
         corpus, id_col, vec_col,
         n_clusters=n_clusters, seed=seed, sample_cap=sample_cap,
         persist=False,
@@ -1127,8 +834,8 @@ def init_knn_graph_ivf_root(
     idx.assigned.write.mode("overwrite").partitionBy("cluster").parquet(
         _ivf_epoch_path(root, 0)
     )
-    graph = S_.knn_graph(corpus, id_col, vec_col, k, n_blocks=n_blocks)
-    S_.save_knn_graph(graph, _graph_gen_path(root, 0), id_col, n_buckets=n_buckets)
+    graph = S.knn_graph(corpus, id_col, vec_col, k, n_blocks=n_blocks)
+    S.save_knn_graph(graph, _graph_gen_path(root, 0), id_col, n_buckets=n_buckets)
     _flip_pointer(
         root,
         {
@@ -1144,258 +851,53 @@ def init_knn_graph_ivf_root(
     )
 
 
-def sync_knn_graph_ivf_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-    fence_sources: bool = False,
-) -> None:
-    """Drain ``source_path`` (parquet file stream of NEW (id, vector)
-    rows — INSERT-only, ``knn_graph_ivf_fold``'s append contract;
-    re-vectored ids need ``sync_knn_graph_stream``'s exact upsert fold)
-    with AvailableNow: per micro-batch, fold the batch into the SAVED
-    graph through IVF ROUTING (``knn_graph_ivf_fold`` — only the
-    postings in the batch's probed clusters are read, partition-pruned
-    by the cluster layout), append the batch to the postings ledger as
-    its own epoch, and publish graph generation + postings high-water
-    mark in ONE pointer flip. This is the maintenance path the
-    ``knn_graph_auto`` refusal names for > 2M-row corpora: per-epoch
-    work is |batch| × |probed postings|, never |batch| × N, at the
-    pinned recall dial ``n_probes`` (full width ⇒ the fold is exact —
-    the oracle-graded configuration).
+def _graph_ivf_fold(
+    spark: SparkSession, led: EpochLedger, op_col: str | None
+):
+    """The GRAPH+IVF root's fold — ONE epoch carrying the U/D
+    tombstones, the edge-repaired-then-grown graph generation's delta
+    and the upserts' posting partition (generation and ``max_epoch``
+    advance together):
 
-    Same exactly-once epoch ledger as the other syncs (replays no-op,
-    staged orphans overwritten, one fsync'd pointer flip), and the
-    same checkpoint-wipe hazard (see ``sync_minhash_index_stream``):
-    wiping the checkpoint after NEW source files landed renumbers
-    epochs and can skip them as replays."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
+    1. REPAIR (U/D ids): a ``deletes`` tombstone epoch hides their older
+       postings from every later read, and ``knn_graph_apply_cdc``
+       retires them from the graph against the committed corpus
+       (|affected|·N, affected ≈ in-degree of the tombstoned set);
+    2. INSERT (upserts): ``knn_graph_ivf_fold`` folds them into the
+       repaired graph through IVF ROUTING — only the postings in the
+       batch's probed clusters are read, partition-pruned,
+       |batch| × |probed postings| per epoch, exact at full probe width
+       (after the exact repair the graph is exact over corpus −
+       tombstoned) — and they land as the epoch's postings.
 
-    led = _ivf_ledger(root)
+    An update costs one exact eviction + one routed insert, never a
+    rebuild. Op-I rows must be NEW ids (the routed fold's append
+    contract). The graph is persisted for the fold's lifetime only when
+    the repair stage runs, and the two stages' deltas are
+    localCheckpointed only when both run: an insert-only batch reads
+    its graph once, a delete writes its repair delta directly."""
+    root = led.root
 
     def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
         id_col, vec_col, k = ptr["id_col"], ptr["vec_col"], ptr["k"]
-        with open(os.path.join(root, "centroids.json")) as f:
-            centers = json.load(f)
-        # tombstone-aware (delete_graph_ids writes deletes epochs on
-        # graph+IVF roots): a deleted vector must never re-enter as a
-        # neighbor candidate for later batches
-        postings = _synced_postings(
-            spark, led, ptr, ptr["max_epoch"], id_col
-        ).drop("epoch")
-        prev = _graph_at(spark, root, ptr)
-        updates = batch_df.select(id_col, vec_col)
-        # appends change only the new ids' lists + corpus rows that
-        # admitted a batch neighbor — exactly what lands on disk
-        _write_graph_delta(
-            root, epoch,
-            S_.knn_graph_ivf_fold(
-                postings, centers, updates, id_col, vec_col, k,
-                n_probes=ptr["n_probes"], base_graph=prev,
-            ),
-        )
-        led.write_epoch(
-            updates.select(
-                F.col(id_col),
-                F.col(vec_col),
-                S_.centroid_assign_udf(centers)(F.col(vec_col)).alias(
-                    "cluster"
-                ),
-            ),
-            "postings",
-            epoch,
-        )
-        return {"generation": epoch, "max_epoch": epoch}
-
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start, fence_sources=fence_sources,
-    )
-
-
-def delete_graph_ids(
-    spark: SparkSession, root: str, ids, max_affected: int = 65536
-) -> int:
-    """ID-LEVEL DELETE for GRAPH-BEARING roots — the verb
-    ``delete_index_ids`` refuses (a bare tombstone would leave the
-    saved graph's edges citing the deleted vectors): write the
-    tombstone AND publish the EDGE-REPAIRED graph as a new generation
-    in ONE pointer flip, folding ``knn_graph_apply_cdc``'s delete
-    path (operators/similarity.py — affected rows recomputed against the
-    remaining corpus, unaffected lists kept verbatim, merge ≡ rebuild
-    over corpus − deleted) into the sync family's commit discipline.
-
-    Works on both graph-root kinds:
-
-    - combined graph+IVF roots (``init_knn_graph_ivf_root``): the
-      delete is a ``deletes`` tombstone epoch (every posting reader
-      and the streaming fold anti-join it — the fold's candidate fetch
-      is ``_synced_postings``), the repaired graph is saved as the
-      same-numbered generation, and generation + ``max_epoch`` advance
-      together in the one flip;
-    - plain graph roots (``init_knn_graph_root``): the removal is
-      appended to the generation-stamped ``removed`` log that
-      ``_corpus_at`` nets out of the derived corpus (a later streamed
-      re-upsert of the id outranks the removal — alive again), and the
-      repaired graph is the new generation.
-
-    Interleaves safely with the streaming arms: the stream's next
-    epoch/generation is ``max(epoch_id+1, heads+1)``
-    (``EpochLedger.next_epoch`` consults both heads), so a manual
-    generation never collides with a replayed batch and later folds
-    build on the repaired graph. Crash window: the staged generation
-    dir and tombstone/removal rows above the pointer are invisible
-    (``_corpus_at`` and the posting readers filter by the committed
-    pointer), overwritten by a retry, and swept by the next commit's
-    orphan sweep. ``max_affected`` bounds both the tombstone set and
-    the core's affected-row recompute (hub-scale deletes
-    refuse with the rebuild recommendation). Returns the committed
-    generation — unchanged head for an empty id set (no burned
-    epoch)."""
-    ptr = read_index_pointer(root)
-    if "generation" not in ptr:
-        raise ValueError(
-            "not a graph-bearing root (no generation in its pointer) — "
-            "use delete_index_ids for posting-only ledgers"
-        )
-    id_col, vec_col, k = ptr["id_col"], ptr["vec_col"], ptr["k"]
-    if isinstance(ids, DataFrame):
-        dels = ids.select(id_col).distinct()
-        n = dels.count()
-    else:
-        if not ids:
-            return int(ptr["generation"])
-        # a driver-side id list needs no Spark job to count
-        uniq = sorted(set(ids))
-        n = len(uniq)
-        id_type = "long" if isinstance(uniq[0], int) else "string"
-        dels = spark.createDataFrame(
-            [(i,) for i in uniq], f"{id_col} {id_type}"
-        )
-    if n == 0:
-        return int(ptr["generation"])
-    if n > max_affected:
-        raise ValueError(
-            f"delete_graph_ids would remove {n} ids > max_affected="
-            f"{max_affected} — a hub-scale delete; rebuild the graph "
-            "instead (pass a higher bound explicitly if intended)"
-        )
-    new_gen = max(
-        int(ptr["generation"]), int(ptr.get("max_epoch") or 0)
-    ) + 1
-    _clear_staged_epoch(root, new_gen)
-    is_ivf = "max_epoch" in ptr
-    if is_ivf:
-        led = _ivf_ledger(root)
-        corpus = _synced_postings(
-            spark, led, ptr, ptr["max_epoch"], id_col
-        ).select(id_col, vec_col)
-    else:
-        corpus = _corpus_at(spark, root, ptr)
-    # fold-lifetime persist: probe + keep are separate actions
-    prev = _graph_at(spark, root, ptr).persist()
-    try:
-        # stage only the affected rows' repaired lists + markers for
-        # the deleted/affected ids
-        _write_graph_delta(
-            root, new_gen,
-            S.knn_graph_apply_cdc(
-                corpus, dels, None, id_col, vec_col, k, prev,
-                max_affected=max_affected,
-            ),
-        )
-    finally:
-        prev.unpersist()
-    if is_ivf:
-        EpochLedger(root, {"deletes": None}).write_epoch(
-            dels, "deletes", new_gen
-        )
-        _flip_pointer(
-            root, {**ptr, "generation": new_gen, "max_epoch": new_gen}
-        )
-    else:
-        dels.write.mode("overwrite").parquet(
-            _epoch_path(root, "removed", new_gen)
-        )
-        _flip_pointer(root, {**ptr, "generation": new_gen})
-    return new_gen
-
-
-def sync_knn_graph_ivf_cdc_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-) -> None:
-    """ONE-VERB CDC for the GRAPH+IVF root — the scale arm's
-    counterpart of ``sync_knn_graph_cdc_stream``: op ∈ I/U/D
-    micro-batches fold as ONE epoch carrying the U/D tombstones, the
-    edge-repaired-then-grown graph generation, and the upserts'
-    posting partition, all published by one flip (generation and
-    ``max_epoch`` advance together, as the root's other verbs do).
-
-    Per batch: (1) op-D and op-U ids become a ``deletes`` tombstone
-    epoch — every posting read from here on hides their older
-    versions (``_apply_tombstones``' strictly-later rule; the same
-    epoch's replacement posting survives); (2) the graph retires them
-    via ``knn_graph_apply_cdc`` against the committed corpus
-    (|affected|·N, affected ≈ in-degree of the tombstoned set);
-    (3) the non-delete rows fold into the repaired graph through IVF
-    ROUTING (``knn_graph_ivf_fold`` — |batch| × |probed postings|,
-    partition-pruned, exact at full probe width: after the exact
-    repair the graph is exact over corpus − tombstoned, and the
-    routed insert of the new versions is the graded-exact insert arm)
-    and land as the epoch's postings. So an update costs one exact
-    eviction + one routed insert — never a rebuild, never |batch|·N
-    against the full corpus. At most one row per id per batch,
-    ENFORCED. Same exactly-once ledger + checkpoint-lineage contract;
-    crash-restart pytest-pinned
-    (test_knn_graph_ivf_cdc_sync_crash_restart)."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
-    led = _ivf_ledger(root)
-
-    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        id_col, vec_col, k = ptr["id_col"], ptr["vec_col"], ptr["k"]
-        with open(os.path.join(root, "centroids.json")) as f:
-            centers = json.load(f)
-        ops, has_ud, n_del, n_up = _cdc_batch_ops(
+        ops, upserts, tomb, _, has_up = _fold_sides(
             batch_df, id_col, (vec_col,), op_col
         )
-        tomb = (
-            ops.filter(F.col("__op").isin("U", "D")).select(id_col).distinct()
-        )
-        upserts = ops.filter(F.col("__op") != "D").select(id_col, vec_col)
-        # one-row-per-id is enforced, so "any U/D rows" ⟺ "any tombstone
-        # ids" and the agg's non-D count IS |upserts| — no extra count()
-        n_tomb = has_ud
-        if not n_tomb and not n_up:
+        if tomb is None and not has_up:
             ops.unpersist()
             return {}  # empty batch: bookkeeping only
-        # fold-lifetime persist: the reconstructed graph feeds the
-        # delete probe, the keep stream, the repaired-graph build and
-        # the routed insert — re-executing the delta fold per action
-        # is pure AQE job inflation
-        graph = _graph_at(spark, root, ptr).persist()
+        centers = _centroids(root)
+        graph = _graph_at(spark, root, ptr)
+        if tomb is not None:
+            # fold-lifetime persist: the graph feeds the delete probe,
+            # the keep stream, the repaired-graph build and the routed
+            # insert — re-executing the delta fold per action is pure
+            # AQE job inflation
+            graph = graph.persist()
         base_handle = graph
-        # each stage emits only its graph delta; the eager
-        # localCheckpoints materialize CHURN-sized deltas, never the
-        # full repaired graph
         delta = None
         try:
-            if n_tomb:
+            if tomb is not None:
                 # committed corpus BEFORE this epoch's tombstones — the
                 # repair needs the doomed rows present (survivors = old
                 # − deletes); reads filter epoch ≤ the old head, so the
@@ -1404,12 +906,16 @@ def sync_knn_graph_ivf_cdc_stream(
                     spark, led, ptr, ptr["max_epoch"], id_col
                 ).select(id_col, vec_col)
                 led.write_epoch(tomb, "deletes", epoch)
-                delta = S_.knn_graph_apply_cdc(
+                delta = S.knn_graph_apply_cdc(
                     corpus, tomb, None, id_col, vec_col, k, graph
-                ).localCheckpoint(eager=True)
-                # the repaired graph the insert stage folds into
-                graph = S_.apply_graph_delta(graph, delta, id_col)
-            if n_up:
+                )
+                if has_up:
+                    # the eager localCheckpoints materialize CHURN-sized
+                    # deltas, never the full repaired graph
+                    delta = delta.localCheckpoint(eager=True)
+                    # the repaired graph the insert stage folds into
+                    graph = S.apply_graph_delta(graph, delta, id_col)
+            if has_up:
                 # candidate fetch: committed postings MINUS this epoch's
                 # tombstones (frames at the staged epoch see them), so a
                 # replaced version never re-enters as a neighbor
@@ -1418,38 +924,36 @@ def sync_knn_graph_ivf_cdc_stream(
                     led.frames(spark, "postings", ptr, ptr["max_epoch"]),
                     id_col,
                 ).drop("epoch")
-                grown = S_.knn_graph_ivf_fold(
+                grown = S.knn_graph_ivf_fold(
                     postings_now, centers, upserts, id_col, vec_col, k,
                     n_probes=ptr["n_probes"], base_graph=graph,
-                ).localCheckpoint(eager=True)
-                # one delta epoch for the whole batch: insert-stage lists
-                # win over repair-stage rows for the same id (computed ON
-                # TOP of the repair); no distinct on the anti side —
-                # left_anti tolerates dup keys
-                delta = grown if delta is None else grown.unionByName(
-                    delta.join(grown.select(id_col), id_col, "left_anti")
                 )
+                if delta is None:
+                    delta = grown
+                else:
+                    # one delta epoch for the whole batch: insert-stage
+                    # lists win over repair-stage rows for the same id
+                    # (computed ON TOP of the repair); no distinct on the
+                    # anti side — left_anti tolerates dup keys
+                    grown = grown.localCheckpoint(eager=True)
+                    delta = grown.unionByName(
+                        delta.join(grown.select(id_col), id_col, "left_anti")
+                    )
             _write_graph_delta(root, epoch, delta)
-            led.write_epoch(
-                upserts.select(
-                    F.col(id_col),
-                    F.col(vec_col),
-                    S_.centroid_assign_udf(centers)(F.col(vec_col)).alias(
-                        "cluster"
-                    ),
-                ),
-                "postings",
-                epoch,
-            )
+            if has_up:
+                led.write_epoch(
+                    _routed(upserts, centers, id_col, vec_col),
+                    "postings",
+                    epoch,
+                )
         finally:
-            base_handle.unpersist()
-        ops.unpersist()
+            if tomb is not None:
+                base_handle.unpersist()
+            if ops is not None:
+                ops.unpersist()
         return {"generation": epoch, "max_epoch": epoch}
 
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start,
-    )
+    return fold
 
 
 def init_semantic_dedup_root(
@@ -1471,12 +975,8 @@ def init_semantic_dedup_root(
     probe width (n_probes ≥ n_clusters) makes every batch's verdicts
     EXHAUSTIVE — the oracle-graded configuration; partial width is the
     recall dial for corpora whose near-dups cluster."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
     os.makedirs(root, exist_ok=True)
-    idx = S_.build_ivf_index(
+    idx = S.build_ivf_index(
         corpus, id_col, vec_col,
         n_clusters=n_clusters, seed=seed, sample_cap=sample_cap,
         persist=False,
@@ -1496,74 +996,6 @@ def init_semantic_dedup_root(
             "n_probes": n_probes,
             "min_cosine": min_cosine,
         },
-    )
-
-
-def sync_semantic_dedup_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-    fence_sources: bool = False,
-) -> None:
-    """Drain ``source_path`` (parquet file stream of (id, vector)
-    docs) with AvailableNow: per micro-batch, (1) probe the batch
-    against the posting ledger AS OF the pointer
-    (``embedding_near_dup_probe`` — only the batch's probed clusters
-    are fetched, partition-pruned), writing flagged near-dup pairs to
-    the epoch's pairs partition, then (2) fold the batch into the
-    postings as the same epoch, then (3) publish pairs + growth with
-    one pointer flip. First-seen-wins: batch k's vectors are checked
-    against corpus + batches < k and never against their own batch —
-    the GROWING semantic index that ``semantic_dedup_pairs`` (one
-    static corpus) and ``streaming_minhash_index_sync`` (text
-    shingles) leave uncovered for embeddings. Every vector enters the
-    index regardless of its own verdict (flag-and-audit, as the
-    MinHash sync). Re-vectoring an id = ``delete_index_ids`` (its
-    tombstone hides the old posting from every later probe) followed
-    by re-streaming the new vector. Same exactly-once ledger; same
-    checkpoint-wipe hazard (see ``sync_minhash_index_stream``)."""
-    from spacex_data_engineering_pipeline_spark.operators import (
-        similarity as S_,
-    )
-
-    led = _semantic_ledger(root)
-
-    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        id_col, vec_col = ptr["id_col"], ptr["vec_col"]
-        with open(os.path.join(root, "centroids.json")) as f:
-            centers = json.load(f)
-        postings = _synced_postings(
-            spark, led, ptr, ptr["max_epoch"], id_col
-        ).drop("epoch")
-        batch = batch_df.select(id_col, vec_col)
-        led.write_epoch(
-            S_.embedding_near_dup_probe(
-                postings, centers, batch, id_col, vec_col,
-                n_probes=ptr["n_probes"], min_cosine=ptr["min_cosine"],
-            ),
-            "pairs",
-            epoch,
-        )
-        led.write_epoch(
-            batch.select(
-                F.col(id_col),
-                F.col(vec_col),
-                S_.centroid_assign_udf(centers)(F.col(vec_col)).alias(
-                    "cluster"
-                ),
-            ),
-            "postings",
-            epoch,
-        )
-        return {"max_epoch": epoch}
-
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start, fence_sources=fence_sources,
     )
 
 
@@ -1625,116 +1057,47 @@ def init_pca_moments_root(corpus: DataFrame, root: str, vec_col: str) -> None:
     )
 
 
-def sync_pca_moments_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-    fence_sources: bool = False,
-) -> None:
-    """Drain ``source_path`` (parquet file stream of NEW embedding
-    rows) with AvailableNow: per micro-batch, ONE Arrow pass reduces
-    the batch to its own exact int64 moment table, written
-    overwrite-idempotently to ``moments/epoch=<epoch_id+1>`` and
-    published by one pointer flip — the same epoch-ledger exactly-once
-    protocol as the kNN-graph and IVF syncs (replays no-op, staged
-    orphans invisible + overwritten).
-
-    Why this is the RIGHT streaming shape for PCA: every moment cell
-    is an order-free exact integer sum, so moments(base ∪ batches) =
-    Σ per-epoch moment tables BIT-EXACTLY (``merge_moments``
-    additivity) — the refit model is IDENTICAL to a from-scratch fit
-    over everything seen, the corpus is never rescanned, and per-epoch
-    state is dim²-sized regardless of batch or corpus size. Contract:
-    INSERT-only (moments are sums over disjoint row sets); updates and
-    deletes are ``sync_pca_cdc_stream``'s signed-moment job."""
+def _pca_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
+    """The PCA moment ledger's fold: ONE Arrow pass reduces the batch's
+    live vectors (every row of an insert-only stream; the non-D rows of
+    a CDC stream) to positive exact int64 moments and, on a CDC
+    stream, the U/D rows' BEFORE-IMAGE vectors (the ``old_vec`` column)
+    to NEGATED moments, written together as one signed epoch. Every
+    moment cell is an order-free exact integer sum of the same
+    quantization, so subtracting the identical old vector is bit-exact
+    — the refit over the folded ledger EQUALS a from-scratch fit over
+    (corpus − old versions + new versions), the corpus is never
+    rescanned, and per-epoch state is dim²-sized. Before-images instead
+    of a vector log: moments are the ONLY state this root keeps, so
+    ``old_vec`` must hold EXACTLY the vector previously folded in (the
+    subtraction cannot validate it); op I rows ignore it, op D rows
+    ignore the new-vector column."""
     from spacex_data_engineering_pipeline_spark.operators.linalg import (
         quantized_moments,
     )
 
-    led = _pca_ledger(root)
-
     def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
         vec_col = ptr["vec_col"]
-        m = quantized_moments(
-            batch_df.filter(F.col(vec_col).isNotNull()), vec_col
-        )
+        live = batch_df
+        if op_col is not None:
+            ops = batch_df.withColumn(
+                "__op", F.upper(F.col(op_col).cast("string")).substr(1, 1)
+            )
+            live = ops.filter(F.col("__op") != "D")
+        m = quantized_moments(live.filter(F.col(vec_col).isNotNull()), vec_col)
+        if op_col is not None:
+            m = m.unionByName(
+                quantized_moments(
+                    ops.filter(F.col("__op").isin("U", "D"))
+                    .filter(F.col(_OLD_VEC).isNotNull())
+                    .select(F.col(_OLD_VEC).alias(vec_col)),
+                    vec_col,
+                ).select("i", "j", (-F.col("m")).alias("m"))
+            )
         led.write_epoch(m, "moments", epoch)
         return {"max_epoch": epoch}
 
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start, fence_sources=fence_sources,
-    )
-
-
-def sync_pca_cdc_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    op_col: str = "op",
-    old_vec_col: str = "old_vec",
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-) -> None:
-    """Drain a CDC stream of (vector, old_vector, op ∈ I/U/D) rows into
-    the PCA moment ledger — the subtract-then-add epoch the
-    INSERT-only arm names as its own seam: per micro-batch, ONE Arrow
-    pass reduces the non-delete rows' NEW vectors to positive moments
-    and the update/delete rows' BEFORE-IMAGE vectors to NEGATED
-    moments, written together as one signed epoch. Because every
-    moment cell is an exact int64 sum of the same quantization,
-    subtracting the identical old vector is bit-exact — the refit over
-    the folded ledger EQUALS a from-scratch fit over
-    (corpus − old versions + new versions), and every existing reader
-    (``load_synced_pca_model`` sums, ``compact_root`` sums)
-    handles signed rows unchanged.
-
-    Why before-images instead of a vector log: the PCA arm's whole
-    identity is that moments are the ONLY state — O(dim²) per epoch,
-    the corpus never persisted here (``init_pca_moments_root``). A
-    Debezium-style CDC stream carries the before image anyway; an
-    upstream that can't produce it should keep its own corpus table
-    and diff there. Contract: ``old_vec_col`` must hold EXACTLY the
-    vector previously folded in (same doubles — the subtraction has no
-    way to validate it against state that was never kept); op I rows
-    ignore it, op D rows ignore the new-vector column. Same
-    exactly-once ledger as every arm; crash-restart pytest-pinned."""
-    from spacex_data_engineering_pipeline_spark.operators.linalg import (
-        quantized_moments,
-    )
-
-    led = _pca_ledger(root)
-
-    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        vec_col = ptr["vec_col"]
-        ops = batch_df.withColumn(
-            "__op", F.upper(F.col(op_col).cast("string")).substr(1, 1)
-        )
-        pos = quantized_moments(
-            ops.filter(F.col("__op") != "D").filter(
-                F.col(vec_col).isNotNull()
-            ),
-            vec_col,
-        )
-        neg = quantized_moments(
-            ops.filter(F.col("__op").isin("U", "D"))
-            .filter(F.col(old_vec_col).isNotNull())
-            .select(F.col(old_vec_col).alias(vec_col)),
-            vec_col,
-        ).select("i", "j", (-F.col("m")).alias("m"))
-        led.write_epoch(pos.unionByName(neg), "moments", epoch)
-        return {"max_epoch": epoch}
-
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start,
-    )
+    return fold
 
 
 def load_synced_pca_model(
@@ -1891,7 +1254,7 @@ def read_synced_grams(
         g = g.filter(
             F.col("__bucket").isin(buckets) if buckets else F.lit(False)
         )
-    # id-level tombstones (delete_index_ids) hide grams of deleted docs
+    # id-level tombstones (U/D rows, delete_ids) hide deleted docs' grams
     # — applied AFTER the bucket prune, so the anti-join sees only the
     # fetched rows; legacy roots (no deletes ledger) skip it entirely
     g = _apply_tombstones(
@@ -1979,99 +1342,6 @@ def probe_minhash_root(
         ptr["shingle_n"],
     )
     return release_caches_with(_probe_pruned(spark, root, ptr, bg, bb), bg, bb)
-
-
-def sync_minhash_index_stream(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    root: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    on_batch_start=None,
-    fence_sources: bool = False,
-) -> None:
-    """Drain ``source_path`` (parquet file stream of (id, text) docs)
-    with AvailableNow: per micro-batch, (1) probe the batch against
-    the index AS OF the pointer (``probe_minhash_index`` — O(batch)
-    hashing + one band-key shuffle, the committed 100 TB of postings
-    partition-pruned by epoch), writing flagged near-dup pairs to the
-    epoch's pairs partition, then (2) fold the WHOLE batch's shingles
-    and band keys into the index as the same epoch, then (3) publish
-    pairs + index growth together with one pointer flip.
-
-    This upgrades ``streaming_dedup_against_index`` (static index —
-    batch k is never checked against batches < k) to the GROWING index
-    every continuously-ingesting dedup actually needs: first-seen
-    wins, so a document re-ingested in a later batch is flagged
-    against its earlier twin. Every doc enters the index regardless of
-    its own verdict (flag-and-audit semantics — dropping flagged docs
-    instead is a filter on the pairs table downstream), which keeps
-    each batch's verdicts a pure function of (corpus ∪ earlier
-    batches) — exactly replayable. Same exactly-once ledger as the
-    kNN/IVF/PCA syncs: replayed epochs no-op, a crash between the
-    three staged writes and the flip leaves only invisible orphans
-    that the replay overwrites.
-
-    Per-epoch cost, honestly: O(batch) shingle/band hashing + one
-    band-key shuffle for candidates + a PARTITION-PRUNED fetch of the
-    committed grams buckets the candidate corpus docs hash into, for
-    exact-Jaccard verification (the candidate side is batch-sized, so
-    the join broadcasts it into the fetch) — the grams ledger is
-    bucketed by doc id inside each epoch exactly so this never scans
-    all committed grams (``_write_grams_epoch``; pruning pinned by
-    test_minhash_sync_verify_partition_prunes).
-
-    CHECKPOINT-WIPE HAZARD (shared by all the syncs): exactly-once
-    keys on foreachBatch's ``epoch_id`` scoped to the CHECKPOINT
-    LINEAGE (the pointer's ``checkpoint_token`` — ledger.py:drain).
-    Wiping the checkpoint's CONTENTS at the same path is a proven
-    fixed point for an UNCHANGED source (the re-drain replays epochs
-    0..last and no-ops) — but wiping it AFTER new files landed
-    renumbers epochs from 0, so the not-yet-processed files can be
-    misread as replays and silently skipped. Recover from a lost
-    checkpoint by re-draining the same source listing at the same
-    checkpoint path, or a FRESH checkpoint dir over a source holding
-    ONLY the files past the pointer's high-water mark (a new
-    checkpoint path declares a new lineage: every file in its source
-    is treated as new — pointing it at already-drained files
-    double-applies them). ``fence_sources=True`` removes that last
-    footgun: each committed epoch records the source file paths it
-    applied in a ``sources`` ledger table, and every batch anti-joins
-    its ``input_file_name()`` against the committed set, so
-    re-pointed files fold as empty bookkeeping-only epochs
-    (``EpochLedger.drain`` docstring has the full contract)."""
-    from spacex_data_engineering_pipeline_spark.operators.dedup import (
-        build_minhash_index,
-    )
-
-    led = _minhash_ledger(root)
-
-    def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        # ONE shingle+band pass per batch: the fold's index build doubles
-        # as the probe's query side (probe_minhash_index new_grams/
-        # new_banded contract), cached across the three writes below
-        bg, bb = build_minhash_index(
-            batch_df,
-            ptr["id_col"],
-            ptr["text_col"],
-            ptr["num_hashes"],
-            ptr["bands"],
-            ptr["shingle_n"],
-        )
-        led.write_epoch(_probe_pruned(spark, root, ptr, bg, bb), "pairs", epoch)
-        # ptr.get, no default: a pre-bucketing root (no grams_buckets)
-        # must keep writing UNBUCKETED epochs — one dataset, one layout
-        _write_grams_epoch(bg, root, epoch, ptr.get("grams_buckets"))
-        led.write_epoch(bb, "bands", epoch)
-        bb.unpersist()
-        bg.unpersist()
-        return {"max_epoch": epoch}
-
-    led.drain(
-        spark, source_path, schema, checkpoint_dir, fold,
-        max_files_per_trigger, on_batch_start, fence_sources=fence_sources,
-    )
 
 
 def load_synced_dedup_pairs(
@@ -2171,19 +1441,15 @@ def sync_hybrid_cdc_stream(
     ivf_root: str,
     pairs_path: str,
     checkpoint_base: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
 ) -> dict:
     """ONE CDC stream of (id, text, vector, op ∈ I/U/D) rows applied to
     BOTH serving indexes — the write-path companion of
-    ``record_epoch_pair``: re-vectoring or retiring a document used to
-    mean hand-feeding two separate CDC streams (one per ledger) and
-    remembering to pair them; this verb drains the SAME source files
-    through the BM25 CDC arm (which reads the id/text/op columns) and
-    the IVF CDC arm (id/vector/op — both folds project only their own
-    columns, so one wide source serves both), each under its own
-    checkpoint lineage inside ``checkpoint_base``, then appends one
-    cross-ledger pairing record pinning the two committed heads.
+    ``record_epoch_pair``: the SAME source files drain through
+    ``sync_root(..., op_col="op")`` into the BM25 root (which reads the
+    id/text/op columns) and the IVF root (id/vector/op — each fold
+    projects only its own columns, so one wide source serves both),
+    each under its own checkpoint lineage inside ``checkpoint_base``,
+    then one cross-ledger pairing record pins the two committed heads.
 
     Consistency story, honestly: the two drains are SEQUENTIAL — a
     crash between them leaves the BM25 ledger ahead of the IVF ledger,
@@ -2192,25 +1458,18 @@ def sync_hybrid_cdc_stream(
     recorded pair names heads that both ledgers actually committed; a
     reader serving at the latest pair (``hybrid_rrf_synced_asof``'s
     shape) never observes the torn middle, and re-running this verb
-    after the crash finishes the lagging drain (each arm's own
+    after the crash finishes the lagging drain (each root's own
     exactly-once replay skip makes the finished one a no-op) and then
     records the pair. Returns the appended pair record.
 
     Column names come from each root's pointer (``id_col`` /
     ``text_col`` / ``vec_col``), so the two indexes may disagree on
     the id column's NAME as long as the stream carries both."""
-    import os as _os
-
-    sync_bm25_cdc_stream(
-        spark, source_path, schema, bm25_root,
-        checkpoint_dir=_os.path.join(checkpoint_base, "bm25"),
-        op_col=op_col, max_files_per_trigger=max_files_per_trigger,
-    )
-    sync_ivf_cdc_stream(
-        spark, source_path, schema, ivf_root,
-        checkpoint_dir=_os.path.join(checkpoint_base, "ivf"),
-        op_col=op_col, max_files_per_trigger=max_files_per_trigger,
-    )
+    for name, root in (("bm25", bm25_root), ("ivf", ivf_root)):
+        sync_root(
+            spark, source_path, schema, root,
+            os.path.join(checkpoint_base, name), op_col="op",
+        )
     return record_epoch_pair(
         pairs_path, {"bm25": bm25_root, "ivf": ivf_root}
     )
@@ -2255,6 +1514,189 @@ _PAIR_SIDES = {
     "semantic": ("new_vec", "corpus_vec"),
     "minhash": ("new_doc", "corpus_doc"),
 }
+
+# The one fold per root kind: kind → builder(spark, ledger, op_col)
+# returning the ``fold(ptr, epoch, batch_df) -> pointer advance`` that
+# ``EpochLedger.drain`` and ``delete_ids`` commit. The BM25 builder lives
+# in bm25_sync.py with the rest of the BM25 code (a fold's module is
+# the layer perfbench/spans.py charges its jobs to).
+_KIND_FOLDS = {
+    "graph": _graph_fold,
+    "graph_ivf": _graph_ivf_fold,
+    "ivf": _ivf_fold,
+    "semantic": _semantic_fold,
+    "minhash": _minhash_fold,
+    "pca": _pca_fold,
+    "bm25": _bm25_fold,
+}
+
+
+def _root_ledger(kind: str, root: str) -> EpochLedger:
+    """The root's ledger; a plain graph root writes its own logs (no
+    table layout to declare)."""
+    return (
+        _KIND_LEDGERS[kind](root) if kind in _KIND_LEDGERS
+        else EpochLedger(root, {})
+    )
+
+
+def sync_root(
+    spark: SparkSession,
+    source_path: str,
+    schema,
+    root: str,
+    checkpoint_dir: str,
+    op_col: str | None = None,
+    on_batch_start=None,
+    fence_sources: bool = False,
+) -> None:
+    """THE write path for every ledger root: drain ``source_path`` (a
+    parquet file stream) with AvailableNow into ``root``, one file per
+    micro-batch, each folded by the root kind's ONE fold (kind read
+    from the pointer, ``ledger_root_kind``) and published by one
+    pointer flip (``EpochLedger.drain``: replayed epochs no-op, staged
+    crash orphans are invisible and overwritten). Blocks until the
+    drain completes. ``on_batch_start`` is the crash-injection test
+    hook (called with the epoch id before any work).
+
+    The stream carries the root's pointer-named columns (``id_col`` and
+    ``vec_col`` or ``text_col``). ``op_col=None`` declares an
+    INSERT-ONLY stream of new ids — upserts on the plain graph root,
+    which evicts a re-vectored id's stale edges corpus-wide. Per kind:
+
+    - ivf / graph_ivf: FAISS ``add`` semantics — rows route against
+      the FIXED saved centroids; a posting table has no per-id
+      latest-wins read, so re-feeding an existing id surfaces both
+      versions;
+    - semantic / minhash: first-seen-wins, flag-and-audit — each batch
+      is probed against corpus + earlier batches (never itself) and
+      every row enters the index regardless of its verdict, so a
+      re-ingested document is flagged against its earlier twin;
+    - pca: moments are sums over disjoint row sets;
+    - bm25: a re-ingested doc id would double-count df and tf.
+
+    ``op_col="op"`` (any column name) declares a CDC stream, op ∈
+    I/U/D: at most ONE row per id per batch, ENFORCED (two versions
+    have no defined order — collapse upstream with
+    ``latest_update_per_key``). Updates and deletes hide every older
+    version in the same epoch the new one lands: id tombstones
+    (ivf / graph_ivf / semantic / minhash), the removal log (graph),
+    moments of the ``old_vec`` before-image (pca), or rows negated
+    from the doc log (bm25). A CDC stream is refused on a MinHash
+    root without ``tomb_col`` and a BM25 root without a doc log; an
+    insert-only stream continues them.
+
+    CHECKPOINT-WIPE HAZARD: exactly-once keys on the epoch id within
+    the checkpoint's lineage, so wiping the checkpoint after new files
+    landed can skip them, and a fresh checkpoint over already-drained
+    files double-applies them. ``fence_sources=True`` records each
+    epoch's source files and fences re-pointed ones to bookkeeping-only
+    commits; ``EpochLedger.drain`` has the full contract."""
+    kind = ledger_root_kind(read_index_pointer(root))
+    led = _root_ledger(kind, root)
+    led.drain(
+        spark, source_path, schema, checkpoint_dir,
+        _KIND_FOLDS[kind](spark, led, op_col),
+        on_batch_start, fence_sources=fence_sources,
+    )
+
+
+def delete_ids(
+    spark: SparkSession, root: str, ids, max_affected: int = 65_536
+) -> int:
+    """ID-LEVEL DELETE for any id-keyed root — a right-to-be-forgotten
+    request names specific ids, which whole-epoch compaction can't.
+    The ids are committed as ONE all-D batch through the root kind's
+    fold, with the same orphan sweep → fold → one flip sequence as a
+    drained micro-batch (``EpochLedger.commit``) at ``next_epoch``'s
+    number (the replay cursor is left alone, so a stream interleaves
+    safely). So a delete is exactly what a CDC op-D row does: a
+    tombstone epoch that readers anti-join with delete-epoch >
+    posting-epoch (ivf / semantic / minhash — a later re-insert stays
+    visible, as-of reads before the delete still see the row until
+    ``compact_root(..., purge_deleted=True)``), the same plus the
+    edge-repaired graph delta (graph_ivf), a removal-log entry plus
+    the repaired delta (graph), or the doc's rows negated from the doc
+    log (bm25). A PCA moment root holds no id-keyed rows and no
+    before-image to subtract — refused.
+
+    ``ids`` is a list of id values or a DataFrame holding either the
+    root's tombstone column (``'doc'`` on MinHash roots, recorded as
+    ``tomb_col`` in the pointer) or its caller-facing ``id_col``.
+    ``max_affected`` bounds the distinct id count (a larger set is
+    almost certainly a bug upstream — a hub-scale graph delete wants a
+    rebuild); a DataFrame costs one count() job for it. Returns the
+    committed head — unchanged for an EMPTY id set, which burns no
+    epoch (an empty list-built frame would also guess the id type)."""
+    ptr = read_index_pointer(root)
+    kind = ledger_root_kind(ptr)
+    if kind == "pca":
+        raise ValueError(
+            "this root's ledger has no id-keyed rows to delete (a moment "
+            "ledger stores sums, not per-id state, and keeps no "
+            "before-image to subtract); stream the removed vectors as "
+            "op-D rows with old_vec through sync_root(..., op_col=...)"
+        )
+    id_col = ptr["id_col"]
+    tomb_col = ptr.get("tomb_col", id_col)
+    if isinstance(ids, DataFrame):
+        if tomb_col in ids.columns:
+            idf = ids.select(F.col(tomb_col).alias(id_col))
+        elif id_col in ids.columns:
+            idf = ids.select(id_col)
+        else:
+            raise ValueError(
+                f"ids frame has columns {ids.columns} — expected the "
+                f"root's tombstone column {tomb_col!r}"
+                + (f" or its id column {id_col!r}" if id_col != tomb_col else "")
+            )
+        idf = idf.distinct()
+        n = idf.count()
+    else:
+        # a driver-side id list needs no Spark job to count or dedup
+        uniq = sorted(set(ids))
+        n = len(uniq)
+        id_type = "long" if uniq and isinstance(uniq[0], int) else "string"
+        idf = spark.createDataFrame([(i,) for i in uniq], f"{id_col} {id_type}")
+    if n > max_affected:
+        raise ValueError(
+            f"delete_ids would remove {n} ids > max_affected="
+            f"{max_affected} — pass a higher bound explicitly if this is "
+            "intended (a hub-scale graph delete wants a rebuild)"
+        )
+    if n == 0:
+        return int(ptr["generation" if "generation" in ptr else "max_epoch"])
+    payload, payload_type = (
+        (ptr["text_col"], "string") if "text_col" in ptr
+        else (ptr["vec_col"], "array<double>")
+    )
+    batch = idf.select(
+        id_col,
+        F.lit(None).cast(payload_type).alias(payload),
+        F.lit("D").alias(_DELETE_OP),
+    )
+    led = _root_ledger(kind, root)
+    fold = _KIND_FOLDS[kind](spark, led, _DELETE_OP)
+    epoch = led.next_epoch(ptr)
+    led.commit(ptr, epoch, lambda: fold(ptr, epoch, batch))
+    return epoch
+
+
+def sync_knn_graph_cdc_stream(
+    spark: SparkSession,
+    source_path: str,
+    schema,
+    root: str,
+    checkpoint_dir: str,
+    on_batch_start=None,
+) -> None:
+    """``sync_root(..., op_col="op")`` on a graph root, kept under this
+    name for the benchmark harness that calls and traces it."""
+    sync_root(
+        spark, source_path, schema, root, checkpoint_dir,
+        op_col="op", on_batch_start=on_batch_start,
+    )
+
 
 
 def compact_root(
@@ -2315,7 +1757,7 @@ def compact_root(
     cu = int(ptr.get("compact_upto", 0) or 0)
     if head <= cu:
         # the deletes an earlier PLAIN compaction folded can't be
-        # purged in place (delete_index_ids always bumps the head, so
+        # purged in place (delete_ids always bumps the head, so
         # purging right after a delete never hits this). Recovery:
         # write a fresh epoch (e.g. re-tombstone the same ids), purge.
         raise ValueError(

@@ -1,5 +1,5 @@
 """THE epoch-ledger protocol, factored once (round 13 — previously
-five sync arms hand-rolled this choreography inside index_sync.py):
+every sync arm hand-rolled this choreography inside index_sync.py):
 
 a *ledger root* is a directory holding N epoch-keyed parquet tables
 (``<table>/epoch=<e>/``, each optionally sub-partitioned by one layout
@@ -27,9 +27,10 @@ and on the per-table layout column (doc-id bucket / cluster / term
 bucket). Nothing here ever rewrites committed data outside an
 explicit compaction.
 
-The concrete arms — MinHash dedup, semantic dedup, IVF postings, BM25
-inverted index, PCA moments, kNN-graph generations — live in
-streaming/index_sync.py as thin folds over one ``EpochLedger`` each.
+The concrete root kinds — MinHash dedup, semantic dedup, IVF postings,
+BM25 inverted index, PCA moments, kNN-graph generations — are one fold
+each over one ``EpochLedger`` (streaming/index_sync.py ``sync_root`` /
+``delete_ids``; the BM25 fold lives in streaming/bm25_sync.py).
 Reference parity note: the reference keeps exactly one durable
 artifact current per ingest batch (raw rows + state committed
 together, reference src/database.py:133-223); this module is that
@@ -253,7 +254,7 @@ def clear_staged_epoch(
     must stay dead, but a LATER commit that reuses the same epoch
     number writes only ITS OWN tables — without this sweep, flipping
     the pointer past the orphan's epoch would activate the dead verb's
-    tables (e.g. a crashed ``delete_index_ids``'s tombstones silently
+    tables (e.g. a crashed ``delete_ids``'s tombstones silently
     taking effect after an unrelated stream batch). The sweep is
     restricted to ``tables`` ∪ the registry of table names the
     built-in arms manage (``LEDGER_TABLES``) — a non-ledger directory
@@ -303,10 +304,11 @@ def vacuum_ledger_dirs(root: str, tables: tuple[str, ...]) -> int:
 
 
 class EpochLedger:
-    """One ledger root bound to its table layout — the five sync arms
-    (minhash / semantic / ivf / bm25 / pca, plus the graph arms'
-    posting side) are thin per-batch folds over one instance; what
-    differs per arm is ONLY the table dict and the fold body.
+    """One ledger root bound to its table layout — every root kind's
+    writes (``sync_root`` micro-batches and ``delete_ids`` manual
+    epochs alike) are one per-batch fold over one instance, committed
+    by ``commit``; what differs per kind is ONLY the table dict and the
+    fold body.
 
     ``tables``: {name: partition_column | None}. The partition column
     is applied when present in the frame being written (a legacy
@@ -353,18 +355,17 @@ class EpochLedger:
     ) -> DataFrame | None:
         return ledger_frames(spark, self.root, table, ptr, epoch)
 
-    # -- streaming commit -----------------------------------------------
-    def next_epoch(self, ptr: dict, epoch_id: int) -> int:
-        """The epoch a micro-batch stages as — deterministic given
-        (pointer, epoch_id), so a crash-window replay recomputes the
-        same number and overwrites the orphan. ``max`` with the
-        pointer heads keeps stream epochs monotonic across MANUAL
-        epochs (``delete_index_ids`` bumps ``max_epoch``;
-        ``delete_graph_ids`` bumps ``generation`` — on a pure graph
-        root that is the only head there is, and without it a manual
-        generation would collide with the next stream fold's number
-        and the pointer could move BACKWARDS); on a purely-streamed
-        root it equals the classic ``epoch_id + 1``."""
+    # -- commit ---------------------------------------------------------
+    def next_epoch(self, ptr: dict, epoch_id: int = -1) -> int:
+        """The epoch a commit stages as — deterministic given (pointer,
+        epoch_id), so a crash-window replay recomputes the same number
+        and overwrites the orphan. ``max`` with the pointer heads keeps
+        stream epochs monotonic across MANUAL commits (``delete_ids``,
+        which passes no epoch id and so takes head + 1; on a pure graph
+        root ``generation`` is the only head there is, and without it a
+        manual generation would collide with the next stream fold's
+        number and the pointer could move BACKWARDS); on a
+        purely-streamed root it equals the classic ``epoch_id + 1``."""
         heads = [
             int(ptr[k])
             for k in ("max_epoch", "generation")
@@ -374,6 +375,19 @@ class EpochLedger:
             return epoch_id + 1
         return max(epoch_id + 1, max(heads) + 1)
 
+    def commit(self, ptr: dict, epoch: int, stage, **bookkeeping) -> None:
+        """THE commit sequence of every epoch, drained or manual: sweep
+        any crash orphan at ``epoch`` (it is above the committed head,
+        so whatever is there is a dead commit's — possibly ANOTHER
+        verb's; ``clear_staged_epoch``), run ``stage() -> dict`` to
+        stage the epoch's writes and return the pointer advance, then
+        flip the ONE pointer with the advance and ``bookkeeping`` (a
+        drain's replay cursor). An exception in ``stage`` leaves the
+        pointer untouched."""
+        clear_staged_epoch(self.root, epoch, tuple(self.tables))
+        advance = stage()
+        self.flip({**ptr, **advance, **bookkeeping})
+
     def drain(
         self,
         spark: SparkSession,
@@ -381,18 +395,18 @@ class EpochLedger:
         schema,
         checkpoint_dir: str,
         fold,
-        max_files_per_trigger: int = 1,
         on_batch_start=None,
         fence_sources: bool = False,
     ) -> None:
-        """AvailableNow drain of a parquet file stream with the shared
-        exactly-once commit choreography: per micro-batch, skip
-        replayed epochs (≤ ``last_batch_id``), call
-        ``fold(ptr, epoch, batch_df) -> dict`` to stage the epoch's
-        writes (the dict is the arm's pointer advance, e.g.
-        ``{"max_epoch": epoch}`` or ``{"generation": g, "max_epoch":
-        e}``), then flip the ONE pointer. ``on_batch_start`` is the
-        crash-injection test hook. Blocks until the drain completes.
+        """AvailableNow drain of a parquet file stream, one file per
+        trigger, with the shared exactly-once commit choreography: per
+        micro-batch, skip replayed epochs (≤ ``last_batch_id``), then
+        ``commit`` the batch — ``fold(ptr, epoch, batch_df) -> dict``
+        stages the epoch's writes (the dict is the arm's pointer
+        advance, e.g. ``{"max_epoch": epoch}`` or ``{"generation": g,
+        "max_epoch": e}``) and the ONE pointer flips.
+        ``on_batch_start`` is the crash-injection test hook. Blocks
+        until the drain completes.
 
         Replay detection is scoped to the CHECKPOINT LINEAGE: Spark's
         ``epoch_id`` restarts at 0 under a fresh checkpoint dir, so a
@@ -407,18 +421,19 @@ class EpochLedger:
         checkpoint still no-op. The flipped contract: switching
         checkpoint dirs declares the source's files all-new — reusing
         an already-drained source under a fresh checkpoint double-
-        applies it (for insert-only arms that is duplication; the
-        CDC arms self-heal via their old-version lookup). Wiping the
+        applies it (for an insert-only stream that is duplication; a
+        CDC stream self-heals via its old-version lookup). Wiping the
         checkpoint's CONTENTS at the same path keeps the old token and
-        stays the proven no-op fixed point.
+        stays the proven no-op fixed point; wiping it AFTER new files
+        landed renumbers epochs from 0, so not-yet-processed files can
+        be misread as replays and skipped.
 
-        ``fence_sources=True`` closes that last hazard for the
-        insert-only arms: every committed epoch also records the
-        distinct SOURCE FILE PATHS it applied (a ``sources`` ledger
-        table — file-name-sized, epoch-keyed, swept/compacted/vacuumed
-        like any other table), and each batch anti-joins its rows'
-        ``input_file_name()`` against the committed set before the
-        fold sees them. A fresh checkpoint pointed at already-drained
+        ``fence_sources=True`` closes that last hazard: every committed
+        epoch also records the distinct SOURCE FILE PATHS it applied (a
+        ``sources`` ledger table — file-name-sized, epoch-keyed,
+        swept/compacted/vacuumed like any other table), and each batch
+        anti-joins its rows' ``input_file_name()`` against the
+        committed set before the fold sees them. A fresh checkpoint pointed at already-drained
         files then commits a BOOKKEEPING-ONLY pointer flip (replay
         cursor advances, no epoch written, heads unchanged — an empty
         epoch dir would poison parquet schema inference once it were
@@ -437,6 +452,50 @@ class EpochLedger:
         if fence_sources:
             self.tables.setdefault("sources", None)
 
+        def stage(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
+            if not fence_sources:
+                return fold(ptr, epoch, batch_df)
+            batch_df = batch_df.withColumn("__src_file", F.input_file_name())
+            fenced = None
+            applied = self.frames(spark, "sources", ptr, epoch - 1)
+            if applied is not None:
+                # persist the fenced frame: the anti-join (and its
+                # broadcast of the committed source set) otherwise
+                # re-executes for the isEmpty probe, the sources
+                # write, AND every action the fold runs over the
+                # batch (optimization r14) — batch-sized, dropped
+                # in the finally below
+                batch_df = fenced = batch_df.join(
+                    F.broadcast(
+                        applied.select(
+                            F.col("src_file").alias("__src_file")
+                        ).distinct()
+                    ),
+                    "__src_file",
+                    "left_anti",
+                ).persist()
+            # the try starts at the persist: every exit path — the
+            # isEmpty probe, the sources write, the fold — unpersists
+            # the fenced frame, so an exception cannot leak the cache
+            # for the life of the streaming session (ADVICE r14)
+            try:
+                if fenced is not None and batch_df.isEmpty():
+                    # fully fenced: advance ONLY the replay cursor — no
+                    # epoch dir (an all-empty live tail breaks schema
+                    # inference), no head movement
+                    return {}
+                self.write_epoch(
+                    batch_df.select(
+                        F.col("__src_file").alias("src_file")
+                    ).distinct(),
+                    "sources",
+                    epoch,
+                )
+                return fold(ptr, epoch, batch_df.drop("__src_file"))
+            finally:
+                if fenced is not None:
+                    fenced.unpersist()
+
         def handle(batch_df: DataFrame, epoch_id: int) -> None:
             if on_batch_start is not None:
                 on_batch_start(epoch_id)
@@ -447,74 +506,17 @@ class EpochLedger:
             if last is not None and epoch_id <= last:
                 return  # replayed epoch: already committed
             epoch = self.next_epoch(ptr, epoch_id)
-            # epoch > committed head always, so anything already there
-            # is a crash orphan — possibly ANOTHER verb's (a crashed
-            # manual delete); sweep it so this commit can't activate it
-            clear_staged_epoch(self.root, epoch, tuple(self.tables))
-            fenced = None
-            if fence_sources:
-                batch_df = batch_df.withColumn(
-                    "__src_file", F.input_file_name()
-                )
-                applied = self.frames(spark, "sources", ptr, epoch - 1)
-                if applied is not None:
-                    # persist the fenced frame: the anti-join (and its
-                    # broadcast of the committed source set) otherwise
-                    # re-executes for the isEmpty probe, the sources
-                    # write, AND every action the fold runs over the
-                    # batch (optimization r14) — batch-sized, dropped
-                    # in the finally below
-                    batch_df = fenced = batch_df.join(
-                        F.broadcast(
-                            applied.select(
-                                F.col("src_file").alias("__src_file")
-                            ).distinct()
-                        ),
-                        "__src_file",
-                        "left_anti",
-                    ).persist()
-            # the try starts at the persist: every exit path — the
-            # isEmpty probe, the sources write, the fold — unpersists
-            # the fenced frame, so an exception cannot leak the cache
-            # for the life of the streaming session (ADVICE r14)
-            try:
-                if fence_sources:
-                    if fenced is not None and batch_df.isEmpty():
-                        # fully fenced: advance ONLY the replay cursor —
-                        # no epoch dir (an all-empty live tail breaks
-                        # schema inference), no head movement
-                        self.flip(
-                            {
-                                **ptr,
-                                "last_batch_id": epoch_id,
-                                "checkpoint_token": token,
-                            }
-                        )
-                        return
-                    self.write_epoch(
-                        batch_df.select(
-                            F.col("__src_file").alias("src_file")
-                        ).distinct(),
-                        "sources",
-                        epoch,
-                    )
-                    batch_df = batch_df.drop("__src_file")
-                advance = fold(ptr, epoch, batch_df)
-            finally:
-                if fenced is not None:
-                    fenced.unpersist()
-            self.flip(
-                {
-                    **ptr,
-                    **advance,
-                    "last_batch_id": epoch_id,
-                    "checkpoint_token": token,
-                }
+            self.commit(
+                ptr,
+                epoch,
+                lambda: stage(ptr, epoch, batch_df),
+                last_batch_id=epoch_id,
+                checkpoint_token=token,
             )
 
         q = (
             spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .option("maxFilesPerTrigger", 1)
             .parquet(source_path)
             .writeStream.foreachBatch(handle)
             .option("checkpointLocation", checkpoint_dir)

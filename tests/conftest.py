@@ -55,7 +55,6 @@ SLOW_TESTS = {
     "test_plans.py::test_no_cartesian_or_nested_loop_anywhere",
     "test_stats.py::test_edit_join_matches_bruteforce_with_indels",
     "test_streaming.py::test_bm25_cdc_sync_updates_deletes_crash_restart",
-    "test_streaming.py::test_streaming_bm25_index_sync_crash_restart_prune_retention",
     "test_storage.py::test_txn_crash_sweep_every_step_boundary",
     "test_streaming.py::test_synced_artifact_time_travel",
     "test_streaming.py::test_streaming_semantic_dedup_sync_crash_restart",
@@ -82,17 +81,12 @@ SLOW_TESTS = {
     "test_streaming.py::test_streaming_scd2_sync_heals_crashed_swap",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_maintained_index]",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_click_outcomes_outer]",
-    "test_streaming.py::test_semantic_cdc_sync_crash_restart",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_delete_sync]",
     "test_streaming.py::test_streaming_checkpoint_restart_exactly_once",
-    "test_streaming.py::test_minhash_cdc_sync_crash_restart",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_minhash_index_sync]",
-    "test_streaming.py::test_minhash_sync_continues_pre_bucketing_root",
-    "test_streaming.py::test_ivf_cdc_sync_crash_restart",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_minhash_cdc_sync]",
     "test_graph.py::test_approx_graph_chain_ordering_overlap",
     "test_streaming.py::test_bm25_cdc_null_text_and_empty_index_edges",
-    "test_streaming.py::test_drain_source_fence_minhash_and_bm25_empty_fold",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_ivf_cdc_sync]",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_cdc_sync]",
     "test_streaming.py::test_drain_source_fence_blocks_double_apply",

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.catalog import load_table
@@ -1147,7 +1148,7 @@ def test_streaming_knn_graph_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_knn_graph_stream(
+        index_sync.sync_root(
             spark, str(src), updates.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
         )
@@ -1160,7 +1161,7 @@ def test_streaming_knn_graph_sync_crash_restart(spark, sf_dir, tmp_path):
         os.path.join(root, "applied", "epoch=3")
     )
 
-    index_sync.sync_knn_graph_stream(
+    index_sync.sync_root(
         spark, str(src), updates.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1196,7 +1197,7 @@ def test_streaming_knn_graph_sync_crash_restart(spark, sf_dir, tmp_path):
     # new lineage — test_drain_checkpoint_lineage_scopes_replay_skip)
     ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
     shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_knn_graph_stream(
+    index_sync.sync_root(
         spark, str(src), updates.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1264,7 +1265,7 @@ def test_graph_delta_write_volume_tracks_churn(spark, sf_dir, tmp_path):
         dst = src / f"batch{i:04d}.parquet"
         os.replace(os.path.join(staged, part), str(dst))
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    index_sync.sync_knn_graph_stream(
+    index_sync.sync_root(
         spark, str(src), batches[0].schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1391,7 +1392,7 @@ def test_streaming_ivf_index_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_ivf_index_stream(
+        index_sync.sync_root(
             spark, str(src), inserts.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
         )
@@ -1415,7 +1416,7 @@ def test_streaming_ivf_index_sync_crash_restart(spark, sf_dir, tmp_path):
     }
     assert not committed_ids & orphan_ids
 
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1452,7 +1453,7 @@ def test_streaming_ivf_index_sync_crash_restart(spark, sf_dir, tmp_path):
     # declares a new lineage)
     ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
     shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1520,7 +1521,7 @@ def test_streaming_pca_moment_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_pca_moments_stream(
+        index_sync.sync_root(
             spark, str(src), inserts.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
         )
@@ -1533,7 +1534,7 @@ def test_streaming_pca_moment_sync_crash_restart(spark, sf_dir, tmp_path):
         [(0, 0, 999_999_999), (1, 0, -12345)], "i int, j int, m long"
     ).write.parquet(index_sync._moments_epoch_path(root, 3))
 
-    index_sync.sync_pca_moments_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1552,7 +1553,7 @@ def test_streaming_pca_moment_sync_crash_restart(spark, sf_dir, tmp_path):
     # declares a new lineage)
     ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
     shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_pca_moments_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1615,7 +1616,7 @@ def test_streaming_minhash_index_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_minhash_index_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
         )
@@ -1630,7 +1631,7 @@ def test_streaming_minhash_index_sync_crash_restart(spark, sf_dir, tmp_path):
         [(999, 0, "deadbeef")], "doc long, band_idx int, band_hash string"
     ).write.parquet(index_sync._epoch_path(root, "bands", 3))
 
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1661,7 +1662,7 @@ def test_streaming_minhash_index_sync_crash_restart(spark, sf_dir, tmp_path):
     # declares a new lineage)
     ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
     shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1794,7 +1795,7 @@ def test_streaming_knn_graph_ivf_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_knn_graph_ivf_stream(
+        index_sync.sync_root(
             spark, str(src), inserts.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
         )
@@ -1813,7 +1814,7 @@ def test_streaming_knn_graph_ivf_sync_crash_restart(spark, sf_dir, tmp_path):
         "vec_id long, embedding array<double>, cluster int",
     ).write.partitionBy("cluster").parquet(index_sync._ivf_epoch_path(root, 3))
 
-    index_sync.sync_knn_graph_ivf_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1841,7 +1842,7 @@ def test_streaming_knn_graph_ivf_sync_crash_restart(spark, sf_dir, tmp_path):
     # declares a new lineage)
     ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
     shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_knn_graph_ivf_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1898,7 +1899,7 @@ def test_minhash_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
 
     stage(0, b0)
     stage(1, b1)
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -1943,7 +1944,7 @@ def test_minhash_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
     # lands as live epoch 3 above compact_upto=2, and the union of
     # compact + live matches the imperative growing replay
     stage(2, b2)
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2030,7 +2031,7 @@ def test_streaming_semantic_dedup_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_semantic_dedup_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
         )
@@ -2046,7 +2047,7 @@ def test_streaming_semantic_dedup_sync_crash_restart(spark, sf_dir, tmp_path):
         "vec_id long, embedding array<double>, cluster int",
     ).write.partitionBy("cluster").parquet(index_sync._ivf_epoch_path(root, 3))
 
-    index_sync.sync_semantic_dedup_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2141,7 +2142,7 @@ def test_streaming_bm25_index_sync_crash_restart_prune_retention(
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_bm25_index_stream(
+        index_sync.sync_root(
             spark, str(src), docs.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
         )
@@ -2160,7 +2161,7 @@ def test_streaming_bm25_index_sync_crash_restart_prune_retention(
         [(1_000_000, 50_000_000)], "n_docs long, sum_dl long"
     ).write.parquet(index_sync._epoch_path(root, "stats", 3))
 
-    index_sync.sync_bm25_index_stream(
+    index_sync.sync_root(
         spark, str(src), docs.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2296,7 +2297,7 @@ def test_ivf_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
         dst = src / f"batch{i:04d}.parquet"
         os.replace(os.path.join(split, fname), str(dst))
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2340,7 +2341,7 @@ def test_ivf_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
     dst = src / "batch0002.parquet"
     os.replace(os.path.join(split, parts[2]), str(dst))
     os.utime(dst, (1_700_000_002, 1_700_000_002))
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2390,7 +2391,7 @@ def test_pca_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
         dst = src / f"batch{i:04d}.parquet"
         os.replace(os.path.join(split, fname), str(dst))
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    index_sync.sync_pca_moments_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2418,7 +2419,7 @@ def test_pca_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
     dst = src / "batch0002.parquet"
     os.replace(os.path.join(split, parts[2]), str(dst))
     os.utime(dst, (1_700_000_002, 1_700_000_002))
-    index_sync.sync_pca_moments_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2481,7 +2482,7 @@ def test_synced_artifact_time_travel(spark, sf_dir, tmp_path):
     index_sync.init_ivf_root(
         base, ivf_root, "vec_id", "embedding", n_clusters=8, seed=42
     )
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, ivf_root,
         checkpoint_dir=str(tmp_path / "ckpt_ivf"),
     )
@@ -2501,7 +2502,7 @@ def test_synced_artifact_time_travel(spark, sf_dir, tmp_path):
     # --- PCA: model as of epoch 2 == from-scratch fit over base+b0+b1
     pca_root = str(tmp_path / "pca")
     index_sync.init_pca_moments_root(base, pca_root, "embedding")
-    index_sync.sync_pca_moments_stream(
+    index_sync.sync_root(
         spark, str(src), inserts.schema, pca_root,
         checkpoint_dir=str(tmp_path / "ckpt_pca"),
     )
@@ -2538,7 +2539,7 @@ def test_synced_artifact_time_travel(spark, sf_dir, tmp_path):
         dst = mh_src / f"batch{i:04d}.parquet"
         os.replace(os.path.join(staged, part), str(dst))
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(mh_src), d0.schema, mh_root,
         checkpoint_dir=str(tmp_path / "ckpt_mh"),
     )
@@ -2568,7 +2569,7 @@ def test_synced_artifact_time_travel(spark, sf_dir, tmp_path):
         os.utime(
             g_src / fname, (1_700_000_000 + i, 1_700_000_000 + i)
         )
-    index_sync.sync_knn_graph_stream(
+    index_sync.sync_root(
         spark, str(g_src), inserts.schema, g_root,
         checkpoint_dir=str(tmp_path / "ckpt_g"),
     )
@@ -2619,7 +2620,7 @@ def test_streaming_ivf_appended_vectors_self_retrievable(spark, sf_dir, tmp_path
         dst = src / f"batch{i:04d}.parquet"
         os.replace(os.path.join(split, fname), str(dst))
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), novel.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2726,7 +2727,7 @@ def test_minhash_sync_continues_pre_bucketing_root(spark, sf_dir, tmp_path):
 
     # two batches: batch 1's probe READS the grams table batch 0 wrote
     # into — the step that used to hit the mixed-layout failure
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2778,7 +2779,7 @@ def test_bm25_synced_lazy_queries_are_independent(spark, sf_dir, tmp_path):
     b0.repartition(1).write.parquet(staged)
     part = next(f for f in sorted(os.listdir(staged)) if f.endswith(".parquet"))
     os.replace(os.path.join(staged, part), str(src / "batch0000.parquet"))
-    index_sync.sync_bm25_index_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -2870,9 +2871,10 @@ def test_bm25_cdc_sync_updates_deletes_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_bm25_cdc_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
+            op_col="op",
         )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 1 and ptr["max_epoch"] == 2
@@ -2889,9 +2891,10 @@ def test_bm25_cdc_sync_updates_deletes_crash_restart(spark, sf_dir, tmp_path):
         index_sync._epoch_path(root, "doclog", 3)
     )
 
-    index_sync.sync_bm25_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 2 and ptr["max_epoch"] == 3
@@ -2972,7 +2975,7 @@ def test_ivf_delete_ids_tombstones_reinsert_purge(spark, sf_dir, tmp_path):
     index_sync.init_ivf_root(base, root, "vec_id", "embedding", n_clusters=8)
 
     # tombstone epoch 1 (manual, outside any stream)
-    assert index_sync.delete_index_ids(spark, root, doomed) == 1
+    assert index_sync.delete_ids(spark, root, doomed) == 1
     assert index_sync.read_index_pointer(root)["max_epoch"] == 1
 
     def visible(as_of=None):
@@ -3003,7 +3006,7 @@ def test_ivf_delete_ids_tombstones_reinsert_purge(spark, sf_dir, tmp_path):
     batch.unionByName(reins).repartition(1).write.parquet(staged)
     part = next(f for f in sorted(os.listdir(staged)) if f.endswith(".parquet"))
     os.replace(os.path.join(staged, part), str(src / "batch0000.parquet"))
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), batch.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -3017,7 +3020,7 @@ def test_ivf_delete_ids_tombstones_reinsert_purge(spark, sf_dir, tmp_path):
 
     # the guard refuses absurd tombstone sets
     with pytest.raises(ValueError, match="max_affected"):
-        index_sync.delete_index_ids(spark, root, doomed, max_affected=1)
+        index_sync.delete_ids(spark, root, doomed, max_affected=1)
 
     # purge: physical removal + refusal floor; head reads identical
     assert index_sync.compact_root(spark, root, purge_deleted=True) == 2
@@ -3041,7 +3044,7 @@ def test_ivf_delete_ids_tombstones_reinsert_purge(spark, sf_dir, tmp_path):
 
 
 def test_semantic_dedup_sync_respects_id_deletes(spark, sf_dir, tmp_path):
-    """`delete_index_ids` on a SEMANTIC dedup root: the streaming
+    """`delete_ids` on a SEMANTIC dedup root: the streaming
     probe reads postings through the tombstone anti-join
     (_synced_postings), so a deleted corpus vector stops being flagged
     as a near-dup source while an undeleted twin keeps matching — and
@@ -3073,7 +3076,7 @@ def test_semantic_dedup_sync_respects_id_deletes(spark, sf_dir, tmp_path):
         corpus, root, "vec_id", "embedding",
         n_clusters=8, n_probes=8, min_cosine=0.95, seed=7,
     )
-    assert index_sync.delete_index_ids(spark, root, [c1]) == 1
+    assert index_sync.delete_ids(spark, root, [c1]) == 1
 
     src = tmp_path / "src"
     src.mkdir()
@@ -3081,7 +3084,7 @@ def test_semantic_dedup_sync_respects_id_deletes(spark, sf_dir, tmp_path):
     plants.repartition(1).write.parquet(staged)
     part = next(f for f in sorted(os.listdir(staged)) if f.endswith(".parquet"))
     os.replace(os.path.join(staged, part), str(src / "batch0000.parquet"))
-    index_sync.sync_semantic_dedup_stream(
+    index_sync.sync_root(
         spark, str(src), plants.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -3137,7 +3140,7 @@ def test_compact_root_moves_semantic_pairs_with_postings(
         )
         src = tmp_path / name
         _stage_cdc_batches(tmp_path, src, (plants,))
-        index_sync.sync_semantic_dedup_stream(
+        index_sync.sync_root(
             spark, str(src), plants.schema, root,
             checkpoint_dir=str(tmp_path / f"ck_{name}"),
         )
@@ -3214,7 +3217,7 @@ def test_minhash_delete_ids_reingest_and_purge(spark, sf_dir, tmp_path):
     index_sync.init_minhash_root(
         corpus, root, "doc_id", "text", min_jaccard_micro=300_000
     )
-    assert index_sync.delete_index_ids(spark, root, doomed) == 1
+    assert index_sync.delete_ids(spark, root, doomed) == 1
 
     def stage(i, bdf):
         staged = str(tmp_path / f"stage{i}")
@@ -3229,7 +3232,7 @@ def test_minhash_delete_ids_reingest_and_purge(spark, sf_dir, tmp_path):
     stage(0, b0)
     stage(1, b1)
     stage(2, b2)
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -3279,7 +3282,7 @@ def test_minhash_delete_ids_reingest_and_purge(spark, sf_dir, tmp_path):
     del legacy_ptr["tomb_col"]
     index_sync._flip_pointer(root, legacy_ptr)
     with pytest.raises(ValueError, match="predates id-level deletes"):
-        index_sync.delete_index_ids(spark, root, doomed[:1])
+        index_sync.delete_ids(spark, root, doomed[:1])
 
 
 def test_streaming_pca_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
@@ -3358,9 +3361,10 @@ def test_streaming_pca_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_pca_cdc_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
+            op_col="op",
         )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 0 and ptr["max_epoch"] == 1
@@ -3371,9 +3375,10 @@ def test_streaming_pca_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
         [(0, 0, 999_999)], "i int, j int, m long"
     ).write.parquet(index_sync._moments_epoch_path(root, 2))
 
-    index_sync.sync_pca_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 1 and ptr["max_epoch"] == 2
@@ -3425,7 +3430,7 @@ def test_crashed_verb_orphan_never_activates(spark, sf_dir, tmp_path):
     root = str(tmp_path / "index")
     index_sync.init_ivf_root(base, root, "vec_id", "embedding", n_clusters=8)
 
-    # simulate a delete_index_ids that died between write and flip:
+    # simulate a delete_ids that died between write and flip:
     # tombstones staged at epoch 1, pointer still at max_epoch 0
     some = sorted(base_ids)[:5]
     spark.createDataFrame(
@@ -3441,7 +3446,7 @@ def test_crashed_verb_orphan_never_activates(spark, sf_dir, tmp_path):
     batch.repartition(1).write.parquet(staged)
     part = next(f for f in sorted(os.listdir(staged)) if f.endswith(".parquet"))
     os.replace(os.path.join(staged, part), str(src / "batch0000.parquet"))
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, str(src), batch.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -3464,7 +3469,7 @@ def test_crashed_verb_orphan_never_activates(spark, sf_dir, tmp_path):
     ).write.partitionBy("cluster").parquet(
         index_sync._ivf_epoch_path(root, 2)
     )
-    index_sync.delete_index_ids(spark, root, some)
+    index_sync.delete_ids(spark, root, some)
     assert index_sync.read_index_pointer(root)["max_epoch"] == 2
     visible = {
         r["vec_id"]
@@ -3484,12 +3489,9 @@ def test_bm25_cdc_null_text_and_empty_index_edges(spark, tmp_path):
     delete nets n_docs back out instead of inflating N forever; (2) a
     drain that deletes EVERY document leaves a valid committed state
     whose query returns the empty ranking, not a ZeroDivision; (3)
-    delete_index_ids refuses BM25 roots (their readers never anti-join
-    tombstones) and no-ops on an empty id set without burning a
+    delete_ids no-ops on an empty id set without burning a
     string-typed epoch."""
     import os
-
-    import pytest
 
     from spacex_data_engineering_pipeline_spark.streaming import index_sync
 
@@ -3499,9 +3501,9 @@ def test_bm25_cdc_null_text_and_empty_index_edges(spark, tmp_path):
     root = str(tmp_path / "index")
     index_sync.init_bm25_root(docs, root, "doc_id", "text")
 
-    # (3) refusals first, on the committed base
-    with pytest.raises(ValueError, match="BM25 roots"):
-        index_sync.delete_index_ids(spark, root, [1])
+    # (3) first, on the committed base
+    assert index_sync.delete_ids(spark, root, []) == 0
+    assert index_sync.read_index_pointer(root)["max_epoch"] == 0
 
     nulltext = F.lit(None).cast("string")
     b0 = spark.createDataFrame([(3,)], "doc_id long").select(
@@ -3522,9 +3524,10 @@ def test_bm25_cdc_null_text_and_empty_index_edges(spark, tmp_path):
         dst = src / f"batch{i:04d}.parquet"
         os.replace(os.path.join(staged, part), str(dst))
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    index_sync.sync_bm25_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["max_epoch"] == 2
@@ -3559,12 +3562,12 @@ def test_ivf_delete_empty_set_is_a_no_op(spark, sf_dir, tmp_path):
     )
     root = str(tmp_path / "index")
     index_sync.init_ivf_root(emb, root, "vec_id", "embedding", n_clusters=4)
-    assert index_sync.delete_index_ids(spark, root, []) == 0
+    assert index_sync.delete_ids(spark, root, []) == 0
     assert index_sync.read_index_pointer(root)["max_epoch"] == 0
     assert not os.path.isdir(os.path.join(root, "deletes"))
     # a real (long-typed) delete afterwards works unpoisoned
     vid = int(emb.select("vec_id").first()["vec_id"])
-    assert index_sync.delete_index_ids(spark, root, [vid]) == 1
+    assert index_sync.delete_ids(spark, root, [vid]) == 1
     got = {
         r["vec_id"]
         for r in index_sync.load_synced_ivf(spark, root)
@@ -3632,9 +3635,10 @@ def test_bm25_netting_compact_tracks_live_size(spark, sf_dir, tmp_path):
 
     stage(0, b0)
     stage(1, b1)
-    index_sync.sync_bm25_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
 
     # ground truth: fresh index over the live (post-CDC) corpus
@@ -3715,9 +3719,10 @@ def test_bm25_netting_compact_tracks_live_size(spark, sf_dir, tmp_path):
         f for f in sorted(os.listdir(staged)) if f.endswith(".parquet")
     )
     os.replace(os.path.join(staged, part), str(src2 / "batch0000.parquet"))
-    index_sync.sync_bm25_cdc_stream(
+    index_sync.sync_root(
         spark, str(src2), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt2"),
+        op_col="op",
     )
     truth2_root = str(tmp_path / "truth2")
     index_sync.init_bm25_root(
@@ -3771,9 +3776,10 @@ def test_bm25_cdc_refuses_duplicate_doc_rows_in_batch(spark, sf_dir, tmp_path):
         spark, root, ("spark", "vector", "stream"), k=10
     ).collect()
     with pytest.raises(StreamingQueryException, match="at most ONE row"):
-        index_sync.sync_bm25_cdc_stream(
+        index_sync.sync_root(
             spark, str(src), bad.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"),
+            op_col="op",
         )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["max_epoch"] == 0 and ptr["last_batch_id"] is None
@@ -3808,7 +3814,7 @@ def test_delete_index_ids_refusals_and_id_col_alias(spark, sf_dir, tmp_path):
     proot = str(tmp_path / "pca")
     index_sync.init_pca_moments_root(emb, proot, "embedding")
     with pytest.raises(ValueError, match="no id-keyed rows"):
-        index_sync.delete_index_ids(spark, proot, [1, 2])
+        index_sync.delete_ids(spark, proot, [1, 2])
 
     # MinHash dedup root: tomb_col='doc' but id_col='doc_id' — a frame
     # named by EITHER must work
@@ -3820,13 +3826,13 @@ def test_delete_index_ids_refusals_and_id_col_alias(spark, sf_dir, tmp_path):
     droot = str(tmp_path / "dedup")
     index_sync.init_minhash_root(docs, droot, "doc_id", "text")
     two = docs.limit(2).select("doc_id")
-    e1 = index_sync.delete_index_ids(spark, droot, two)  # id_col frame
-    e2 = index_sync.delete_index_ids(
+    e1 = index_sync.delete_ids(spark, droot, two)  # id_col frame
+    e2 = index_sync.delete_ids(
         spark, droot, two.withColumnRenamed("doc_id", "doc")
     )
     assert e2 == e1 + 1
     with pytest.raises(ValueError, match="expected the root's tombstone"):
-        index_sync.delete_index_ids(
+        index_sync.delete_ids(
             spark, droot, two.withColumnRenamed("doc_id", "wrong")
         )
 
@@ -3893,7 +3899,7 @@ def test_drain_checkpoint_lineage_scopes_replay_skip(spark, sf_dir, tmp_path):
 
     src0 = str(tmp_path / "src0")
     stage(b0, src0)
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src0, b0.schema, root, checkpoint_dir=str(tmp_path / "ckpt0")
     )
     assert index_sync.read_index_pointer(root)["max_epoch"] == 1
@@ -3902,7 +3908,7 @@ def test_drain_checkpoint_lineage_scopes_replay_skip(spark, sf_dir, tmp_path):
     # again, but a new lineage: must commit as epoch 2, not skip
     src1 = str(tmp_path / "src1")
     stage(b1, src1)
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src1, b1.schema, root, checkpoint_dir=str(tmp_path / "ckpt1")
     )
     ptr = index_sync.read_index_pointer(root)
@@ -3913,7 +3919,7 @@ def test_drain_checkpoint_lineage_scopes_replay_skip(spark, sf_dir, tmp_path):
     # (b) wiped checkpoint contents at the SAME path, unchanged source:
     # replays epoch 0 under the recorded token — still a no-op
     shutil.rmtree(str(tmp_path / "ckpt1"))
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src1, b1.schema, root, checkpoint_dir=str(tmp_path / "ckpt1")
     )
     assert index_sync.read_index_pointer(root)["max_epoch"] == 2
@@ -3991,9 +3997,10 @@ def test_ivf_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_ivf_cdc_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
+            op_col="op",
         )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 0 and ptr["max_epoch"] == 1
@@ -4010,9 +4017,10 @@ def test_ivf_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
         os.path.join(root, "deletes", "epoch=2")
     )
 
-    index_sync.sync_ivf_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 2 and ptr["max_epoch"] == 3
@@ -4121,9 +4129,10 @@ def test_semantic_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
             n_clusters=4, n_probes=4, min_cosine=0.95, seed=7,
         )
         try:
-            index_sync.sync_semantic_cdc_stream(
+            index_sync.sync_root(
                 spark, str(src), b0.schema, root,
                 checkpoint_dir=ckpt, on_batch_start=poison,
+                op_col="op",
             )
         except StreamingQueryException:
             if poison is None:
@@ -4159,9 +4168,10 @@ def test_semantic_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
     spark.createDataFrame([(3,)], "vec_id long").write.parquet(
         index_sync._epoch_path(root, "deletes", 2)
     )
-    index_sync.sync_semantic_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     got = {
         (r.new_vec, r.corpus_vec, r.cos_sim)
@@ -4236,9 +4246,10 @@ def test_minhash_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_minhash_cdc_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
+            op_col="op",
         )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 0 and ptr["max_epoch"] == 1
@@ -4247,9 +4258,10 @@ def test_minhash_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
     ).write.partitionBy("__bucket").parquet(
         index_sync._epoch_path(root, "grams", 2)
     )
-    index_sync.sync_minhash_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 1 and ptr["max_epoch"] == 2
@@ -4291,7 +4303,7 @@ def test_minhash_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
 
 
 def test_delete_graph_ids_plain_root_reupsert_and_crash(spark, sf_dir, tmp_path):
-    """``delete_graph_ids`` on a PLAIN graph root: the removal nets
+    """``delete_ids`` on a PLAIN graph root: the removal nets
     the ids out of the derived corpus and publishes the edge-repaired
     graph as a new generation; a later streamed RE-UPSERT of a removed
     id outranks the removal (alive again); and a crash window (staged
@@ -4329,11 +4341,11 @@ def test_delete_graph_ids_plain_root_reupsert_and_crash(spark, sf_dir, tmp_path)
         base, root, "vec_id", "embedding", k=4, n_blocks=4, n_buckets=8
     )
     _stage_cdc_batches(tmp_path, src, (b0,))
-    index_sync.sync_knn_graph_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    gen = index_sync.delete_graph_ids(spark, root, doomed)
+    gen = index_sync.delete_ids(spark, root, doomed)
     ptr = index_sync.read_index_pointer(root)
     assert ptr["generation"] == gen
 
@@ -4364,7 +4376,7 @@ def test_delete_graph_ids_plain_root_reupsert_and_crash(spark, sf_dir, tmp_path)
     os.utime(
         str(src / "batch0001.parquet"), (1_700_000_001, 1_700_000_001)
     )
-    index_sync.sync_knn_graph_stream(
+    index_sync.sync_root(
         spark, str(src), b1.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -4399,12 +4411,12 @@ def test_delete_graph_ids_plain_root_reupsert_and_crash(spark, sf_dir, tmp_path)
     assert corpus_now.count() == final1.count()
 
     # empty delete set: no-op, no burned generation
-    assert index_sync.delete_graph_ids(spark, root, []) == ptr["generation"]
+    assert index_sync.delete_ids(spark, root, []) == ptr["generation"]
 
 
 def test_delete_graph_ids_refusals(spark, sf_dir, tmp_path):
-    """Guard rails: non-graph roots are routed to delete_index_ids;
-    hub-scale deletes refuse with the rebuild recommendation."""
+    """Guard rail: hub-scale graph deletes refuse with the rebuild
+    recommendation."""
     import pytest
 
     from spacex_data_engineering_pipeline_spark.streaming import index_sync
@@ -4418,18 +4430,13 @@ def test_delete_graph_ids_refusals(spark, sf_dir, tmp_path):
             F.col("embedding").cast("array<double>").alias("embedding"),
         )
     )
-    ivf_root = str(tmp_path / "ivf")
-    index_sync.init_ivf_root(emb, ivf_root, "vec_id", "embedding", n_clusters=4)
-    with pytest.raises(ValueError, match="not a graph-bearing root"):
-        index_sync.delete_graph_ids(spark, ivf_root, [1])
-
     groot = str(tmp_path / "graph")
     index_sync.init_knn_graph_root(
         emb, groot, "vec_id", "embedding", k=3, n_blocks=4, n_buckets=4
     )
     two = [int(r["vec_id"]) for r in emb.limit(2).collect()]
     with pytest.raises(ValueError, match="max_affected"):
-        index_sync.delete_graph_ids(spark, groot, two, max_affected=1)
+        index_sync.delete_ids(spark, groot, two, max_affected=1)
 
 
 def test_minhash_purge_pairs_total_sweep(spark, sf_dir, tmp_path):
@@ -4457,7 +4464,7 @@ def test_minhash_purge_pairs_total_sweep(spark, sf_dir, tmp_path):
         corpus, root, "doc_id", "text", min_jaccard_micro=300_000
     )
     _stage_cdc_batches(tmp_path, src, (plants0,))
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src), plants0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
@@ -4470,7 +4477,7 @@ def test_minhash_purge_pairs_total_sweep(spark, sf_dir, tmp_path):
     # tombstone one flagged plant AND one cited corpus doc
     new_id = sorted(pairs0)[0][0]
     corpus_id = next(c for (n, c) in sorted(pairs0) if n != new_id)
-    index_sync.delete_index_ids(spark, root, [int(new_id), int(corpus_id)])
+    index_sync.delete_ids(spark, root, [int(new_id), int(corpus_id)])
 
     # then RE-INGEST the deleted plant's id with the VERBATIM text of
     # a fresh corpus doc: the post-re-insert verdict (new pair — the
@@ -4482,7 +4489,7 @@ def test_minhash_purge_pairs_total_sweep(spark, sf_dir, tmp_path):
     )
     src2 = tmp_path / "src2"
     _stage_cdc_batches(tmp_path, src2, (reing,))
-    index_sync.sync_minhash_index_stream(
+    index_sync.sync_root(
         spark, str(src2), reing.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt2"),
     )
@@ -4583,9 +4590,10 @@ def test_knn_graph_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_knn_graph_cdc_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
+            op_col="op",
         )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 0 and ptr["generation"] == 1
@@ -4604,9 +4612,10 @@ def test_knn_graph_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
         os.path.join(root, "removed", "epoch=2")
     )
 
-    index_sync.sync_knn_graph_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 2 and ptr["generation"] == 3
@@ -4684,9 +4693,10 @@ def test_knn_graph_ivf_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
             raise RuntimeError(f"injected crash before batch {epoch_id}")
 
     with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_knn_graph_ivf_cdc_stream(
+        index_sync.sync_root(
             spark, str(src), b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
+            op_col="op",
         )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 0
@@ -4713,9 +4723,10 @@ def test_knn_graph_ivf_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
         n_buckets=8,
     )
 
-    index_sync.sync_knn_graph_ivf_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 1
@@ -4799,7 +4810,7 @@ def test_drain_source_fence_blocks_double_apply(spark, sf_dir, tmp_path):
 
     src = str(tmp_path / "src")
     _stage_one_file(b0, src, "batch0000.parquet")
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src, b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt0"), fence_sources=True,
     )
@@ -4808,7 +4819,7 @@ def test_drain_source_fence_blocks_double_apply(spark, sf_dir, tmp_path):
 
     # fresh checkpoint, SAME already-drained file: fenced — no dup rows,
     # bookkeeping-only flip (replay cursor moves, head does not)
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src, b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt1"), fence_sources=True,
     )
@@ -4821,7 +4832,7 @@ def test_drain_source_fence_blocks_double_apply(spark, sf_dir, tmp_path):
     # mixed continuation: old file + one NEW file under another fresh
     # checkpoint — only the new file's rows apply
     _stage_one_file(b1, src, "batch0001.parquet", mtime=1_700_000_001)
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src, b1.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt2"), fence_sources=True,
     )
@@ -4832,7 +4843,7 @@ def test_drain_source_fence_blocks_double_apply(spark, sf_dir, tmp_path):
     # fence survives retention: compact + vacuum, then re-point again
     assert index_sync.compact_root(spark, root) > 0
     index_sync.vacuum_root(root)
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src, b1.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt3"), fence_sources=True,
     )
@@ -4843,7 +4854,7 @@ def test_drain_source_fence_blocks_double_apply(spark, sf_dir, tmp_path):
     root2 = str(tmp_path / "index2")
     index_sync.init_ivf_root(base, root2, "vec_id", "embedding", n_clusters=4)
     for ck in ("c0", "c1"):
-        index_sync.sync_ivf_index_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root2,
             checkpoint_dir=str(tmp_path / ck),
         )
@@ -4893,7 +4904,7 @@ def test_drain_source_fence_crash_replay_exactly_once(spark, sf_dir, tmp_path):
             raise RuntimeError("injected crash before flip")
 
     with pytest.raises(StreamingQueryException):
-        index_sync.sync_ivf_index_stream(
+        index_sync.sync_root(
             spark, src, b0.schema, root,
             checkpoint_dir=str(tmp_path / "ckpt"), fence_sources=True,
             on_batch_start=crash_after_stage,
@@ -4901,7 +4912,7 @@ def test_drain_source_fence_crash_replay_exactly_once(spark, sf_dir, tmp_path):
     # orphan staged above the pointer: invisible (head still 0)
     assert index_sync.read_index_pointer(root)["max_epoch"] == 0
 
-    index_sync.sync_ivf_index_stream(
+    index_sync.sync_root(
         spark, src, b0.schema, root,
         checkpoint_dir=str(tmp_path / "ckpt"), fence_sources=True,
     )
@@ -4944,7 +4955,7 @@ def test_drain_source_fence_minhash_and_bm25_empty_fold(spark, sf_dir, tmp_path)
         num_hashes=16, bands=4, shingle_n=3,
     )
     for ck in ("m0", "m1"):
-        index_sync.sync_minhash_index_stream(
+        index_sync.sync_root(
             spark, src, batch.schema, mh_root,
             checkpoint_dir=str(tmp_path / ck), fence_sources=True,
         )
@@ -4959,7 +4970,7 @@ def test_drain_source_fence_minhash_and_bm25_empty_fold(spark, sf_dir, tmp_path)
     bm_root = str(tmp_path / "bm")
     bm25_sync.init_bm25_root(corpus, bm_root, "doc_id", "text")
     for ck in ("b0", "b1"):
-        bm25_sync.sync_bm25_index_stream(
+        index_sync.sync_root(
             spark, src, batch.schema, bm_root,
             checkpoint_dir=str(tmp_path / ck), fence_sources=True,
         )
@@ -5039,9 +5050,10 @@ def test_hybrid_cdc_stream_crash_between_drains(spark, sf_dir, tmp_path):
     # verb's own checkpoint path, then the process died
     import os
 
-    bm25_sync.sync_bm25_cdc_stream(
+    index_sync.sync_root(
         spark, str(src), cdc.schema, broot,
         checkpoint_dir=os.path.join(ckpt_base, "bm25"),
+        op_col="op",
     )
     assert read_epoch_pairs(pairs_path) == []  # torn middle: no pair
     bm_head = bm25_sync.read_index_pointer(broot)["max_epoch"]
@@ -5113,7 +5125,7 @@ def test_maintain_root_policy_per_kind(spark, sf_dir, tmp_path):
         b = emb.filter(F.col("vec_id") % 4 == m)
         src = tmp_path / f"src{i}"
         _stage_cdc_batches(tmp_path, src, (b,))
-        index_sync.sync_ivf_index_stream(
+        index_sync.sync_root(
             spark, str(src), b.schema, root,
             checkpoint_dir=str(tmp_path / f"ck{i}"),
         )
@@ -5153,7 +5165,7 @@ def test_maintain_root_policy_per_kind(spark, sf_dir, tmp_path):
         (emb.filter(F.col("vec_id") % 4 == 1),
          emb.filter(F.col("vec_id") % 4 == 2)),
     )
-    index_sync.sync_knn_graph_stream(
+    index_sync.sync_root(
         spark, str(gsrc), gbase.schema, groot,
         checkpoint_dir=str(tmp_path / "gck"),
     )
@@ -5231,9 +5243,10 @@ def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
     )
     src0 = tmp_path / "src0"
     _stage_cdc_batches(tmp_path, src0, (b0, b1))
-    index_sync.sync_knn_graph_cdc_stream(
+    index_sync.sync_root(
         spark, str(src0), b0.schema, root,
         checkpoint_dir=str(tmp_path / "ck0"),
+        op_col="op",
     )
     ptr = index_sync.read_index_pointer(root)
     before = {
@@ -5283,9 +5296,10 @@ def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
     )
     src1 = tmp_path / "src1"
     _stage_cdc_batches(tmp_path, src1, (b2,))
-    index_sync.sync_knn_graph_cdc_stream(
+    index_sync.sync_root(
         spark, str(src1), b2.schema, root,
         checkpoint_dir=str(tmp_path / "ck1"),
+        op_col="op",
     )
     vid = F.col("vec_id")
     final = (
@@ -5330,3 +5344,184 @@ def test_graph_corpus_rebase_retention(spark, sf_dir, tmp_path):
         for r in index_sync.load_synced_graph(spark, root).collect()
     }
     assert got == truth
+
+
+# ---------------------------------------------------------------------
+# one write path for every ledger root: sync_root + delete_ids
+
+
+def test_sync_and_delete_public_surface():
+    """One write path per root: the public ``sync_*``/``delete_*`` names
+    of the ledger sync modules are exactly ``sync_root``, ``delete_ids``,
+    the hybrid pair drain and the two per-kind CDC names the benchmark
+    harness calls and traces by name (perfbench/workloads.py,
+    perfbench/spans.py) — per-family verbs cannot grow back."""
+    from spacex_data_engineering_pipeline_spark.streaming import (
+        bm25_sync,
+        index_sync,
+    )
+
+    def public(mod):
+        return {
+            n for n, v in vars(mod).items()
+            if n.startswith(("sync_", "delete_")) and callable(v)
+        }
+
+    assert public(index_sync) == {
+        "sync_root",
+        "delete_ids",
+        "sync_hybrid_cdc_stream",
+        "sync_knn_graph_cdc_stream",
+    }
+    assert public(bm25_sync) == {"sync_bm25_cdc_stream"}
+
+
+_EVERY_KIND = ("graph", "graph_ivf", "ivf", "semantic", "minhash", "pca", "bm25")
+
+
+def _kind_case(spark, sf_dir, kind):
+    """(base, batch, init(df, root), read(root), ids(read result)) for
+    one root kind at ≤ 60 rows: ``read`` collects the root's committed
+    state, ``ids`` names the ids visible in it."""
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    text = kind in ("minhash", "bm25")
+    id_col = "doc_id" if text else "vec_id"
+    rows = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", "text")
+        if text
+        else load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("embedding"),
+        )
+    )
+    ids = [r[0] for r in rows.select(id_col).orderBy(id_col).limit(30).collect()]
+    base = rows.filter(F.col(id_col).isin(ids[:24]))
+    batch = rows.filter(F.col(id_col).isin(ids[24:]))
+    if text:
+        # two verbatim twins of base docs make the dedup verdicts real
+        batch = batch.unionByName(
+            rows.filter(F.col(id_col).isin(ids[:2])).select(
+                (F.col(id_col) + F.lit(10_000_000)).alias(id_col), "text"
+            )
+        )
+
+    def graph(root):
+        return {
+            (r.vec_id, r.rnk): (r.neighbor, round(r.cos_sim, 6))
+            for r in index_sync.load_synced_graph(spark, root).collect()
+        }
+
+    def graph_ids(edges):
+        return {i for i, _ in edges} | {n for n, _ in edges.values()}
+
+    def postings(root):
+        return {
+            (r.vec_id, r.cluster)
+            for r in index_sync.load_synced_ivf(spark, root).assigned.collect()
+        }
+
+    def posting_ids(state):
+        return {i for i, _ in state}
+
+    if kind == "graph":
+        return base, batch, lambda df, root: index_sync.init_knn_graph_root(
+            df, root, "vec_id", "embedding", k=3, n_blocks=2, n_buckets=2
+        ), graph, graph_ids
+    if kind == "graph_ivf":
+        return base, batch, lambda df, root: (
+            index_sync.init_knn_graph_ivf_root(
+                df, root, "vec_id", "embedding", k=3, n_clusters=2,
+                n_probes=2, n_blocks=2, n_buckets=2,
+            )
+        ), graph, graph_ids
+    if kind == "ivf":
+        return base, batch, lambda df, root: index_sync.init_ivf_root(
+            df, root, "vec_id", "embedding", n_clusters=2
+        ), postings, posting_ids
+    if kind == "semantic":
+        return base, batch, lambda df, root: (
+            index_sync.init_semantic_dedup_root(
+                df, root, "vec_id", "embedding", n_clusters=2, n_probes=2,
+                min_cosine=0.3,
+            )
+        ), lambda root: (
+            postings(root),
+            {tuple(r) for r in
+             index_sync.load_synced_semantic_pairs(spark, root).collect()},
+        ), lambda state: posting_ids(state[0])
+    if kind == "minhash":
+        return base, batch, lambda df, root: index_sync.init_minhash_root(
+            df, root, "doc_id", "text", num_hashes=16, bands=4
+        ), lambda root: (
+            {r.doc for r in index_sync.read_synced_grams(spark, root).collect()},
+            {tuple(r) for r in
+             index_sync.load_synced_dedup_pairs(spark, root).collect()},
+        ), lambda state: state[0]
+    if kind == "pca":
+        def model(root):
+            m = index_sync.load_synced_pca_model(spark, root, n_components=2)
+            return m.n_rows, m.mean.tolist(), [v.tolist() for v in m.basis]
+
+        return base, batch, lambda df, root: index_sync.init_pca_moments_root(
+            df, root, "embedding"
+        ), model, None
+    return base, batch, lambda df, root: index_sync.init_bm25_root(
+        df, root, "doc_id", "text"
+    ), lambda root: [
+        (r.doc_id, r.score)
+        for r in index_sync.bm25_topk_synced(
+            spark, root, ("the", "of", "and"), k=60
+        ).collect()
+    ], lambda state: {d for d, _ in state}
+
+
+@pytest.mark.parametrize(
+    "kind", ("graph", "graph_ivf", "ivf", "semantic", "minhash", "pca", "bm25")
+)
+def test_sync_root_and_delete_ids_every_kind(spark, sf_dir, tmp_path, kind):
+    """Per root kind: an insert-only ``sync_root`` drain and a CDC drain
+    of the same rows tagged I (U on the plain graph, whose inserts are
+    upserts) on twin roots commit identical reads; ``delete_ids`` of two
+    ids hides them and returns the new head (a BM25 delete re-ranks like
+    a rebuild over the live corpus); a PCA root refuses deletes."""
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    base, batch, init, read, ids = _kind_case(spark, sf_dir, kind)
+    id_col = batch.columns[0]
+    tagged = batch.withColumn("op", F.lit("U" if kind == "graph" else "I"))
+    if kind == "pca":
+        tagged = tagged.withColumn("old_vec", F.lit(None).cast("array<double>"))
+    plain, cdc = str(tmp_path / "plain"), str(tmp_path / "cdc")
+    init(base, plain)
+    shutil.copytree(plain, cdc)
+    for root, df, op_col in ((plain, batch, None), (cdc, tagged, "op")):
+        src = tmp_path / f"src_{op_col}"
+        _stage_cdc_batches(tmp_path, src, (df,))
+        index_sync.sync_root(
+            spark, str(src), df.schema, root,
+            checkpoint_dir=str(tmp_path / f"ckpt_{op_col}"), op_col=op_col,
+        )
+    after_sync = read(plain)
+    assert after_sync
+    assert after_sync == read(cdc)
+
+    if kind == "pca":
+        with pytest.raises(ValueError, match="no id-keyed rows"):
+            index_sync.delete_ids(spark, plain, [1, 2])
+        return
+    doomed = [r[0] for r in base.select(id_col).orderBy(id_col).limit(2).collect()]
+    head = index_sync.delete_ids(spark, plain, doomed)
+    ptr = index_sync.read_index_pointer(plain)
+    assert head == 2 == ptr["generation" if "generation" in ptr else "max_epoch"]
+    after_delete = read(plain)
+    assert not set(doomed) & ids(after_delete)
+    assert ids(after_delete) < ids(after_sync) or kind == "bm25"
+    if kind == "bm25":
+        fresh = str(tmp_path / "rebuild")
+        init(base.unionByName(batch).filter(~F.col(id_col).isin(doomed)), fresh)
+        assert after_delete == read(fresh)
