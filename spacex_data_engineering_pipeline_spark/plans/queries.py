@@ -8963,22 +8963,24 @@ def streaming_bm25_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 root): ``bm25_keyword_search`` re-tokenizes the
     corpus per query, but a production retrieval index is a PERSISTED
     artifact documents fold into as they arrive. Here the base corpus
-    (doc_id % 5 ≠ 0) is indexed once — postings and per-term document
-    frequencies term-bucket-partitioned, one model-sized stats row
-    (n_docs, sum_dl) — and the remaining 20% arrives as a
-    3-micro-batch stream; each epoch is ONE tokenize pass over the
-    batch (document sets are disjoint, so df and the stats sums are
-    additive — the committed postings are never read or rewritten),
-    published by one pointer flip.
+    (doc_id % 5 ≠ 0) is indexed once — postings term-bucket-partitioned
+    (per-term document frequency is derived from them at query time),
+    the corpus totals (n_docs, sum_dl) in the pointer — and the
+    remaining 20% arrives as a 3-micro-batch stream; each epoch is ONE
+    tokenize pass over the batch (document sets are disjoint, so df
+    and the totals are additive — the committed postings are never
+    read or rewritten), published by one pointer flip that also
+    appends the epoch's cumulative totals.
 
     The graded result is the same 3-term top-10 as the batch scorer,
-    answered FROM the synced index (``bm25_topk_synced``: stats fold
-    to the identical exact N/avgdl doubles, the query reads only the
-    terms' bucket partitions — partition-pruned, pytest-pinned), and
-    the oracle is the batch formulation over the full corpus — a
-    dropped epoch, a double-counted df, or a stats drift all flip the
-    ranking. Crash-restart and retention (compact/vacuum) are
-    pytest-pinned alongside the other ledger arms."""
+    answered FROM the synced index (``bm25_topk_synced``: the
+    pointer's totals give the identical exact N/avgdl doubles, the
+    query reads only the terms' bucket partitions — partition-pruned,
+    pytest-pinned — and plans without a Spark job), and the oracle is
+    the batch formulation over the full corpus — a dropped epoch, a
+    double-counted df, or a totals drift all flip the ranking.
+    Crash-restart and retention (compact/vacuum) are pytest-pinned
+    alongside the other ledger arms."""
     import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
@@ -13873,10 +13875,11 @@ def streaming_bm25_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/index_sync.py:sync_root, op_col="op"). Per batch, the old
     version of each touched doc is fetched from the doc-id-bucketed
     DOC LOG (partition-pruned to the batch's buckets — the committed
-    postings are never read) and its exact postings/df/stats rows are
-    written NEGATED alongside the new version's positive rows; readers
-    fold per-(doc,term) tf/dl and per-term df as sums and drop
-    non-positive rows — the additive-moments discipline with a sign
+    postings are never read) and its exact posting rows are written
+    NEGATED alongside the new version's positive rows (its n/Σdl
+    subtracted from the pointer's corpus totals); readers fold
+    per-(doc,term) tf/dl as sums, drop non-positive rows and count the
+    survivors per term as df — the additive-moments discipline with a sign
     bit, so N and avgdl stay exact integers across updates.
 
     The scenario: base corpus (doc_id % 5 ≠ 0) indexed once; batch 1
@@ -13885,7 +13888,7 @@ def streaming_bm25_cdc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     DELETES doc_id % 11 = 3 of the base (disjoint from the updates).
     The graded result is the synced 3-term top-10 after the drain, and
     the oracle is a from-scratch batch BM25 over the post-CDC corpus —
-    a double-counted df, a missed tombstone, a stats drift, or a
+    a double-counted df, a missed tombstone, a totals drift, or a
     resurrected deleted doc all flip the ranking. Crash-restart,
     re-insert-after-delete, as-of time travel, and compaction are
     pytest-pinned (test_bm25_cdc_sync_updates_deletes_crash_restart)."""

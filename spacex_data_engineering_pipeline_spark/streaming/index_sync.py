@@ -34,7 +34,8 @@ through the same fold. Per kind, the fold:
   ledger, pairs + growth in one flip;
 - bm25 (streaming/bm25_sync.py, readers re-exported here): one
   tokenize pass per batch, updates and deletes as SIGNED rows derived
-  from the doc log; queries read only their terms' buckets and rank
+  from the doc log, corpus totals carried in the pointer; queries
+  plan without a Spark job, read only their terms' buckets and rank
   bit-identically to a batch rescore (``bm25_topk_synced``).
 
 Id lifecycle on the tombstone kinds (ivf, graph_ivf, semantic,
@@ -124,9 +125,11 @@ from spacex_data_engineering_pipeline_spark.streaming.ledger import (
 # re-exported here so the catalog/tests keep one address for the family.
 from spacex_data_engineering_pipeline_spark.streaming.bm25_sync import (  # noqa: F401
     _bm25_fold,
+    _bm25_id_type,
     _bm25_ledger,
     _term_bucket,
     _bm25_net,
+    _bm25_stats_compact,
     bm25_topk_synced,
     init_bm25_root,
 )
@@ -623,8 +626,8 @@ def _fold_sides(
     no tombstone is derived, so the fold runs exactly the jobs an
     insert costs. Otherwise ``_cdc_batch_ops`` guards and counts the
     batch in one agg job; ``ops`` is its persisted frame (the caller
-    unpersists it), ``tomb`` the distinct U/D ids (named ``tomb_col``
-    when given), ``dels`` the distinct D ids — each ``None`` when the
+    unpersists it), ``tomb`` the U/D ids (named ``tomb_col``
+    when given), ``dels`` the D ids — each ``None`` when the
     batch has none — and ``has_up`` whether any non-D row exists. A
     ``delete_ids`` batch (``_DELETE_OP``) is known distinct and all D:
     it costs no guard job."""
@@ -637,15 +640,15 @@ def _fold_sides(
     ops, has_ud, n_del, n_up = _cdc_batch_ops(
         batch_df, id_col, payload_cols, op_col
     )
+    # the guard proved the batch's ids distinct and non-null (count ==
+    # countDistinct): no .distinct() re-shuffle of the id sides
     tomb = dels = None
     if has_ud:
-        tomb = (
-            ops.filter(F.col("__op").isin("U", "D"))
-            .select(F.col(id_col).alias(tomb_col or id_col))
-            .distinct()
+        tomb = ops.filter(F.col("__op").isin("U", "D")).select(
+            F.col(id_col).alias(tomb_col or id_col)
         )
     if n_del:
-        dels = ops.filter(F.col("__op") == "D").select(id_col).distinct()
+        dels = ops.filter(F.col("__op") == "D").select(id_col)
     upserts = ops.filter(F.col("__op") != "D").select(id_col, *payload_cols)
     return ops, upserts, tomb, dels, n_up > 0
 
@@ -1717,13 +1720,17 @@ def compact_root(
     survives, so pruned reads keep pruning), except on pca — moments
     are SUMMED, so as-of reads below the compaction point are refused
     — and on a plain graph root, whose applied/removed logs are
-    REBASED into one corpus snapshot (``_rebase_graph_corpus``).
+    REBASED into one corpus snapshot (``_rebase_graph_corpus``). A
+    BM25 root's pointer keeps only the head's ``corpus_stats`` entry;
+    the folded ones move to a history file beside the compact postings
+    (``_bm25_stats_compact``), so the pointer stays live-tail-sized.
 
     ``purge_deleted=True`` is the hard removal, recording ``purge_floor
     = head`` (as-of reads below it are refused): tombstoned rows and
     the spent tombstones leave ivf / graph_ivf / semantic / minhash
     roots (``_tombstone_purge``), a BM25 root is NETTED down to its
-    live corpus (``_bm25_net``); pca and plain-graph roots ignore it.
+    live corpus (``_bm25_net``) with no stats history (states below
+    the floor are refused); pca and plain-graph roots ignore it.
     It is refused when nothing is uncompacted — a silent no-op would
     leave "purged" rows readable. ``purge_pairs=True`` (minhash and
     semantic only; requires ``purge_deleted``) extends the purge to
@@ -1741,6 +1748,10 @@ def compact_root(
         )
     if kind == "graph":
         return _rebase_graph_corpus(spark, root, ptr)
+    stage = None
+    if kind == "bm25":
+        _bm25_id_type(ptr)  # refuses a root it could not read back
+        stage = _bm25_stats_compact(root, ptr, purge_deleted)
     led = _KIND_LEDGERS[kind](root)
     if kind == "pca":
         return led.compact(
@@ -1752,7 +1763,7 @@ def compact_root(
             ),
         )
     if not purge_deleted:
-        return led.compact(spark)
+        return led.compact(spark, stage=stage)
     head = ptr["max_epoch"]
     cu = int(ptr.get("compact_upto", 0) or 0)
     if head <= cu:
@@ -1765,13 +1776,12 @@ def compact_root(
             f"compact_upto={cu}): the staged-compact commit can't "
             "rewrite a live compact in place"
         )
-    transform = (
-        _bm25_net
-        if kind == "bm25"
-        else _tombstone_purge(spark, led, ptr, kind, purge_pairs)
-    )
+    if kind == "bm25":
+        transform = _bm25_net
+    else:
+        transform = _tombstone_purge(spark, led, ptr, kind, purge_pairs)
     return led.compact(
-        spark, transform=transform, extra={"purge_floor": head}
+        spark, transform=transform, extra={"purge_floor": head}, stage=stage
     )
 
 

@@ -20,12 +20,19 @@ parquet min/max stats skip row groups below an as-of filter), and
 superseded compacts, and staged crash orphans — the committed tail
 and the pointer-named compact are never touched.
 
-Scale posture: the pointer is O(1) bytes; per-epoch state is whatever
-the arm's fold writes (batch-sized postings, model-sized moments);
-reads partition-prune on epoch (a partition column in the live tail)
-and on the per-table layout column (doc-id bucket / cluster / term
-bucket). Nothing here ever rewrites committed data outside an
-explicit compaction.
+Scale posture: the pointer is O(1) bytes, except that a BM25 root's
+carries its corpus totals (``corpus_stats``: one ~30-byte
+``[epoch, n_docs, sum_dl]`` entry per committed epoch of the live
+tail — every compaction moves the entries it folds into a history file
+beside the compact postings), so they commit in the same flip as the
+epoch's tables and a query needs no Spark job to read them; per-epoch state is
+whatever the arm's fold writes (batch-sized postings, model-sized
+moments); reads partition-prune on epoch (a partition column in the
+live tail) and on the per-table layout column (doc-id bucket / cluster
+/ term bucket), and a reader that knows a table's schema passes it
+(``ledger_frames(schema=...)``) to skip the parquet schema-inference
+job. Nothing here ever rewrites committed data outside an explicit
+compaction.
 
 The concrete root kinds — MinHash dedup, semantic dedup, IVF postings,
 BM25 inverted index, PCA moments, kNN-graph generations — are one fold
@@ -188,7 +195,12 @@ def live_epochs(root: str, table: str) -> list[int]:
 
 
 def ledger_frames(
-    spark: SparkSession, root: str, table: str, ptr: dict, epoch: int
+    spark: SparkSession,
+    root: str,
+    table: str,
+    ptr: dict,
+    epoch: int,
+    schema: str | None = None,
 ) -> DataFrame | None:
     """Committed rows of an epoch-keyed ledger table as of ``epoch``,
     compaction-aware: the compact dataset (all epochs ≤ the pointer's
@@ -199,20 +211,24 @@ def ledger_frames(
     pruned at file listing). Returns None when neither side has
     committed rows in range (e.g. the pairs table of a fresh root).
     The returned frame keeps ``epoch`` (and the layout column where
-    the table has one) for callers to filter/drop."""
+    the table has one) for callers to filter/drop. ``schema`` (a DDL
+    string naming every column, ``epoch`` and the layout column
+    included) replaces parquet schema inference — one Spark job per
+    read — with the caller's known layout."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     cu = int(ptr.get("compact_upto", 0) or 0)
     # cu == 0 means nothing was ever compacted: epoch 0 itself is live
     lo = cu if cu > 0 else -1
     frames = []
     if any(lo < e <= epoch for e in live_epochs(root, table)):
         frames.append(
-            spark.read.parquet(os.path.join(root, table))
+            reader.parquet(os.path.join(root, table))
             .filter((F.col("epoch") > lo) & (F.col("epoch") <= epoch))
             .withColumn("epoch", F.col("epoch").cast("int"))
         )
     if cu > 0 and os.path.isdir(compact_path(root, table, cu)):
         frames.append(
-            spark.read.parquet(compact_path(root, table, cu)).filter(
+            reader.parquet(compact_path(root, table, cu)).filter(
                 F.col("epoch") <= epoch
             )
         )
@@ -230,11 +246,12 @@ def ledger_frames(
 # subdirs must never be swept by an unrelated commit; restricting the
 # sweep to names a ledger arm actually manages closes that hazard.
 # Arms with custom table names pass them explicitly via ``tables``.
+# BM25 keeps no stats table: its corpus totals ride the pointer.
 LEDGER_TABLES = frozenset(
     {
         "grams", "bands", "pairs", "deletes",  # minhash dedup
         "postings",                             # IVF / semantic / graph-IVF
-        "stats", "doclog",                      # BM25
+        "doclog",                               # BM25
         "moments",                              # PCA
         "applied", "removed",                   # plain graph roots' logs
         "graph_delta",                          # graph delta generations
@@ -351,9 +368,14 @@ class EpochLedger:
         writer.parquet(self.epoch_path(table, epoch))
 
     def frames(
-        self, spark: SparkSession, table: str, ptr: dict, epoch: int
+        self,
+        spark: SparkSession,
+        table: str,
+        ptr: dict,
+        epoch: int,
+        schema: str | None = None,
     ) -> DataFrame | None:
-        return ledger_frames(spark, self.root, table, ptr, epoch)
+        return ledger_frames(spark, self.root, table, ptr, epoch, schema)
 
     # -- commit ---------------------------------------------------------
     def next_epoch(self, ptr: dict, epoch_id: int = -1) -> int:
@@ -526,7 +548,9 @@ class EpochLedger:
         q.awaitTermination()
 
     # -- retention --------------------------------------------------------
-    def compact(self, spark: SparkSession, transform=None, extra=None) -> int:
+    def compact(
+        self, spark: SparkSession, transform=None, extra=None, stage=None
+    ) -> int:
         """Fold every committed epoch at or below the pointer into one
         compact dataset per table (``<table>_compact/upto=<head>``,
         staged then published by one pointer flip — readers only
@@ -535,7 +559,11 @@ class EpochLedger:
         head)`` says otherwise (the PCA arm SUMS moments there; a
         ``None`` return skips the table entirely — the purge path's
         spent tombstones). ``extra`` merges into the flipped pointer
-        (e.g. the purge floor). All tables move under the one shared
+        (e.g. the purge floor). ``stage(head)``, when given, runs after
+        the compact tables are written and before the flip — arm state
+        that must publish WITH the compact (BM25's corpus-stats
+        history, written beside the compact postings) — and returns
+        more keys to merge. All tables move under the one shared
         ``compact_upto`` — compacting a subset would let the vacuum
         drop the rest's uncompacted rows. Returns epochs newly
         folded."""
@@ -560,7 +588,8 @@ class EpochLedger:
             if part and part in df.columns:
                 writer = writer.partitionBy(part)
             writer.parquet(compact_path(self.root, table, head))
-        self.flip({**ptr, "compact_upto": head, **(extra or {})})
+        staged = stage(head) if stage is not None else {}
+        self.flip({**ptr, "compact_upto": head, **(extra or {}), **staged})
         return head - cu
 
     def vacuum(self) -> int:

@@ -86,7 +86,6 @@ SLOW_TESTS = {
     "test_queries_oracle.py::test_query_matches_oracle[streaming_minhash_index_sync]",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_minhash_cdc_sync]",
     "test_graph.py::test_approx_graph_chain_ordering_overlap",
-    "test_streaming.py::test_bm25_cdc_null_text_and_empty_index_edges",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_ivf_cdc_sync]",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_cdc_sync]",
     "test_streaming.py::test_drain_source_fence_blocks_double_apply",

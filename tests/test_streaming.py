@@ -6,6 +6,7 @@ input, and the watermark+window aggregation over a streamed events table.
 from __future__ import annotations
 
 import json
+import re
 import shutil
 
 import pytest
@@ -2105,11 +2106,12 @@ def test_streaming_bm25_index_sync_crash_restart_prune_retention(
 ):
     """The streaming BM25 index survives a crash MID-COMMIT-WINDOW and
     a checkpoint-wiped re-drain (epochs 0-1 commit, sink dies at epoch
-    2, garbage postings + stats staged above the pointer, restart
-    converges), the synced ranking equals the batch scorer over the
-    full corpus, a query reads ONLY its terms' bucket partitions
-    (partition-pruned), time travel re-ranks as of a past epoch, and
-    retention (compact + vacuum) leaves the ranking row-exact."""
+    2, garbage postings staged above the pointer, restart converges
+    with the pointer's corpus totals equal to a rebuild's), the synced
+    ranking equals the batch scorer over the full corpus, a query
+    reads ONLY its terms' bucket partitions (partition-pruned), time
+    travel re-ranks as of a past epoch, and retention (compact +
+    vacuum) leaves the ranking row-exact."""
     import os
 
     import pytest
@@ -2149,17 +2151,13 @@ def test_streaming_bm25_index_sync_crash_restart_prune_retention(
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 1 and ptr["max_epoch"] == 2
 
-    # worst crash window: garbage staged above the pointer — stats
-    # garbage is the sharpest probe (one wrong row shifts EVERY score)
+    # worst crash window: garbage staged above the pointer
     spark.createDataFrame(
         [("zzz", 999, 99, 99, 0)],
         "term string, doc long, tf long, dl long, __tbucket int",
     ).write.partitionBy("__tbucket").parquet(
         index_sync._epoch_path(root, "postings", 3)
     )
-    spark.createDataFrame(
-        [(1_000_000, 50_000_000)], "n_docs long, sum_dl long"
-    ).write.parquet(index_sync._epoch_path(root, "stats", 3))
 
     index_sync.sync_root(
         spark, str(src), docs.schema, root,
@@ -2167,6 +2165,12 @@ def test_streaming_bm25_index_sync_crash_restart_prune_retention(
     )
     ptr = index_sync.read_index_pointer(root)
     assert ptr["last_batch_id"] == 2 and ptr["max_epoch"] == 3
+    # the totals flipped with each epoch end at a rebuild's over the
+    # same (full) corpus
+    rebuild_root = str(tmp_path / "rebuild")
+    index_sync.init_bm25_root(docs, rebuild_root, "doc_id", "text")
+    rebuild = index_sync.read_index_pointer(rebuild_root)["corpus_stats"]
+    assert ptr["corpus_stats"][-1] == [3, *rebuild[0][1:]]
 
     terms = ("spark", "vector", "stream")
     got = [
@@ -2880,10 +2884,7 @@ def test_bm25_cdc_sync_updates_deletes_crash_restart(spark, sf_dir, tmp_path):
     assert ptr["last_batch_id"] == 1 and ptr["max_epoch"] == 2
 
     # worst crash window: garbage staged above the pointer on the
-    # stats (sharpest: one row shifts every score) and doclog tables
-    spark.createDataFrame(
-        [(1_000_000, 50_000_000)], "n_docs long, sum_dl long"
-    ).write.parquet(index_sync._epoch_path(root, "stats", 3))
+    # doclog table
     spark.createDataFrame(
         [(999_999, ["zzz"], 1, 0)],
         "doc long, w array<string>, dl int, __dbucket int",
@@ -2913,6 +2914,9 @@ def test_bm25_cdc_sync_updates_deletes_crash_restart(spark, sf_dir, tmp_path):
     truth_root = str(tmp_path / "truth")
     index_sync.init_bm25_root(final, truth_root, "doc_id", "text")
     terms = ("spark", "vector", "stream")
+    # the signed totals in the pointer net to the rebuild's
+    truth_stats = index_sync.read_index_pointer(truth_root)["corpus_stats"]
+    assert ptr["corpus_stats"][-1] == [3, *truth_stats[0][1:]]
 
     def topk(r, **kw):
         return [
@@ -3535,17 +3539,190 @@ def test_bm25_cdc_null_text_and_empty_index_edges(spark, tmp_path):
     # (1)+(2): the null-text insert was counted AND its delete found
     # the doclog old version, so the fully-deleted index nets to
     # n_docs == 0 — and the query returns the empty ranking
-    led = index_sync._bm25_ledger(root)
-    st = (
-        led.frames(spark, "stats", ptr, 2)
-        .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-        .first()
-    )
-    assert int(st["n"]) == 0 and int(st["s"]) == 0
+    assert ptr["corpus_stats"] == [[0, 2, 4], [1, 3, 4], [2, 0, 0]]
     out = index_sync.bm25_topk_synced(spark, root, ("spark",), k=5)
     assert out.collect() == []
     assert out.schema["doc_id"].dataType.typeName() == "long"
 
+
+def test_bm25_synced_query_plans_without_jobs(spark, sf_dir, tmp_path):
+    """A synced BM25 query is ONE lazy plan: building it submits no
+    Spark job (corpus totals come from the pointer, the term-bucket
+    filter constant-folds into a partition filter, postings are read
+    with the recorded schema) and collecting it costs at most 6; every
+    postings scan it runs prunes on ``__tbucket``. Its top-k equals a fresh
+    rebuild's at the head, as of the pre-CDC epoch, and after a
+    purging compaction; as-of reads below the purge floor and a root
+    whose pointer lacks ``corpus_stats`` are refused."""
+    import json
+
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+    from spacex_data_engineering_pipeline_spark.streaming.ledger import (
+        pointer_path,
+    )
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", "text")
+    )
+    did = F.col("doc_id")
+    upd = (did % 5 != 0) & (did % 7 == 1)
+    dele = (did % 5 != 0) & (did % 7 != 1) & (did % 11 == 3)
+    spark_spark = F.concat("text", F.lit(" spark spark"))
+    base = docs.filter(did % 5 != 0)
+    cdc = (
+        docs.filter(did % 5 == 0)
+        .withColumn("op", F.lit("I"))
+        .unionByName(
+            docs.filter(upd).select(
+                "doc_id", spark_spark.alias("text"), F.lit("U").alias("op")
+            )
+        )
+        .unionByName(docs.filter(dele).withColumn("op", F.lit("D")))
+    )
+    live = docs.filter(~dele).select(
+        "doc_id",
+        F.when(upd, spark_spark).otherwise(F.col("text")).alias("text"),
+    )
+
+    root = str(tmp_path / "index")
+    index_sync.init_bm25_root(base, root, "doc_id", "text")
+    _stage_cdc_batches(tmp_path, tmp_path / "src", (cdc,))
+    index_sync.sync_root(
+        spark, str(tmp_path / "src"), cdc.schema, root,
+        checkpoint_dir=str(tmp_path / "ckpt"), op_col="op",
+    )
+
+    terms = ("spark", "vector", "stream")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def topk(r, **kw):
+        j0 = sched.numTotalJobs()
+        q = index_sync.bm25_topk_synced(spark, r, terms, k=10, **kw)
+        j1 = sched.numTotalJobs()
+        rows = [tuple(x) for x in q.collect()]
+        assert j1 == j0, "building the query submitted Spark jobs"
+        assert sched.numTotalJobs() - j1 <= 6
+        return rows
+
+    def rebuild(frame, name):
+        r = str(tmp_path / name)
+        index_sync.init_bm25_root(frame, r, "doc_id", "text")
+        return topk(r)
+
+    head = topk(root)
+    assert len(head) == 10 and head == rebuild(live, "truth")
+    # the df branch reuses the scoring branch's folded-postings exchange
+    q = index_sync.bm25_topk_synced(spark, root, terms, k=10)
+    q.collect()
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in plan
+    # the bucket filter is folded to literals and prunes at listing
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert scans and all(
+        re.search(
+            r"__tbucket#\d+ IN \(\d+(,\d+){0,2}\)",
+            ln.split("PartitionFilters: [")[1].split("]")[0],
+        )
+        for ln in scans
+    )
+    pre = topk(root, as_of_epoch=0)
+    assert pre == rebuild(base, "truth0") and pre != head
+
+    assert index_sync.compact_root(spark, root, purge_deleted=True) == 1
+    ptr = index_sync.read_index_pointer(root)
+    assert ptr["purge_floor"] == 1
+    assert [e for e, *_ in ptr["corpus_stats"]] == [1]
+    assert topk(root) == head
+    with pytest.raises(ValueError, match="purge floor"):
+        index_sync.bm25_topk_synced(spark, root, terms, k=10, as_of_epoch=0)
+
+    del ptr["corpus_stats"]
+    with open(pointer_path(root), "w") as f:
+        json.dump(ptr, f)
+    for refused in (
+        lambda: index_sync.bm25_topk_synced(spark, root, terms, k=10),
+        lambda: index_sync.delete_ids(spark, root, [1]),
+        lambda: index_sync.compact_root(spark, root),
+    ):
+        with pytest.raises(ValueError, match="rebuild with init_bm25_root"):
+            refused()
+
+
+def test_bm25_plain_compaction_keeps_pointer_tail_sized(spark, tmp_path):
+    """A BM25 root maintained WITHOUT purging keeps a pointer the size
+    of its live tail: each compaction moves the ``corpus_stats``
+    entries it folds into a history file beside the compact postings
+    (chained across compactions), and as-of reads below
+    ``compact_upto`` still return the exact ranking and totals of their
+    epoch, planned without a Spark job."""
+    from spacex_data_engineering_pipeline_spark.streaming import (
+        bm25_sync,
+        index_sync,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"spark doc{i} vector" + " x" * (i % 4)) for i in range(1, 40)],
+        "doc_id long, text string",
+    )
+    root = str(tmp_path / "index")
+    index_sync.init_bm25_root(docs, root, "doc_id", "text")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def topk(**kw):
+        j0 = sched.numTotalJobs()
+        q = index_sync.bm25_topk_synced(
+            spark, root, ("spark", "doc6", "x"), 5, **kw
+        )
+        assert sched.numTotalJobs() == j0
+        return [tuple(r) for r in q.collect()]
+
+    want = {0: topk()}
+    totals = {0: index_sync.read_index_pointer(root)["corpus_stats"][-1]}
+    for e in range(1, 5):
+        index_sync.delete_ids(spark, root, [e * 3])
+        want[e] = topk()
+        totals[e] = index_sync.read_index_pointer(root)["corpus_stats"][-1]
+        index_sync.maintain_root(spark, root, max_tail_epochs=1)
+        assert len(index_sync.read_index_pointer(root)["corpus_stats"]) <= 2
+    ptr = index_sync.read_index_pointer(root)
+    assert ptr["compact_upto"] == 4 and ptr["corpus_stats"] == [totals[4]]
+    assert len(set(map(tuple, want.values()))) == 5
+    for e, (_, n, s) in totals.items():
+        assert bm25_sync._corpus_stats_at(root, ptr, e) == (n, s)
+        assert topk(as_of_epoch=e) == want[e]
+
+
+def test_bm25_int_id_root_takes_list_deletes(spark, tmp_path):
+    """``delete_ids`` builds a list's id frame as long; on an int-id
+    BM25 root the fold casts it to the recorded ``id_type``, so every
+    epoch's files keep the type the readers' explicit schemas name
+    (long-typed files under an int id made the next read fail with a
+    parquet type mismatch)."""
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    docs = spark.createDataFrame(
+        [(i, f"spark doc{i} vector") for i in range(1, 40)],
+        "doc_id int, text string",
+    )
+    root = str(tmp_path / "index")
+    index_sync.init_bm25_root(docs, root, "doc_id", "text")
+    assert index_sync.read_index_pointer(root)["id_type"] == "int"
+    index_sync.delete_ids(spark, root, [3, 9])
+    index_sync.delete_ids(spark, root, [7])
+    truth = str(tmp_path / "truth")
+    index_sync.init_bm25_root(
+        docs.filter(~F.col("doc_id").isin(3, 7, 9)), truth, "doc_id", "text"
+    )
+
+    def topk(r):
+        return index_sync.bm25_topk_synced(
+            spark, r, ("spark", "doc9", "doc12"), 3
+        ).collect()
+
+    got = topk(root)
+    assert got == topk(truth) and got[0]["doc_id"] == 12
 
 def test_ivf_delete_empty_set_is_a_no_op(spark, sf_dir, tmp_path):
     """An empty delete set must not burn an epoch: a []-built frame's
@@ -4976,14 +5153,8 @@ def test_drain_source_fence_minhash_and_bm25_empty_fold(spark, sf_dir, tmp_path)
         )
     ptr = bm25_sync.read_index_pointer(bm_root)
     assert ptr["max_epoch"] == 1  # fenced re-drain: bookkeeping-only flip
-    stats = spark.read.parquet(bm_root + "/stats")
-    n_by_epoch = {
-        r["epoch"]: r["n"]
-        for r in stats.groupBy("epoch")
-        .agg(F.sum("n_docs").alias("n"))
-        .collect()
-    }
-    assert n_by_epoch.get(1) == n_batch and 2 not in n_by_epoch
+    (_, n0, _), (e1, n1, _) = ptr["corpus_stats"]
+    assert e1 == 1 and n1 - n0 == n_batch
 
 
 def test_hybrid_cdc_stream_crash_between_drains(spark, sf_dir, tmp_path):
@@ -5064,10 +5235,7 @@ def test_hybrid_cdc_stream_crash_between_drains(spark, sf_dir, tmp_path):
     )
     # the finished BM25 drain no-oped (same head, no double-fold)...
     assert bm25_sync.read_index_pointer(broot)["max_epoch"] == bm_head
-    stats = spark.read.parquet(broot + "/stats")
-    assert (
-        stats.agg(F.sum("n_docs").alias("n")).first()["n"] == n_live
-    )
+    assert bm25_sync.read_index_pointer(broot)["corpus_stats"][-1][1] == n_live
     # ...the IVF drain caught up, and the pair pins both committed heads
     assert pair["epochs"] == {
         "bm25": bm_head,
