@@ -540,36 +540,25 @@ def knn_graph_neighbors(spark, path: str, id_value: int) -> DataFrame:
 
 
 def _bounded_collect(df: DataFrame, n: int):
-    """``df.limit(n).collect()`` in ONE scheduler round trip.
+    """At most ``n`` rows of ``df`` in ONE job over every partition.
 
-    CollectLimit's default take-execution escalates through partition
-    batches (1, then ×4, ×16, … — ``spark.sql.limit.initialNumPartitions``
-    = 1) which is right when the first partitions can satisfy the limit,
-    and wrong for the maintenance verbs' bounded probes: affected rows
-    are spread uniformly and almost always number far below the refusal
-    budget, so the escalation reliably walks ALL partitions in up to 4
-    sequential jobs. Scanning every partition in the first round keeps
-    the bound (never collects more than n rows) at one job per probe
-    (optimization r15, guide §1.4 action discipline).
-
-    Limitation: the override is SESSION-GLOBAL for the duration of the
-    collect — another query on the same SparkSession that hits a
-    CollectLimit meanwhile also scans every partition in its first
-    round. Fine for the serial foreachBatch folds; concurrent readers
-    of a shared session inherit it. And in the one-round regime each
-    task may ship up to n rows, so a transient driver fetch can reach
-    n × partitions rows before the caller's refusal fires."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "10000000")
-    try:
-        return df.limit(n).collect()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    ``df.limit(n).collect()`` escalates through partition batches (1,
+    then ×4, ×16, … — ``spark.sql.limit.initialNumPartitions`` = 1),
+    which is right when the first partitions can satisfy the limit and
+    wrong for the maintenance verbs' bounded probes: affected rows are
+    spread uniformly and almost always number far below the refusal
+    budget, so the escalation walks ALL partitions in up to 4
+    sequential jobs. Instead each task keeps its partition's first
+    ``n`` rows — the low 33 bits of ``monotonically_increasing_id``
+    number the rows within a partition — and the collected list is cut
+    to ``n``: the bound holds (never more than ``n`` rows returned), one
+    job per probe, and no session conf is touched, so concurrent
+    queries on the session are unaffected (optimization r15, guide §1.4
+    action discipline). Each task may ship up to ``n`` rows, so a
+    transient fetch can reach n × partitions rows before the caller's
+    refusal fires."""
+    row_in_partition = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    return df.filter(row_in_partition < n).collect()[:n]
 
 
 def _empty_graph_delta(spark, id_col: str) -> DataFrame:

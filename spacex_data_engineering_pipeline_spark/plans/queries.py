@@ -15483,9 +15483,10 @@ def hybrid_cdc_paired_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_maintained_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE RETENTION POLICY VERB under the oracle —
-    ``maintain_root`` (streaming/index_sync.py): one call that sniffs
-    any ledger root's family from its pointer (``ledger_root_kind``),
-    measures the live tail, and when it exceeds the dial runs
+    ``maintain_root`` (streaming/index_sync.py): one call that reads
+    any ledger root's kind from its pointer's format stamp
+    (``ledger_root_kind``), measures the live tail, and when it
+    exceeds the dial runs
     ``compact_root`` + ``vacuum_root``, which apply that family's own
     compaction rule (graph roots also prune saved generations).
     Operators schedule ONE verb after drains; no caller picks a
@@ -15494,7 +15495,7 @@ def streaming_maintained_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     The grade: the standard three-batch growing-dedup drain, then
     ``maintain_root(max_tail_epochs=1)`` — the tail (3) exceeds the
     dial, so the minhash compaction + vacuum MUST run (the entry
-    raises if maintenance no-ops, so a kind-sniff or threshold
+    raises if maintenance no-ops, so a kind-dispatch or threshold
     regression surfaces as a driver error, not a silent pass) — then
     the synced pairs read back compaction-aware. Equality with the
     first-seen-wins oracle proves maintenance is INVISIBLE to

@@ -43,11 +43,11 @@ from spacex_data_engineering_pipeline_spark.functions.text import words
 from spacex_data_engineering_pipeline_spark.streaming.ledger import (
     EpochLedger,
     compact_path,
-    flip_pointer as _flip_pointer,
     id_bucket as _id_bucket,
     ledger_frames as _ledger_frames,
-    read_index_pointer,
+    read_root_pointer,
     resolve_as_of as _resolve_as_of,
+    stamp_root as _stamp_root,
 )
 
 
@@ -71,19 +71,6 @@ def _postings_schema(id_type: str) -> str:
 
 def _doclog_schema(id_type: str) -> str:
     return f"doc {id_type}, w array<string>, dl int, __dbucket int, epoch int"
-
-
-def _bm25_id_type(ptr: dict) -> str:
-    """The root's recorded doc-id Spark type, refusing a root whose
-    pointer predates pointer-held corpus totals (its totals live in a
-    ``stats`` table nothing reads any more)."""
-    if "corpus_stats" not in ptr or "id_type" not in ptr:
-        raise ValueError(
-            "this BM25 root's pointer has no corpus_stats / id_type (it "
-            "predates corpus totals in the pointer); rebuild with "
-            "init_bm25_root"
-        )
-    return ptr["id_type"]
 
 
 def _stats_history_path(root: str, upto: int) -> str:
@@ -236,29 +223,21 @@ def init_bm25_root(
     pointer carries the rest: ``corpus_stats`` starts as ``[[0, n_docs,
     sum_dl]]`` (exact integer totals, cumulative per epoch, so global N
     and avgdl are known without a Spark job and the synced ranking is
-    bit-identical to a from-scratch batch scorer) and ``id_type``
-    records the doc ids' Spark type, from which readers build the
-    ledger tables' schemas instead of inferring them."""
+    bit-identical to a from-scratch batch scorer) and the format
+    stamp's ``id_type`` records the doc ids' Spark type, from which
+    readers build the ledger tables' schemas instead of inferring
+    them."""
     os.makedirs(root, exist_ok=True)
     led = _bm25_ledger(root)
     postings, docs = _bm25_epoch_tables(corpus, id_col, text_col, term_buckets)
     led.write_epoch(postings, "postings", 0)
     led.write_epoch(_bm25_doclog_rows(docs, doc_buckets), "doclog", 0)
     n, s = _totals(docs)
-    id_type = docs.schema["doc"].dataType.simpleString()
     docs.unpersist()
-    _flip_pointer(
-        root,
-        {
-            "max_epoch": 0,
-            "last_batch_id": None,
-            "id_col": id_col,
-            "text_col": text_col,
-            "id_type": id_type,
-            "term_buckets": term_buckets,
-            "doc_buckets": doc_buckets,
-            "corpus_stats": [[0, n, s]],
-        },
+    _stamp_root(
+        root, "bm25", corpus, id_col, max_epoch=0, text_col=text_col,
+        term_buckets=term_buckets, doc_buckets=doc_buckets,
+        corpus_stats=[[0, n, s]],
     )
 
 
@@ -331,17 +310,11 @@ def _bm25_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
     after batch k. At most ONE row per doc id per batch, ENFORCED (two
     versions would negate the old version once but write positive rows
     for both, inflating N/df/tf forever); deleting an absent id is a
-    no-op, updating one an insert. A root whose pointer lacks
-    ``corpus_stats`` / ``id_type`` is refused (``_bm25_id_type``)."""
+    no-op, updating one an insert."""
 
     def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
         id_col, text_col = ptr["id_col"], ptr["text_col"]
         tb, nb = ptr["term_buckets"], ptr["doc_buckets"]
-        # every epoch's files carry the recorded id type, so readers'
-        # explicit schemas hold (a delete_ids list arrives as long)
-        batch_df = batch_df.withColumn(
-            id_col, F.col(id_col).cast(_bm25_id_type(ptr))
-        )
         ops = old = None
         if op_col is None:
             postings, docs = _bm25_epoch_tables(batch_df, id_col, text_col, tb)
@@ -472,9 +445,9 @@ def bm25_topk_synced(
     doubles, so the synced ranking replays the batch oracle
     bit-for-bit. ``as_of_epoch`` time-travels
     the whole ranking (totals and postings resolved together)."""
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
-    id_type = _bm25_id_type(ptr)
+    id_type = ptr["id_type"]
     n, s = _corpus_stats_at(root, ptr, epoch)
     if not n:
         # a CDC drain that deleted every document is a VALID committed

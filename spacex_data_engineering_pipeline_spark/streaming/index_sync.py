@@ -2,7 +2,7 @@
 epoch-ledger protocol (the generic ``EpochLedger``:
 streaming/ledger.py — staged epoch writes, one fsync'd pointer flip,
 replay-safe drains, compact/vacuum) and ONE write path for seven root
-kinds. ``sync_root`` reads the kind from the pointer
+kinds. ``sync_root`` reads the kind from the pointer's format stamp
 (``ledger_root_kind``) and drains a parquet file stream through that
 kind's one fold; ``op_col=None`` declares an insert-only stream,
 ``op_col="op"`` a CDC stream (op ∈ I/U/D, at most one row per id per
@@ -38,6 +38,17 @@ through the same fold. Per kind, the fold:
   plan without a Spark job, read only their terms' buckets and rank
   bit-identically to a batch rescore (``bm25_topk_synced``).
 
+ROOT FORMAT, one per kind: each ``init_*_root`` stamps the pointer
+with ``kind``, ``format`` (1) and, on every kind but pca, ``id_type``
+(the id column's Spark type). ``sync_root``, ``delete_ids``,
+``compact_root``, ``vacuum_root``, ``maintain_root`` and every synced
+reader refuse an unstamped or other-format pointer with one message
+(rebuild with the kind's ``init_*_root``), so each kind has exactly
+one layout: MinHash grams are always doc-bucketed, graph roots always
+store delta generations. Every ``sync_root`` and ``delete_ids`` batch
+enters its fold with the ids cast to ``id_type``, so every epoch's
+files carry one id type.
+
 Id lifecycle on the tombstone kinds (ivf, graph_ivf, semantic,
 minhash): a delete or update writes a tombstone that readers anti-join
 (delete epoch > posting epoch — the same epoch's replacement and later
@@ -52,7 +63,7 @@ crash-window orphans are never scanned and the replay overwrites them.
 Crash-restart is pytest-pinned per root kind (tests/test_streaming.py).
 
 RETENTION, one path for every root kind: ``compact_root`` reads the
-kind from the pointer (``ledger_root_kind``) and folds every
+kind from the pointer's stamp and folds every
 committed epoch at or below the head under ONE ``compact_upto`` —
 rows rewritten with epoch kept as an int data column (as-of reads
 stay row-exact, bucket/cluster partitioning survives so pruned reads
@@ -70,10 +81,9 @@ committed generation above it is one ``graph_delta/epoch=<g>/`` dir in
 the maintenance core's delta format (operators/similarity.py:
 ``knn_graph_apply_cdc`` — the changed ids' new lists plus rnk-NULL
 markers for every invalidated id). Readers fold base + deltas
-(``_graph_at``, latest mention wins, then ``apply_graph_delta``). A
-root in the pre-delta layout (a full snapshot per generation) is
-refused with a rebuild instruction. The corpus lives as
-``corpus_base`` plus the epoch-keyed ``applied``/``removed`` logs.
+(``_graph_at``, latest mention wins, then ``apply_graph_delta``). The
+corpus lives as ``corpus_base`` plus the epoch-keyed
+``applied``/``removed`` logs.
 
 Commit protocol per micro-batch (foreachBatch is at-least-once):
 1. epoch ≤ pointer.last_batch_id ⇒ replayed epoch, no-op (the ledger
@@ -99,6 +109,7 @@ rewritten.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -114,18 +125,20 @@ from spacex_data_engineering_pipeline_spark.streaming.ledger import (
     flip_pointer as _flip_pointer,
     id_bucket as _id_bucket,
     ledger_frames as _ledger_frames,
+    ledger_root_kind,
     live_epochs as _live_epochs,
     read_epoch_pairs,
     read_index_pointer,
+    read_root_pointer,
     record_epoch_pair,
     resolve_as_of as _resolve_as_of,
+    stamp_root as _stamp_root,
 )
 
 # The BM25 fold and readers live in their own module since round 13;
 # re-exported here so the catalog/tests keep one address for the family.
 from spacex_data_engineering_pipeline_spark.streaming.bm25_sync import (  # noqa: F401
     _bm25_fold,
-    _bm25_id_type,
     _bm25_ledger,
     _term_bucket,
     _bm25_net,
@@ -189,17 +202,9 @@ def init_knn_graph_root(
     corpus.select(id_col, vec_col).write.mode("overwrite").parquet(
         os.path.join(root, "corpus_base")
     )
-    _flip_pointer(
-        root,
-        {
-            "generation": 0,
-            "last_batch_id": None,
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "k": k,
-            "n_blocks": n_blocks,
-            "n_buckets": n_buckets,
-        },
+    _stamp_root(
+        root, "graph", corpus, id_col, generation=0, vec_col=vec_col, k=k,
+        n_blocks=n_blocks, n_buckets=n_buckets,
     )
 
 
@@ -289,21 +294,11 @@ def _corpus_at(spark: SparkSession, root: str, ptr: dict) -> DataFrame:
 
 def _graph_committed_gens(root: str, floor: int, head: int) -> set[int]:
     """The still-readable committed generations: the full base snapshot
-    at ``floor`` plus every live delta epoch in (floor, head]. Every
-    commit above the floor stages its own delta epoch, so a head above
-    the floor without one is a root in the pre-delta layout (a full
-    ``graph/gen=<g>`` snapshot per generation) — refused, never read
-    as its floor snapshot."""
-    gens = {floor} | {
+    at ``floor`` plus every live delta epoch in (floor, head] (every
+    commit above the floor stages its own delta epoch)."""
+    return {floor} | {
         e for e in _live_epochs(root, "graph_delta") if floor < e <= head
     }
-    if head not in gens:
-        raise ValueError(
-            f"graph root {root} predates delta generations (generation "
-            f"{head} has no graph_delta epoch) — rebuild it with "
-            "init_knn_graph_root"
-        )
-    return gens
 
 
 def _graph_at(
@@ -357,7 +352,7 @@ def load_synced_graph(
     still-retained generation (readable while its floor snapshot and
     the delta epochs up to it are retained; ``vacuum_generations`` is
     what ends a generation's readability)."""
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     gen = _resolve_as_of(ptr, "generation", as_of_generation)
     floor = int(ptr.get("graph_base_gen", 0) or 0)
     if gen not in _graph_committed_gens(root, floor, int(ptr["generation"])):
@@ -451,21 +446,14 @@ def _routed(frame: DataFrame, centers, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def init_ivf_root(
-    corpus: DataFrame,
-    root: str,
-    id_col: str,
-    vec_col: str,
-    n_clusters: int = 16,
-    seed: int = 42,
-    sample_cap: int = 65536,
+def _init_ivf_postings(
+    corpus: DataFrame, root: str, id_col: str, vec_col: str,
+    n_clusters: int, seed: int, sample_cap: int,
 ) -> None:
-    """One-time IVF base build: train the coarse quantizer on the base
-    corpus (``build_ivf_index``) and save postings as epoch 0 of an
-    epoch-keyed layout (``postings/epoch=0/cluster=*/``) plus the
-    centroid sidecar and the initial pointer. The quantizer is FIXED
-    for the index's lifetime (FAISS ``add`` semantics) — every later
-    epoch routes against these centroids; retrain = a new root."""
+    """The IVF base every IVF-family root starts from: train the coarse
+    quantizer on the base corpus (``build_ivf_index``), save the
+    centroid sidecar, and save the postings as epoch 0 of the
+    epoch-keyed layout (``postings/epoch=0/cluster=*/``)."""
     os.makedirs(root, exist_ok=True)
     idx = S.build_ivf_index(
         corpus, id_col, vec_col,
@@ -477,15 +465,25 @@ def init_ivf_root(
     idx.assigned.write.mode("overwrite").partitionBy("cluster").parquet(
         _ivf_epoch_path(root, 0)
     )
-    _flip_pointer(
-        root,
-        {
-            "max_epoch": 0,
-            "last_batch_id": None,
-            "id_col": id_col,
-            "vec_col": vec_col,
-        },
+
+
+def init_ivf_root(
+    corpus: DataFrame,
+    root: str,
+    id_col: str,
+    vec_col: str,
+    n_clusters: int = 16,
+    seed: int = 42,
+    sample_cap: int = 65536,
+) -> None:
+    """One-time IVF base build (``_init_ivf_postings``) plus the
+    initial pointer. The quantizer is FIXED for the index's lifetime
+    (FAISS ``add`` semantics) — every later epoch routes against these
+    centroids; retrain = a new root."""
+    _init_ivf_postings(
+        corpus, root, id_col, vec_col, n_clusters, seed, sample_cap
     )
+    _stamp_root(root, "ivf", corpus, id_col, max_epoch=0, vec_col=vec_col)
 
 
 def load_synced_ivf(
@@ -503,7 +501,7 @@ def load_synced_ivf(
     history comes from the cluster-partitioned compact dataset (epoch
     a data column — as-of reads stay row-exact, cluster pruning keeps
     working) plus any live epoch dirs above it."""
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
     centroids = _centroids(root)
     assigned = _synced_postings(
@@ -750,11 +748,7 @@ def _minhash_fold(
     candidates, then an exact verify against only the grams buckets
     the candidate docs hash into), with pairs citing a
     THIS-BATCH-tombstoned corpus doc dropped. One shingle+band pass per
-    batch: the fold's index build doubles as the probe's query side.
-    A CDC stream is refused on pre-``tomb_col`` roots (their readers
-    ignore the deletes ledger); an insert-only stream continues one,
-    keeping a pre-bucketing root's flat grams layout
-    (``_write_grams_epoch``)."""
+    batch: the fold's index build doubles as the probe's query side."""
     from spacex_data_engineering_pipeline_spark.operators.dedup import (
         build_minhash_index,
     )
@@ -762,15 +756,9 @@ def _minhash_fold(
     root = led.root
 
     def fold(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
-        if op_col is not None and "tomb_col" not in ptr:
-            raise ValueError(
-                "this dedup root predates id-level deletes (no tomb_col "
-                "in its pointer) — its readers would silently ignore "
-                "the CDC tombstones; rebuild with init_minhash_root"
-            )
         id_col, text_col = ptr["id_col"], ptr["text_col"]
         ops, upserts, tomb, _, has_up = _fold_sides(
-            batch_df, id_col, (text_col,), op_col, ptr.get("tomb_col")
+            batch_df, id_col, (text_col,), op_col, ptr["tomb_col"]
         )
         if tomb is not None:
             led.write_epoch(tomb, "deletes", epoch)
@@ -789,9 +777,9 @@ def _minhash_fold(
                     "anti",
                 )
             led.write_epoch(pairs, "pairs", epoch)
-            # ptr.get, no default: a pre-bucketing root (no
-            # grams_buckets) keeps writing UNBUCKETED epochs
-            _write_grams_epoch(bg, root, epoch, ptr.get("grams_buckets"))
+            led.write_epoch(
+                _bucketed_grams(bg, ptr["grams_buckets"]), "grams", epoch
+            )
             led.write_epoch(bb, "bands", epoch)
             bb.unpersist()
             bg.unpersist()
@@ -826,31 +814,14 @@ def init_knn_graph_ivf_root(
     ``compact_root`` and ``vacuum_root`` all work on this root
     unchanged — it is the graph ledger and the IVF ledger sharing one
     commit point."""
-    os.makedirs(root, exist_ok=True)
-    idx = S.build_ivf_index(
-        corpus, id_col, vec_col,
-        n_clusters=n_clusters, seed=seed, sample_cap=sample_cap,
-        persist=False,
-    )
-    with open(os.path.join(root, "centroids.json"), "w") as f:
-        json.dump(idx.centroids.tolist(), f)
-    idx.assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-        _ivf_epoch_path(root, 0)
+    _init_ivf_postings(
+        corpus, root, id_col, vec_col, n_clusters, seed, sample_cap
     )
     graph = S.knn_graph(corpus, id_col, vec_col, k, n_blocks=n_blocks)
     S.save_knn_graph(graph, _graph_gen_path(root, 0), id_col, n_buckets=n_buckets)
-    _flip_pointer(
-        root,
-        {
-            "generation": 0,
-            "max_epoch": 0,
-            "last_batch_id": None,
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "k": k,
-            "n_probes": n_probes,
-            "n_buckets": n_buckets,
-        },
+    _stamp_root(
+        root, "graph_ivf", corpus, id_col, generation=0, max_epoch=0,
+        vec_col=vec_col, k=k, n_probes=n_probes, n_buckets=n_buckets,
     )
 
 
@@ -978,27 +949,12 @@ def init_semantic_dedup_root(
     probe width (n_probes ≥ n_clusters) makes every batch's verdicts
     EXHAUSTIVE — the oracle-graded configuration; partial width is the
     recall dial for corpora whose near-dups cluster."""
-    os.makedirs(root, exist_ok=True)
-    idx = S.build_ivf_index(
-        corpus, id_col, vec_col,
-        n_clusters=n_clusters, seed=seed, sample_cap=sample_cap,
-        persist=False,
+    _init_ivf_postings(
+        corpus, root, id_col, vec_col, n_clusters, seed, sample_cap
     )
-    with open(os.path.join(root, "centroids.json"), "w") as f:
-        json.dump(idx.centroids.tolist(), f)
-    idx.assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-        _ivf_epoch_path(root, 0)
-    )
-    _flip_pointer(
-        root,
-        {
-            "max_epoch": 0,
-            "last_batch_id": None,
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "n_probes": n_probes,
-            "min_cosine": min_cosine,
-        },
+    _stamp_root(
+        root, "semantic", corpus, id_col, max_epoch=0, vec_col=vec_col,
+        n_probes=n_probes, min_cosine=min_cosine,
     )
 
 
@@ -1010,28 +966,15 @@ def load_synced_semantic_pairs(
     ``as_of_epoch`` time-travels (immutable epoch partitions — exact
     across compaction too, epoch survives as a data column there); a
     fresh root (or ``as_of_epoch=0``) returns the empty verdict set."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
     pairs = (
         None if epoch == 0 else _ledger_frames(spark, root, "pairs", ptr, epoch)
     )
     if pairs is None:
+        id_type = ptr["id_type"]
         return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("new_vec", LongType()),
-                    StructField("corpus_vec", LongType()),
-                    StructField("cos_sim", DoubleType()),
-                ]
-            ),
+            [], f"new_vec {id_type}, corpus_vec {id_type}, cos_sim double"
         )
     return pairs.drop("epoch")
 
@@ -1055,9 +998,7 @@ def init_pca_moments_root(corpus: DataFrame, root: str, vec_col: str) -> None:
     quantized_moments(
         corpus.filter(F.col(vec_col).isNotNull()), vec_col
     ).write.mode("overwrite").parquet(_moments_epoch_path(root, 0))
-    _flip_pointer(
-        root, {"max_epoch": 0, "last_batch_id": None, "vec_col": vec_col}
-    )
+    _stamp_root(root, "pca", max_epoch=0, vec_col=vec_col)
 
 
 def _pca_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
@@ -1129,7 +1070,7 @@ def load_synced_pca_model(
         fit_pca_from_moments,
     )
 
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
     cu = int(ptr.get("compact_upto", 0) or 0)
     if epoch < cu:
@@ -1147,24 +1088,10 @@ def load_synced_pca_model(
     return fit_pca_from_moments(merged, n_components, n_iter=n_iter)
 
 
-def _write_grams_epoch(
-    grams: DataFrame, root: str, epoch: int, n_buckets: int | None
-) -> None:
-    """``n_buckets=None`` writes an UNBUCKETED epoch — the layout a
-    pre-bucketing root (pointer without ``grams_buckets``) uses. Mixing
-    layouts inside one grams table would make Spark's partition
-    discovery reject the whole dataset ('conflicting directory
-    structures'), so a legacy root keeps its flat layout forever."""
-    if not n_buckets:
-        grams.write.mode("overwrite").parquet(
-            _epoch_path(root, "grams", epoch)
-        )
-        return
-    grams.withColumn(
-        "__bucket", _id_bucket(F.col("doc"), n_buckets)
-    ).write.mode("overwrite").partitionBy("__bucket").parquet(
-        _epoch_path(root, "grams", epoch)
-    )
+def _bucketed_grams(grams: DataFrame, n_buckets: int) -> DataFrame:
+    """Grams rows with their doc-id bucket, the grams table's
+    partition column."""
+    return grams.withColumn("__bucket", _id_bucket(F.col("doc"), n_buckets))
 
 
 def init_minhash_root(
@@ -1199,31 +1126,21 @@ def init_minhash_root(
     )
 
     os.makedirs(root, exist_ok=True)
+    led = _minhash_ledger(root)
     grams, banded = build_minhash_index(
         corpus, id_col, text_col, num_hashes, bands, shingle_n
     )
-    _write_grams_epoch(grams, root, 0, grams_buckets)
-    banded.write.mode("overwrite").parquet(
-        _epoch_path(root, "bands", 0)
-    )
+    led.write_epoch(_bucketed_grams(grams, grams_buckets), "grams", 0)
+    led.write_epoch(banded, "bands", 0)
     banded.unpersist()
     grams.unpersist()
-    _flip_pointer(
-        root,
-        {
-            "max_epoch": 0,
-            "last_batch_id": None,
-            "id_col": id_col,
-            "text_col": text_col,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_n": shingle_n,
-            "min_jaccard_micro": min_jaccard_micro,
-            "grams_buckets": grams_buckets,
-            # id-level tombstones join the ledger tables on their
-            # canonical "doc" column, not the caller-facing id_col
-            "tomb_col": "doc",
-        },
+    # id-level tombstones join the ledger tables on their canonical
+    # "doc" column (tomb_col), not the caller-facing id_col
+    _stamp_root(
+        root, "minhash", corpus, id_col, max_epoch=0, text_col=text_col,
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+        min_jaccard_micro=min_jaccard_micro, grams_buckets=grams_buckets,
+        tomb_col="doc",
     )
 
 
@@ -1245,7 +1162,7 @@ def read_synced_grams(
     history comes from the bucket-partitioned compact dataset (epoch a
     data column — as-of filters stay row-exact) plus any live epoch
     dirs above it; the bucket restriction partition-prunes both."""
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
     g = _ledger_frames(spark, root, "grams", ptr, epoch)
     if g is None:
@@ -1259,9 +1176,9 @@ def read_synced_grams(
         )
     # id-level tombstones (U/D rows, delete_ids) hide deleted docs' grams
     # — applied AFTER the bucket prune, so the anti-join sees only the
-    # fetched rows; legacy roots (no deletes ledger) skip it entirely
+    # fetched rows
     g = _apply_tombstones(
-        spark, _minhash_ledger(root), ptr, epoch, g, ptr.get("tomb_col", "doc")
+        spark, _minhash_ledger(root), ptr, epoch, g, ptr["tomb_col"]
     )
     return g.drop("epoch", "__bucket")
 
@@ -1296,22 +1213,18 @@ def _probe_pruned(
         ptr,
         ptr["max_epoch"],
         led.frames(spark, "bands", ptr, ptr["max_epoch"]),
-        ptr.get("tomb_col", "doc"),
+        ptr["tomb_col"],
     ).drop("epoch")
     candidates = minhash_candidate_pairs(idx_bands, new_banded).persist()
-    n_buckets = ptr.get("grams_buckets")
-    if n_buckets:
-        buckets = sorted(
-            r["b"]
-            for r in candidates.select(
-                _id_bucket(F.col("corpus_doc"), n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
+    buckets = sorted(
+        r["b"]
+        for r in candidates.select(
+            _id_bucket(F.col("corpus_doc"), ptr["grams_buckets"]).alias("b")
         )
-        idx_grams = read_synced_grams(spark, root, buckets=buckets)
-    else:  # pre-bucketing root layout: epoch-pruned full read
-        idx_grams = read_synced_grams(spark, root)
+        .distinct()
+        .collect()
+    )
+    idx_grams = read_synced_grams(spark, root, buckets=buckets)
     out = minhash_verify_pairs(
         candidates, new_grams, idx_grams, ptr["min_jaccard_micro"]
     )
@@ -1335,7 +1248,7 @@ def probe_minhash_root(
         release_caches_with,
     )
 
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     bg, bb = build_minhash_index(
         new_df,
         ptr["id_col"],
@@ -1360,12 +1273,10 @@ def load_synced_dedup_pairs(
     Epoch 0 (a freshly-initialized root, or ``as_of_epoch=0``) is a
     legal committed state with NO pairs directory yet — the base
     corpus is indexed but nothing has been probed — so it returns the
-    EMPTY verdict set (doc-id type taken from the grams ledger), not
+    EMPTY verdict set (doc-id type from the pointer's ``id_type``), not
     an AnalysisException, matching the other synced readers' epoch-0
     validity."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     epoch = _resolve_as_of(ptr, "max_epoch", as_of_epoch)
     pairs = (
         None
@@ -1373,16 +1284,9 @@ def load_synced_dedup_pairs(
         else _ledger_frames(spark, root, "pairs", ptr, epoch)
     )
     if pairs is None:
-        id_type = read_synced_grams(spark, root).schema["doc"].dataType
+        id_type = ptr["id_type"]
         return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("new_doc", id_type),
-                    StructField("corpus_doc", id_type),
-                    StructField("jaccard_micro", LongType()),
-                ]
-            ),
+            [], f"new_doc {id_type}, corpus_doc {id_type}, jaccard_micro bigint"
         )
     return pairs.drop("epoch")
 
@@ -1405,7 +1309,7 @@ def vacuum_generations(
     generations whose readability ended."""
     import shutil
 
-    ptr = read_index_pointer(root)
+    ptr = read_root_pointer(root)
     head = int(ptr["generation"])
     floor = int(ptr.get("graph_base_gen", 0) or 0)
     committed = sorted(_graph_committed_gens(root, floor, head))
@@ -1478,27 +1382,6 @@ def sync_hybrid_cdc_stream(
     )
 
 
-def ledger_root_kind(ptr: dict) -> str:
-    """Sniff which sync family owns a ledger root from its pointer's
-    distinguishing keys (each ``init_*_root`` writes a disjoint
-    signature): ``term_buckets`` → bm25; ``generation`` → a graph
-    root (with ``n_probes`` → the combined graph+IVF root, whose
-    postings also live under the epoch ledger); ``num_hashes`` →
-    minhash dedup; ``min_cosine`` → semantic dedup; otherwise an
-    ``id_col`` means plain IVF and its absence the PCA moment ledger
-    (which keys on nothing but ``vec_col``). ``compact_root``,
-    ``vacuum_root`` and ``maintain_root`` dispatch on it."""
-    if "term_buckets" in ptr:
-        return "bm25"
-    if "generation" in ptr:
-        return "graph_ivf" if "n_probes" in ptr else "graph"
-    if "num_hashes" in ptr:
-        return "minhash"
-    if "min_cosine" in ptr:
-        return "semantic"
-    return "ivf" if "id_col" in ptr else "pca"
-
-
 # Ledger layout per root kind, for every kind whose retention is an
 # EpochLedger compaction (all but the plain graph, which rebases its
 # applied/removed logs instead).
@@ -1517,6 +1400,10 @@ _PAIR_SIDES = {
     "semantic": ("new_vec", "corpus_vec"),
     "minhash": ("new_doc", "corpus_doc"),
 }
+
+# The pointer key holding a root's committed head: graph generations on
+# the graph kinds, ``max_epoch`` everywhere else.
+_KIND_HEADS = {"graph": "generation", "graph_ivf": "generation"}
 
 # The one fold per root kind: kind → builder(spark, ledger, op_col)
 # returning the ``fold(ptr, epoch, batch_df) -> pointer advance`` that
@@ -1541,6 +1428,27 @@ def _root_ledger(kind: str, root: str) -> EpochLedger:
         _KIND_LEDGERS[kind](root) if kind in _KIND_LEDGERS
         else EpochLedger(root, {})
     )
+
+
+def _root_fold(spark: SparkSession, kind: str, led: EpochLedger, op_col):
+    """The kind's one fold, entered with the batch's ids cast to the
+    root's recorded ``id_type`` — the one cast every ``sync_root`` and
+    ``delete_ids`` batch passes, so every epoch's files carry the type
+    the root was built with (a same-type cast is optimized away). The
+    wrapper keeps the fold's module and name."""
+    fold = _KIND_FOLDS[kind](spark, led, op_col)
+    if kind == "pca":
+        return fold  # a moment ledger keys on no id
+
+    @functools.wraps(fold)
+    def typed(ptr: dict, epoch: int, batch_df: DataFrame) -> dict:
+        id_col = ptr["id_col"]
+        return fold(
+            ptr, epoch,
+            batch_df.withColumn(id_col, F.col(id_col).cast(ptr["id_type"])),
+        )
+
+    return typed
 
 
 def sync_root(
@@ -1585,21 +1493,24 @@ def sync_root(
     version in the same epoch the new one lands: id tombstones
     (ivf / graph_ivf / semantic / minhash), the removal log (graph),
     moments of the ``old_vec`` before-image (pca), or rows negated
-    from the doc log (bm25). A CDC stream is refused on a MinHash
-    root without ``tomb_col`` and a BM25 root without a doc log; an
-    insert-only stream continues them.
+    from the doc log (bm25).
 
     CHECKPOINT-WIPE HAZARD: exactly-once keys on the epoch id within
     the checkpoint's lineage, so wiping the checkpoint after new files
     landed can skip them, and a fresh checkpoint over already-drained
     files double-applies them. ``fence_sources=True`` records each
     epoch's source files and fences re-pointed ones to bookkeeping-only
-    commits; ``EpochLedger.drain`` has the full contract."""
+    commits; ``EpochLedger.drain`` has the full contract.
+
+    The root must carry the format stamp its ``init_*_root`` wrote
+    (``ledger_root_kind``): any other pointer is refused before the
+    stream starts. Ids are cast to the recorded ``id_type`` on entry
+    to the fold."""
     kind = ledger_root_kind(read_index_pointer(root))
     led = _root_ledger(kind, root)
     led.drain(
         spark, source_path, schema, checkpoint_dir,
-        _KIND_FOLDS[kind](spark, led, op_col),
+        _root_fold(spark, kind, led, op_col),
         on_batch_start, fence_sources=fence_sources,
     )
 
@@ -1625,12 +1536,15 @@ def delete_ids(
 
     ``ids`` is a list of id values or a DataFrame holding either the
     root's tombstone column (``'doc'`` on MinHash roots, recorded as
-    ``tomb_col`` in the pointer) or its caller-facing ``id_col``.
-    ``max_affected`` bounds the distinct id count (a larger set is
-    almost certainly a bug upstream — a hub-scale graph delete wants a
-    rebuild); a DataFrame costs one count() job for it. Returns the
-    committed head — unchanged for an EMPTY id set, which burns no
-    epoch (an empty list-built frame would also guess the id type)."""
+    ``tomb_col`` in the pointer) or its caller-facing ``id_col``; a
+    list is built as the root's recorded ``id_type`` and a frame's ids
+    are cast to it on entry to the fold, so the tombstones carry the
+    type every other epoch's files do. ``max_affected`` bounds the
+    distinct id count (a larger set is almost certainly a bug
+    upstream — a hub-scale graph delete wants a rebuild); a DataFrame
+    costs one count() job for it. Returns the committed head —
+    unchanged for an EMPTY id set, which burns no epoch. A root
+    without the format stamp is refused (``ledger_root_kind``)."""
     ptr = read_index_pointer(root)
     kind = ledger_root_kind(ptr)
     if kind == "pca":
@@ -1641,7 +1555,7 @@ def delete_ids(
             "op-D rows with old_vec through sync_root(..., op_col=...)"
         )
     id_col = ptr["id_col"]
-    tomb_col = ptr.get("tomb_col", id_col)
+    tomb_col = ptr["tomb_col"] if kind == "minhash" else id_col
     if isinstance(ids, DataFrame):
         if tomb_col in ids.columns:
             idf = ids.select(F.col(tomb_col).alias(id_col))
@@ -1659,8 +1573,9 @@ def delete_ids(
         # a driver-side id list needs no Spark job to count or dedup
         uniq = sorted(set(ids))
         n = len(uniq)
-        id_type = "long" if uniq and isinstance(uniq[0], int) else "string"
-        idf = spark.createDataFrame([(i,) for i in uniq], f"{id_col} {id_type}")
+        idf = spark.createDataFrame(
+            [(i,) for i in uniq], f"{id_col} {ptr['id_type']}"
+        )
     if n > max_affected:
         raise ValueError(
             f"delete_ids would remove {n} ids > max_affected="
@@ -1668,9 +1583,9 @@ def delete_ids(
             "intended (a hub-scale graph delete wants a rebuild)"
         )
     if n == 0:
-        return int(ptr["generation" if "generation" in ptr else "max_epoch"])
+        return int(ptr[_KIND_HEADS.get(kind, "max_epoch")])
     payload, payload_type = (
-        (ptr["text_col"], "string") if "text_col" in ptr
+        (ptr["text_col"], "string") if kind in ("minhash", "bm25")
         else (ptr["vec_col"], "array<double>")
     )
     batch = idf.select(
@@ -1679,7 +1594,7 @@ def delete_ids(
         F.lit("D").alias(_DELETE_OP),
     )
     led = _root_ledger(kind, root)
-    fold = _KIND_FOLDS[kind](spark, led, _DELETE_OP)
+    fold = _root_fold(spark, kind, led, _DELETE_OP)
     epoch = led.next_epoch(ptr)
     led.commit(ptr, epoch, lambda: fold(ptr, epoch, batch))
     return epoch
@@ -1750,7 +1665,6 @@ def compact_root(
         return _rebase_graph_corpus(spark, root, ptr)
     stage = None
     if kind == "bm25":
-        _bm25_id_type(ptr)  # refuses a root it could not read back
         stage = _bm25_stats_compact(root, ptr, purge_deleted)
     led = _KIND_LEDGERS[kind](root)
     if kind == "pca":
@@ -1798,7 +1712,7 @@ def _tombstone_purge(
     spent tombstones are dropped, and with ``purge_pairs`` each side of
     a pair row goes through the same epoch rule."""
     if kind == "minhash":
-        content, col = ("grams", "bands"), ptr.get("tomb_col", "doc")
+        content, col = ("grams", "bands"), ptr["tomb_col"]
     else:
         content, col = ("postings",), ptr["id_col"]
     sides = _PAIR_SIDES[kind] if purge_pairs else ()

@@ -20,7 +20,17 @@ parquet min/max stats skip row groups below an as-of filter), and
 superseded compacts, and staged crash orphans — the committed tail
 and the pointer-named compact are never touched.
 
-Scale posture: the pointer is O(1) bytes, except that a BM25 root's
+Root format: every ``init_*_root`` stamps the pointer with the root's
+``kind`` (which one fold and table layout it uses), ``format``
+(``ROOT_FORMAT``) and, on id-keyed kinds, ``id_type`` (the id column's
+Spark type, which every epoch's files carry). ``ledger_root_kind``
+reads the stamp and nothing else; a pointer without it, or with
+another format, is refused with one instruction to rebuild the root
+with its kind's ``init_*_root`` — nothing guesses a layout from which
+keys a pointer happens to hold.
+
+Scale posture: the pointer is O(1) bytes (the format stamp adds a few
+dozen), except that a BM25 root's
 carries its corpus totals (``corpus_stats``: one ~30-byte
 ``[epoch, n_docs, sum_dl]`` entry per committed epoch of the live
 tail — every compaction moves the entries it folds into a history file
@@ -64,6 +74,54 @@ def pointer_path(root: str) -> str:
 def read_index_pointer(root: str) -> dict:
     with open(pointer_path(root)) as f:
         return json.load(f)
+
+
+# The pointer/layout version every ``init_*_root`` stamps, and the init
+# verb that builds each root kind (named by the refusal message).
+ROOT_FORMAT = 1
+ROOT_INITS = {
+    "graph": "init_knn_graph_root",
+    "graph_ivf": "init_knn_graph_ivf_root",
+    "ivf": "init_ivf_root",
+    "semantic": "init_semantic_dedup_root",
+    "minhash": "init_minhash_root",
+    "pca": "init_pca_moments_root",
+    "bm25": "init_bm25_root",
+}
+
+
+def stamp_root(root: str, kind: str, corpus=None, id_col=None, **keys) -> None:
+    """Publish a new root's first pointer: the format stamp (``kind``,
+    ``format``; given the corpus and its id column, ``id_col`` and
+    ``id_type`` read from the corpus schema with no Spark job), an
+    empty replay cursor, and the kind's own ``keys``."""
+    ptr = {"kind": kind, "format": ROOT_FORMAT, "last_batch_id": None}
+    if id_col is not None:
+        ptr["id_col"] = id_col
+        ptr["id_type"] = corpus.schema[id_col].dataType.simpleString()
+    flip_pointer(root, {**ptr, **keys})
+
+
+def ledger_root_kind(ptr: dict) -> str:
+    """The root kind the pointer's stamp names — THE format check every
+    sync, delete, retention verb and synced reader runs: a pointer
+    without the stamp, or stamped with another format, is refused."""
+    kind = ptr.get("kind")
+    if ptr.get("format") != ROOT_FORMAT or kind not in ROOT_INITS:
+        raise ValueError(
+            f"not a format-{ROOT_FORMAT} ledger root (pointer stamp "
+            f"kind={kind!r}, format={ptr.get('format')!r}) — rebuild it "
+            f"with {ROOT_INITS.get(kind, 'the init_*_root of its kind')}"
+        )
+    return kind
+
+
+def read_root_pointer(root: str) -> dict:
+    """The pointer of a stamped ledger root (``ledger_root_kind``
+    refuses any other)."""
+    ptr = read_index_pointer(root)
+    ledger_root_kind(ptr)
+    return ptr
 
 
 def flip_pointer(root: str, pointer: dict) -> None:
@@ -327,10 +385,9 @@ class EpochLedger:
     by ``commit``; what differs per kind is ONLY the table dict and the
     fold body.
 
-    ``tables``: {name: partition_column | None}. The partition column
-    is applied when present in the frame being written (a legacy
-    pre-bucketing minhash root writes flat grams — one dataset, one
-    layout), and preserved by compaction so pruned reads keep pruning.
+    ``tables``: {name: partition_column | None}. Every frame written
+    to a partitioned table carries its partition column, and
+    compaction preserves it, so pruned reads keep pruning.
     """
 
     def __init__(self, root: str, tables: dict[str, str | None]):
@@ -363,7 +420,7 @@ class EpochLedger:
     def write_epoch(self, df: DataFrame, table: str, epoch: int) -> None:
         part = self.tables[table]
         writer = df.write.mode("overwrite")
-        if part and part in df.columns:
+        if part:
             writer = writer.partitionBy(part)
         writer.parquet(self.epoch_path(table, epoch))
 
@@ -585,7 +642,7 @@ class EpochLedger:
                 if df is None:
                     continue
             writer = df.write.mode("overwrite")
-            if part and part in df.columns:
+            if part:
                 writer = writer.partitionBy(part)
             writer.parquet(compact_path(self.root, table, head))
         staged = stage(head) if stage is not None else {}

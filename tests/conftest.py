@@ -59,19 +59,16 @@ SLOW_TESTS = {
     "test_streaming.py::test_synced_artifact_time_travel",
     "test_streaming.py::test_streaming_semantic_dedup_sync_crash_restart",
     "test_streaming.py::test_sessionized_user_stats_ttl_evicts_state",
-    "test_streaming.py::test_streaming_knn_graph_sync_crash_restart",
     "test_streaming.py::test_streaming_txn_sync_fact_and_summary_agree",
     "test_streaming.py::test_streaming_minhash_index_sync_crash_restart",
     "test_storage.py::test_delete_where_escaped_partition_values",
     "test_matview.py::test_streaming_matview_sync_and_full_redrain_fixed_point",
     "test_streaming.py::test_streaming_txn_sync_redrain_is_fixed_point",
     "test_streaming.py::test_state_store_provider_dial_rocksdb_parity",
-    "test_streaming.py::test_streaming_knn_graph_ivf_sync_crash_restart",
     "test_streaming.py::test_late_data_quarantine_routes_and_replays_identically",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_fenced_redrain]",
     "test_streaming.py::test_streaming_scd2_sync_versions_and_replay_fixed_point",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_knn_graph_sync]",
-    "test_streaming.py::test_streaming_ivf_index_sync_crash_restart",
     "test_queries_oracle.py::test_query_matches_oracle[streaming_bm25_cdc_sync]",
     "test_stats.py::test_edit_join_null_strings_never_pair",
     "test_queries_oracle.py::test_query_matches_oracle[hybrid_cdc_paired_sync]",
@@ -98,7 +95,6 @@ SLOW_TESTS = {
     "test_storage.py::test_partitioned_upsert_key_moves_partition",
     "test_queries_oracle.py::test_query_matches_oracle[dedup_index_time_travel]",
     "test_storage.py::test_upsert_schema_evolution",
-    "test_streaming.py::test_streaming_pca_moment_sync_crash_restart",
     "test_storage.py::test_delete_where_flat_and_partitioned",
     "test_queries_oracle.py::test_query_matches_oracle[hybrid_rrf_synced]",
     "test_properties.py::test_distributed_rank_property",

@@ -5,7 +5,9 @@ input, and the watermark+window aggregation over a streamed events table.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import os
 import re
 import shutil
 
@@ -1096,126 +1098,6 @@ def test_streaming_state_partition_default_derivation(spark, sf_dir, tmp_path):
     assert final(None) == final(3)
 
 
-def test_streaming_knn_graph_sync_crash_restart(spark, sf_dir, tmp_path):
-    """Streaming maintenance of a PERSISTED kNN graph survives a crash
-    MID-COMMIT-WINDOW and a checkpoint-wiped re-drain (verdict r10 task
-    2): the sink is killed at the start of epoch 2 after epochs 0-1
-    committed; the crash window is then made WORSE by hand — batch 2's
-    rows are appended to the applied log as an uncommitted orphan
-    (exactly what a crash between the log append and the pointer flip
-    leaves behind) — and the restarted stream must still converge to
-    the full-rebuild truth: the orphan stays invisible to the epoch-2
-    corpus snapshot (epoch above the pointer), the replayed write
-    dedups in the latest-per-id window, and the generation dir
-    overwrite is idempotent."""
-    import pytest
-    from pyspark.errors import StreamingQueryException
-
-    from spacex_data_engineering_pipeline_spark.operators import similarity as S
-    from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    mx = int(emb.agg(F.max("vec_id").alias("m")).first()["m"])
-    s97, s99 = mx * 97 // 100, mx * 99 // 100
-    base = emb.filter(F.col("vec_id") < s99).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    updates = emb.filter(F.col("vec_id") >= s97).select(
-        "vec_id",
-        F.reverse(F.col("embedding").cast("array<double>")).alias("embedding"),
-    )
-
-    root = str(tmp_path / "index")
-    src = tmp_path / "src"
-    split = str(tmp_path / "split")
-    index_sync.init_knn_graph_root(
-        base, root, "vec_id", "embedding", k=5, n_blocks=4, n_buckets=8
-    )
-    updates.repartitionByRange(3, F.col("vec_id")).write.parquet(split)
-    src.mkdir()
-    import os
-
-    parts = sorted(f for f in os.listdir(split) if f.endswith(".parquet"))
-    assert len(parts) == 3
-    for i, fname in enumerate(parts):
-        dst = src / f"batch{i:04d}.parquet"
-        os.replace(os.path.join(split, fname), str(dst))
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def poison(epoch_id):
-        if epoch_id == 2:
-            raise RuntimeError(f"injected crash before batch {epoch_id}")
-
-    with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_root(
-            spark, str(src), updates.schema, root,
-            checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
-        )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 1 and ptr["generation"] == 2
-
-    # hand-craft the worst crash window: batch 2's rows already staged
-    # as the applied log's next-generation dir, epoch never published
-    spark.read.parquet(str(src / "batch0002.parquet")).write.parquet(
-        os.path.join(root, "applied", "epoch=3")
-    )
-
-    index_sync.sync_root(
-        spark, str(src), updates.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 2 and ptr["generation"] == 3
-
-    final_corpus = (
-        emb.select(
-            "vec_id",
-            F.when(
-                F.col("vec_id") >= s97,
-                F.reverse(F.col("embedding").cast("array<double>")),
-            )
-            .otherwise(F.col("embedding").cast("array<double>"))
-            .alias("embedding"),
-        )
-    )
-    truth = {
-        (r.vec_id, r.rnk): (r.neighbor, r.cos_sim)
-        for r in S.knn_graph(
-            final_corpus, "vec_id", "embedding", k=5, n_blocks=4
-        ).collect()
-    }
-    got = {
-        (r.vec_id, r.rnk): (r.neighbor, r.cos_sim)
-        for r in index_sync.load_synced_graph(spark, root).collect()
-    }
-    assert got == truth
-
-    # checkpoint-wiped re-drain is a fixed point: every epoch replays,
-    # the ledger no-ops them all, the pointer file never moves (loss =
-    # wiped CONTENTS at the same path; a different path would declare a
-    # new lineage — test_drain_checkpoint_lineage_scopes_replay_skip)
-    ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_root(
-        spark, str(src), updates.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert (
-        os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-        == ptr_mtime
-    )
-
-    # retention: drop all pre-pointer generations, keep the committed one
-    assert index_sync.vacuum_generations(spark, root, keep_last=1) == 3
-    assert sorted(os.listdir(os.path.join(root, "graph"))) == ["gen=3"]
-    assert {
-        (r.vec_id, r.rnk)
-        for r in index_sync.load_synced_graph(spark, root).collect()
-    } == set(truth)
-
-
 def test_graph_delta_write_volume_tracks_churn(spark, sf_dir, tmp_path):
     """DELTA GENERATIONS (optimization r15): a graph fold's durable
     write per epoch is CHURN-sized, never corpus-sized — the full N·k
@@ -1312,256 +1194,6 @@ def test_graph_delta_write_volume_tracks_churn(spark, sf_dir, tmp_path):
         for r in index_sync.load_synced_graph(spark, root).collect()
     }
     assert got == truth
-
-
-def test_pre_delta_graph_root_is_refused(spark, sf_dir, tmp_path):
-    """A graph root in the pre-delta layout (one full ``graph/gen=<g>``
-    snapshot per generation, no ``graph_delta`` epochs) is refused with
-    a rebuild instruction — never read silently as its gen-0 snapshot.
-    The root is built by hand: gen=0 copied to gen=1 and the pointer's
-    generation flipped to 1."""
-    import os
-
-    import pytest
-
-    from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull() & (F.col("vec_id") < 64))
-        .select("vec_id", "embedding")
-    )
-    root = str(tmp_path / "legacy")
-    index_sync.init_knn_graph_root(
-        emb, root, "vec_id", "embedding", k=4, n_blocks=2, n_buckets=4
-    )
-    shutil.copytree(
-        os.path.join(root, "graph", "gen=0"), os.path.join(root, "graph", "gen=1")
-    )
-    ptr = index_sync.read_index_pointer(root)
-    index_sync._flip_pointer(root, {**ptr, "generation": 1})
-    with pytest.raises(ValueError, match="predates delta generations.*rebuild"):
-        index_sync.load_synced_graph(spark, root)
-
-
-def test_streaming_ivf_index_sync_crash_restart(spark, sf_dir, tmp_path):
-    """Streaming maintenance of a persisted IVF index survives a crash
-    MID-COMMIT-WINDOW and a checkpoint-wiped re-drain: epochs 0-1
-    commit, the sink dies at epoch 2, the crash window is made WORSE by
-    hand (epoch-3 postings staged with deliberately WRONG cluster
-    routing, never published — what a crash between the epoch write and
-    the pointer flip leaves), and the restart must overwrite the orphan
-    and converge: full-probe batched retrieval over the synced index ==
-    brute force over base ∪ all batches."""
-    import os
-
-    import pytest
-    from pyspark.errors import StreamingQueryException
-
-    from spacex_data_engineering_pipeline_spark.operators import similarity as S
-    from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    mx = int(emb.agg(F.max("vec_id").alias("m")).first()["m"])
-    s97 = mx * 97 // 100
-    base = emb.filter(F.col("vec_id") < s97).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    inserts = emb.filter(F.col("vec_id") >= s97).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-
-    root = str(tmp_path / "ivf")
-    src = tmp_path / "src"
-    split = str(tmp_path / "split")
-    index_sync.init_ivf_root(
-        base, root, "vec_id", "embedding", n_clusters=8, seed=42
-    )
-    inserts.repartitionByRange(3, F.col("vec_id")).write.parquet(split)
-    src.mkdir()
-    parts = sorted(f for f in os.listdir(split) if f.endswith(".parquet"))
-    assert len(parts) == 3
-    for i, fname in enumerate(parts):
-        dst = src / f"batch{i:04d}.parquet"
-        os.replace(os.path.join(split, fname), str(dst))
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def poison(epoch_id):
-        if epoch_id == 2:
-            raise RuntimeError(f"injected crash before batch {epoch_id}")
-
-    with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_root(
-            spark, str(src), inserts.schema, root,
-            checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
-        )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 1 and ptr["max_epoch"] == 2
-
-    # worst crash window: epoch 3 staged with WRONG routing, unpublished
-    spark.read.parquet(str(src / "batch0002.parquet")).withColumn(
-        "cluster", F.lit(0)
-    ).write.partitionBy("cluster").parquet(
-        index_sync._ivf_epoch_path(root, 3)
-    )
-    # readers never see above-pointer epochs
-    committed_ids = {
-        r.vec_id
-        for r in index_sync.load_synced_ivf(spark, root).assigned.collect()
-    }
-    orphan_ids = {
-        r.vec_id
-        for r in spark.read.parquet(str(src / "batch0002.parquet")).collect()
-    }
-    assert not committed_ids & orphan_ids
-
-    index_sync.sync_root(
-        spark, str(src), inserts.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 2 and ptr["max_epoch"] == 3
-
-    qrows = (
-        emb.filter(F.col("vec_id") < 8)
-        .select("vec_id", F.col("embedding").cast("array<double>"))
-        .collect()
-    )
-    queries = sorted(
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in qrows
-    )
-    idx = index_sync.load_synced_ivf(spark, root)
-    got = {
-        (r.query_id, r.rnk): (r.vec_id, r.cos_sim)
-        for r in S.ivf_batch_topk(idx, queries, k=5, n_probes=8).collect()
-    }
-    truth = {
-        (r.query_id, r.rnk): (r.vec_id, r.cos_sim)
-        for r in S.batch_knn_topk(
-            emb.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-            ),
-            "vec_id", "embedding", queries, k=5,
-        ).collect()
-    }
-    assert got == truth
-
-    # checkpoint-wiped re-drain is a fixed point: the pointer never
-    # moves (loss = wiped CONTENTS at the same path; a different path
-    # declares a new lineage)
-    ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_root(
-        spark, str(src), inserts.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert (
-        os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-        == ptr_mtime
-    )
-
-    # retention: a fresh above-pointer orphan is vacuumed, committed
-    # epochs stay
-    spark.read.parquet(str(src / "batch0002.parquet")).withColumn(
-        "cluster", F.lit(0)
-    ).write.partitionBy("cluster").parquet(
-        index_sync._ivf_epoch_path(root, 9)
-    )
-    assert index_sync.vacuum_root(root) == 1
-    assert sorted(os.listdir(os.path.join(root, "postings"))) == [
-        "epoch=0", "epoch=1", "epoch=2", "epoch=3",
-    ]
-
-
-def test_streaming_pca_moment_sync_crash_restart(spark, sf_dir, tmp_path):
-    """Streaming PCA moment maintenance survives a crash MID-COMMIT-
-    WINDOW and a checkpoint-wiped re-drain: epochs 0-1 commit, the sink
-    dies at epoch 2, the crash window is made WORSE by hand (epoch-3
-    moments staged with GARBAGE values, never published), and the
-    restart must overwrite the orphan and converge: the synced refit ==
-    a from-scratch fit over base + all batches, bit for bit (moment
-    additivity is exact int64)."""
-    import os
-
-    import pytest
-    from pyspark.errors import StreamingQueryException
-
-    from spacex_data_engineering_pipeline_spark.operators.pca import fit_pca
-    from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    mx = int(emb.agg(F.max("vec_id").alias("m")).first()["m"])
-    s97 = mx * 97 // 100
-    base = emb.filter(F.col("vec_id") < s97).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    inserts = emb.filter(F.col("vec_id") >= s97).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-
-    root = str(tmp_path / "moments_root")
-    src = tmp_path / "src"
-    split = str(tmp_path / "split")
-    index_sync.init_pca_moments_root(base, root, "embedding")
-    inserts.repartitionByRange(3, F.col("vec_id")).write.parquet(split)
-    src.mkdir()
-    parts = sorted(f for f in os.listdir(split) if f.endswith(".parquet"))
-    assert len(parts) == 3
-    for i, fname in enumerate(parts):
-        dst = src / f"batch{i:04d}.parquet"
-        os.replace(os.path.join(split, fname), str(dst))
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def poison(epoch_id):
-        if epoch_id == 2:
-            raise RuntimeError(f"injected crash before batch {epoch_id}")
-
-    with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_root(
-            spark, str(src), inserts.schema, root,
-            checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
-        )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 1 and ptr["max_epoch"] == 2
-
-    # worst crash window: epoch-3 moments staged with GARBAGE values —
-    # if a reader or the replay ever folds these, the refit diverges
-    spark.createDataFrame(
-        [(0, 0, 999_999_999), (1, 0, -12345)], "i int, j int, m long"
-    ).write.parquet(index_sync._moments_epoch_path(root, 3))
-
-    index_sync.sync_root(
-        spark, str(src), inserts.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 2 and ptr["max_epoch"] == 3
-
-    synced = index_sync.load_synced_pca_model(spark, root, n_components=2)
-    scratch = fit_pca(emb, "embedding", n_components=2, n_iter=12)
-    assert synced.n_rows == scratch.n_rows
-    assert [list(v) for v in synced.basis] == [list(v) for v in scratch.basis]
-    assert list(synced.eigvals) == list(scratch.eigvals)
-    assert list(synced.mean) == list(scratch.mean)
-
-    # checkpoint-wiped re-drain is a fixed point: the pointer never
-    # moves (loss = wiped CONTENTS at the same path; a different path
-    # declares a new lineage)
-    ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_root(
-        spark, str(src), inserts.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert (
-        os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-        == ptr_mtime
-    )
 
 
 def test_streaming_minhash_index_sync_crash_restart(spark, sf_dir, tmp_path):
@@ -1743,114 +1375,6 @@ def test_minhash_sync_verify_partition_prunes(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert got == want and got
-
-
-def test_streaming_knn_graph_ivf_sync_crash_restart(spark, sf_dir, tmp_path):
-    """The IVF-ROUTED graph sync (the maintenance arm for the regime
-    knn_graph_auto refuses) survives a crash MID-COMMIT-WINDOW and a
-    checkpoint-wiped re-drain: epochs 0-1 commit, the sink dies at
-    epoch 2, the crash window is made worse by hand (a garbage graph
-    generation AND a garbage postings epoch staged above the pointer),
-    and the restart must overwrite the orphans and converge — at full
-    probe width the final loaded graph equals a from-scratch rebuild
-    over base + all batches, row for row at 6dp, after three CHAINED
-    IVF-routed folds."""
-    import os
-
-    import pytest
-    from pyspark.errors import StreamingQueryException
-
-    from spacex_data_engineering_pipeline_spark.operators import similarity as S
-    from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    mx = int(emb.agg(F.max("vec_id").alias("m")).first()["m"])
-    s94 = mx * 94 // 100
-    base = emb.filter(F.col("vec_id") < s94).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    inserts = emb.filter(F.col("vec_id") >= s94).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-
-    root = str(tmp_path / "index")
-    src = tmp_path / "src"
-    split = str(tmp_path / "split")
-    index_sync.init_knn_graph_ivf_root(
-        base, root, "vec_id", "embedding", k=4,
-        n_clusters=8, n_probes=8, seed=7, n_blocks=4, n_buckets=8,
-    )
-    inserts.repartitionByRange(3, F.col("vec_id")).write.parquet(split)
-    src.mkdir()
-    parts = sorted(f for f in os.listdir(split) if f.endswith(".parquet"))
-    assert len(parts) == 3
-    for i, fname in enumerate(parts):
-        dst = src / f"batch{i:04d}.parquet"
-        os.replace(os.path.join(split, fname), str(dst))
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def poison(epoch_id):
-        if epoch_id == 2:
-            raise RuntimeError(f"injected crash before batch {epoch_id}")
-
-    with pytest.raises(StreamingQueryException, match="injected"):
-        index_sync.sync_root(
-            spark, str(src), inserts.schema, root,
-            checkpoint_dir=str(tmp_path / "ckpt"), on_batch_start=poison,
-        )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 1
-    assert ptr["generation"] == 2 and ptr["max_epoch"] == 2
-
-    # worst crash window: garbage staged above the pointer on BOTH
-    # ledgers — never published, must be overwritten by the replay
-    spark.createDataFrame(
-        [(999_999, 1, 888_888, 0.5)],
-        "vec_id long, rnk int, neighbor long, cos_sim double",
-    ).write.parquet(os.path.join(root, "graph", "gen=3", "edges"))
-    spark.createDataFrame(
-        [(999_999, [0.0] * 4, 0)],
-        "vec_id long, embedding array<double>, cluster int",
-    ).write.partitionBy("cluster").parquet(index_sync._ivf_epoch_path(root, 3))
-
-    index_sync.sync_root(
-        spark, str(src), inserts.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    ptr = index_sync.read_index_pointer(root)
-    assert ptr["last_batch_id"] == 2
-    assert ptr["generation"] == 3 and ptr["max_epoch"] == 3
-
-    got = [
-        tuple(r)
-        for r in index_sync.load_synced_graph(spark, root)
-        .orderBy("vec_id", "rnk")
-        .collect()
-    ]
-    truth = [
-        tuple(r)
-        for r in S.knn_graph(
-            base.unionByName(inserts), "vec_id", "embedding", k=4
-        ).orderBy("vec_id", "rnk").collect()
-    ]
-    assert got == truth
-    assert not any(r[0] == 999_999 for r in got)  # garbage overwritten
-
-    # checkpoint-wiped re-drain is a fixed point: the pointer never
-    # moves (loss = wiped CONTENTS at the same path; a different path
-    # declares a new lineage)
-    ptr_mtime = os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    index_sync.sync_root(
-        spark, str(src), inserts.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert (
-        os.stat(os.path.join(root, "_index_pointer.json")).st_mtime_ns
-        == ptr_mtime
-    )
 
 
 def test_minhash_ledger_compaction_and_vacuum(spark, sf_dir, tmp_path):
@@ -2671,95 +2195,6 @@ def test_vacuum_on_uncompacted_root_spares_committed_epochs(
     assert index_sync.read_synced_grams(spark, root).count() == base_grams
 
 
-def test_minhash_sync_continues_pre_bucketing_root(spark, sf_dir, tmp_path):
-    """A LEGACY root whose pointer predates grams bucketing (no
-    ``grams_buckets`` key, flat ``epoch=N/part-*.parquet`` grams) must
-    keep its flat layout when the new sync folds batches in — mixing
-    bucketed epochs into the same dataset makes Spark's partition
-    discovery reject the whole grams table ('conflicting directory
-    structures'), killing the next batch's probe. Regression for the
-    r12 ADVICE finding: the fold wrote ptr.get('grams_buckets', 16)."""
-    import os
-    import shutil
-
-    from spacex_data_engineering_pipeline_spark.operators.dedup import (
-        minhash_probe_pairs,
-    )
-    from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text")
-    b0 = docs.filter(F.col("doc_id") % 15 == 0).select("doc_id", "text")
-    plants = docs.filter(F.col("doc_id") % 45 == 0).select(
-        (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text"
-    )
-    b1 = (
-        docs.filter(F.col("doc_id") % 15 == 5)
-        .select("doc_id", "text")
-        .unionByName(plants)
-    )
-
-    root = str(tmp_path / "index")
-    index_sync.init_minhash_root(
-        corpus, root, "doc_id", "text", min_jaccard_micro=300_000
-    )
-    # retro-fit the pre-bucketing layout: flat grams epoch 0, pointer
-    # without the grams_buckets key
-    g0 = spark.read.parquet(
-        index_sync._epoch_path(root, "grams", 0)
-    ).drop("__bucket")
-    flat = str(tmp_path / "flat_grams")
-    g0.write.parquet(flat)
-    shutil.rmtree(os.path.join(root, "grams"))
-    os.makedirs(os.path.join(root, "grams"))
-    os.replace(flat, index_sync._epoch_path(root, "grams", 0))
-    ptr = index_sync.read_index_pointer(root)
-    del ptr["grams_buckets"]
-    index_sync._flip_pointer(root, ptr)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, bdf in enumerate((b0, b1)):
-        staged = str(tmp_path / f"stage{i}")
-        bdf.repartition(1).write.parquet(staged)
-        part = next(
-            f for f in sorted(os.listdir(staged)) if f.endswith(".parquet")
-        )
-        dst = src / f"batch{i:04d}.parquet"
-        os.replace(os.path.join(staged, part), str(dst))
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    # two batches: batch 1's probe READS the grams table batch 0 wrote
-    # into — the step that used to hit the mixed-layout failure
-    index_sync.sync_root(
-        spark, str(src), b0.schema, root,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert index_sync.read_index_pointer(root)["max_epoch"] == 2
-    # the grams dataset stayed one flat layout: no __bucket anywhere
-    g = index_sync._ledger_frames(
-        spark, root, "grams", index_sync.read_index_pointer(root), 2
-    )
-    assert "__bucket" not in g.columns
-
-    # and the verdicts still equal the imperative growing replay
-    got = {
-        tuple(r)
-        for r in index_sync.load_synced_dedup_pairs(spark, root).collect()
-    }
-    truth = set()
-    seen = corpus
-    for bdf in (b0, b1):
-        truth |= {
-            tuple(r)
-            for r in minhash_probe_pairs(
-                seen, bdf, "doc_id", "text", min_jaccard_micro=300_000
-            ).collect()
-        }
-        seen = seen.unionByName(bdf)
-    assert got == truth
-
-
 def test_bm25_synced_lazy_queries_are_independent(spark, sf_dir, tmp_path):
     """Two lazy synced-BM25 queries over the same session (different
     as-of points) must not clobber each other: building the second
@@ -3187,9 +2622,7 @@ def test_minhash_delete_ids_reingest_and_purge(spark, sf_dir, tmp_path):
     corpus doc stops being offered as a near-dup source (bands AND
     grams sides), a later re-ingest of the same doc re-enters the
     index, the purging compaction physically removes the deleted
-    docs' grams/bands (content) while keeping the pairs audit history,
-    and legacy roots without a tomb_col refuse the verb instead of
-    silently ignoring tombstones."""
+    docs' grams/bands (content) while keeping the pairs audit history."""
     import os
 
     import pytest
@@ -3280,13 +2713,6 @@ def test_minhash_delete_ids_reingest_and_purge(spark, sf_dir, tmp_path):
     } == before
     with pytest.raises(ValueError, match="purge floor"):
         index_sync.load_synced_dedup_pairs(spark, root, as_of_epoch=2)
-
-    # legacy roots (no tomb_col) refuse the verb
-    legacy_ptr = index_sync.read_index_pointer(root)
-    del legacy_ptr["tomb_col"]
-    index_sync._flip_pointer(root, legacy_ptr)
-    with pytest.raises(ValueError, match="predates id-level deletes"):
-        index_sync.delete_ids(spark, root, doomed[:1])
 
 
 def test_streaming_pca_cdc_sync_crash_restart(spark, sf_dir, tmp_path):
@@ -3552,14 +2978,9 @@ def test_bm25_synced_query_plans_without_jobs(spark, sf_dir, tmp_path):
     with the recorded schema) and collecting it costs at most 6; every
     postings scan it runs prunes on ``__tbucket``. Its top-k equals a fresh
     rebuild's at the head, as of the pre-CDC epoch, and after a
-    purging compaction; as-of reads below the purge floor and a root
-    whose pointer lacks ``corpus_stats`` are refused."""
-    import json
-
+    purging compaction; as-of reads below the purge floor are
+    refused."""
     from spacex_data_engineering_pipeline_spark.streaming import index_sync
-    from spacex_data_engineering_pipeline_spark.streaming.ledger import (
-        pointer_path,
-    )
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -3638,17 +3059,6 @@ def test_bm25_synced_query_plans_without_jobs(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="purge floor"):
         index_sync.bm25_topk_synced(spark, root, terms, k=10, as_of_epoch=0)
 
-    del ptr["corpus_stats"]
-    with open(pointer_path(root), "w") as f:
-        json.dump(ptr, f)
-    for refused in (
-        lambda: index_sync.bm25_topk_synced(spark, root, terms, k=10),
-        lambda: index_sync.delete_ids(spark, root, [1]),
-        lambda: index_sync.compact_root(spark, root),
-    ):
-        with pytest.raises(ValueError, match="rebuild with init_bm25_root"):
-            refused()
-
 
 def test_bm25_plain_compaction_keeps_pointer_tail_sized(spark, tmp_path):
     """A BM25 root maintained WITHOUT purging keeps a pointer the size
@@ -3694,40 +3104,10 @@ def test_bm25_plain_compaction_keeps_pointer_tail_sized(spark, tmp_path):
         assert topk(as_of_epoch=e) == want[e]
 
 
-def test_bm25_int_id_root_takes_list_deletes(spark, tmp_path):
-    """``delete_ids`` builds a list's id frame as long; on an int-id
-    BM25 root the fold casts it to the recorded ``id_type``, so every
-    epoch's files keep the type the readers' explicit schemas name
-    (long-typed files under an int id made the next read fail with a
-    parquet type mismatch)."""
-    from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    docs = spark.createDataFrame(
-        [(i, f"spark doc{i} vector") for i in range(1, 40)],
-        "doc_id int, text string",
-    )
-    root = str(tmp_path / "index")
-    index_sync.init_bm25_root(docs, root, "doc_id", "text")
-    assert index_sync.read_index_pointer(root)["id_type"] == "int"
-    index_sync.delete_ids(spark, root, [3, 9])
-    index_sync.delete_ids(spark, root, [7])
-    truth = str(tmp_path / "truth")
-    index_sync.init_bm25_root(
-        docs.filter(~F.col("doc_id").isin(3, 7, 9)), truth, "doc_id", "text"
-    )
-
-    def topk(r):
-        return index_sync.bm25_topk_synced(
-            spark, r, ("spark", "doc9", "doc12"), 3
-        ).collect()
-
-    got = topk(root)
-    assert got == topk(truth) and got[0]["doc_id"] == 12
-
 def test_ivf_delete_empty_set_is_a_no_op(spark, sf_dir, tmp_path):
-    """An empty delete set must not burn an epoch: a []-built frame's
-    id type is a GUESS (string), and committing it would poison the
-    deletes dataset's parquet schema for long-keyed roots."""
+    """An empty delete set must not burn an epoch (an empty tombstone
+    epoch would be a commit that changes nothing), and a real delete
+    afterwards works."""
     import os
 
     from spacex_data_engineering_pipeline_spark.streaming import index_sync
@@ -5151,7 +4531,7 @@ def test_drain_source_fence_minhash_and_bm25_empty_fold(spark, sf_dir, tmp_path)
             spark, src, batch.schema, bm_root,
             checkpoint_dir=str(tmp_path / ck), fence_sources=True,
         )
-    ptr = bm25_sync.read_index_pointer(bm_root)
+    ptr = index_sync.read_index_pointer(bm_root)
     assert ptr["max_epoch"] == 1  # fenced re-drain: bookkeeping-only flip
     (_, n0, _), (e1, n1, _) = ptr["corpus_stats"]
     assert e1 == 1 and n1 - n0 == n_batch
@@ -5227,15 +4607,15 @@ def test_hybrid_cdc_stream_crash_between_drains(spark, sf_dir, tmp_path):
         op_col="op",
     )
     assert read_epoch_pairs(pairs_path) == []  # torn middle: no pair
-    bm_head = bm25_sync.read_index_pointer(broot)["max_epoch"]
+    bm_head = index_sync.read_index_pointer(broot)["max_epoch"]
 
     pair = index_sync.sync_hybrid_cdc_stream(
         spark, str(src), cdc.schema, broot, droot,
         pairs_path=pairs_path, checkpoint_base=ckpt_base,
     )
     # the finished BM25 drain no-oped (same head, no double-fold)...
-    assert bm25_sync.read_index_pointer(broot)["max_epoch"] == bm_head
-    assert bm25_sync.read_index_pointer(broot)["corpus_stats"][-1][1] == n_live
+    assert index_sync.read_index_pointer(broot)["max_epoch"] == bm_head
+    assert index_sync.read_index_pointer(broot)["corpus_stats"][-1][1] == n_live
     # ...the IVF drain caught up, and the pair pins both committed heads
     assert pair["epochs"] == {
         "bm25": bm_head,
@@ -5253,30 +4633,16 @@ def test_hybrid_cdc_stream_crash_between_drains(spark, sf_dir, tmp_path):
 
 
 def test_maintain_root_policy_per_kind(spark, sf_dir, tmp_path):
-    """``maintain_root`` sniffs the family from the pointer and runs
-    that family's retention only past the tail dial: (a) kind sniffing
-    is exact for all six pointer signatures; (b) below the dial it
-    no-ops (one pointer read, nothing rewritten); (c) above it, the
-    family compaction + vacuum run and readers see identical state;
-    (d) graph-bearing roots prune generations to the keep dial."""
+    """``maintain_root`` reads the kind from the pointer's stamp and
+    runs that kind's retention only past the tail dial (the stamp
+    itself is pinned per kind by ``test_root_format_stamp_refusals``):
+    (b) below the dial it no-ops (one pointer read, nothing
+    rewritten); (c) above it, the kind's compaction + vacuum run and
+    readers see identical state; (d) graph-bearing roots prune
+    generations to the keep dial."""
     from pyspark.sql import functions as F
 
     from spacex_data_engineering_pipeline_spark.streaming import index_sync
-
-    # (a) pointer-signature discrimination, no filesystem needed
-    assert index_sync.ledger_root_kind({"term_buckets": 16}) == "bm25"
-    assert (
-        index_sync.ledger_root_kind({"generation": 0, "n_probes": 4})
-        == "graph_ivf"
-    )
-    assert index_sync.ledger_root_kind({"generation": 0, "k": 5}) == "graph"
-    assert index_sync.ledger_root_kind({"num_hashes": 64}) == "minhash"
-    assert (
-        index_sync.ledger_root_kind({"min_cosine": 0.9, "id_col": "d"})
-        == "semantic"
-    )
-    assert index_sync.ledger_root_kind({"id_col": "d", "vec_col": "v"}) == "ivf"
-    assert index_sync.ledger_root_kind({"vec_col": "v"}) == "pca"
 
     emb = (
         load_table(spark, sf_dir, "embeddings")
@@ -5693,3 +5059,234 @@ def test_sync_root_and_delete_ids_every_kind(spark, sf_dir, tmp_path, kind):
         fresh = str(tmp_path / "rebuild")
         init(base.unionByName(batch).filter(~F.col(id_col).isin(doomed)), fresh)
         assert after_delete == read(fresh)
+
+
+_ID_KEYED_KINDS = ("ivf", "semantic", "minhash", "graph_ivf", "graph", "bm25")
+
+
+@pytest.mark.parametrize("kind", _ID_KEYED_KINDS)
+def test_int_id_root_takes_list_deletes(spark, sf_dir, tmp_path, kind):
+    """On a root whose ids are ``int``, one CDC op-D batch, two
+    ``delete_ids`` lists and a ``long``-typed id frame all land as the
+    recorded ``id_type`` (every batch's ids are cast to it on entry to
+    the fold), so the committed state reads back and hides every
+    deleted id. A list built as ``long`` beside the CDC batch's ``int``
+    files made the next read fail with a parquet type mismatch."""
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    base, _, init, read, ids = _kind_case(spark, sf_dir, kind)
+    id_col = base.columns[0]
+    base = base.withColumn(id_col, F.col(id_col).cast("int"))
+    root = str(tmp_path / "root")
+    init(base, root)
+    assert index_sync.read_index_pointer(root)["id_type"] == "int"
+    doomed = sorted(ids(read(root)))[:4]
+    cdc = base.filter(F.col(id_col) == doomed[0]).withColumn("op", F.lit("D"))
+    _stage_cdc_batches(tmp_path, tmp_path / "src", (cdc,))
+    index_sync.sync_root(
+        spark, str(tmp_path / "src"), cdc.schema, root,
+        checkpoint_dir=str(tmp_path / "ckpt"), op_col="op",
+    )
+    index_sync.delete_ids(spark, root, doomed[1:2])
+    index_sync.delete_ids(spark, root, doomed[2:3])
+    index_sync.delete_ids(
+        spark, root, spark.createDataFrame([(doomed[3],)], f"{id_col} long")
+    )
+    left = ids(read(root))
+    assert left and not set(doomed) & left
+
+
+@pytest.fixture(scope="module")
+def tiny_roots(spark, sf_dir, tmp_path_factory):
+    """kind → (pristine root dir, ``_kind_case`` tuple): each kind's
+    24-row base root is built once per module; tests copy it."""
+    built = {}
+
+    def get(kind):
+        if kind not in built:
+            case = _kind_case(spark, sf_dir, kind)
+            root = str(tmp_path_factory.mktemp(f"tiny_{kind}") / "root")
+            case[2](case[0], root)
+            built[kind] = (root, case)
+        return built[kind]
+
+    return get
+
+
+@pytest.mark.parametrize("kind", _EVERY_KIND)
+def test_root_format_stamp_refusals(spark, tmp_path, tiny_roots, kind):
+    """Every ``init_*_root`` stamps its pointer with ``kind``,
+    ``format`` 1 and, on id-keyed kinds, the id column's ``id_type``;
+    ``ledger_root_kind`` returns the stamp. A pointer stripped of the
+    stamp, or stamped with another format, is refused with the one
+    rebuild instruction by ``sync_root``, ``delete_ids``,
+    ``compact_root``, ``vacuum_root``, ``maintain_root`` and the kind's
+    reader — no layout is guessed from the pointer's other keys."""
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+    from spacex_data_engineering_pipeline_spark.streaming.ledger import (
+        ROOT_INITS,
+    )
+
+    pristine, (base, batch, _, read, _) = tiny_roots(kind)
+    root = str(tmp_path / "root")
+    shutil.copytree(pristine, root)
+    ptr = index_sync.read_index_pointer(root)
+    assert index_sync.ledger_root_kind(ptr) == ptr["kind"] == kind
+    assert ptr["format"] == 1
+    if kind == "pca":
+        assert "id_type" not in ptr
+    else:
+        assert ptr["id_type"] == base.schema[base.columns[0]].dataType.simpleString()
+
+    verbs = (
+        lambda: index_sync.sync_root(
+            spark, str(tmp_path / "src"), batch.schema, root,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        ),
+        lambda: index_sync.delete_ids(spark, root, [1]),
+        lambda: index_sync.compact_root(spark, root),
+        lambda: index_sync.vacuum_root(root),
+        lambda: index_sync.maintain_root(spark, root, max_tail_epochs=0),
+        lambda: read(root),
+    )
+    stripped = {k: v for k, v in ptr.items() if k not in ("kind", "format")}
+    for bad, init_name in (
+        (stripped, r"the init_\*_root of its kind"),
+        ({**ptr, "format": 2}, ROOT_INITS[kind]),
+    ):
+        index_sync._flip_pointer(root, bad)
+        with pytest.raises(ValueError, match="not a format-1 ledger root"):
+            index_sync.ledger_root_kind(bad)
+        for verb in verbs:
+            with pytest.raises(ValueError, match=f"rebuild it with {init_name}"):
+                verb()
+    assert sorted(os.listdir(root)) == sorted(os.listdir(pristine))
+
+
+def test_graph_delete_sets_no_session_conf(spark, tmp_path, tiny_roots, monkeypatch):
+    """A graph-root ``delete_ids`` runs its bounded probes without
+    touching the session's conf: no ``RuntimeConfig.set``/``unset``
+    while the verb runs, so concurrent queries on the session are
+    never affected."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    pristine, (base, *_) = tiny_roots("graph")
+    root = str(tmp_path / "root")
+    shutil.copytree(pristine, root)
+    calls = []
+    for name in ("set", "unset"):
+        real = getattr(RuntimeConfig, name)
+
+        def record(self, *args, _name=name, _real=real):
+            calls.append((_name, args))
+            return _real(self, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, record)
+    doomed = [r[0] for r in base.select("vec_id").orderBy("vec_id").limit(2).collect()]
+    assert index_sync.delete_ids(spark, root, doomed) == 1
+    assert calls == []
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+@contextlib.contextmanager
+def _crash_at(point):
+    """Count every ``DataFrameWriter.parquet`` and ``os.replace`` call
+    (the staged writes and the pointer flip of a commit) and raise
+    before the ``point``-th one (``None``: count only). Yields the list
+    of calls seen."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    calls = []
+    real_parquet, real_replace = DataFrameWriter.parquet, os.replace
+
+    def hit(what):
+        calls.append(what)
+        if point is not None and len(calls) - 1 == point:
+            raise _InjectedCrash(f"injected crash before {what} #{point}")
+
+    def parquet(self, *args, **kwargs):
+        hit("parquet")
+        return real_parquet(self, *args, **kwargs)
+
+    def replace(*args, **kwargs):
+        hit("replace")
+        return real_replace(*args, **kwargs)
+
+    DataFrameWriter.parquet, os.replace = parquet, replace
+    try:
+        yield calls
+    finally:
+        DataFrameWriter.parquet, os.replace = real_parquet, real_replace
+
+
+@pytest.mark.parametrize("kind", _EVERY_KIND)
+def test_commit_crash_sweep_every_kind(spark, tmp_path, tiny_roots, kind):
+    """Crash sweep over one delete commit and one compaction per root
+    kind: a crash before each staged parquet write and before the
+    pointer flip leaves the pointer and the kind's reader at the
+    pre-crash state (staged orphans stay invisible), and a retry then
+    equals an uncrashed run exactly. The delete is ``delete_ids`` of
+    two ids, on a PCA root a one-file op-D ``sync_root`` batch (its
+    ledger has no ids to delete)."""
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    pristine, (base, _, _, read, _) = tiny_roots(kind)
+    id_col = base.columns[0]
+    work, ckpt = str(tmp_path / "root"), str(tmp_path / "ckpt")
+    if kind == "pca":
+        gone = base.orderBy(id_col).limit(1).select(
+            id_col,
+            F.lit(None).cast("array<double>").alias("embedding"),
+            F.lit("D").alias("op"),
+            F.col("embedding").alias("old_vec"),
+        )
+        _stage_cdc_batches(tmp_path, tmp_path / "src", (gone,))
+
+        def delete():
+            index_sync.sync_root(
+                spark, str(tmp_path / "src"), gone.schema, work,
+                checkpoint_dir=ckpt, op_col="op",
+            )
+    else:
+        doomed = [
+            r[0] for r in base.select(id_col).orderBy(id_col).limit(2).collect()
+        ]
+
+        def delete():
+            index_sync.delete_ids(spark, work, doomed)
+
+    def compact():
+        assert index_sync.compact_root(spark, work) > 0
+
+    def state():
+        return index_sync.read_index_pointer(work), read(work)
+
+    def sweep(start, commit):
+        def fresh():
+            for d in (work, ckpt):
+                shutil.rmtree(d, ignore_errors=True)
+            shutil.copytree(start, work)
+
+        fresh()
+        before = state()
+        with _crash_at(None) as calls:
+            commit()
+        after = state()
+        assert after[0] != before[0] and calls[-1] == "replace"
+        done = str(tmp_path / f"done_{commit.__name__}")
+        shutil.copytree(work, done)
+        for point in range(len(calls)):
+            fresh()
+            with _crash_at(point), pytest.raises(Exception, match="injected crash"):
+                commit()
+            assert state() == before, f"crash point {point} of {calls} leaked"
+            commit()
+            assert state() == after, f"retry after crash point {point} diverged"
+        return done
+
+    sweep(sweep(pristine, delete), compact)
