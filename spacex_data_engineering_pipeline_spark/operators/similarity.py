@@ -22,7 +22,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.functions.vectors import cosine, cosine_arrow, dot
-from spacex_data_engineering_pipeline_spark.operators.util import release_caches_with
+from spacex_data_engineering_pipeline_spark.operators.util import (
+    job_phase,
+    release_caches_with,
+)
 
 
 def grouped_allpairs_cosine(
@@ -441,10 +444,7 @@ def save_knn_graph(
     # different values, and the point-lookup probe (knn_graph_neighbors)
     # hashes its literal cast to long — both sides must agree or a graph
     # saved with an int id column silently probes the wrong bucket.
-    g = graph.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64(F.col(id_col).cast("long")), F.lit(n_buckets)).cast("int"),
-    )
+    g = graph.withColumn("__bucket", _graph_bucket(F.col(id_col), n_buckets))
     g.write.mode("overwrite").partitionBy("__bucket").parquet(path + "/edges")
     _hadoop_write_text(
         spark,
@@ -513,26 +513,45 @@ def load_knn_graph(spark, path: str) -> DataFrame:
     return edges.drop("__bucket")
 
 
+def graph_edge_schema(id_col: str) -> str:
+    """The edge schema every stored kNN graph and graph delta carries:
+    ``knn_graph`` and the maintenance core always emit a ``long`` id.
+    Reading a saved graph with it costs no schema-inference job (an
+    ``int`` id file widens to ``long`` on read)."""
+    return f"{id_col} long, rnk int, neighbor long, cos_sim double"
+
+
+def read_graph_edges(spark, path: str, id_col: str) -> DataFrame:
+    """The saved graph's edges at ``path`` with their ``__bucket``
+    partition column, read with ``graph_edge_schema``: no
+    schema-inference job."""
+    schema = graph_edge_schema(id_col) + ", __bucket int"
+    return spark.read.schema(schema).parquet(path + "/edges")
+
+
+def _graph_bucket(id_expr, n_buckets: int):
+    """The bucket ``save_knn_graph`` files an id under, hashed AS LONG.
+    Over a literal it constant-folds, so a probe's bucket filter is a
+    plain partition filter and costs no Spark job."""
+    return F.pmod(F.xxhash64(id_expr.cast("long")), F.lit(n_buckets)).cast("int")
+
+
 def knn_graph_neighbors(spark, path: str, id_value: int) -> DataFrame:
     """Point lookup on a SAVED graph — "who are doc X's neighbors?" —
     using the sidecar's ``n_buckets`` to filter on the partition
     column, so the scan partition-prunes to ONE bucket directory at
     file-listing time (the access pattern the bucketed layout exists
-    for; at 100 TB this touches 1/n_buckets of the files)."""
+    for; at 100 TB this touches 1/n_buckets of the files). The bucket
+    is a literal expression and the edges are read with
+    ``graph_edge_schema``, so building the lookup submits no Spark job
+    (the id comes back as ``long``)."""
     meta = load_knn_graph_meta(spark, path)
-    edges = spark.read.parquet(path + "/edges")
     id_col = meta["id_col"]
-    bucket = (
-        edges.sparkSession.range(1)
-        .select(
-            F.pmod(F.xxhash64(F.lit(id_value).cast("long")), F.lit(meta["n_buckets"]))
-            .cast("int")
-            .alias("b")
-        )
-        .first()["b"]
-    )
     return (
-        edges.filter(F.col("__bucket") == bucket)
+        read_graph_edges(spark, path, id_col)
+        .filter(
+            F.col("__bucket") == _graph_bucket(F.lit(id_value), meta["n_buckets"])
+        )
         .filter(F.col(id_col) == id_value)
         .drop("__bucket")
         .orderBy("rnk")
@@ -564,17 +583,26 @@ def _bounded_collect(df: DataFrame, n: int):
 def _empty_graph_delta(spark, id_col: str) -> DataFrame:
     """Zero-row frame in the graph-delta shape — the delta of a batch
     that changes nothing."""
-    return spark.createDataFrame(
-        [], f"{id_col} long, rnk int, neighbor long, cos_sim double"
-    )
+    return spark.createDataFrame([], graph_edge_schema(id_col))
+
+
+def _id_in(col: str, ids) -> Column:
+    """``col IN (ids)`` over a driver-side id list, as ONE SQL literal
+    list of ``bigint`` literals: one py4j call however many ids (a
+    per-id ``isin`` literal is one call each), no per-literal cast to
+    plan, and the optimizer turns it into a hash-set lookup. An empty
+    list matches nothing."""
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(f'{int(i)}L' for i in ids)})")
 
 
 def _delta_finish(keep: DataFrame, new_streams, id_col: str, k: int) -> DataFrame:
     """CHANGED-ROWS-ONLY finish for the graph maintenance verbs: rank
     keep ∪ new-candidate streams with the (cos DESC, id ASC) window,
     then emit ONLY the ids whose final top-k admits a new-stream
-    candidate. Ids with no keep rows (the recomputed set — anti-joined
-    out of keep by every caller) have all rows tagged new, so they
+    candidate. Ids with no keep rows (the recomputed set — removed
+    from keep by every caller) have all rows tagged new, so they
     always survive; an unaffected id whose stored list beat every new
     candidate drops out — its stored rows are bit-identical to what a
     full re-rank would emit, so ``apply_graph_delta`` over the base
@@ -673,7 +701,10 @@ def knn_graph_delete(
     recomputes only the rows citing a deleted id (|affected|·N) and
     this verb applies its delta to the base (built here when
     ``base_graph`` is None). An empty delete returns the base
-    unchanged; a hub-scale delete (> ``max_affected``) raises."""
+    unchanged. More than ``max_affected`` delete rows raise before
+    anything is applied, even when no edge cites them (the core
+    fetches them in one bounded collect), and so does a delete whose
+    citing rows exceed the budget."""
     if base_graph is None:
         # referenced by the affected probe, the keep stream and the
         # delta apply — checkpoint or the N² build re-executes per
@@ -731,49 +762,70 @@ def knn_graph_apply_cdc(
 
     ``deletes`` (ids) and ``upserts`` (id, vector) must not share ids
     (the CDC contract's at-most-one-row-per-id, enforced upstream);
-    either may be None. NULL upsert vectors are skipped. Cost:
-    |C∪affected|·N in one corpus pass plus one bounded driver fetch;
-    a batch whose upserts + affected rows exceed ``max_affected``
-    raises (the queries ship driver-side) — rebuild the graph instead.
+    either may be None. NULL delete ids and NULL upsert vectors are
+    skipped.
+
+    C, the affected set and the invalidated set are churn-sized, so
+    they live on the driver as id lists and reach the plan as literal
+    ``IN`` filters, never as joined frames. Cost: three shuffle-free
+    driver fetches, then |C∪affected|·N in one corpus pass (the lazy
+    delta the caller writes):
+    - the batch's changed rows — delete ids and upserts in ONE bounded
+      collect (``graph:changed``);
+    - the stored edges citing C from rows outside C, capped at
+      (budget + 1)·k edges (``graph:affected``);
+    - the affected rows' vectors (``graph:vectors``).
+    REFUSAL, before anything is applied: more than ``max_affected``
+    changed rows — deletes count too, duplicates included, even when
+    no edge cites them — or more than ``max_affected`` − |upserts|
+    affected rows (the recompute queries ship driver-side) raises;
+    rebuild the graph instead. Each fetch's Spark jobs carry the
+    phase tag named above as their job description.
     """
     spark = old.sparkSession
-    # refusal enforced PRE-collect: the LIMIT bounds the driver fetch to
-    # the budget + 1, so a hub-scale upsert frame is never materialized
-    # before the raise (same discipline as the affected probe below)
-    upd_rows = (
-        _bounded_collect(
-            upserts.select(id_col, vec_col).filter(
-                F.col(vec_col).isNotNull()
-            ),
-            max_affected + 1,
+    # ONE bounded driver fetch of the batch's changed rows, refused
+    # PRE-apply: deletes and upserts both count against the budget, so
+    # a hub-scale batch of either kind never reaches the driver whole
+    sides = []
+    if deletes is not None:
+        sides.append(
+            deletes.filter(F.col(id_col).isNotNull()).select(
+                F.col(id_col).cast("long").alias(id_col),
+                F.lit(None).cast("array<double>").alias(vec_col),
+                F.lit(True).alias("__del"),
+            )
         )
-        if upserts is not None
-        else []
-    )
-    if len(upd_rows) > max_affected:
+    if upserts is not None:
+        sides.append(
+            upserts.filter(F.col(vec_col).isNotNull()).select(
+                F.col(id_col).cast("long").alias(id_col),
+                F.col(vec_col).cast("array<double>").alias(vec_col),
+                F.lit(False).alias("__del"),
+            )
+        )
+    rows = []
+    if sides:
+        changed_rows = sides[0]
+        for side in sides[1:]:
+            changed_rows = changed_rows.unionByName(side)
+        with job_phase(spark, "graph:changed"):
+            rows = _bounded_collect(changed_rows, max_affected + 1)
+    if len(rows) > max_affected:
         raise ValueError(
-            f"≥{len(upd_rows)} updates exceed max_affected={max_affected}: "
-            "a hub-scale upsert — rebuild the graph instead"
+            f"≥{len(rows)} changed rows exceed max_affected={max_affected}: "
+            "a hub-scale CDC batch — rebuild the graph instead"
         )
+    del_ids = sorted({int(r[id_col]) for r in rows if r["__del"]})
     upd_list = sorted(
-        (int(r[id_col]), [float(x) for x in r[vec_col]]) for r in upd_rows
+        (int(r[id_col]), [float(x) for x in r[vec_col]])
+        for r in rows
+        if not r["__del"]
     )
-    del_ids_df = (
-        deletes.select(id_col).distinct() if deletes is not None else None
-    )
-    upd_ids_df = (
-        spark.createDataFrame([(i,) for i, _ in upd_list], f"{id_col} long")
-        if upd_list
-        else None
-    )
-    changed = [d for d in (del_ids_df, upd_ids_df) if d is not None]
+    changed = sorted(set(del_ids).union(i for i, _ in upd_list))
     if not changed:
         return _empty_graph_delta(spark, id_col)
-    changed_df = changed[0]
-    for c in changed[1:]:
-        changed_df = changed_df.unionByName(c)
     old_rows = old.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
-    survivors = old_rows.join(changed_df, id_col, "left_anti")
+    survivors = old_rows.filter(~_id_in(id_col, changed))
     corpus = (
         survivors.unionByName(
             upserts.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
@@ -781,66 +833,52 @@ def knn_graph_apply_cdc(
         if upd_list
         else survivors
     )
-    # ONE bounded driver round trip for the affected probe AND the
-    # affected-vector fetch: the probe ids left-join the survivor
-    # vectors, and the LIMIT keeps the collect bounded to the refusal
-    # budget. Changed ids are excluded probe-side (anti-join).
+    # the affected probe: the stored edges citing a changed id, from
+    # rows outside the changed set. Each id owns at most k edges, so a
+    # fetch capped at (budget + 1)·k edges that comes back full names
+    # more than ``budget`` ids and refuses like any larger set
     budget = max_affected - len(upd_list)
-    aff_probe = (
-        base_graph.join(
-            changed_df.withColumnRenamed(id_col, "neighbor"), "neighbor"
+    cap = (budget + 1) * k
+    with job_phase(spark, "graph:affected"):
+        edges = _bounded_collect(
+            base_graph.filter(
+                _id_in("neighbor", changed) & ~_id_in(id_col, changed)
+            ).select(id_col),
+            cap,
         )
-        .select(id_col)
-        .distinct()
-        .join(changed_df, id_col, "left_anti")
-    )
-    aff_rows = _bounded_collect(
-        aff_probe.join(
-            survivors.withColumnRenamed(vec_col, "__vec"), id_col, "left"
-        ),
-        budget + 1,
-    )
-    if len(aff_rows) > budget:
+    affected_ids = sorted({int(r[id_col]) for r in edges})
+    if len(edges) >= cap or len(affected_ids) > budget:
         raise ValueError(
-            f"≥{len(aff_rows)} affected rows + {len(upd_list)} updates "
+            f"≥{len(affected_ids)} affected rows + {len(upd_list)} updates "
             f"exceed max_affected={max_affected}: a hub-scale CDC batch — "
             "rebuild the graph instead"
         )
-    affected_ids = sorted(int(r[id_col]) for r in aff_rows)
-    affected_vecs = sorted(
-        (int(r[id_col]), [float(x) for x in r["__vec"]])
-        for r in aff_rows
-        if r["__vec"] is not None
-    )
+    affected_vecs = []
+    if affected_ids:
+        with job_phase(spark, "graph:vectors"):
+            affected_vecs = sorted(
+                (int(r[id_col]), [float(x) for x in r[vec_col]])
+                for r in _bounded_collect(
+                    old_rows.filter(_id_in(id_col, affected_ids)),
+                    len(affected_ids),
+                )
+            )
     queries = sorted(affected_vecs + upd_list)
-    recompute_set = set(affected_ids) | {i for i, _ in upd_list}
-    rec_df = (
-        spark.createDataFrame(
-            [(i,) for i in sorted(recompute_set)], f"{id_col} long"
-        )
-        if recompute_set
-        else None
-    )
+    recompute = sorted(set(affected_ids).union(i for i, _ in upd_list))
     # rnk-NULL markers: every id whose stored list this batch
     # invalidates — the recomputed set and the deleted ids
-    nulls = (
-        F.lit(None).cast("int").alias("rnk"),
-        F.lit(None).cast("long").alias("neighbor"),
-        F.lit(None).cast("double").alias("cos_sim"),
+    invalidated = sorted(set(recompute).union(del_ids))
+    markers = spark.createDataFrame(
+        [(i, None, None, None) for i in invalidated], graph_edge_schema(id_col)
     )
-    markers = [m.select(id_col, *nulls) for m in (rec_df, deletes) if m is not None]
-    parts = markers
     if queries:  # else a delete-only batch touching no stored edge
-        keep = base_graph
-        if rec_df is not None:
-            keep = keep.join(rec_df, id_col, "left_anti")
-        if del_ids_df is not None:
-            keep = keep.join(del_ids_df, id_col, "left_anti")
-        keep = keep.select(id_col, "neighbor", "cos_sim")
+        keep = base_graph.filter(~_id_in(id_col, invalidated)).select(
+            id_col, "neighbor", "cos_sim"
+        )
         aq_ids = np.asarray([q for q, _ in queries], dtype=np.int64)
         aq_mat = np.stack([np.asarray(v, dtype=np.float64) for _, v in queries])
         aq_nrm = np.sqrt(np.cumsum(aq_mat * aq_mat, axis=1)[:, -1])
-        rec_ids_arr = np.asarray(sorted(recompute_set), dtype=np.int64)
+        rec_ids_arr = np.asarray(recompute, dtype=np.int64)
         # the upsert matrix for the unaffected rows' partials
         qids = np.asarray([q for q, _ in upd_list], dtype=np.int64)
         qmat = np.asarray(
@@ -888,11 +926,8 @@ def knn_graph_apply_cdc(
             .withColumn("cos_sim", F.round("cos_raw", decimals))
             .select(id_col, "neighbor", "cos_sim")
         )
-        parts = [_delta_finish(keep, [scanned], id_col, k)] + markers
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return _delta_finish(keep, [scanned], id_col, k).unionByName(markers)
+    return markers
 
 
 def knn_graph_ivf(

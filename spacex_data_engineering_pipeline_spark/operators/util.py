@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import contextlib
 import weakref
 
 from pyspark.sql import DataFrame
+
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def release_caches_with(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -79,3 +82,20 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+@contextlib.contextmanager
+def job_phase(spark, tag: str):
+    """Tag every Spark job the calling thread submits inside the block
+    with ``tag`` as its ``spark.job.description`` (``<kind>:<phase>``),
+    so a phase's jobs are found by description in the status store
+    without the UI. The property is thread-local (a streaming fold
+    runs on its own callback thread, so it tags there) and the
+    previous value is restored on exit, nested blocks included."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setLocalProperty(_JOB_DESCRIPTION, tag)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev)

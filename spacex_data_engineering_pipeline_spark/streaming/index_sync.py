@@ -118,6 +118,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spacex_data_engineering_pipeline_spark.operators import similarity as S
+from spacex_data_engineering_pipeline_spark.operators.util import job_phase
 from spacex_data_engineering_pipeline_spark.streaming.ledger import (
     EpochLedger,
     compact_path as _compact_path,
@@ -312,18 +313,28 @@ def _graph_at(
     the surviving lists — a marker beaten by a same-epoch or later list
     loses (replace/re-insert), a marker as the last word kills the id
     (delete). Staged crash orphans (epoch > head) are invisible by the
-    epoch filter, exactly as every ledger table."""
+    epoch filter, exactly as every ledger table.
+
+    Both reads carry the static edge schema (``S.graph_edge_schema``
+    over the pointer's ``id_col``, plus the ``__bucket`` / ``epoch``
+    partition column; ``S.read_graph_edges`` for the base), so
+    building the frame submits no Spark job: no schema inference on a
+    drain's graph or on a lookup."""
     id_col = ptr["id_col"]
     head = int(ptr["generation"])
     if gen is None:
         gen = head
     floor = int(ptr.get("graph_base_gen", 0) or 0)
     eps = [g for g in _graph_committed_gens(root, floor, head) if floor < g <= gen]
-    base = S.load_knn_graph(spark, _graph_gen_path(root, floor))
+    base = S.read_graph_edges(
+        spark, _graph_gen_path(root, floor), id_col
+    ).drop("__bucket")
     if not eps:
         return base
-    d = spark.read.parquet(os.path.join(root, "graph_delta")).filter(
-        (F.col("epoch") > floor) & (F.col("epoch") <= gen)
+    d = (
+        spark.read.schema(S.graph_edge_schema(id_col) + ", epoch int")
+        .parquet(os.path.join(root, "graph_delta"))
+        .filter((F.col("epoch") > floor) & (F.col("epoch") <= gen))
     )
     if len(eps) > 1:
         # one churn-sized window shuffle; the delta apply's anti-join
@@ -351,7 +362,10 @@ def load_synced_graph(
     ``_graph_at``. ``as_of_generation`` time-travels to any
     still-retained generation (readable while its floor snapshot and
     the delta epochs up to it are retained; ``vacuum_generations`` is
-    what ends a generation's readability)."""
+    what ends a generation's readability). One lazy plan: the pointer
+    and the epoch listing are driver-side file reads and both graph
+    reads carry their schema, so no Spark job runs before the caller's
+    action, and a lookup's id filter pushes into the base scan."""
     ptr = read_root_pointer(root)
     gen = _resolve_as_of(ptr, "generation", as_of_generation)
     floor = int(ptr.get("graph_base_gen", 0) or 0)
@@ -380,13 +394,15 @@ def _graph_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
 
     def fold(ptr: dict, gen: int, batch_df: DataFrame) -> dict:
         id_col, vec_col, k = ptr["id_col"], ptr["vec_col"], ptr["k"]
-        ops, upserts, _, dels, has_up = _fold_sides(
-            batch_df, id_col, (vec_col,), op_col
-        )
+        with job_phase(spark, "graph:changed"):
+            ops, upserts, _, dels, has_up = _fold_sides(
+                batch_df, id_col, (vec_col,), op_col
+            )
         try:
             if dels is None and not has_up:
                 return {}  # empty batch: bookkeeping only, generation holds
-            corpus = _corpus_at(spark, root, ptr)
+            with job_phase(spark, "graph:vectors"):
+                corpus = _corpus_at(spark, root, ptr)
             # fold-lifetime persist: the core references the graph from
             # the affected probe AND the keep stream (two actions), and
             # re-executing the delta fold's window + anti-join per
@@ -395,25 +411,25 @@ def _graph_fold(spark: SparkSession, led: EpochLedger, op_col: str | None):
             try:
                 # ONE fused affected-set pass for both sides of the
                 # batch; only the changed lists + markers land on disk
-                _write_graph_delta(
-                    root, gen,
-                    S.knn_graph_apply_cdc(
-                        corpus, dels, upserts if has_up else None,
-                        id_col, vec_col, k, graph,
-                    ),
+                delta = S.knn_graph_apply_cdc(
+                    corpus, dels, upserts if has_up else None,
+                    id_col, vec_col, k, graph,
                 )
+                with job_phase(spark, "graph:delta_write"):
+                    _write_graph_delta(root, gen, delta)
                 # the logs are epoch-keyed ledger tables: staged
                 # overwrite-idempotently at the COMMITTING generation, so
                 # a replay overwrites its own orphan and the pre-commit
                 # sweep can clear a crashed verb's dir at this number
-                if has_up:
-                    upserts.write.mode("overwrite").parquet(
-                        _epoch_path(root, "applied", gen)
-                    )
-                if dels is not None:
-                    dels.write.mode("overwrite").parquet(
-                        _epoch_path(root, "removed", gen)
-                    )
+                with job_phase(spark, "graph:logs"):
+                    if has_up:
+                        upserts.write.mode("overwrite").parquet(
+                            _epoch_path(root, "applied", gen)
+                        )
+                    if dels is not None:
+                        dels.write.mode("overwrite").parquet(
+                            _epoch_path(root, "removed", gen)
+                        )
             finally:
                 graph.unpersist()
             return {"generation": gen}
@@ -1542,9 +1558,13 @@ def delete_ids(
     type every other epoch's files do. ``max_affected`` bounds the
     distinct id count (a larger set is almost certainly a bug
     upstream — a hub-scale graph delete wants a rebuild); a DataFrame
-    costs one count() job for it. Returns the committed head —
-    unchanged for an EMPTY id set, which burns no epoch. A root
-    without the format stamp is refused (``ledger_root_kind``)."""
+    costs one count() job for it. On the graph kinds the ids are also
+    the batch's changed rows in ``knn_graph_apply_cdc``, which refuses
+    more than its own default ``max_affected`` (65,536) of them, cited
+    by an edge or not, and more affected rows than that budget.
+    Returns the committed head — unchanged for an EMPTY id set, which
+    burns no epoch. A root without the format stamp is refused
+    (``ledger_root_kind``)."""
     ptr = read_index_pointer(root)
     kind = ledger_root_kind(ptr)
     if kind == "pca":

@@ -755,13 +755,16 @@ def test_knn_graph_delete_equals_rebuild(spark, sf_dir):
         )
 
 
-def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
+def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir, monkeypatch):
     """The fused CDC verb ≡ sequential delete-then-upsert ≡ full
     rebuild over the new corpus, on every batch shape the streaming
     arm can hand it: mixed U/D, delete-only, upsert-only, empty
     (passthrough), and the max_affected refusal — which must fire from
     the bounded LIMIT collect, never after materializing a hub-scale
-    upsert frame (ADVICE r14 / VERDICT r14 #7)."""
+    upsert frame (ADVICE r14 / VERDICT r14 #7). Every driver fetch
+    (changed rows, citing edges, affected vectors) is a literal-filtered
+    scan of its inputs: no shuffle or broadcast exchange in its
+    executed plan."""
     emb = spark.createDataFrame(
         [
             (i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
@@ -769,7 +772,16 @@ def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
         ],
         "vec_id long, embedding array<double>",
     )
-    base = S.knn_graph(emb, "vec_id", "embedding", k=4)
+    base = S.knn_graph(emb, "vec_id", "embedding", k=4).localCheckpoint(eager=True)
+    plans = []
+    real_collect = S._bounded_collect
+
+    def recording(df, n):
+        rows = real_collect(df, n)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(S, "_bounded_collect", recording)
     deletes = emb.filter(F.col("vec_id") % 9 == 0).select("vec_id")
     upserts = emb.filter(F.col("vec_id") % 9 == 4).select(
         "vec_id", F.reverse("embedding").alias("embedding")
@@ -811,8 +823,9 @@ def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
         )
     )
     assert got == seq
-    # delete-only batch
-    got_d = applied(deletes, None)
+    # delete-only batch; a NULL delete id is skipped
+    null_id = spark.createDataFrame([(None,)], "vec_id long")
+    got_d = applied(deletes.unionByName(null_id), None)
     want_d = rows(
         S.knn_graph(
             emb.filter(F.col("vec_id") % 9 != 0), "vec_id", "embedding", k=4
@@ -844,20 +857,44 @@ def test_knn_graph_apply_cdc_equals_rebuild(spark, sf_dir):
             emb, emb.filter(F.col("vec_id") < 48).select("vec_id"), None,
             "vec_id", "embedding", k=4, base_graph=base, max_affected=3,
         )
+    # one delete within budget whose citing rows are not refuses from
+    # the capped affected probe
+    hub = base.groupBy("neighbor").count().orderBy(F.desc("count"), "neighbor").first()
+    assert hub["count"] > 1
+    with pytest.raises(ValueError, match="affected rows"):
+        S.knn_graph_apply_cdc(
+            emb, spark.createDataFrame([(hub["neighbor"],)], "vec_id long"), None,
+            "vec_id", "embedding", k=4, base_graph=base, max_affected=1,
+        )
+    # deletes count against the budget even when no edge cites them:
+    # max_affected + 1 unknown ids refuse from the one changed-rows fetch
+    unknown = spark.createDataFrame([(1000 + i,) for i in range(4)], "vec_id long")
+    with pytest.raises(ValueError, match="max_affected"):
+        S.knn_graph_apply_cdc(
+            emb, unknown, None,
+            "vec_id", "embedding", k=4, base_graph=base, max_affected=3,
+        )
+    assert len(plans) >= 3
+    assert not [p for p in plans if "Exchange" in p], plans
 
 
 def test_knn_graph_point_probe_int_id_column(spark, sf_dir, tmp_path):
     """xxhash64 hashes IntegerType and LongType differently: a graph
     saved with an int id column must still bucket-probe correctly
     (save casts the id to long before hashing, matching the probe's
-    literal-cast — the round-8 advice's latent bug)."""
+    literal-cast — the round-8 advice's latent bug). Building the probe
+    submits no Spark job: the bucket is a literal expression and the
+    edges are read with their static schema."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
     built = S.knn_graph(emb, "vec_id", "embedding", k=4).withColumn(
         "vec_id", F.col("vec_id").cast("int")
     )
     path = str(tmp_path / "knng_int_id")
     S.save_knn_graph(built, path, "vec_id", n_buckets=4)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.numTotalJobs()
     probe = S.knn_graph_neighbors(spark, path, 7)
+    assert sched.numTotalJobs() == j0, "building the probe submitted Spark jobs"
     got = [(r["rnk"], r["neighbor"]) for r in probe.collect()]
     expected = [
         (r["rnk"], r["neighbor"])

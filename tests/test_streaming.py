@@ -5189,6 +5189,80 @@ def test_graph_delete_sets_no_session_conf(spark, tmp_path, tiny_roots, monkeypa
     assert calls == []
 
 
+# Spark jobs one op-I/U/D micro-batch costs on the tiny graph root
+_GRAPH_DRAIN_JOBS = 12
+
+
+def test_graph_drain_jobs_tagged_and_pinned(spark, tmp_path, tiny_roots, monkeypatch):
+    """One op-I/U/D micro-batch drained into a tiny graph root: every
+    Spark job of the drain carries a ``graph:<phase>`` description, the
+    drain stays within ``_GRAPH_DRAIN_JOBS`` jobs, the same drain with
+    tagging off submits exactly as many, and the synced graph equals a
+    rebuild over the new corpus. ``load_synced_graph`` submits no job
+    before its caller collects."""
+    from spacex_data_engineering_pipeline_spark.operators import similarity as S
+    from spacex_data_engineering_pipeline_spark.streaming import index_sync
+
+    pristine, (base, batch, _, read, _) = tiny_roots("graph")
+    ids = sorted(r[0] for r in base.select("vec_id").collect())
+    vid = F.col("vec_id")
+    updated = base.filter(vid.isin(ids[:2])).select(
+        "vec_id", F.reverse("embedding").alias("embedding")
+    )
+    cdc = (
+        batch.withColumn("op", F.lit("I"))
+        .unionByName(updated.withColumn("op", F.lit("U")))
+        .unionByName(base.filter(vid.isin(ids[2:4])).withColumn("op", F.lit("D")))
+    )
+    _stage_cdc_batches(tmp_path, tmp_path / "src", (cdc,))
+    sc = spark.sparkContext._jsc.sc()
+    sched = sc.dagScheduler()
+
+    def drain(name):
+        root = str(tmp_path / name)
+        shutil.copytree(pristine, root)
+        j0 = sched.numTotalJobs()
+        index_sync.sync_root(
+            spark, str(tmp_path / "src"), cdc.schema, root,
+            checkpoint_dir=str(tmp_path / f"ckpt_{name}"), op_col="op",
+        )
+        sc.listenerBus().waitUntilEmpty()
+        store = sc.statusStore()
+        tags = []
+        for j in range(j0, sched.numTotalJobs()):
+            desc = store.job(j).description()
+            tags.append(desc.get() if desc.isDefined() else None)
+        return root, tags
+
+    root, tags = drain("tagged")
+    assert tags and all(t and t.startswith("graph:") for t in tags), tags
+    assert len(tags) <= _GRAPH_DRAIN_JOBS, tags
+
+    def untagged(spark, tag):
+        return contextlib.nullcontext()
+
+    monkeypatch.setattr(S, "job_phase", untagged)
+    monkeypatch.setattr(index_sync, "job_phase", untagged)
+    plain, plain_tags = drain("untagged")
+    assert len(plain_tags) == len(tags)
+    assert not [t for t in plain_tags if t and t.startswith("graph:")]
+
+    j0 = sched.numTotalJobs()
+    synced = index_sync.load_synced_graph(spark, root)
+    assert sched.numTotalJobs() == j0, "load_synced_graph submitted Spark jobs"
+    live = (
+        base.filter(~vid.isin(ids[:4])).unionByName(updated).unionByName(batch)
+    )
+    want = {
+        (r.vec_id, r.rnk): (r.neighbor, round(r.cos_sim, 6))
+        for r in S.knn_graph(live, "vec_id", "embedding", 3).collect()
+    }
+    assert {
+        (r.vec_id, r.rnk): (r.neighbor, round(r.cos_sim, 6))
+        for r in synced.collect()
+    } == want == read(plain)
+
+
 class _InjectedCrash(RuntimeError):
     pass
 
